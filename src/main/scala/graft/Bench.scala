@@ -60,7 +60,7 @@ object Bench {
     if (Files.isDirectory(shm) && Files.isWritable(shm)) shm else Paths.get("/tmp")
   }
 
-  private def session(cpus: Int, localDir: Option[String]): SparkSession = {
+  private[graft] def session(cpus: Int, localDir: Option[String]): SparkSession = {
     // shuffle partitions default to a multiple of cores so sort/agg tasks at
     // low parallelism stay small (one giant per-core sort spills super-
     // linearly and flatters the high-core leg); multiplier tunable for

@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable.ArrayBuffer
 
 import graft.dedup.{CacheRegistry, Components, Config, Ids, IntersectCountSorted, Jaccard, MinHash, Par, SimHash, Stopwords, Tokenize, Vocabulary}
 import graft.dedup.Par.spread
@@ -34,8 +35,9 @@ object SparkEntry {
   // SHARED caches: memoized cross-query intermediates (the encoded corpus,
   // the LSH-verified pair table, the exact pair table) that the q13/q14/
   // q34/q35 and q23/q24/q25 families would otherwise rebuild per query —
-  // the round-4 q25 regression was exactly this chain re-running. Keyed by
-  // (session, dir); released between bench reps / at suite end.
+  // the round-4 q25 regression was exactly this chain re-running. One memo
+  // keyed by (session, dir, chain name) — see [[SharedChains]]; released
+  // between bench reps / at suite end.
   // Transient registries are PER-THREAD: a process-global registry would let
   // one caller's releaseTransientCaches() unpersist another thread's
   // in-flight scaffolding — Ids.assignDense's correctness depends on its
@@ -49,25 +51,8 @@ object SparkEntry {
     ThreadLocal.withInitial(() => new CacheRegistry)
   private def transientReg: CacheRegistry = transientRegs.get()
   private val sharedReg = new CacheRegistry
-  // (enc, vocab, vocabRows): the encode chain memoizes its vocabulary (and
-  // the count the encode-plan choice needs) alongside the encoded corpus, so
-  // the q12/q13-family consumers reuse it instead of re-tokenizing the
-  // corpus to rebuild the identical (token, df) table (round-7: the setup
-  // phase ran the regex tokenizer twice and the string-keyed dense-id rank
-  // once per rep for no new information).
-  /** (enc, vocab, vocabRows, encRows) for one (session, dir). */
-  private final case class EncBundle(enc: DataFrame, vocab: DataFrame, vocabRows: Long, encRows: Long)
-  private val encBundleMemo = TrieMap.empty[(SparkSession, String), EncBundle]
-  private val lshPairsMemo = TrieMap.empty[(SparkSession, String), (DataFrame, Long)]
-  private val exactPairsMemo = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val winnowCandMemo = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val componentsMemo = TrieMap.empty[(SparkSession, String), DataFrame]
-  // The deterministic sqrt(n)-sized coarse quantizer over the embeddings
-  // table: q36 (IVF) and q37 (SemDeDup) each ran an identical sizing count
-  // job + centroid collect on the same input — pure driver-side state (a few
-  // hundred centroid vectors), shared like the chains above.
-  private val embCentroidsMemo =
-    TrieMap.empty[(SparkSession, String), Array[(Long, Array[Double])]]
+  /** The memoized cross-query intermediates, declared below in warm order. */
+  private[graft] val sharedChains = new SharedChains
 
   /** Unpersist the CALLING THREAD's per-query scaffolding caches. Call after
     * each query's action, from the thread that built and materialized it. */
@@ -75,40 +60,18 @@ object SparkEntry {
 
   /** Unpersist + forget the memoized cross-query intermediates. */
   def releaseSharedCaches(): Unit = {
-    encBundleMemo.clear(); lshPairsMemo.clear(); exactPairsMemo.clear()
-    winnowCandMemo.clear(); componentsMemo.clear(); embCentroidsMemo.clear()
+    sharedChains.release()
     sharedReg.release()
   }
 
-  /** Build + materialize EVERY memoized cross-query intermediate (encoded
-    * corpus + vocabulary, LSH-verified pairs, exact pairs, winnow
-    * candidates, component assignment) in one call, so a benchmark can
-    * attribute shared-chain construction to a labeled SETUP step instead of
-    * whichever family member happens to run first (round 5: q22 wore the
-    * encode build, q25's spread was the verified-chain cold start). */
+  /** Build + materialize EVERY memoized cross-query intermediate in
+    * declaration order, so a benchmark can attribute shared-chain
+    * construction to a labeled SETUP step instead of whichever family member
+    * happens to run first (round 5: q22 wore the encode build, q25's spread
+    * was the verified-chain cold start). */
   def warmSharedCaches(s: SparkSession, dir: String): Unit = {
-    encCached(s, dir)
-    lshVerifiedCached(s, dir)
-    exactPairsCached(s, dir)
-    winnowCandCached(s, dir)
-    componentsCached(s, dir)
-    embCentroidsCached(s, dir)
+    sharedChains.warm(s, dir)
     releaseTransientCaches()
-  }
-
-  /** Memo with stopped-session hygiene: entries of dead sessions are dropped
-    * (their cached blocks died with the session's BlockManager). */
-  private def memo[T](
-      m: TrieMap[(SparkSession, String), T],
-      s: SparkSession,
-      dir: String
-  )(build: => T): T = m.synchronized {
-    // synchronized: TrieMap.getOrElseUpdate may evaluate `build` in two
-    // racing threads and discard one result — but a discarded build here has
-    // already persisted + materialized its copy (shared()), doubling memory
-    // until releaseSharedCaches. Serializing builds keeps exactly one.
-    m.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    m.getOrElseUpdate((s, dir), build)
   }
 
   /** Persist + eagerly materialize a shared intermediate. */
@@ -309,7 +272,9 @@ object SparkEntry {
       .select(kc ++ Seq(col("a"), col("b"), col("inter_cnt"), col("union_cnt"), col("sim")): _*)
   }
 
-  /** Memoized (encoded corpus, vocabulary, vocabRows) at [[oracleLshCfg]].
+  // ---- shared chains, in warm order: each after the chains its build reads ----
+
+  /** (encoded corpus, vocabulary, vocabRows, encRows) at [[oracleLshCfg]].
     *
     * The detector family (q22/q23/q24/q25) consumes the encoded table 3-4x
     * each (signatures, both verify sides, assignAll's doc set) — without the
@@ -321,65 +286,60 @@ object SparkEntry {
     * chain already has). The tokenized base is transient-persisted so the
     * tokenizer runs ONCE per build (vocab aggregate + encode both scan it),
     * and the vocab row count captured here feeds the encode-plan choice
-    * without its own count job. Persisted + materialized once per
-    * (session, dir). */
-  private def encBundle(s: SparkSession, dir: String): EncBundle =
-    memo(encBundleMemo, s, dir) {
-      val cfg = oracleLshCfg
-      val base = transientReg.persist(
-        spread(t(s, dir, "documents")).select(
-          col("doc_id"),
-          col("lang").as("group"),
-          Tokenize.tokenSet(col("text"), cfg.shingleK).as("tokens")
-        ).filter(size(col("tokens")) > 0)
-      )
-      // vocabRows comes free from the dense-id stamp's per-partition count
-      // pass — no separate count job for the encode-plan choice
-      val (vocab0, vocabRows) = Vocabulary.buildWithCount(base, cfg, transientReg)
-      val vocab = sharedReg.persist(vocab0)
-      val enc = sharedReg.persist(Vocabulary.encode(base, vocab, vocabRows = Some(vocabRows)))
-      val encRows = enc.count() // materializes enc AND vocab (its input)
-      EncBundle(enc, vocab, vocabRows, encRows)
-    }
-
-  private[graft] def encCached(s: SparkSession, dir: String): DataFrame =
-    encBundle(s, dir).enc
-
-  /** Memoized vocabulary (token, df, token_id) + its row count. */
-  private[graft] def vocabCached(s: SparkSession, dir: String): (DataFrame, Long) = {
-    val b = encBundle(s, dir)
-    (b.vocab, b.vocabRows)
+    * without its own count job. */
+  private val encodedChain = sharedChains.declare("encoded") { (s, dir) =>
+    val cfg = oracleLshCfg
+    val base = transientReg.persist(
+      spread(t(s, dir, "documents")).select(
+        col("doc_id"),
+        col("lang").as("group"),
+        Tokenize.tokenSet(col("text"), cfg.shingleK).as("tokens")
+      ).filter(size(col("tokens")) > 0)
+    )
+    // vocabRows comes free from the dense-id stamp's per-partition count
+    // pass — no separate count job for the encode-plan choice
+    val (vocab0, vocabRows) = Vocabulary.buildWithCount(base, cfg, transientReg)
+    val vocab = sharedReg.persist(vocab0)
+    val enc = sharedReg.persist(Vocabulary.encode(base, vocab, vocabRows = Some(vocabRows)))
+    val encRows = enc.count() // materializes enc AND vocab (its input)
+    (enc, vocab, vocabRows, encRows)
   }
 
-  /** Memoized MinHash-LSH verified pair table at [[oracleLshCfg]] — shared
-    * by q23 (projection) and q25 (components input), so the signatures →
+  private def encCached(s: SparkSession, dir: String): DataFrame = encodedChain(s, dir)._1
+
+  /** Memoized vocabulary (token, df, token_id) + its row count. */
+  private def vocabCached(s: SparkSession, dir: String): (DataFrame, Long) = {
+    val (_, vocab, vocabRows, _) = encodedChain(s, dir)
+    (vocab, vocabRows)
+  }
+
+  /** MinHash-LSH verified pair table at [[oracleLshCfg]] plus its exact row
+    * count (the materializing count is captured, not re-run) — shared by q23
+    * (projection) and q25 (components input), so the signatures →
     * candidates → verify chain runs ONCE per (session, dir) instead of per
-    * query (the round-4 q25 regression: each family member rebuilt it). */
-  private[graft] def lshVerifiedCached(s: SparkSession, dir: String): DataFrame =
-    lshVerifiedWithCount(s, dir)._1
+    * query (the round-4 q25 regression: each family member rebuilt it). The
+    * count is a proven edge bound for the components family's driver-local
+    * path. */
+  private val lshVerifiedWithCount = sharedChains.declare("lsh_verified") { (s, dir) =>
+    val cfg = oracleLshCfg
+    val (enc, _, _, encRows) = encodedChain(s, dir)
+    // persisted: at this config candidatePairs takes the first-collision
+    // path; the known doc count bounds every band bucket's size, so when
+    // it is <= maxBucket the oversized-bucket probe job is skipped
+    // entirely (PairGen proves the set empty by arithmetic). Transient —
+    // dead once the count below has materialized.
+    val sigs = transientReg.persist(MinHash.withSignature(enc, cfg))
+    val pairs = sharedReg.persist(Jaccard.verifyCounts(
+      MinHash.candidatePairs(sigs, cfg, docCountBound = encRows),
+      enc,
+      cfg.threshold
+    ))
+    (pairs, pairs.count())
+  }
 
-  /** The memoized LSH-verified pair table plus its exact row count (the
-    * materializing count is captured, not re-run) — the count is a proven
-    * edge bound for the components family's driver-local path. */
-  private[graft] def lshVerifiedWithCount(s: SparkSession, dir: String): (DataFrame, Long) =
-    memo(lshPairsMemo, s, dir) {
-      val cfg = oracleLshCfg
-      val b = encBundle(s, dir)
-      // persisted: at this config candidatePairs takes the first-collision
-      // path; the known doc count bounds every band bucket's size, so when
-      // it is <= maxBucket the oversized-bucket probe job is skipped
-      // entirely (PairGen proves the set empty by arithmetic). Transient —
-      // dead once the count below has materialized.
-      val sigs = transientReg.persist(MinHash.withSignature(b.enc, cfg))
-      val pairs = sharedReg.persist(Jaccard.verifyCounts(
-        MinHash.candidatePairs(sigs, cfg, docCountBound = b.encRows),
-        b.enc,
-        cfg.threshold
-      ))
-      (pairs, pairs.count())
-    }
+  private def lshVerifiedCached(s: SparkSession, dir: String): DataFrame = lshVerifiedWithCount(s, dir)._1
 
-  /** Memoized exact within-lang Jaccard pair table at threshold 0.5 — the
+  /** Exact within-lang Jaccard pair table at threshold 0.5 — the
     * q13/q14/q34/q34b/q35 family all rank or filter this one table; round 4
     * re-ran the full PPJoin per query (~3-7 s each).
     *
@@ -396,93 +356,88 @@ object SparkEntry {
     * sim) rows are bitwise-identical to the old plan's (oracle q13).
     * Vocabularies beyond the broadcast cap fall back to the original
     * string-keyed chain (the remap array must fit one executor). */
-  private[graft] def exactPairsCached(s: SparkSession, dir: String): DataFrame =
-    memo(exactPairsMemo, s, dir) {
-      val (vocab, vocabRows) = vocabCached(s, dir)
-      if (vocabRows <= oracleLshCfg.broadcastMaxVocab) {
-        val enc = encCached(s, dir)
-        // rare-first eids: rank the dense token ids by (df, token_id). The
-        // token ids are assigned in token-ascending order, so (df, token_id)
-        // is the same total order as the old (df, token) string rank. The
-        // rank is computed on the DRIVER from the collected skinny
-        // (token_id, df) table — this path is gated on vocabRows <=
-        // broadcastMaxVocab, the same bound under which the encode already
-        // collects the full dictionary, so the sort is bounded arithmetic
-        // (<= 8M longs), and it replaces the distributed range-stamp's
-        // persist + sample + count jobs with the one collect we need anyway.
-        val tidDf = vocab
-          .select(col("token_id").cast("int"), col("df"))
-          .collect()
-          .map(r => (r.getInt(0), r.getLong(1)))
-          .sortBy { case (tid, df) => (df, tid) }
-        val remap = new Array[Int](vocabRows.toInt)
-        var eid = 0
-        tidDf.foreach { case (tid, _) => remap(tid) = eid; eid += 1 }
-        val bRemap = s.sparkContext.broadcast(remap)
-        val remapUdf = udf { (tokens: Seq[Int]) =>
-          val m = bRemap.value
-          val out = new Array[Int](tokens.length)
-          var i = 0
-          tokens.foreach { tid => out(i) = m(tid); i += 1 }
-          java.util.Arrays.sort(out)
-          out
-        }
-        // persisted: the set table is the hub — both prefix sides and both
-        // verify sides scan it (see prefixVerifyFromSets)
-        val sets = transientReg.persist(
-          enc.select(
-            col("doc_id"),
-            col("group").as("lang"),
-            remapUdf(col("tokens")).as("ts"),
-            col("n_tokens").as("n")
-          )
+  private val exactPairsCached = sharedChains.declare("exact_pairs") { (s, dir) =>
+    val (vocab, vocabRows) = vocabCached(s, dir)
+    if (vocabRows <= oracleLshCfg.broadcastMaxVocab) {
+      val enc = encCached(s, dir)
+      // rare-first eids: rank the dense token ids by (df, token_id). The
+      // token ids are assigned in token-ascending order, so (df, token_id)
+      // is the same total order as the old (df, token) string rank. The
+      // rank is computed on the DRIVER from the collected skinny
+      // (token_id, df) table — this path is gated on vocabRows <=
+      // broadcastMaxVocab, the same bound under which the encode already
+      // collects the full dictionary, so the sort is bounded arithmetic
+      // (<= 8M longs), and it replaces the distributed range-stamp's
+      // persist + sample + count jobs with the one collect we need anyway.
+      val tidDf = vocab
+        .select(col("token_id").cast("int"), col("df"))
+        .collect()
+        .map(r => (r.getInt(0), r.getLong(1)))
+        .sortBy { case (tid, df) => (df, tid) }
+      val remap = new Array[Int](vocabRows.toInt)
+      var eid = 0
+      tidDf.foreach { case (tid, _) => remap(tid) = eid; eid += 1 }
+      val bRemap = s.sparkContext.broadcast(remap)
+      val remapUdf = udf { (tokens: Seq[Int]) =>
+        val m = bRemap.value
+        val out = new Array[Int](tokens.length)
+        var i = 0
+        tokens.foreach { tid => out(i) = m(tid); i += 1 }
+        java.util.Arrays.sort(out)
+        out
+      }
+      // persisted: the set table is the hub — both prefix sides and both
+      // verify sides scan it (see prefixVerifyFromSets)
+      val sets = transientReg.persist(
+        enc.select(
+          col("doc_id"),
+          col("group").as("lang"),
+          remapUdf(col("tokens")).as("ts"),
+          col("n_tokens").as("n")
         )
-        // min-df-pruned universe: no singletons by construction
-        shared(prefixVerifyFromSets(sets, nSingletons = 0L, 0.5, Seq("lang")))
-      } else shared(docPairs(t(s, dir, "documents"), 0.5))
-    }
+      )
+      // min-df-pruned universe: no singletons by construction
+      shared(prefixVerifyFromSets(sets, nSingletons = 0L, 0.5, Seq("lang")))
+    } else shared(docPairs(t(s, dir, "documents"), 0.5))
+  }
 
   private val q31Cfg = graft.dedup.SuffixDedup.SubConfig(k = 16, window = 5, minMatch = 20)
 
-  /** Memoized winnow candidate pairs at [[q31Cfg]] — q31a projects them and
-    * q31b's suffix-automaton verify consumes them; without the memo each
-    * query rebuilt the fingerprint -> df-cap -> bucket-pair chain. */
-  private[graft] def winnowCandCached(s: SparkSession, dir: String): DataFrame =
-    memo(winnowCandMemo, s, dir)(shared(
-      graft.dedup.SuffixDedup.candidatePairs(
-        // spread: the rolling-hash + winnow kernel runs at cluster
-        // parallelism, not scan-split count (one task on a sub-MB file)
-        spread(t(s, dir, "documents"))
-          .select(col("doc_id"), col("lang").as("group"), col("text").as("content")),
-        q31Cfg,
-        transientReg
-      )
+  /** Winnow candidate pairs at [[q31Cfg]] — q31a projects them and q31b's
+    * suffix-automaton verify consumes them; without the memo each query
+    * rebuilt the fingerprint -> df-cap -> bucket-pair chain. */
+  private val winnowCandCached = sharedChains.declare("winnow_candidates") { (s, dir) =>
+    shared(graft.dedup.SuffixDedup.candidatePairs(
+      // spread: the rolling-hash + winnow kernel runs at cluster
+      // parallelism, not scan-split count (one task on a sub-MB file)
+      spread(t(s, dir, "documents"))
+        .select(col("doc_id"), col("lang").as("group"), col("text").as("content")),
+      q31Cfg,
+      transientReg
     ))
+  }
 
-  /** Memoized component assignment over the full corpus — q25 emits it and
-    * q42's survivorship window consumes it; without the memo each query
-    * re-ran the identical connected-components pass (distinct + collect +
-    * union-find + relabel join) on the same memoized pair table. */
-  private[graft] def componentsCached(s: SparkSession, dir: String): DataFrame =
-    memo(componentsMemo, s, dir) {
-      val (pairs, nPairs) = lshVerifiedWithCount(s, dir)
-      shared(Components.assignAll(encCached(s, dir), pairs, knownEdgeBound = nPairs))
-    }
+  /** Component assignment over the full corpus — q25 emits it and q42's
+    * survivorship window consumes it; without the memo each query re-ran the
+    * identical connected-components pass (distinct + collect + union-find +
+    * relabel join) on the same memoized pair table. */
+  private val componentsCached = sharedChains.declare("components") { (s, dir) =>
+    val (pairs, nPairs) = lshVerifiedWithCount(s, dir)
+    shared(Components.assignAll(encCached(s, dir), pairs, knownEdgeBound = nPairs))
+  }
 
-  /** Memoized sqrt(n) coarse quantizer over the embeddings table — the
-    * exact centroids q36 and q37 would each recompute: n from one count,
+  /** The sqrt(n) coarse quantizer over the embeddings table — the exact
+    * centroids q36 (IVF) and q37 (SemDeDup) would each recompute (an
+    * identical sizing count job + centroid collect): n from one count,
     * nc = max(16, ceil(sqrt(n))) (the operators' shared adaptive default),
     * centroids = the nc lowest-vec_id embeddings. A pure function of the
-    * input table, so the consumers' outputs are bitwise unchanged. */
-  private[graft] def embCentroidsCached(
-      s: SparkSession,
-      dir: String
-  ): Array[(Long, Array[Double])] =
-    memo(embCentroidsMemo, s, dir) {
-      val emb = t(s, dir, "embeddings")
-      val nc = math.max(16, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-      graft.ops.Similarity.centroids(emb, nc)
-    }
+    * input table, so the consumers' outputs are bitwise unchanged; pure
+    * driver-side state (a few hundred centroid vectors). */
+  private val embCentroidsCached = sharedChains.declare("emb_centroids") { (s, dir) =>
+    val emb = t(s, dir, "embeddings")
+    val nc = math.max(16, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
+    graft.ops.Similarity.centroids(emb, nc)
+  }
 
   private val tokFilterSql =
     s"""length(token) > 1 AND NOT regexp_matches(token, '^[0-9]+$$')
@@ -1625,4 +1580,37 @@ object SparkEntry {
          |SELECT a.vec_id, a.cid, (r.vec_id IS NULL) AS kept
          |FROM assign a LEFT JOIN rem r ON a.vec_id = r.vec_id""".stripMargin.replace("\n", " ")
   )
+}
+
+/** One memo for named cross-query chains, keyed by (session, dir, name).
+  * Chains are declared once, in warm order; warming, timing and releasing
+  * iterate that declaration, so no other code lists the chains. Entries of
+  * stopped sessions are dropped before each lookup (their blocks died with
+  * the session). Builds are serialized: TrieMap.getOrElseUpdate may run a
+  * build in two racing threads and keep one, but the discarded one has
+  * already persisted its copy. The lock is re-entrant, so a build may read
+  * other chains. */
+private[graft] final class SharedChains {
+  private val memo = TrieMap.empty[(SparkSession, String, String), Any]
+  private val declared = ArrayBuffer.empty[Chain[_]]
+
+  final class Chain[T] private[SharedChains] (val name: String, build: (SparkSession, String) => T) {
+    declared += this
+    def apply(s: SparkSession, dir: String): T = memo.synchronized {
+      memo.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
+      memo.getOrElseUpdate((s, dir, name), build(s, dir)).asInstanceOf[T]
+    }
+  }
+
+  /** Declare the next chain in warm order. */
+  def declare[T](name: String)(build: (SparkSession, String) => T): Chain[T] = new Chain(name, build)
+
+  def chains: Seq[Chain[_]] = declared.toSeq
+
+  def warm(s: SparkSession, dir: String): Unit = declared.foreach(_(s, dir))
+
+  /** Forget every memoized value; the caller unpersists their caches. */
+  def release(): Unit = memo.clear()
+
+  def size: Int = memo.size
 }

@@ -2,8 +2,6 @@ package graft.dedup
 
 import java.nio.charset.StandardCharsets
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -234,33 +232,6 @@ object Checkpoints {
       .agg(coalesce(sum(col("rows")), lit(0L)))
       .head()
       .getLong(0)
-  }
-
-  /** (partition -> row count) from parquet file footers under `path`.
-    * O(#files) driver-side metadata reads; "__table__" for unpartitioned.
-    * Test/debug utility only — the engine's hot path uses the `_metrics`
-    * sidecar ([[stageRowCount]]) written distributed at stage-commit time. */
-  def footerCounts(spark: SparkSession, path: String): Map[String, Long] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(root, true)
-    val acc = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-    val rootStr = root.toUri.getPath
-    while (it.hasNext) {
-      val f = it.next()
-      val p = f.getPath
-      if (p.getName.endsWith(".parquet")) {
-        val rel = p.getParent.toUri.getPath.stripPrefix(rootStr).stripPrefix("/")
-        val part = if (rel.isEmpty) "__table__" else rel
-        val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-          spark.sparkContext.hadoopConfiguration,
-          p,
-          org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
-        )
-        acc(part) += footer.getBlocks.asScala.map(_.getRowCount).sum
-      }
-    }
-    if (acc.isEmpty) Map("__table__" -> 0L) else acc.toMap
   }
 
   /** Anti-join resume for incrementally extended outputs (reference:

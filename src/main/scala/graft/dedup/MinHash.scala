@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Batched MinHash signatures + LSH band hashing.
@@ -128,7 +128,4 @@ object MinHash {
     while (i < a.length) { if (a(i) == b(i)) eq += 1; i += 1 }
     eq.toDouble / a.length
   }
-
-  def estimateCol(a: Column, b: Column): Column =
-    size(filter(zip_with(a, b, (x, y) => x === y), v => v)) / size(a)
 }

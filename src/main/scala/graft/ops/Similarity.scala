@@ -327,6 +327,8 @@ object Similarity {
       // (identical result: the quantizer is a pure function of the input).
       knownCentroids: Array[(Long, Array[Double])] = null
   ): DataFrame = {
+    require(knownCentroids == null || nCentroids == 0,
+      s"ivfCosineTopK: pass knownCentroids or nCentroids, not both (nCentroids = $nCentroids)")
     val base: Array[(Long, Array[Double])] =
       if (knownCentroids != null) knownCentroids
       else {
@@ -448,6 +450,8 @@ object Similarity {
       // precomputed quantizer — same contract as [[ivfCosineTopK]]'s param
       knownCentroids: Array[(Long, Array[Double])] = null
   ): DataFrame = {
+    require(knownCentroids == null || nCentroids == 0,
+      s"semDedup: pass knownCentroids or nCentroids, not both (nCentroids = $nCentroids)")
     val cents =
       if (knownCentroids != null) knownCentroids
       else {

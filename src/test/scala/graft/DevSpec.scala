@@ -1,0 +1,56 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The dev main's argument parser: pure, so no Spark session. */
+class DevSpec extends AnyFunSuite {
+  import Dev._
+
+  private val sf = Some("sfdir")
+
+  test("parse accepts every subcommand, with defaults and explicit args") {
+    assert(parse(Seq("setup"), sf) == Right(Setup("sfdir", 3)))
+    assert(parse(Seq("setup", "2"), sf) == Right(Setup("sfdir", 2)))
+    assert(parse(Seq("q", "q25_components"), sf) == Right(Query("sfdir", "q25_components", 3)))
+    assert(parse(Seq("q", "q25_components", "1"), sf) == Right(Query("sfdir", "q25_components", 1)))
+    assert(parse(Seq("plans"), sf) == Right(Plans("sfdir", None)))
+    assert(parse(Seq("plans", "q13_doc_pairs,q25_components", "out"), sf) ==
+      Right(Plans("sfdir", Some((Seq("q13_doc_pairs", "q25_components"), "out")))))
+    assert(parse(Seq("legs", "20000", "1"), None) == Right(Legs(20000L, 1)))
+    assert(parse(Seq("encode"), None) == Right(Encode(1000000L, 8, 3)))
+    assert(parse(Seq("encode", "5000", "2", "1"), None) == Right(Encode(5000L, 2, 1)))
+  }
+
+  test("legs rejects pairs < 1 and non-numeric args with the usage message") {
+    val bad = Seq(
+      Seq("legs", "20000", "0"),
+      Seq("legs", "20000", "-1"),
+      Seq("legs", "x", "1"),
+      Seq("legs", "20000", "one"),
+      Seq("legs", "20000"),
+      Seq("legs", "20000", "1", "extra")
+    )
+    bad.foreach { args =>
+      val r = parse(args, sf)
+      assert(r.isLeft, s"accepted ${args.mkString(" ")}")
+      assert(r.swap.toOption.get.endsWith(usage), s"no usage for ${args.mkString(" ")}")
+    }
+  }
+
+  test("query-table subcommands need SPARK_GRAFT_SF_DIR and a known query name") {
+    Seq(Seq("setup"), Seq("q", "q25_components"), Seq("plans")).foreach { args =>
+      assert(parse(args, None).swap.toOption.get.contains("SPARK_GRAFT_SF_DIR"))
+    }
+    assert(parse(Seq("q", "no_such_query"), sf).isLeft)
+    assert(parse(Seq("plans", "q13_doc_pairs,no_such_query", "out"), sf).isLeft)
+    assert(parse(Seq("setup", "0"), sf).isLeft)
+    assert(parse(Seq("bogus"), sf).isLeft)
+    assert(parse(Nil, sf).isLeft)
+  }
+
+  test("the usage lists every subcommand") {
+    Seq("setup", "q <name>", "plans", "legs <nFiles> <pairs>", "encode").foreach { sub =>
+      assert(usage.linesIterator.exists(_.trim.startsWith(sub)), s"usage misses $sub")
+    }
+  }
+}

@@ -154,6 +154,16 @@ class OpsSpec extends SparkSpec {
     assert(sdKnown.sameElements(sdDefault), "SemDeDup with knownCentroids diverged from the default path")
   }
 
+  test("knownCentroids together with an explicit nCentroids is rejected, not silently resolved") {
+    val cents = Similarity.centroids(embeddings, 16)
+    intercept[IllegalArgumentException] {
+      Similarity.ivfCosineTopK(embeddings, k = 2, nCentroids = 8, knownCentroids = cents)
+    }
+    intercept[IllegalArgumentException] {
+      Similarity.semDedup(embeddings, minCosine = 0.35, nCentroids = 8, knownCentroids = cents)
+    }
+  }
+
   test("SemDeDup equals the naive keep-lowest-id rule and removes planted near-dups") {
     // real embeddings + planted near-identical twins of three originals
     // (tiny perturbation keeps cosine ~0.9999, far above the threshold)

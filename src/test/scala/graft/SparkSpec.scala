@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM — Test/fork := true). */
+/** Shared local session for all suites (one JVM — Test/fork := true).
+  * A def over getOrCreate: a suite that stops the session (the shared-chain
+  * memo's stopped-session test) leaves the next caller a fresh one. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession
+  def spark: SparkSession = SparkSession
     .builder()
     .master("local[4]")
     .appName("graft-test")
