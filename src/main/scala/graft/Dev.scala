@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.FormattedMode
 /** Dev-only measurement main on Bench's own session and pipeline leg (so
   * its numbers compare with the bench's); not part of the `SparkEntry` contract.
   * `runMain graft.Dev <subcommand>`, where subcommand is one of
-  *  - `setup [reps]`: time each shared chain (SparkEntry.sharedChains);
+  *  - `setup [reps]`: time each shared chain (SharedChains.memo);
   *  - `q <name> [reps]`: time a shared-chain warm-up, then the query into
   *    the noop sink;
   *  - `plans`: regenerate PLANS.md; `plans <name,...> <outDir>`: write
@@ -91,7 +91,7 @@ object Dev {
 
   private def run(cmd: Cmd): Unit = cmd match {
     case Setup(sf, reps) => queryReps(reps) { (spark, r) =>
-        SparkEntry.sharedChains.chains.foreach(c => time(s"rep$r ${c.name}")(c(spark, sf)))
+        SharedChains.memo.chains.foreach(c => time(s"rep$r ${c.name}")(c(spark, sf)))
       }
     case Query(sf, name, reps) => queryReps(reps) { (spark, r) =>
         time(s"rep$r warm")(SparkEntry.warmSharedCaches(spark, sf))

@@ -233,12 +233,6 @@ object Checkpoints {
       .head()
       .getLong(0)
   }
-
-  /** Anti-join resume for incrementally extended outputs (reference:
-    * code/main_citation_pair.py:232-246): rows of `work` whose key is already
-    * in the checkpoint are skipped. */
-  def resumeAnti(work: DataFrame, checkpoint: DataFrame, keys: Seq[String]): DataFrame =
-    work.join(checkpoint.select(keys.map(col): _*).distinct(), keys, "left_anti")
 }
 
 /** Minimal JSON string quoting for the hand-authored manifests (lineage,

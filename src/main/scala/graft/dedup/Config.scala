@@ -19,7 +19,8 @@ package graft.dedup
   *
   * Scale knobs (no reference equivalent — the reference is single-node):
   *  - `numPerms = 128` MinHash permutations (BASELINE.json north_star).
-  *  - `bands x rowsPerBand` = 32 x 4 over the 128-perm signature: the LSH
+  *  - `bands x rowsPerBand` = 32 x 4 over the 128-perm signature: a pair
+  *    with Jaccard s is emitted with probability 1 - (1 - s^4)^32. That
   *    S-curve crosses 0.5 at (1/32)^(1/4) ~= 0.42, giving capture probability
   *    ~0.9998 at the default dedup threshold 0.7 — comfortably above the
   *    recall >= 0.99 target for pairs at or above `threshold`.
@@ -53,7 +54,7 @@ final case class Config(
     // reference corpus is one immutable snapshot):
     //  - collapseVersions: keep only the newest version of each (repo, path)
     //    before tokenization ([[graft.ops.CorpusPrep.latestVersion]], newest
-    //    = greatest `versionOrderCol`); a raw crawl otherwise spends its
+    //    = greatest `commit`); a raw crawl otherwise spends its
     //    candidate budget "discovering" that v1..vN of one file are similar.
     //  - vendoredMinRepos (> 0 enables): content byte-identical across at
     //    least this many DISTINCT repos (licenses, vendored deps) is routed
@@ -61,7 +62,6 @@ final case class Config(
     //    emits sim=1.0 pairs, but its representative generates no near-dup
     //    candidates against the rest of the corpus.
     collapseVersions: Boolean = false,
-    versionOrderCol: String = "commit",
     vendoredMinRepos: Long = 0L,
     seed: Long = 42L,
     // vocabularies up to this size encode via the broadcast CompactDict;
@@ -90,7 +90,7 @@ final case class Config(
     // corpus-prep knobs append only when ENABLED, so every pre-existing
     // default-config work dir keeps its stored sigs (no spurious rebuilds)
     val docs = s"groupCols=${groupCols.mkString(",")};shingleK=$shingleK" +
-      (if (collapseVersions) s";collapseVersions=$versionOrderCol" else "")
+      (if (collapseVersions) ";collapseVersions=commit" else "")
     val vocab = docs + s";minDf=$minDf"
     val encoded = vocab // dense ids over the vocab applied to docs tokens
     val signatures = encoded + s";numPerms=$numPerms;seed=$seed;maxDf=$maxDf" +
@@ -107,8 +107,4 @@ final case class Config(
       "components" -> pairs // a pure function of the pair table
     )
   }
-
-  /** Probability that LSH banding emits a pair with true Jaccard s. */
-  def captureProbability(s: Double): Double =
-    1.0 - math.pow(1.0 - math.pow(s, rowsPerBand.toDouble), bands.toDouble)
 }

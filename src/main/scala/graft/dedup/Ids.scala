@@ -61,16 +61,15 @@ object Ids {
   }
 
   /** Id assignment for wide rows: stamp the distinct key projection, join
-    * ids back (null-safe, shuffle-hash on the skinny build side). With
-    * `dropDuplicateKeys`, rows sharing a key tuple collapse to one
-    * arbitrary row — detected on the SKINNY side and resolved with a fat
-    * aggregate only when duplicates actually exist, so the common
-    * unique-key corpus never pays a payload sort. */
+    * ids back (null-safe, shuffle-hash on the skinny build side). Rows
+    * sharing a key tuple collapse to one arbitrary row — detected on the
+    * SKINNY side and resolved with a fat aggregate only when duplicates
+    * actually exist, so the common unique-key corpus never pays a payload
+    * sort. */
   def assignDenseByKey(
       df: DataFrame,
       sortCols: Seq[String],
       idCol: String,
-      dropDuplicateKeys: Boolean = false,
       reg: CacheRegistry = CacheRegistry.unmanaged
   ): DataFrame = {
     // The payload's ONE shuffle hash-partitions on the FIRST key only
@@ -87,8 +86,7 @@ object Ids {
     )
     val keyCnt = base.groupBy(sortCols.map(col): _*).agg(count(lit(1)).as("__cnt"))
     val keyIds = stampDense(keyCnt, sortCols, idCol, reg)._1
-    val hasDups = dropDuplicateKeys &&
-      keyIds.filter(col("__cnt") > 1).limit(1).count() > 0
+    val hasDups = keyIds.filter(col("__cnt") > 1).limit(1).count() > 0
     val deduped = if (hasDups) base.dropDuplicates(sortCols) else base
     val right = keyIds
       .select(sortCols.map(c => col(c).as(s"__k_$c")) :+ col(idCol): _*)

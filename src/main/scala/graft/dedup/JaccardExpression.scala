@@ -80,8 +80,8 @@ object JaccardSorted {
 /** Codegen'd sorted-int-array intersection COUNT — the raw |A n B| the
   * oracle-facing queries emit next to union_cnt and the unrounded quotient
   * ([[Jaccard.verifyCounts]]), and the verification kernel of the
-  * prefix-filtered exact pair join (SparkEntry.docPairsBy). Replaces the
-  * round-2 boxed interUdf on the q23/q24/q25 hot path. */
+  * prefix-filtered exact pair join (SharedChains.pairsWithPrefixFilter).
+  * Replaces the round-2 boxed interUdf on the q23/q24/q25 hot path. */
 case class IntersectCountSorted(left: Expression, right: Expression) extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = {

@@ -68,9 +68,9 @@ object Pipeline {
     *
     * With `cfg.collapseVersions`, a versioned-crawl pre-step runs FIRST
     * ([[graft.ops.CorpusPrep.latestVersion]]): only the newest version of
-    * each (repo, path) — greatest `cfg.versionOrderCol`, commit asc tie —
-    * is tokenized; historical versions never reach LSH (the window runs on
-    * the skinny key+order columns before the heavy per-row CPU).
+    * each (repo, path) — greatest `commit` — is tokenized; historical
+    * versions never reach LSH (the window runs on the skinny key+order
+    * columns before the heavy per-row CPU).
     *
     * Order matters for scale: sha256 / byte-count / tokenize run FIRST and
     * `content` is dropped, so the id-assignment join (the one shuffle the
@@ -88,7 +88,7 @@ object Pipeline {
       if (!cfg.collapseVersions) input
       else
         graft.ops.CorpusPrep
-          .latestVersion(input, "repo", "path", cfg.versionOrderCol, tieCol = "commit")
+          .latestVersion(input, "repo", "path", "commit", tieCol = "commit")
           .filter(col("keep"))
           .drop("keep")
     val derived = source
@@ -97,7 +97,7 @@ object Pipeline {
       .withColumn("tokens", Tokenize.tokenSet(col("content"), cfg.shingleK))
       .drop("content")
     val withId =
-      Ids.assignDenseByKey(derived, Seq("repo", "path", "commit"), "doc_id", dropDuplicateKeys = true, reg = reg)
+      Ids.assignDenseByKey(derived, Seq("repo", "path", "commit"), "doc_id", reg = reg)
     withId
       .withColumn("group", groupKey(cfg))
       .filter(size(col("tokens")) > 0)

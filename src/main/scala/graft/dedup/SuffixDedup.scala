@@ -249,8 +249,9 @@ object SuffixDedup {
     // one task — whichever side the planner streams (it broadcasts the
     // other) must already be spread, or the UDF stage inherits a single
     // partition (the driver's round-6 bench measured this query bimodally
-    // at 0.9 s vs 12 s depending on which side was built). No-op when the
-    // inputs already have >= cluster parallelism partitions (at scale).
+    // at 0.9 s vs 12 s depending on which side was built). Par.spread
+    // repartitions an input only when its plan's leaf size estimates sum to
+    // less than spark.sql.files.maxPartitionBytes x cores (a no-op at scale).
     val ds = Par.spread(docs)
     val candidates = Par.spread(precomputedCandidates.getOrElse(candidatePairs(ds, cfg, reg)))
     val minMatch = cfg.minMatch

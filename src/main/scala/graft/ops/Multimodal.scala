@@ -27,18 +27,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("modality", StringType, nullable = false), // image | audio | video
-    StructField("bytes", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true),
-      StructField("codec", StringType, nullable = true)
-    )), nullable = true)
-  ))
-
   /** STUB — deterministic fallback embedding for UNDECODABLE payloads (a
     * video container this parser does not speak, truncated bytes, an
     * unsupported audio encoding). A real deployment swaps this body for the

@@ -1,13 +1,12 @@
 package graft
 
-import graft.dedup.{Base50, Checkpoints, Config}
+import graft.dedup.{Checkpoints, Config}
 import org.apache.spark.sql.functions._
 
-/** Coverage for the remaining SURVEY §2 source/sink/codec items: CSV scan
-  * with header (S1), text/CSV sink (S5), anti-join resume (S8/J7), and the
-  * base-50 codec (O5).
+/** The checkpoint subsystem: CSV sink + header scan (S1/S5), sidecar heal,
+  * the config guard, lineage JSON and the composite partitioned sink (S7).
   */
-class SourcesSpec extends SparkSpec {
+class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
 
   test("S1/S5: CSV sink + header scan round-trips the reference input shape") {
@@ -23,70 +22,6 @@ class SourcesSpec extends SparkSpec {
     val r = back.filter(col("pnr") === "CN101").head()
     assert(r.getAs[String]("abstract_en").contains("\"quotes\" and, commas"))
     assert(r.getAs[Int]("year") == 2015)
-  }
-
-  test("S2: header-sniffing reader — named columns when present, positional fallback") {
-    import java.nio.file.{Files, Paths}
-    val dir = tmpDir("graft-sniff")
-    // headered file with the expected columns in a DIFFERENT order + an extra
-    val withHeader = s"$dir/with_header.csv"
-    Files.write(
-      Paths.get(withHeader),
-      "year,extra,pnr,title\n2015,x,CN101,alpha\n2016,y,CN102,beta\n".getBytes("UTF-8")
-    )
-    // headerless file: same data positionally as (pnr, title, year)
-    val noHeader = s"$dir/no_header.csv"
-    Files.write(
-      Paths.get(noHeader),
-      "CN101,alpha,2015,junk\nCN102,beta,2016,junk\n".getBytes("UTF-8")
-    )
-    val want = Set(("CN101", "alpha", "2015"), ("CN102", "beta", "2016"))
-    val a = graft.sources.Sources
-      .readDelimited(spark, withHeader, Seq("pnr", "title", "year"))
-      .as[(String, String, String)]
-      .collect()
-      .toSet
-    val b = graft.sources.Sources
-      .readDelimited(spark, noHeader, Seq("pnr", "title", "year"))
-      .as[(String, String, String)]
-      .collect()
-      .toSet
-    assert(a == want, s"named-column read: $a")
-    assert(b == want, s"positional read: $b")
-
-    // directory with MIXED files: each file is sniffed independently — the
-    // headered file's first line is stripped, the headerless one's is data
-    val both = graft.sources.Sources
-      .readDelimited(spark, dir, Seq("pnr", "title", "year"))
-      .as[(String, String, String)]
-      .collect()
-    assert(both.length == 4, s"expected 2+2 rows from the mixed dir, got ${both.toSeq}")
-    assert(both.toSet == want, s"mixed-dir read: ${both.toSeq}")
-  }
-
-  test("S2 at scale: a 1000-file mixed directory plans ONE scan per shape, not a 1000-way union") {
-    import java.nio.file.{Files, Paths}
-    val dir = tmpDir("graft-sniff-1k")
-    (0 until 500).foreach { i =>
-      Files.write(
-        Paths.get(f"$dir%s/h$i%03d.csv"),
-        s"year,extra,pnr,title\n${2000 + i},x,CNH$i,alphaH$i\n".getBytes("UTF-8")
-      )
-      Files.write(
-        Paths.get(f"$dir%s/p$i%03d.csv"),
-        s"CNP$i,alphaP$i,${3000 + i},junk\n".getBytes("UTF-8")
-      )
-    }
-    val df = graft.sources.Sources.readDelimited(spark, dir, Seq("pnr", "title", "year"))
-    // two shapes (one shared header line + one positional arity) -> two scans
-    val leaves = df.queryExecution.analyzed.collectLeaves().length
-    assert(leaves <= 2, s"plan has $leaves relation leaves — grouping by sniff outcome failed")
-    val rows = df.as[(String, String, String)].collect()
-    assert(rows.length == 1000)
-    assert(rows.count(_._1.startsWith("CNH")) == 500)
-    assert(rows.count(_._1.startsWith("CNP")) == 500)
-    assert(rows.contains(("CNH7", "alphaH7", "2007")))
-    assert(rows.contains(("CNP7", "alphaP7", "3007")))
   }
 
   test("sidecar heal: a committed stage missing its metrics gets them rebuilt on resume") {
@@ -129,6 +64,10 @@ class SourcesSpec extends SparkSpec {
         v != Config().stageFingerprints(k)
       }
     )
+    // the version collapse stamps this exact suffix; work dirs already
+    // stamped with it must keep resuming
+    assert(Config(collapseVersions = true).stageFingerprints("docs") ==
+      "groupCols=lang;shingleK=1;collapseVersions=commit")
     Checkpoints.stage(spark, "g", s"$work/g", Nil, Nil, sigA)(rows)
     Checkpoints.awaitAllSidecars()
     // same sig: resumes without rebuilding
@@ -168,16 +107,6 @@ class SourcesSpec extends SparkSpec {
     assert(r.getAs[scala.collection.Seq[String]]("inputs").toSeq == Seq(s"$work/in\"put"))
   }
 
-  test("S8/J7: anti-join resume skips keys already in the checkpoint") {
-    val work = (1L to 100L).map(i => (i, s"payload$i")).toDF("k", "v")
-    val done = (1L to 40L).map(i => Tuple1(i)).toDF("k")
-    val remaining = Checkpoints.resumeAnti(work, done, Seq("k"))
-    assert(remaining.count() == 60)
-    assert(remaining.agg(min("k")).head().getLong(0) == 41L)
-    // idempotence: resuming against everything leaves nothing
-    assert(Checkpoints.resumeAnti(work, work.select("k"), Seq("k")).count() == 0)
-  }
-
   test("S7: composite (two-column) partitioned sink with per-partition metrics") {
     val work = tmpDir("graft-s7")
     val rows = Seq(
@@ -201,23 +130,5 @@ class SourcesSpec extends SparkSpec {
       "year=2015/typ=A" -> 2L, "year=2015/typ=B" -> 1L,
       "year=2016/typ=A" -> 1L, "year=2016/typ=B" -> 1L
     ))
-  }
-
-  test("O5: base-50 codec matches the reference alphabet and round-trips") {
-    // values checked against the reference algorithm by hand:
-    // 0 -> "0"; 49 -> "?"; 50 -> "10"; 2500 -> "100"; 137 -> 2*50+37 -> "2@"
-    assert(Base50.encode(0) == "0")
-    assert(Base50.encode(49) == "?")
-    assert(Base50.encode(50) == "10")
-    assert(Base50.encode(2500) == "100")
-    assert(Base50.encode(137) == "2@")
-    (0L to 3000L by 7).foreach(n => assert(Base50.decode(Base50.encode(n)) == n))
-    val viaCol = Seq(0L, 49L, 50L, 137L)
-      .toDF("n")
-      .select(Base50.encodeCol(col("n")))
-      .as[String]
-      .collect()
-      .toSeq
-    assert(viaCol == Seq("0", "?", "10", "2@"))
   }
 }

@@ -348,13 +348,13 @@ class KernelSpec extends SparkSpec {
     assert(ids.sameElements(0L until 400L), "coalesced stamp must stay dense and unique")
   }
 
-  test("assignDense with dropDuplicateKeys keeps one row per key, ids stay dense") {
+  test("assignDenseByKey keeps one row per duplicated key, ids stay dense") {
     val df = spark
       .createDataFrame((0 until 300).map(i => (f"k${i % 100}%04d", i)))
       .toDF("k", "v")
       .repartition(5)
     val got = Ids
-      .assignDenseByKey(df, Seq("k"), "id", dropDuplicateKeys = true)
+      .assignDenseByKey(df, Seq("k"), "id")
       .select("k", "id")
       .as[(String, Long)]
       .collect()

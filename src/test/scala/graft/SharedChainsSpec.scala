@@ -34,6 +34,26 @@ class SharedChainsSpec extends SparkSpec {
     assert(chains.size == 1)
   }
 
+  test("exact pairs: the remap branch and the generic prefix-filter branch emit the same rows") {
+    val dir = "/root/testdata/sf0.001"
+    def rows(remapCap: Long) =
+      SharedChains.exactPairs(spark, dir, remapCap)
+        .select("lang", "a", "b", "inter_cnt", "union_cnt", "sim")
+        .collect()
+        .map(_.toSeq)
+        .toSeq
+        .sortBy(r => (r(1).asInstanceOf[Long], r(2).asInstanceOf[Long]))
+    try {
+      val remapped = rows(SharedChains.oracleLshCfg.broadcastMaxVocab)
+      val generic = rows(0L)
+      assert(remapped.nonEmpty)
+      assert(generic == remapped)
+    } finally {
+      SparkEntry.releaseTransientCaches()
+      SparkEntry.releaseSharedCaches()
+    }
+  }
+
   // Stops the shared session, so it runs last; SparkSpec.spark hands later
   // suites a fresh one.
   test("an entry whose session has stopped is dropped and not returned") {

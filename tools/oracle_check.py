@@ -6,7 +6,9 @@ Usage: oracle_check.py <sf_dir> <verify_out_dir> [query ...]
 <verify_out_dir> is what `graft.Verify <sf_dir> <out>` wrote: one parquet
 directory per query plus oracle_sql.json. For each query we run the oracle
 SQL in DuckDB over the sf tables and compare the full multiset of rows
-(EXCEPT ALL both ways) plus column names. Exit 1 on any mismatch.
+(EXCEPT ALL both ways) plus column names. Exit 1 on any mismatch, and
+when a query's output directory has no oracle entry or an oracle entry has
+no output directory. The last line reads `N/N ok`.
 """
 import json
 import sys
@@ -25,9 +27,18 @@ def main() -> int:
     out = Path(sys.argv[2])
     only = set(sys.argv[3:])
     oracle_sql = json.loads((out / "oracle_sql.json").read_text())
+    outputs = {p.name for p in out.iterdir() if p.is_dir()}
+    names = set(oracle_sql) | outputs
+    names = sorted(names & only if only else names)
     bad = 0
-    for name in sorted(oracle_sql):
-        if only and name not in only:
+    for name in names:
+        if name not in oracle_sql:
+            print(f"{name}: NO ORACLE for this output directory")
+            bad += 1
+            continue
+        if name not in outputs:
+            print(f"{name}: NO OUTPUT directory for this oracle entry")
+            bad += 1
             continue
         con = duckdb.connect()
         for t in TABLES:
@@ -65,6 +76,7 @@ def main() -> int:
             bad += 1
         finally:
             con.close()
+    print(f"{len(names) - bad}/{len(names)} ok")
     return 1 if bad else 0
 
 
