@@ -341,14 +341,13 @@ private[graft] object SharedChains {
   /** The sqrt(n) coarse quantizer over the embeddings table — the exact
     * centroids q36 (IVF) and q37 (SemDeDup) would each recompute (an
     * identical sizing count job + centroid collect): n from one count,
-    * nc = max(16, ceil(sqrt(n))) (the operators' shared adaptive default),
+    * nc = max(16, ceil(sqrt(n))) (the operators' shared adaptive default,
+    * [[graft.ops.Similarity.adaptiveCentroids]]),
     * centroids = the nc lowest-vec_id embeddings. A pure function of the
     * input table, so the consumers' outputs are bitwise unchanged; pure
     * driver-side state (a few hundred centroid vectors). */
   val embCentroidsCached = memo.declare("emb_centroids") { (s, dir) =>
-    val emb = t(s, dir, "embeddings")
-    val nc = math.max(16, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-    graft.ops.Similarity.centroids(emb, nc)
+    graft.ops.Similarity.adaptiveCentroids(t(s, dir, "embeddings"))
   }
 }
 

@@ -52,28 +52,30 @@ object Jaccard {
     *         (code/Stage05ComputeSimilarity.py:211-221)
     */
   def verify(candidates: DataFrame, encoded: DataFrame, minSim: Double): DataFrame = {
-    val docsA = encoded.select(col("doc_id").as("a"), col("group"), col("tokens").as("tokens_a"))
-    val docsB = encoded.select(col("doc_id").as("b"), col("tokens").as("tokens_b"))
     // single predicate: `sim >= max(minSim, minPositive)` subsumes the
     // reference's `sim > 0` (code/Stage05ComputeSimilarity.py:132) — Catalyst
     // substitutes the kernel into every predicate conjunct it pushes into the
     // join, so one conjunct = one fewer kernel evaluation per candidate row
     val floor = math.max(minSim, java.lang.Double.MIN_VALUE)
-    candidates
-      // shuffle-hash build on the skinny (a,b) pair side: an SMJ here would
-      // sort the wide token-array table. The SECOND join stays SMJ on
-      // purpose: its only possible build sides both carry token arrays, and
-      // an UnsafeHashedRelation build does not spill — at N tasks each gets
-      // 1/N of the executor pool and a fat build OOMs exactly when the
-      // machine is busiest (observed at the 2.5M-file local[8] leg).
-      .hint("shuffle_hash")
-      .join(docsA, "a")
-      .join(docsB, "b")
+    withTokens(candidates, encoded)
       // codegen'd Catalyst expression (no UDF boxing) — see JaccardExpression
       .withColumn("sim", JaccardSorted(col("tokens_a"), col("tokens_b")))
       .filter(col("sim") >= floor)
       .select(col("group"), col("a"), col("b"), col("sim"))
   }
+
+  /** candidates (a, b) joined to (group, tokens_a) and tokens_b. The first
+    * join builds a shuffle hash on the skinny (a, b) pair side: an SMJ here
+    * would sort the wide token-array table. The SECOND join stays SMJ on
+    * purpose: its only possible build sides both carry token arrays, and an
+    * UnsafeHashedRelation build does not spill — at N tasks each gets 1/N of
+    * the executor pool and a fat build OOMs exactly when the machine is
+    * busiest (observed at the 2.5M-file local[8] leg). */
+  private def withTokens(candidates: DataFrame, encoded: DataFrame): DataFrame =
+    candidates
+      .hint("shuffle_hash")
+      .join(encoded.select(col("doc_id").as("a"), col("group"), col("tokens").as("tokens_a")), "a")
+      .join(encoded.select(col("doc_id").as("b"), col("tokens").as("tokens_b")), "b")
 
   def hamming(x: Column, y: Column): Column = bit_count(x.bitwiseXOR(y))
 
@@ -83,14 +85,8 @@ object Jaccard {
     * reference pipeline is deliberately not SQL-portable — DuckDB rounds
     * half away from zero). Columns: (group, a, b, inter_cnt, union_cnt, sim).
     */
-  def verifyCounts(candidates: DataFrame, encoded: DataFrame, minSim: Double): DataFrame = {
-    val docsA = encoded.select(col("doc_id").as("a"), col("group"), col("tokens").as("tokens_a"))
-    val docsB = encoded.select(col("doc_id").as("b"), col("tokens").as("tokens_b"))
-    candidates
-      // first join SHJ (skinny pair build), second SMJ — see verify()
-      .hint("shuffle_hash")
-      .join(docsA, "a")
-      .join(docsB, "b")
+  def verifyCounts(candidates: DataFrame, encoded: DataFrame, minSim: Double): DataFrame =
+    withTokens(candidates, encoded)
       // codegen'd Catalyst expression, no per-element boxing (JaccardExpression)
       .withColumn("inter_cnt", IntersectCountSorted(col("tokens_a"), col("tokens_b")).cast("long"))
       .withColumn(
@@ -100,5 +96,4 @@ object Jaccard {
       .withColumn("sim", col("inter_cnt").cast("double") / col("union_cnt"))
       .filter(col("sim") >= minSim)
       .select(col("group"), col("a"), col("b"), col("inter_cnt"), col("union_cnt"), col("sim"))
-  }
 }

@@ -97,15 +97,16 @@ object MinHash {
 
   /** LSH candidate pairs (a < b), deduped across bands.
     *
-    * Plan choice by collision regime (both emit the SAME pair set, asserted
-    * by the PairGen spec): few rows per band (<= 2 — the oracle-equality
-    * detector configs) means a near-dup pair collides in MOST bands, so the
-    * default generator shuffles a large duplication factor into its
-    * distinct() (measured 27x / 86M raw rows on the sf0.1 queries) — the
-    * first-collision generator emits each pair once from its minimal
-    * non-oversized band instead, paying a wider band-row exchange (the
-    * carried hash array). At production banding (32x4) the measured
-    * duplication is only 1.92x and the narrow exchange wins. */
+    * Both plans run PairGen's one bucket walk and emit the SAME pair set
+    * (asserted by TopNSpec and PairGenSpec); they differ in the walk's keep
+    * rule for small buckets. Few rows per band (<= 2 — the oracle-equality
+    * detector configs) means a near-dup pair collides in MOST bands, so
+    * keeping every pair shuffles a large duplication factor into the final
+    * distinct() (measured 27x / 86M raw rows on the sf0.1 queries); the
+    * first-collision rule keeps each pair only in its minimal non-oversized
+    * band, paying a wider band-row exchange (the carried hash array). At
+    * production banding (32x4) the measured duplication is only 1.92x and
+    * the narrow keep-all exchange wins. */
   def candidatePairs(signatures: DataFrame, cfg: Config, docCountBound: Long = Long.MaxValue): DataFrame =
     if (cfg.rowsPerBand <= 2)
       PairGen.pairsFromBandBucketsFirstCollision(

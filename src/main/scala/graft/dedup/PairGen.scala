@@ -2,40 +2,31 @@ package graft.dedup
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Bucket -> candidate-pair generation, shared by the LSH band pass and the
-  * SimHash block pass.
+/** Bucket -> candidate-pair generation, shared by the LSH band pass, the
+  * SimHash block pass and the winnow fingerprint pass.
   *
   * Skew design (SURVEY.md §4): boilerplate shingles put thousands of docs in
   * one bucket; a naive self-join on the bucket key makes one O(B^2) straggler
   * task and a per-bucket `collect_list` OOMs. Two semantics, one pass:
   *
-  *  - B <= maxBucket: full B^2/2 pair expansion;
-  *  - B > maxBucket: chain-linking — each doc pairs with its `chainWidth`
-  *    sorted forward neighbors only. This bounds output at B*w while
+  *  - B <= maxBucket: full B^2/2 pair expansion, or the pairs a keep rule
+  *    accepts (all of them, or [[FirstCollision]]'s);
+  *  - B > maxBucket: chain-linking — each doc pairs with its `ChainWidth`
+  *    sorted neighbors only, unfiltered. This bounds output at B*w while
   *    preserving CONNECTIVITY of the bucket (a chain spans it), which is what
   *    clustering needs; pairwise completeness for near-dup pairs is carried
   *    by the other bands (each pair gets `bands` independent chances to land
-  *    in a small bucket). Dropped-pair exposure is observable via
-  *    [[oversizedBuckets]].
+  *    in a small bucket). Bench reports the oversized-bucket count.
   *
-  * Physical shape (round-3 rewrite): ONE hash exchange on the bucket key +
-  * ONE in-partition sort by (key, doc_id) + a STREAMING mapPartitions
-  * generator. The round-2 plan (window count + collect_list + double explode
-  * + a second window for the chain path) paid two window sorts over the full
-  * band-row table — the worst-scaling stage of the official bench. The
-  * generator buffers at most maxBucket+1 ids per bucket (it switches to chain
-  * emission the moment a bucket exceeds the cap), so task memory stays
-  * bounded no matter how hot a bucket gets — strictly better than any
-  * collect_list shape. It emits one (id, tail-array) row per doc per bucket
-  * — NOT one JVM object per pair — and the quadratic pair fan-out happens in
-  * a codegen'd `explode` over the primitive long arrays (the oracle-config
-  * detectors expand ~60x more raw pairs than distinct ones; boxing each was
-  * measurably slower than Tungsten generation). Emitted pair sets are
-  * bitwise-identical to round 2's (asserted by the PairGen spec and the
-  * q23/q24/q28/q31a oracles).
+  * Physical shape: ONE hash exchange on the bucket key + ONE in-partition
+  * sort by (key, doc_id) + the streaming [[BucketWalk]], which buffers at
+  * most maxBucket+1 members per bucket, however hot. It emits one
+  * (id, neighbor-array) row per doc per bucket, not one JVM object per pair;
+  * the quadratic fan-out is a codegen'd `explode` over primitive long arrays
+  * (boxing each pair was measurably slower).
   *
   * Exact duplicates should be collapsed to one representative per content
   * hash BEFORE this runs (see [[Pipeline]]) — otherwise a 100k-copy file
@@ -45,114 +36,109 @@ object PairGen {
 
   val ChainWidth = 4
 
-  /** rows: bucket key columns + `doc_id`. Returns distinct (a, b), a < b.
-    *
-    * The streaming bucket/cap/chain state machine below has a deliberate
-    * TWIN in [[pairsFromBandBucketsFirstCollision]] (different emission:
-    * pairs filtered to their first collision band, so it buffers signatures
-    * too). Any change to bucket boundaries, cap crossing, or chain-window
-    * maintenance must be applied to BOTH — the PairGen spec asserts their
-    * emitted pair sets stay equal. */
-  def pairsFromBuckets(rows: DataFrame, bucketCols: Seq[String], maxBucket: Int): DataFrame = {
-    val keys = bucketCols.map(col)
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val prepared = rows
-      .select(keys :+ col("doc_id").cast("long").as("doc_id"): _*)
-      .repartition(keys: _*)
-      .sortWithinPartitions(keys :+ col("doc_id"): _*)
-    val nKeys = bucketCols.length
-    val docIdx = nKeys // doc_id is the last projected column
-    val cap = maxBucket
-    prepared
-      .mapPartitions { it =>
-        new Iterator[(Long, Array[Long])] {
-          private val buf = new ArrayBuffer[Long]()
-          private val curKey = new Array[Any](nKeys)
-          private var haveKey = false
-          private var chain = false
-          private var pending: Iterator[(Long, Array[Long])] = Iterator.empty
+  /** The bucket/cap/chain state machine. Input rows are sorted by
+    * (key columns 0 until nKeys, doc_id at nKeys). A closed bucket of size
+    * <= cap yields, per member, (id, later ids the keep rule accepts — all
+    * of them without one). A bucket that crosses the cap yields chain rows
+    * instead, unfiltered: the buffered prefix as (id, its <= ChainWidth later
+    * ids), then each further member as (id, its <= ChainWidth earlier ids).
+    * Consumers orient pairs themselves (least/greatest). */
+  private[dedup] final class BucketWalk(rows: Iterator[Row], nKeys: Int, cap: Int, keep: Option[FirstCollision])
+      extends Iterator[(Long, Array[Long])] {
+    private val ids = new ArrayBuffer[Long]()
+    private val sigs = new ArrayBuffer[Array[Long]]()
+    private var key: Row = null // first row of the current bucket
+    private var chain = false
+    private var pending: Iterator[(Long, Array[Long])] = Iterator.empty
 
-          private def sameKey(r: org.apache.spark.sql.Row): Boolean = {
-            var i = 0
-            while (i < nKeys) {
-              if (r.get(i) != curKey(i)) return false
-              i += 1
+    private def sameKey(r: Row): Boolean = {
+      var i = 0
+      while (i < nKeys && r.get(i) == key.get(i)) i += 1
+      i == nKeys
+    }
+
+    private def push(r: Row, id: Long): Unit = {
+      ids += id
+      keep.foreach(k => sigs += k.sig(r))
+    }
+
+    /** Close a small bucket. Everything the lazy rows read is snapshotted:
+      * they are consumed after the walk has moved on to the next bucket. */
+    private def flush(): Iterator[(Long, Array[Long])] =
+      if (chain || ids.length < 2) Iterator.empty
+      else {
+        val members = ids.toArray
+        val n = members.length
+        keep match {
+          case None =>
+            (0 until n - 1).iterator.map(i => (members(i), java.util.Arrays.copyOfRange(members, i + 1, n)))
+          case Some(k) =>
+            val accept = k.bucket(key, sigs.toArray)
+            (0 until n - 1).iterator
+              .map(i => (members(i), (i + 1 until n).filter(j => accept(i, j)).map(members).toArray))
+              .filter(_._2.nonEmpty)
+        }
+      }
+
+    private def advance(): Unit = {
+      while (!pending.hasNext && rows.hasNext) {
+        val r = rows.next()
+        val id = r.getLong(nKeys)
+        if (key == null || !sameKey(r)) {
+          pending = flush()
+          key = r
+          chain = false
+          ids.clear(); sigs.clear()
+          push(r, id)
+        } else if (chain) {
+          // the window holds exactly the <= ChainWidth ids before this one
+          pending = Iterator.single((id, ids.toArray))
+          ids += id
+          if (ids.length > ChainWidth) ids.remove(0)
+        } else {
+          push(r, id)
+          if (ids.length > cap) {
+            // the bucket just crossed the cap: chain-link all of it — the
+            // buffered prefix now, the rest as it streams — keeping only
+            // the trailing window
+            chain = true
+            val prefix = ids.toArray
+            pending = (0 until prefix.length - 1).iterator.map { i =>
+              (prefix(i), java.util.Arrays.copyOfRange(prefix, i + 1, math.min(i + 1 + ChainWidth, prefix.length)))
             }
-            true
-          }
-
-          /** Small completed bucket: one (id, full tail) row per doc — the
-            * exploded union is the full B^2/2 pair set (ids ascending). */
-          private def fullRows(ids: Array[Long]): Iterator[(Long, Array[Long])] =
-            if (ids.length < 2) Iterator.empty
-            else
-              (0 until ids.length - 1).iterator.map { i =>
-                (ids(i), java.util.Arrays.copyOfRange(ids, i + 1, ids.length))
-              }
-
-          /** Chain rows among `ids`: each id with its <=ChainWidth forward
-            * neighbors — the buffered prefix when a bucket crosses the cap. */
-          private def chainRows(ids: Array[Long]): Iterator[(Long, Array[Long])] =
-            (0 until ids.length - 1).iterator.map { i =>
-              (ids(i), java.util.Arrays.copyOfRange(ids, i + 1, math.min(i + 1 + ChainWidth, ids.length)))
-            }
-
-          /** Close the current bucket: small buckets emit their rows now;
-            * chain-mode buckets already streamed everything. */
-          private def flushBucket(): Iterator[(Long, Array[Long])] =
-            if (!chain && buf.length > 1) fullRows(buf.toArray) else Iterator.empty
-
-          private def advance(): Unit = {
-            while (!pending.hasNext && it.hasNext) {
-              val r = it.next()
-              val id = r.getLong(docIdx)
-              if (!haveKey || !sameKey(r)) {
-                pending = flushBucket()
-                var i = 0
-                while (i < nKeys) { curKey(i) = r.get(i); i += 1 }
-                haveKey = true
-                chain = false
-                buf.clear()
-                buf += id
-              } else if (chain) {
-                // stream one row: (id, the <=ChainWidth ids before it) — the
-                // exploded orientation is fixed by least/greatest below
-                val from = math.max(0, buf.length - ChainWidth)
-                pending = Iterator.single((id, buf.slice(from, buf.length).toArray))
-                buf += id
-                if (buf.length > ChainWidth) buf.remove(0, buf.length - ChainWidth)
-              } else {
-                buf += id
-                if (buf.length > cap) {
-                  // bucket just crossed the cap: the WHOLE bucket is chain-
-                  // linked — emit chain rows for the buffered prefix, then
-                  // stream; drop all but the trailing window
-                  chain = true
-                  val ids = buf.toArray
-                  pending = chainRows(ids)
-                  buf.clear()
-                  buf ++= ids.takeRight(ChainWidth)
-                }
-              }
-            }
-            if (!pending.hasNext && !it.hasNext && haveKey) {
-              pending = flushBucket()
-              haveKey = false
-              buf.clear()
-            }
-          }
-
-          def hasNext: Boolean = {
-            if (!pending.hasNext) advance()
-            pending.hasNext
-          }
-          def next(): (Long, Array[Long]) = {
-            if (!hasNext) throw new NoSuchElementException
-            pending.next()
+            ids.clear(); sigs.clear()
+            ids ++= prefix.takeRight(ChainWidth)
           }
         }
       }
+      if (!pending.hasNext && !rows.hasNext && key != null) {
+        pending = flush()
+        key = null
+      }
+    }
+
+    def hasNext: Boolean = {
+      if (!pending.hasNext) advance()
+      pending.hasNext
+    }
+    def next(): (Long, Array[Long]) = {
+      if (!hasNext) throw new NoSuchElementException
+      pending.next()
+    }
+  }
+
+  /** Exchange + sort `rows` (keyCols ++ doc_id: long ++ whatever the keep
+    * rule reads) on the bucket key, walk the buckets, and fan the walk rows
+    * out to distinct (a, b), a < b. `keep` is built once per partition. */
+  private def walk(rows: DataFrame, keyCols: Seq[String], cap: Int, keep: () => Option[FirstCollision]): DataFrame = {
+    val keys = keyCols.map(col)
+    val nKeys = keys.length
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows
+      .repartition(keys: _*)
+      .sortWithinPartitions(keys :+ col("doc_id"): _*)
+      .mapPartitions(it => new BucketWalk(it, nKeys, cap, keep()))
       .toDF("x", "ys")
       // quadratic fan-out in codegen over primitive arrays, not in the JVM
       // iterator; chain rows arrive (later, earlier) so orient explicitly
@@ -161,49 +147,65 @@ object PairGen {
       .distinct()
   }
 
-  /** Count of buckets above the cap (metrics / observability). */
-  def oversizedBuckets(rows: DataFrame, bucketCols: Seq[String], maxBucket: Int): Long =
-    rows.groupBy(bucketCols.map(col): _*).count().filter(col("count") > maxBucket).count()
+  private def docId = col("doc_id").cast("long").as("doc_id")
+
+  /** rows: bucket key columns + `doc_id`. Returns distinct (a, b), a < b. */
+  def pairsFromBuckets(rows: DataFrame, bucketCols: Seq[String], maxBucket: Int): DataFrame =
+    walk(rows.select(bucketCols.map(col) :+ docId: _*), bucketCols, maxBucket, () => None)
 
   /** Broadcastable oversized-bucket sets above this size fall back to
     * [[pairsFromBuckets]] (correctness never depends on the fast path). */
   val OversizedBroadcastMax: Long = 2000000L
 
+  /** Keep rule of [[pairsFromBandBucketsFirstCollision]]: a pair of band
+    * `b`'s small bucket survives iff no band k < b holds both docs in a small
+    * bucket, i.e. every earlier equal band hash keys a bucket in `oversized`
+    * (group values ++ (band, band_hash)). A superset of the truly oversized
+    * keys only adds duplicates. The walk buffers [[sig]] (the doc's hash per
+    * band) per member and asks [[bucket]] for each small bucket's pair test
+    * over member indexes i < j, given the bucket's first row. */
+  private[dedup] final class FirstCollision(nGroup: Int, oversized: Set[Seq[Any]]) {
+    def sig(r: Row): Array[Long] = r.getSeq[Long](nGroup + 3).toArray // after the key and doc_id
+
+    def bucket(key: Row, sigs: Array[Array[Long]]): (Int, Int) => Boolean = {
+      val band = key.getInt(nGroup)
+      val group = key.toSeq.take(nGroup)
+      (i, j) => {
+        val a = sigs(i); val b = sigs(j)
+        var k = 0
+        while (k < band && (a(k) != b(k) || isOversized(group, k, a(k)))) k += 1
+        k == band
+      }
+    }
+
+    private def isOversized(group: Seq[Any], band: Int, hash: Long): Boolean =
+      oversized.nonEmpty && oversized.contains(group ++ Seq[Any](band, hash))
+  }
+
   /** FIRST-COLLISION-BAND pair generation for HIGH-COLLISION banding configs
     * (e.g. 64 bands x 2 rows at threshold 0.5: a sim-0.9 pair collides in
     * ~52 of 64 bands, so [[pairsFromBuckets]] shuffles ~27 duplicate rows
     * per distinct pair into its distinct() — measured 86M raw vs 3.2M
-    * distinct on the sf0.1 detector queries). Each band row carries the
-    * doc's FULL band-hash array (`bhs`), and a pair is emitted only in the
-    * minimal band where the two docs collide in a NON-oversized bucket —
-    * so the generator's output is already (nearly) duplicate-free and the
-    * final distinct shuffles ~1x the pair set.
+    * distinct on the sf0.1 detector queries). The same walk with the
+    * [[FirstCollision]] keep rule: each band row carries the doc's FULL
+    * band-hash array (`bhs`), and a small bucket emits a pair only in the
+    * minimal band where the two docs collide in a non-oversized bucket — so
+    * the final distinct shuffles ~1x the pair set.
     *
-    * The emitted pair SET is identical to [[pairsFromBuckets]]:
-    *  - oversized buckets chain-link exactly as before (unfiltered; the
-    *    final distinct removes cross-mode duplicates);
-    *  - the first-collision filter treats collisions inside oversized
-    *    buckets as non-emitting (those buckets emitted chains, not pairs),
-    *    via a broadcast of the oversized bucket keys — rare by design
-    *    (boilerplate caps keep buckets small; the bench measures 0), and if
-    *    their count exceeds [[OversizedBroadcastMax]] the function falls
-    *    back to [[pairsFromBuckets]] wholesale.
+    * The emitted pair SET is identical to [[pairsFromBuckets]]: oversized
+    * buckets chain-link unfiltered, and the rule treats collisions inside
+    * them as non-emitting via a broadcast of the oversized bucket keys —
+    * rare by design (the bench measures 0); above [[OversizedBroadcastMax]]
+    * keys this falls back to [[pairsFromBuckets]] wholesale. A doc has one
+    * row per band bucket, so a doc-count `bucketSizeBound` <= maxBucket
+    * proves the set empty and skips the probe job.
     *
     * NOT the default: carrying `bands` hashes per band row multiplies the
-    * exchange width, which only pays when the duplication factor is large.
-    * Measured: production 32x4 config dup factor 1.92 (keep
-    * pairsFromBuckets); oracle 64x2 config dup factor 27 (use this).
-    *
-    * Memory shape vs [[pairsFromBuckets]]: buffering a bucket holds every
-    * member's full hash array, up to min(|bucket|, maxBucket+1) x bands x
-    * 8 bytes per task (chain mode drops the buffers past the cap), where
-    * the default generator buffers bare ids. Capped production-style
-    * configs stay ~1 MB/task; an UNCAPPED config (oracle-parity
-    * maxBucket = 1<<20) accepts up to ~0.5 GB on a pathological hot bucket
-    * as the price of exact pair parity — cap maxBucket when taking this
-    * path at scale. The oversized-key probe's driver cost is bounded by
-    * [[OversizedBroadcastMax]] keys (~100 MB transient worst-case) before
-    * the wholesale fallback.
+    * exchange width, which only pays when the duplication factor is large
+    * (measured: production 32x4 dup factor 1.92, oracle 64x2 dup factor 27).
+    * A small bucket buffers each member's hash array, up to (maxBucket+1) x
+    * bands x 8 bytes per task: ~1 MB at capped configs, up to ~0.5 GB on a
+    * hot bucket under the UNCAPPED oracle-parity config (maxBucket = 1<<20).
     *
     * rows: groupCols ++ (band: int, band_hash: long, doc_id, bhs:
     * array<long> — the doc's hash per band, indexed by `band`). */
@@ -215,163 +217,21 @@ object PairGen {
   ): DataFrame = {
     val keyCols = groupCols ++ Seq("band", "band_hash")
     val keys = keyCols.map(col)
-    val spark = rows.sparkSession
-    import spark.implicits._
-
-    // A doc contributes at most ONE row per (band) bucket, so any upper
-    // bound on the doc count bounds every bucket's size. When the caller
-    // proves bucketSizeBound <= maxBucket, no bucket can be oversized and
-    // the probe aggregation + collect below is a job spent learning an
-    // empty set — skip it (arithmetic, not an estimate: the generator's cap
-    // state machine still runs, it just never fires).
-    val oversizedRows: Array[org.apache.spark.sql.Row] =
+    val oversized: Array[Row] =
       if (bucketSizeBound <= maxBucket) Array.empty
-      else {
-        val oversizedDf = rows
+      else
+        rows
           .groupBy(keys: _*)
           .agg(count(lit(1)).as("n"))
           .filter(col("n") > maxBucket)
           .select(keys: _*)
-        oversizedDf.limit((OversizedBroadcastMax + 1).toInt).collect()
-      }
-    if (oversizedRows.length > OversizedBroadcastMax)
+          .limit((OversizedBroadcastMax + 1).toInt)
+          .collect()
+    if (oversized.length > OversizedBroadcastMax)
       return pairsFromBuckets(rows.drop("bhs"), keyCols, maxBucket)
     val nGroup = groupCols.length
-    val oversized: Set[(String, Int, Long)] = oversizedRows.map { r =>
-      val g = (0 until nGroup).map(i => String.valueOf(r.get(i))).mkString("\u0001")
-      (g, r.getInt(nGroup), r.getLong(nGroup + 1))
-    }.toSet
-    val bOversized = spark.sparkContext.broadcast(oversized)
-
-    val prepared = rows
-      .select(keys ++ Seq(col("doc_id").cast("long").as("doc_id"), col("bhs")): _*)
-      .repartition(keys: _*)
-      .sortWithinPartitions(keys :+ col("doc_id"): _*)
-    val docIdx = keyCols.length
-    val bhsIdx = docIdx + 1
-    val bandIdx = nGroup
-    val cap = maxBucket
-    prepared
-      .mapPartitions { it =>
-        val over = bOversized.value
-        new Iterator[(Long, Long)] {
-          private val ids = new ArrayBuffer[Long]()
-          private val sigs = new ArrayBuffer[Array[Long]]()
-          private val curKey = new Array[Any](keyCols.length)
-          private var curGroup: String = null
-          private var curBand: Int = 0
-          private var haveKey = false
-          private var chain = false
-          private var pending: Iterator[(Long, Long)] = Iterator.empty
-
-          private def sameKey(r: org.apache.spark.sql.Row): Boolean = {
-            var i = 0
-            while (i < curKey.length) {
-              if (r.get(i) != curKey(i)) return false
-              i += 1
-            }
-            true
-          }
-
-          /** Pair survives iff no band before `band` holds BOTH docs in a
-            * small (pair-emitting) bucket. */
-          private def firstCollisionAt(
-              a: Array[Long], b: Array[Long], band: Int, group: String): Boolean = {
-            var k = 0
-            while (k < band) {
-              if (a(k) == b(k) && !over.contains((group, k, a(k)))) return false
-              k += 1
-            }
-            true
-          }
-
-          private def fullPairs(): Iterator[(Long, Long)] = {
-            val n = ids.length
-            if (n < 2) Iterator.empty
-            else {
-              // snapshot EVERYTHING the lazy iterator reads: the pending
-              // iterator is consumed after advance() has already moved
-              // curBand/curGroup to the NEXT bucket
-              val myIds = ids.toArray
-              val mySigs = sigs.toArray
-              val myBand = curBand
-              val myGroup = curGroup
-              (0 until n - 1).iterator.flatMap { i =>
-                (i + 1 until n).iterator
-                  .filter(j => firstCollisionAt(mySigs(i), mySigs(j), myBand, myGroup))
-                  .map(j => (myIds(i), myIds(j)))
-              }
-            }
-          }
-
-          /** Chain rows keep pairsFromBuckets semantics exactly: unfiltered,
-            * <=ChainWidth forward neighbors, orientation fixed here (ids
-            * ascend within a bucket, so earlier-buffered < current). */
-          private def chainPairsFor(id: Long): Iterator[(Long, Long)] = {
-            val from = math.max(0, ids.length - ChainWidth)
-            ids.slice(from, ids.length).map(p => (p, id)).iterator
-          }
-
-          private def flushBucket(): Iterator[(Long, Long)] =
-            if (!chain && ids.length > 1) fullPairs() else Iterator.empty
-
-          private def advance(): Unit = {
-            while (!pending.hasNext && it.hasNext) {
-              val r = it.next()
-              val id = r.getLong(docIdx)
-              val bhs = r.getSeq[Long](bhsIdx).toArray
-              if (!haveKey || !sameKey(r)) {
-                pending = flushBucket()
-                var i = 0
-                while (i < curKey.length) { curKey(i) = r.get(i); i += 1 }
-                curGroup = (0 until nGroup).map(i => String.valueOf(r.get(i))).mkString("\u0001")
-                curBand = r.getInt(bandIdx)
-                haveKey = true
-                chain = false
-                ids.clear(); sigs.clear()
-                ids += id; sigs += bhs
-              } else if (chain) {
-                pending = chainPairsFor(id)
-                ids += id
-                if (ids.length > ChainWidth) ids.remove(0, ids.length - ChainWidth)
-                sigs.clear() // chain mode never consults signatures
-              } else {
-                ids += id; sigs += bhs
-                if (ids.length > cap) {
-                  // bucket crossed the cap: chain-link the buffered prefix
-                  // exactly like pairsFromBuckets (unfiltered)
-                  chain = true
-                  val snapshot = ids.toArray
-                  pending = (0 until snapshot.length - 1).iterator.flatMap { i =>
-                    (i + 1 until math.min(i + 1 + ChainWidth, snapshot.length)).iterator
-                      .map(j => (snapshot(i), snapshot(j)))
-                  }
-                  ids.clear()
-                  ids ++= snapshot.takeRight(ChainWidth)
-                  sigs.clear()
-                }
-              }
-            }
-            if (!pending.hasNext && !it.hasNext && haveKey) {
-              pending = flushBucket()
-              haveKey = false
-              ids.clear(); sigs.clear()
-            }
-          }
-
-          def hasNext: Boolean = {
-            if (!pending.hasNext) advance()
-            pending.hasNext
-          }
-          def next(): (Long, Long) = {
-            if (!hasNext) throw new NoSuchElementException
-            pending.next()
-          }
-        }
-      }
-      .toDF("a", "b")
-      // near-duplicate-free already; distinct removes chain/full overlaps
-      // over ~1x the pair set instead of the raw band-collision volume
-      .distinct()
+    val bOversized = rows.sparkSession.sparkContext.broadcast(oversized.map(_.toSeq).toSet)
+    walk(rows.select(keys ++ Seq(docId, col("bhs")): _*), keyCols, maxBucket,
+      () => Some(new FirstCollision(nGroup, bOversized.value)))
   }
 }

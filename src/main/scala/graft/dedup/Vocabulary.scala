@@ -233,28 +233,6 @@ object CompactDict {
     x ^ (x >>> 16)
   }
 
-  def build(entries: Array[(String, Int)]): CompactDict = {
-    val n = entries.length
-    var total = 0L
-    entries.foreach(e => total += e._1.length)
-    require(total <= Int.MaxValue, s"dictionary char blob overflows Int index space: $total")
-    val chars = new Array[Char](total.toInt)
-    val offs = new Array[Int](n + 1)
-    val ids = new Array[Int](n)
-    var e = 0
-    var off = 0
-    while (e < n) {
-      val (s, id) = entries(e)
-      offs(e) = off
-      s.getChars(0, s.length, chars, off)
-      off += s.length
-      ids(e) = id
-      e += 1
-    }
-    offs(n) = off
-    new CompactDict(chars, offs, ids, probeTable(chars, offs, ids.length))
-  }
-
   /** Assemble from executor-packed per-partition blobs (blob string, entry
     * offsets into the blob, entry ids): pure array concatenation plus the
     * probe-table build — no per-entry String object ever exists on the

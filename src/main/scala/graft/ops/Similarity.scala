@@ -314,8 +314,7 @@ object Similarity {
   def ivfCosineTopK(
       embeddings: DataFrame,
       k: Int,
-      nCentroids: Int = 0, // 0 = adaptive: max(16, ceil(sqrt(n))) — the
-      // classic IVF sizing that keeps probe-list volume ~ n^1.5 * nProbe
+      nCentroids: Int = 0, // 0 = adaptive, see [[adaptiveCentroids]]
       nProbe: Int = 4,
       refineIters: Int = 0, // k-means refinement passes over the quantizer;
       // 0 keeps the pure-function-of-input contract the q36 oracle needs
@@ -329,59 +328,15 @@ object Similarity {
   ): DataFrame = {
     require(knownCentroids == null || nCentroids == 0,
       s"ivfCosineTopK: pass knownCentroids or nCentroids, not both (nCentroids = $nCentroids)")
-    val base: Array[(Long, Array[Double])] =
-      if (knownCentroids != null) knownCentroids
-      else {
-        val nc =
-          if (nCentroids > 0) nCentroids
-          else math.max(16, math.ceil(math.sqrt(embeddings.count().toDouble)).toInt)
-        centroids(embeddings, nc)
-      }
-    val cents: Array[(Long, Array[Double])] =
-      refineCentroids(embeddings, base, refineIters)
+    val cents = refineCentroids(embeddings, quantizer(embeddings, nCentroids, knownCentroids), refineIters)
     val spark = embeddings.sparkSession
     val bCents = spark.sparkContext.broadcast(cents)
     val np = nProbe
-    // top-nProbe centroid ids per vector, ordered (score desc, cid asc) —
-    // one tight loop over the broadcast matrix; cosine accumulation is the
-    // same index-ordered shape as CosineKernel / the SQL oracle, so the
-    // selected lists match the oracle's ranking bitwise. A 100-plus-wide
-    // Column expression here blew past whole-stage codegen limits.
+    // top-nProbe centroid ids per vector, ordered (score desc, cid asc). A
+    // 100-plus-wide Column expression here blew past whole-stage codegen limits.
     val probesUdf = udf { (emb: Seq[Float]) =>
       val cs = bCents.value
-      val scores = new Array[Double](cs.length)
-      var j = 0
-      while (j < cs.length) {
-        val c = cs(j)._2
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        while (i < c.length) {
-          val x = emb(i).toDouble
-          val y = c(i)
-          dot += x * y; na += x * x; nb += y * y
-          i += 1
-        }
-        scores(j) = dot / (math.sqrt(na) * math.sqrt(nb))
-        j += 1
-      }
-      // selection sort of the top np indexes by (score desc, cid asc) —
-      // cs is cid-ascending, so index order is cid order; NaN (zero-norm)
-      // scores lose every comparison and such vectors probe nothing
-      val sel = Array.newBuilder[Int]
-      val used = new Array[Boolean](cs.length)
-      var r = 0
-      while (r < math.min(np, cs.length)) {
-        var best = -1
-        var jj = 0
-        while (jj < cs.length) {
-          if (!used(jj) && scores(jj) == scores(jj) &&
-            (best == -1 || scores(jj) > scores(best))) best = jj
-          jj += 1
-        }
-        if (best == -1) r = cs.length // only NaNs left
-        else { used(best) = true; sel += cs(best)._1.toInt; r += 1 }
-      }
-      sel.result()
+      bestCentroids(emb, cs, np).map(j => cs(j)._1.toInt)
     }
     val ranked = reg.persist(
       // consumed twice (assignment + probes) inside the returned lazy plan;
@@ -452,39 +407,11 @@ object Similarity {
   ): DataFrame = {
     require(knownCentroids == null || nCentroids == 0,
       s"semDedup: pass knownCentroids or nCentroids, not both (nCentroids = $nCentroids)")
-    val cents =
-      if (knownCentroids != null) knownCentroids
-      else {
-        val nc =
-          if (nCentroids > 0) nCentroids
-          else math.max(16, math.ceil(math.sqrt(embeddings.count().toDouble)).toInt)
-        centroids(embeddings, nc)
-      }
     val spark = embeddings.sparkSession
-    val bCents = spark.sparkContext.broadcast(cents)
-    val nearestUdf = udf { (emb: Seq[Float]) =>
-      val cs = bCents.value
-      var best = -1L
-      var bestScore = Double.NegativeInfinity
-      var j = 0
-      while (j < cs.length) {
-        val c = cs(j)._2
-        var dot = 0.0; var na = 0.0; var nb = 0.0
-        var i = 0
-        while (i < c.length) {
-          val x = emb(i).toDouble; val y = c(i)
-          dot += x * y; na += x * x; nb += y * y
-          i += 1
-        }
-        val s = dot / (math.sqrt(na) * math.sqrt(nb))
-        // strict > over the cid-ascending broadcast = ties keep lowest cid,
-        // the SQL oracle's (score DESC, cid) ordering; NaN loses every
-        // comparison so zero-norm vectors stay unassigned (best = -1)
-        if (s == s && s > bestScore) { bestScore = s; best = cs(j)._1 }
-        j += 1
-      }
-      best
-    }
+    val bCents = spark.sparkContext.broadcast(quantizer(embeddings, nCentroids, knownCentroids))
+    // ties keep the lowest cid, the SQL oracle's (score DESC, cid) ordering;
+    // zero-norm vectors stay unassigned (-1)
+    val nearestUdf = udf((emb: Seq[Float]) => nearestCentroid(emb, bCents.value))
     val assigned = reg.persist(
       embeddings
         .select(col("vec_id"), col("embedding"), nearestUdf(col("embedding")).as("cid"))
@@ -526,26 +453,7 @@ object Similarity {
     var it = 0
     while (it < iters) {
       val bCents = spark.sparkContext.broadcast(cents)
-      val nearestUdf = udf { (emb: Seq[Float]) =>
-        val cs = bCents.value
-        var best = -1L
-        var bestScore = Double.NegativeInfinity
-        var j = 0
-        while (j < cs.length) {
-          val c = cs(j)._2
-          var dot = 0.0; var na = 0.0; var nb = 0.0
-          var i = 0
-          while (i < c.length) {
-            val x = emb(i).toDouble; val y = c(i)
-            dot += x * y; na += x * x; nb += y * y
-            i += 1
-          }
-          val s = dot / (math.sqrt(na) * math.sqrt(nb))
-          if (s == s && s > bestScore) { bestScore = s; best = cs(j)._1 }
-          j += 1
-        }
-        best
-      }
+      val nearestUdf = udf((emb: Seq[Float]) => nearestCentroid(emb, bCents.value))
       val means = embeddings
         .select(nearestUdf(col("embedding")).as("cid"), col("embedding"))
         .filter(col("cid") >= 0)
@@ -578,6 +486,68 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble)))
       .sortBy(_._1)
+
+  /** [[centroids]] at the adaptive size max(16, ceil(sqrt(n))) — the classic
+    * IVF sizing that keeps probe-list volume ~ n^1.5 * nProbe. One count job
+    * plus the centroid collect. */
+  def adaptiveCentroids(embeddings: DataFrame): Array[(Long, Array[Double])] =
+    centroids(embeddings, math.max(16, math.ceil(math.sqrt(embeddings.count().toDouble)).toInt))
+
+  /** The quantized operators' centroid choice: the caller's precomputed set,
+    * else `nCentroids` fixed centroids, else the adaptive size. */
+  private def quantizer(
+      embeddings: DataFrame,
+      nCentroids: Int,
+      known: Array[(Long, Array[Double])]
+  ): Array[(Long, Array[Double])] =
+    if (known != null) known
+    else if (nCentroids > 0) centroids(embeddings, nCentroids)
+    else adaptiveCentroids(embeddings)
+
+  /** Indexes of the `np` best centroids for `emb`, by (cosine desc, index
+    * asc) — `cs` is cid-ascending, so index order is cid order. Cosines are
+    * index-ordered double sums, the shape of CosineKernel and the SQL oracle,
+    * so rankings match the oracle's bitwise. NaN (zero-norm) scores lose
+    * every comparison, so such vectors select nothing. */
+  private def bestCentroids(emb: Seq[Float], cs: Array[(Long, Array[Double])], np: Int): Array[Int] = {
+    val scores = new Array[Double](cs.length)
+    var j = 0
+    while (j < cs.length) {
+      val c = cs(j)._2
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      var i = 0
+      while (i < c.length) {
+        val x = emb(i).toDouble
+        val y = c(i)
+        dot += x * y; na += x * x; nb += y * y
+        i += 1
+      }
+      scores(j) = dot / (math.sqrt(na) * math.sqrt(nb))
+      j += 1
+    }
+    // selection of the top np indexes; strict > keeps the lowest index on ties
+    val sel = Array.newBuilder[Int]
+    val used = new Array[Boolean](cs.length)
+    var r = 0
+    while (r < math.min(np, cs.length)) {
+      var best = -1
+      var jj = 0
+      while (jj < cs.length) {
+        if (!used(jj) && scores(jj) == scores(jj) &&
+          (best == -1 || scores(jj) > scores(best))) best = jj
+        jj += 1
+      }
+      if (best == -1) r = cs.length // only NaNs left
+      else { used(best) = true; sel += best; r += 1 }
+    }
+    sel.result()
+  }
+
+  /** Cid of the nearest centroid by cosine ([[bestCentroids]] order), or -1. */
+  private def nearestCentroid(emb: Seq[Float], cs: Array[(Long, Array[Double])]): Long = {
+    val best = bestCentroids(emb, cs, 1)
+    if (best.isEmpty) -1L else cs(best(0))._1
+  }
 
   /** Embedding near-duplicate pairs at a cosine threshold (brute force). */
   def nearDupPairs(embeddings: DataFrame, minCosine: Double): DataFrame = {

@@ -104,7 +104,14 @@ class PipelineParitySpec extends SparkSpec {
     // realistic token shapes (repo-local identifiers like the bench corpus)
     val n = graft.dedup.Vocabulary.BroadcastMaxVocab.toInt
     val entries = Array.tabulate(n)(i => (s"r${i / 200}v${i % 200}tok$i", i))
-    val dict = graft.dedup.CompactDict.build(entries)
+    // packed the way the encode's executors pack them: one (chars, entry
+    // offsets, ids) blob per partition, built here from 7 uneven slices
+    val blobs = entries.grouped(n / 7 + 1).map { part =>
+      val offs = part.map(_._1.length).scanLeft(0)(_ + _).init
+      (part.map(_._1).mkString, offs, part.map(_._2))
+    }.toArray
+    assert(blobs.length == 7)
+    val dict = graft.dedup.CompactDict.fromBlobs(blobs)
     assert(dict.size == n)
     var i = 0
     while (i < n) { // every entry found with its exact id (sampled stride 97 + edges)

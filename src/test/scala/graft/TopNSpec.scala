@@ -121,7 +121,6 @@ class TopNSpec extends SparkSpec {
     // chain connectivity: consecutive ids linked
     val set = got.toSet
     (1L until 500L).foreach(i => assert(set.contains((i, i + 1))))
-    assert(PairGen.oversizedBuckets(rows, Seq("group", "band", "band_hash"), 100) == 1)
   }
 
   test("PairGen: first-collision generator emits the same pair set as the default, with and without oversized buckets") {
