@@ -188,7 +188,7 @@ object Dev {
       "q43 shard pack (global prefix sum: cached range partition + narrow stamp)" -> q("q43_shard_pack"),
       "q45 vendored flags (distinct-first repo count — mega dup classes cannot skew the agg)" ->
         q("q45_vendored_flags"),
-      "streaming near-dup probe (stream-static LSH join, batch-parity shape)" -> streamProbe
+      "streaming near-dup probe (broadcast corpus probe, batch-parity shape)" -> streamProbe
     )
     val md = new StringBuilder("# Physical plans (explain formatted)\n")
     sections.foreach { case (title, df) => md.append(s"\n## $title\n\n```\n${explain(df)}\n```\n") }

@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * `--stream M` additionally replays a deterministic ingest stream of M new
   * files (planted mix: [[CorpusGen.streamFile]]) against the corpus state
   * just built, through the Structured Streaming front door
-  * ([[graft.streaming.StreamingDedup]]): first-seen gate, stream-static LSH
-  * near-dup join, windowed ingest stats. Meaningful with `--gen` — the
+  * ([[graft.streaming.StreamingDedup]]): first-seen gate, broadcast-probe
+  * LSH near-dup, windowed ingest stats. Meaningful with `--gen` — the
   * stream's re-upload leg samples the generated corpus.
   */
 object Main {
@@ -94,8 +94,8 @@ object Main {
 
   /** Drive the Structured Streaming ingest path end-to-end: write `m`
     * deterministic stream files ([[CorpusGen.streamFile]]) as parquet
-    * micro-batch input, run the first-seen gate and the stream-static
-    * near-dup join against the corpus state just built, sink to parquet
+    * micro-batch input, run the first-seen gate and the broadcast-probe
+    * near-dup against the corpus state just built, sink to parquet
     * under `$work/stream-out`, and print a summary plus a stream-vs-batch
     * parity check (the module's load-bearing invariant). */
   private def streamIngest(
@@ -113,9 +113,12 @@ object Main {
     // corpus state: exact-class REP encoded sets + hot signature-token ids +
     // LSH band index (the signatures-stage inputs, via the shared helper) +
     // ONE broadcast encode dictionary shared by every probe plan below.
-    // Persisted skinny known-keys frame: stream-static joins re-evaluate the
-    // static subtree per micro-batch, so the gate's corpus side must be a
-    // cached scan, not a recomputed lineage.
+    // Both plans below (the stream and its parity check) get the SAME
+    // `encodedReps` and `index` frames: the broadcast corpus probe is
+    // memoized on them, so it is collected and broadcast once.
+    // Persisted skinny known-keys frame: the gate's stream-static anti-join
+    // re-evaluates its static subtree per micro-batch, so the corpus side
+    // must be a cached scan, not a recomputed lineage.
     val encodedReps = Pipeline.repEncoded(t.docs, t.encoded).persist()
     val nDocs = Checkpoints.stageRowCount(spark, s"$work/docs")
     val hot = Vocabulary.hotTokenIds(t.vocab, nDocs, cfg)

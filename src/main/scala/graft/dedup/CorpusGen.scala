@@ -120,7 +120,7 @@ object CorpusGen {
     *    drop it.
     *  - i % 4 == 1: NEAR duplicate of a corpus BASE file (every 10th token
     *    removed => set-Jaccard ~0.9) — passes the gate and must surface
-    *    through the stream-static LSH near-dup join.
+    *    through the streaming LSH near-dup probe.
     *  - i % 4 == 2: NOVEL file in a stream-only token namespace — passes
     *    the gate, matches nothing.
     *  - i % 4 == 3: within-stream duplicate of stream file i-1 under a

@@ -12,13 +12,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * (no boxing, no scala collection conversion — the two costs a ScalaUDF
   * pays on every row). */
 object JaccardKernel {
-  def sim(a: ArrayData, b: ArrayData): Double = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    val inter = count(a, b)
+  def sim(a: ArrayData, b: ArrayData): Double =
+    simOf(count(a, b), a.numElements(), b.numElements())
+
+  /** [[sim]] of sorted `a` against the sorted slice `b(from until until)`
+    * of a packed array (the streaming corpus probe's rep sets). */
+  def sim(a: Array[Int], b: Array[Int], from: Int, until: Int): Double = {
+    var i = 0; var j = from; var inter = 0
+    while (i < a.length && j < until) {
+      val x = a(i); val y = b(j)
+      if (x == y) { inter += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    simOf(inter, a.length, until - from)
+  }
+
+  private def simOf(inter: Int, na: Int, nb: Int): Double =
     if (inter == 0) 0.0
     else Jaccard.round6(inter.toDouble / (na + nb - inter).toDouble)
-  }
 
   /** Two-pointer sorted intersection count on Tungsten arrays. */
   def count(a: ArrayData, b: ArrayData): Int = {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.dedup._
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,10 +18,13 @@ import org.apache.spark.sql.functions._
   *
   * Design constraints that shaped every function here:
   *  - STATELESS WHERE POSSIBLE. Tokenize / encode / sign are narrow
-  *    per-row expressions; candidate generation is a stream-static equi-join
-  *    (no stream-stream join, no watermark bookkeeping); exact verification
-  *    is another stream-static join plus the codegen'd [[JaccardSorted]]
-  *    kernel. The near-dup path is entirely STATELESS; the module's only
+  *    per-row expressions; candidate generation and exact verification are
+  *    one more: a probe of the broadcast [[CorpusProbe]] (capped band index
+  *    + rep sets), built once per corpus state, so a micro-batch runs no
+  *    exchange and no join against the corpus (corpora too large to
+  *    broadcast take a stream-static join plan instead; no stream-stream
+  *    join, no watermark bookkeeping in either). The near-dup path is
+  *    entirely STATELESS; the module's only
   *    stateful operators are [[firstSeen]]'s within-stream dropDuplicates
   *    (optional, watermark-boundable) and [[ingestStats]]' windowed
   *    aggregation (state = one row per open window per group).
@@ -120,10 +124,11 @@ object StreamingDedup {
     * every colliding stream row out B ways — the stream-static analogue of
     * the batch straggler [[Config.maxBucket]] guards. The cap here keeps
     * the `maxBucket` smallest doc ids per bucket and NULLS the dropped
-    * bands in the carried array (`c_bhs`), so the first-collision filter
-    * (which consults `c_bhs`) stays consistent with what the index actually
-    * contains — a capped-away first band silently defers to the doc's next
-    * indexed collision instead of dropping the pair. Same recall argument
+    * bands in the carried array (`c_bhs`), so every reader of `c_bhs` (the
+    * [[CorpusProbe]] build, the join plan's first-collision filter) sees
+    * exactly what the index contains — a capped-away first band silently
+    * defers to the doc's next indexed collision instead of dropping the
+    * pair. Same recall argument
     * as batch chain-linking: a true near-dup pair agrees on ~`bands`
     * independent bands, and oversized buckets are boilerplate-dominated.
     * `hotTokenIds` (the max-df signature cap, [[Vocabulary.hotTokenIds]])
@@ -168,37 +173,6 @@ object StreamingDedup {
       .filter(col("band_hash").isNotNull)
   }
 
-  /** Near-duplicate detection of a stream against the static corpus:
-    * (stream doc, corpus doc, exact Jaccard sim) for every pair at or above
-    * `cfg.threshold` that LSH banding surfaces — the batch pipeline's
-    * signatures->candidates->pairs stages collapsed into one stateless
-    * stream plan.
-    *
-    *   1. encode through the broadcast corpus dictionary (narrow UDF);
-    *   2. MinHash-128 + band hashes (codegen'd kernels), hot-token cap
-    *      matching the index;
-    *   3. stream-static equi-join on (group, band, band_hash) against
-    *      [[corpusIndex]];
-    *   4. FIRST-COLLISION dedup: a true pair collides in many bands — keep
-    *      only the row whose band is the first position where the stream
-    *      doc's band array agrees with the corpus doc's INDEXED band array
-    *      (nulls = capped away). Exact and stateless, the PairGen
-    *      first-collision generator's trick without its aggregation.
-    *   5. stream-static join on (group, c_doc_id) back to the encoded
-    *      corpus for full sets; verify with the codegen'd [[JaccardSorted]]
-    *      kernel (full sets — the hot-token cap never touches sims).
-    *
-    * Both static joins compare `group` NULL-SAFELY: groupKey's
-    * single-column path keeps a natural NULL group, and batch candidate
-    * generation (a groupBy) pairs within it — an equi-key here would
-    * silently report every NULL-group copy as novel.
-    *
-    * `vocab` is the batch pipeline's vocab stage (read from its
-    * checkpoint); `encoded` is its encoded stage restricted to exact-class
-    * representatives, and `index` is [[corpusIndex]] over that SAME frame
-    * with the same `hotTokenIds` — see the rep requirement there. Emitted
-    * `corpus_doc_id`s are rep ids; expand over class members with
-    * [[Pipeline.exactClassMap]] when per-member pairs are needed. */
   /** The broadcast-dictionary encode function for `vocab`. Construction is
     * EAGER and expensive (collects the vocabulary, builds and broadcasts the
     * CompactDict — [[Vocabulary.broadcastEncodeFn]]): build it once per
@@ -212,6 +186,50 @@ object StreamingDedup {
           "shard the stream by group and encode against per-group vocabularies"
       ))
 
+  /** Corpora whose packed [[CorpusProbe]] may exceed this many bytes
+    * ([[CorpusProbe.bytesFor]], an upper bound from three counts) take the
+    * stream-static join plan instead. The probe is held twice on the driver
+    * while it broadcasts (the packed arrays and the broadcast's serialized
+    * pieces) and once per executor; 256 MiB keeps that to a quarter of a
+    * 2 GiB driver. A 200k-file CorpusGen corpus (160k reps) packs into
+    * 230 MiB (bound 237 MiB). */
+  val ProbeMaxBytes: Long = 256L << 20
+
+  /** Near-duplicate detection of a stream against the static corpus:
+    * (stream doc, corpus doc, exact Jaccard sim) for every pair at or above
+    * `cfg.threshold` that LSH banding surfaces — the batch pipeline's
+    * signatures->candidates->pairs stages collapsed into one stateless,
+    * NARROW stream plan (no exchange, no join):
+    *
+    *   1. encode through the broadcast corpus dictionary (narrow UDF);
+    *   2. MinHash-128 + band hashes (codegen'd kernels), hot-token cap
+    *      matching the index;
+    *   3. one expression probes every band of the row against the
+    *      broadcast [[CorpusProbe]] (the capped band index + rep sets),
+    *      takes each hit rep ONCE per row, verifies it on full sets with
+    *      the exact Jaccard kernel and returns the (corpus doc, sim) matches
+    *      at or above the threshold; `explode` emits them.
+    *
+    * The probe is built and broadcast once per corpus state and memoized
+    * on the identity of the (`index`, `encoded`) frames: pass the SAME
+    * frames to every plan over one corpus (each replay, the parity check)
+    * and only the first plan runs the two build jobs. Above
+    * [[ProbeMaxBytes]] the plan is the stream-static join instead
+    * (equi-join on (group, band, band_hash) against `index`, first-collision
+    * filter on its `c_bhs`, join back to `encoded` for the sets) with the
+    * same output rows.
+    *
+    * Group comparisons are NULL-SAFE in both plans: groupKey's
+    * single-column path keeps a natural NULL group, and batch candidate
+    * generation (a groupBy) pairs within it — an equi-key here would
+    * silently report every NULL-group copy as novel.
+    *
+    * `vocab` is the batch pipeline's vocab stage (read from its
+    * checkpoint); `encoded` is its encoded stage restricted to exact-class
+    * representatives, and `index` is [[corpusIndex]] over that SAME frame
+    * with the same `cfg` and `hotTokenIds` — see the rep requirement there.
+    * Emitted `corpus_doc_id`s are rep ids; expand over class members with
+    * [[Pipeline.exactClassMap]] when per-member pairs are needed. */
   def nearDupAgainstCorpus(
       stream: DataFrame,
       vocab: DataFrame,
@@ -220,19 +238,109 @@ object StreamingDedup {
       cfg: Config,
       hotTokenIds: Array[Int] = Array.empty,
       encodeFn: Option[Column => Column] = None
+  ): DataFrame = nearDupPlan(stream, vocab, encoded, index, cfg, hotTokenIds, encodeFn, ProbeMaxBytes)
+
+  /** [[nearDupAgainstCorpus]] with the probe's byte cap as an argument: a
+    * cap of -1 forces the join plan. */
+  private[graft] def nearDupPlan(
+      stream: DataFrame,
+      vocab: DataFrame,
+      encoded: DataFrame,
+      index: DataFrame,
+      cfg: Config,
+      hotTokenIds: Array[Int],
+      encodeFn: Option[Column => Column],
+      probeMaxBytes: Long
   ): DataFrame = {
     val encFn = encodeFn.getOrElse(encodeFnFor(vocab))
-    val enc = stream
-      .withColumn("tokens", encFn(col("tokens")))
-      .withColumn("n_tokens", size(col("tokens")))
-      .filter(col("n_tokens") > 0)
     val sigTokens =
       if (hotTokenIds.isEmpty) col("tokens") else ArrayExceptSorted(col("tokens"), hotTokenIds)
-    val banded = enc
+    val banded = stream
+      .withColumn("tokens", encFn(col("tokens")))
+      .filter(size(col("tokens")) > 0)
       .withColumn("sig_tokens", sigTokens)
       .filter(size(col("sig_tokens")) > 0)
       .withColumn("bhs", BandHashes(MinHashSig(col("sig_tokens"), cfg), cfg))
       .drop("sig_tokens")
+    val matched = probeFor(index, encoded, cfg.maxBucket, probeMaxBytes) match {
+      case Some(probe) =>
+        val threshold = cfg.threshold
+        val probeUdf = udf { (group: String, bhs: Seq[Long], tokens: Seq[Int]) =>
+          probe.value.matches(group, bhs.toArray, tokens.toArray, threshold)
+        }
+        banded
+          .select(col("*"), explode(probeUdf(col("group"), col("bhs"), col("tokens"))).as("m"))
+          .select(col("*"), col("m._1").as("c_doc_id"), col("m._2").as("sim"))
+      case None => joinPlan(banded, encoded, index, cfg)
+    }
+    matched.select(
+      col("group"),
+      col("repo"),
+      col("path"),
+      col("commit"),
+      col("content_sha"),
+      col("c_doc_id").as("corpus_doc_id"),
+      col("sim")
+    )
+  }
+
+  /** The broadcast probe per (index, encoded) frame pair, by identity; the
+    * index is held weakly, so a dropped corpus state frees its entry. */
+  private val probes =
+    new java.util.WeakHashMap[DataFrame, (java.lang.ref.WeakReference[DataFrame], Int, Option[Broadcast[CorpusProbe]])]
+
+  private def probeFor(index: DataFrame, encoded: DataFrame, maxBucket: Int, maxBytes: Long): Option[Broadcast[CorpusProbe]] =
+    if (maxBytes < 0) None
+    else
+      probes.synchronized {
+        Option(probes.get(index)) match {
+          case Some((e, cap, probe)) if (e.get eq encoded) && cap == maxBucket => probe
+          case _ =>
+            val probe = buildProbe(index, encoded, maxBucket, maxBytes)
+            probes.put(index, (new java.lang.ref.WeakReference(encoded), maxBucket, probe))
+            probe
+        }
+      }
+
+  /** Two jobs: count the probe's size, then collect it as executor-packed
+    * blocks. One index row per rep carries all its indexed bands (`c_bhs`,
+    * NULL = capped away): the row at its first indexed band. */
+  private def buildProbe(index: DataFrame, encoded: DataFrame, maxBucket: Int, maxBytes: Long): Option[Broadcast[CorpusProbe]] = {
+    val firstIndexed = array_position(transform(col("c_bhs"), _.isNotNull), true) - 1
+    val reps = index
+      .filter(col("band") === firstIndexed)
+      .join(
+        encoded.select(col("group").as("e_group"), col("doc_id"), col("tokens")),
+        col("group") <=> col("e_group") && col("c_doc_id") === col("doc_id")
+      )
+      .select(col("group"), col("c_doc_id"), col("c_bhs"), col("tokens"))
+    val n = reps
+      .agg(
+        count(lit(1)),
+        coalesce(sum(size(filter(col("c_bhs"), _.isNotNull))), lit(0L)),
+        coalesce(sum(size(col("tokens"))), lit(0L))
+      )
+      .head()
+    if (CorpusProbe.bytesFor(n.getLong(0), n.getLong(1), n.getLong(2)) > maxBytes) None
+    else {
+      val blocks = reps.rdd
+        .mapPartitions { rows =>
+          Iterator.single(CorpusProbe.Block.of(rows.map(r =>
+            (r.getString(0), r.getLong(1), r.getSeq[java.lang.Long](2), r.getSeq[Int](3)))))
+        }
+        .collect()
+      Some(index.sparkSession.sparkContext.broadcast(CorpusProbe.build(blocks.toSeq, maxBucket)))
+    }
+  }
+
+  /** The stream-static join plan for corpora over the probe's byte cap:
+    * (group, band, band_hash) equi-join against `index`, the FIRST-COLLISION
+    * filter (keep only the row whose band is the first position where the
+    * stream doc's band array agrees with the corpus doc's INDEXED band array
+    * — nulls = capped away — so each pair survives once, statelessly), then
+    * a join on (group, c_doc_id) back to `encoded` for the full sets and the
+    * codegen'd [[JaccardSorted]] verify. */
+  private def joinPlan(banded: DataFrame, encoded: DataFrame, index: DataFrame, cfg: Config): DataFrame = {
     val exploded = banded.select(col("*"), posexplode(col("bhs")).as(Seq("band", "band_hash")))
     val ix = index
       .withColumnRenamed("group", "c_group")
@@ -246,9 +354,8 @@ object StreamingDedup {
           col("band_hash") === col("c_band_hash")
       )
       .drop("c_group", "c_band", "c_band_hash")
-    // first band where the stream doc's array agrees with the doc's indexed
-    // array; the joined row at `band` proves one exists, so the filter
-    // keeps exactly one row per (stream doc, corpus doc)
+    // the joined row at `band` proves an agreeing band exists, so the
+    // filter keeps exactly one row per (stream doc, corpus doc)
     val firstEq =
       array_position(zip_with(col("bhs"), col("c_bhs"), (s, c) => c.isNotNull && s === c), lit(true)) - 1
     val corpusSets =
@@ -259,18 +366,8 @@ object StreamingDedup {
         corpusSets,
         col("group") <=> col("e_group") && col("c_doc_id") === col("e_doc_id")
       )
-      .drop("e_group", "e_doc_id")
       .withColumn("sim", JaccardSorted(col("tokens"), col("c_tokens")))
       .filter(col("sim") >= cfg.threshold)
-      .select(
-        col("group"),
-        col("repo"),
-        col("path"),
-        col("commit"),
-        col("content_sha"),
-        col("c_doc_id").as("corpus_doc_id"),
-        col("sim")
-      )
   }
 
   /** Watermarked ingest telemetry: per (event-time window, group) file and

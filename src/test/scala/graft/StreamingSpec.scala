@@ -2,9 +2,20 @@ package graft
 
 import graft.dedup._
 import graft.streaming.StreamingDedup
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 /** A stream row: the input_hint shape plus an ingest event time. */
 case class StreamDoc(
@@ -55,10 +66,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   /** Drive `mkPlan(stream rows)` through a memory-sink streaming query in
-    * `batches` micro-batches and return the sink table. */
-  private def runStreamed(name: String, batches: Seq[Seq[StreamDoc]], outputMode: String = "append")(
-      mkPlan: DataFrame => DataFrame
-  ): DataFrame = {
+    * `batches` micro-batches, hand the running query to `inspect`, and
+    * return the sink table. */
+  private def runStreamed(
+      name: String,
+      batches: Seq[Seq[StreamDoc]],
+      outputMode: String = "append",
+      inspect: StreamingQuery => Unit = _ => ()
+  )(mkPlan: DataFrame => DataFrame): DataFrame = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[StreamDoc]
     val q = mkPlan(ms.toDF())
@@ -73,9 +88,18 @@ class StreamingSpec extends SparkSpec {
         ms.addData(b)
         q.processAllAvailable()
       }
+      inspect(q)
     } finally q.stop()
     spark.table(name)
   }
+
+  /** (path, corpus_doc_id, sim) rows of a near-dup output. */
+  private def pairSet(df: DataFrame): Set[(String, Long, Double)] =
+    df.select("path", "corpus_doc_id", "sim").collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** The same near-dup plan forced onto the stream-static join plan. */
+  private def joinPlanPairs(in: DataFrame, vocab: DataFrame, encoded: DataFrame, index: DataFrame, c: Config, hot: Array[Int]) =
+    pairSet(StreamingDedup.nearDupPlan(in, vocab, encoded, index, c, hot, None, probeMaxBytes = -1L))
 
   test("near-dup stream == identical plan over one batch, and exact copies verify at 1.0") {
     val (_, vocab, encoded, hot, index) = corpusState
@@ -95,6 +119,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       .toSet
     assert(streamed == batch)
+    assert(joinPlanPairs(StreamingDedup.prepareStream(rows.toDF(), cfg), vocab, encoded, index, cfg, hot) == batch)
 
     // exact copies: sim 1.0 against their originals (and only sims >= 0.7 at all)
     assert(streamed.nonEmpty)
@@ -124,6 +149,7 @@ class StreamingSpec extends SparkSpec {
       .select("path", "corpus_doc_id", "sim").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(streamed == batch)
+    assert(joinPlanPairs(StreamingDedup.prepareStream(rows.toDF(), capped), vocab, encoded, index, capped, hot) == batch)
     // capping caps FAN-OUT, not first-match recall: each exact copy still
     // finds at least one member of its corpus dup class
     Seq("a.scala", "b.scala", "e.scala").foreach { p =>
@@ -157,6 +183,52 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(matches.exists(m => m._1 == "copy.x" && m._3 == 1.0), "NULL-group exact copy must match")
     assert(matches.exists(_._1 == "near.x"), "NULL-group near-dup must match")
+    assert(joinPlanPairs(prepared, vocab, encoded, index, cfg, Array.empty) == matches)
+  }
+
+  test("near-dup micro-batches run no join and no broadcast exchange") {
+    val (_, vocab, encoded, hot, index) = corpusState
+    val encFn = Some(StreamingDedup.encodeFnFor(vocab))
+    val rows = streamRows
+    var plan: Option[org.apache.spark.sql.execution.SparkPlan] = None
+    val out = runStreamed("nd_shape", Seq(rows.take(3), rows.drop(3)),
+      inspect = q => plan = Some(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)) { in =>
+      StreamingDedup.nearDupAgainstCorpus(StreamingDedup.prepareStream(in, cfg), vocab, encoded, index, cfg, hot, encFn)
+    }
+    assert(pairSet(out).nonEmpty)
+    val p = plan.get
+    // a stateless micro-batch plans under AQE: walk its query stages too
+    val nodes = new AdaptiveSparkPlanHelper {}
+    assert(nodes.collect(p) { case j: BaseJoinExec => j }.isEmpty, s"join in the micro-batch plan:\n$p")
+    assert(nodes.collect(p) { case b: BroadcastExchangeExec => b }.isEmpty, s"broadcast exchange in the micro-batch plan:\n$p")
+  }
+
+  test("a second near-dup plan over the same index frame starts no Spark job") {
+    val (_, vocab, encoded, hot, index) = corpusState
+    val encFn = Some(StreamingDedup.encodeFnFor(vocab))
+    val in = StreamingDedup.prepareStream(streamRows.toDF(), cfg)
+    def plan(): DataFrame = StreamingDedup.nearDupAgainstCorpus(in, vocab, encoded, index, cfg, hot, encFn)
+    plan() // builds the probe, unless an earlier plan over this index did
+    val sc = spark.sparkContext
+    val jobGroups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobGroups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("probe-memo-second-plan", "second near-dup plan")
+      plan()
+      sc.setJobGroup("probe-memo-action", "first action")
+      assert(spark.range(3).count() == 3)
+      // listener events arrive in order: once the action's job is seen,
+      // every job submitted before it has been seen too
+      eventually(timeout(Span(30, Seconds))) { assert(jobGroups.contains("probe-memo-action")) }
+      assert(!jobGroups.asScala.exists(_ == "probe-memo-second-plan"), "the second plan ran a job")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
   }
 
   test("firstSeen drops corpus-known hashes and within-stream repeats, keeps the rest") {
