@@ -160,6 +160,7 @@ object Dev {
     // dumped instead; q25b's union-find and q43's per-partition sums run
     // eagerly at construction, so their plans are the distributed remainder.
     val sections = Seq(
+      "docs stage (ids stamped on the key projection; the token arrays cross one shuffle, the id join)" -> docs,
       "q13_doc_pairs (flagship: within-group exact Jaccard over pruned tokens)" -> q("q13_doc_pairs"),
       "q04_join_revenue_by_nation (broadcast dim join)" -> q("q04_join_revenue_by_nation"),
       "q07_filter_project (pushdown check: PushedFilters + pruned ReadSchema)" -> q("q07_filter_project"),
@@ -177,6 +178,10 @@ object Dev {
       "winnow candidate pairs (native WinnowFingerprints, the q31a/q31b front-end)" -> SuffixDedup.candidatePairs(
         spark.read.parquet(s"$sf/documents.parquet").selectExpr("doc_id", "lang as group", "text as content"),
         SuffixDedup.SubConfig(k = 16, window = 5, minMatch = 20), CacheRegistry.unmanaged),
+      "substring dedup (spread docs persisted once: content crosses one shuffle; suffix-automaton LCS verify)" ->
+        SuffixDedup.run(
+          spark.read.parquet(s"$sf/documents.parquet").selectExpr("doc_id", "lang as group", "text as content"),
+          SuffixDedup.SubConfig(k = 16, window = 5, minMatch = 20)),
       "q37_semdedup (SemDeDup: coarse-quantizer assign + within-cluster cosine self-join)" -> q("q37_semdedup"),
       "q40_decontaminate (13-gram eval-overlap: deduped gram explode + semi-join-shaped probe)" ->
         q("q40_decontaminate"),

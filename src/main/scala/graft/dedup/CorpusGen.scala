@@ -106,10 +106,6 @@ object CorpusGen {
     spark.range(n).map(i => file(i, seed))
   }
 
-  /** Driver-side variant for tiny unit-test corpora. */
-  def corpusLocal(n: Int, seed: Long = 42L): Seq[CodeFile] =
-    (0 until n).map(i => file(i.toLong, seed))
-
   /** Ingest-stream file `i` arriving against a generated corpus of `n` files
     * (the CLI's `--stream` mode). Pure function of (i, n, seed) — two runs
     * replay the identical stream.

@@ -21,9 +21,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    an expensive upstream lineage.
   *  - [[assignDenseByKey]]: for WIDE payload rows (the corpus). The payload
   *    never enters the id machinery — only the key projection flows through
-  *    the stamp; the payload pays exactly one hash shuffle (the id join).
-  *    The round-3 version persisted the full corpus TWICE inside the docs
-  *    stage and its 2.97x core-scaling showed it.
+  *    the stamp; the payload is not persisted and pays exactly one hash
+  *    shuffle (the id join) unless keys repeat.
   */
 object Ids {
 
@@ -60,37 +59,29 @@ object Ids {
     stampDense(input, sortCols, idCol, reg)
   }
 
-  /** Id assignment for wide rows: stamp the distinct key projection, join
-    * ids back (null-safe, shuffle-hash on the skinny build side). Rows
+  /** Id assignment for wide rows: count and stamp the SKINNY key projection
+    * of `df` (column pruning keeps the payload out of it), then join ids back
+    * null-safe, shuffle-hash on the skinny build side. The payload is never
+    * persisted and crosses ONE exchange, the id join's: the planner hashes it
+    * on the full null-safe key (`<=>` plans as `coalesce(k, ''), isnull(k)`
+    * per column, which no partitioning of the raw columns satisfies, so an
+    * earlier repartition of the payload would only be shuffled again). Rows
     * sharing a key tuple collapse to one arbitrary row — detected on the
-    * SKINNY side and resolved with a fat aggregate only when duplicates
-    * actually exist, so the common unique-key corpus never pays a payload
-    * sort. */
+    * skinny side and resolved with a payload dedup (one more payload
+    * shuffle) only when duplicates actually exist. Ids depend on the key
+    * set alone. */
   def assignDenseByKey(
       df: DataFrame,
       sortCols: Seq[String],
       idCol: String,
       reg: CacheRegistry = CacheRegistry.unmanaged
   ): DataFrame = {
-    // The payload's ONE shuffle hash-partitions on the FIRST key only
-    // (repo, for the corpus). A subset of the join/agg keys satisfies their
-    // clustering requirement (equal full keys share the prefix), so the
-    // downstream key-count aggregate, the optional dedup, and the id join
-    // all reuse this exchange — and the output keeps same-prefix rows in
-    // one partition, which is what lets parquet dictionary-encode the
-    // token arrays (hash-on-full-key scattered every repo across every
-    // file and wrote a 60% larger docs table). Prefix skew (a mega-repo)
-    // is AQE's skew-join case, and the skew splits preserve adjacency.
-    val base = reg.persist(
-      df.repartition(col(sortCols.head))
-    )
-    val keyCnt = base.groupBy(sortCols.map(col): _*).agg(count(lit(1)).as("__cnt"))
+    val keyCnt = df.groupBy(sortCols.map(col): _*).agg(count(lit(1)).as("__cnt"))
     val keyIds = stampDense(keyCnt, sortCols, idCol, reg)._1
     val hasDups = keyIds.filter(col("__cnt") > 1).limit(1).count() > 0
-    val deduped = if (hasDups) base.dropDuplicates(sortCols) else base
+    val deduped = if (hasDups) df.dropDuplicates(sortCols) else df
     val right = keyIds
       .select(sortCols.map(c => col(c).as(s"__k_$c")) :+ col(idCol): _*)
-      .repartition(col(s"__k_${sortCols.head}"))
       // build-side hint: the ids table is the small side; without it a
       // sort-merge join would re-sort the wide payload
       .hint("shuffle_hash")

@@ -31,43 +31,6 @@ object MinHash {
     (as, bs)
   }
 
-  def signatureScala(tokens: Array[Int], as: Array[Long], bs: Array[Long]): Array[Long] = {
-    val k = as.length
-    val sig = Array.fill(k)(Long.MaxValue)
-    var t = 0
-    while (t < tokens.length) {
-      val x = tokens(t).toLong & 0x7fffffffL
-      var i = 0
-      while (i < k) {
-        // exact (a*x + b) mod P via Mersenne folding — see MinHashKernel
-        val v = as(i) * x + bs(i)
-        val f1 = (v & P) + (v >>> 31)
-        var h = (f1 & P) + (f1 >>> 31)
-        if (h >= P) h -= P
-        if (h < sig(i)) sig(i) = h
-        i += 1
-      }
-      t += 1
-    }
-    sig
-  }
-
-  /** 64-bit mix of one band's signature slice (SplitMix64-style avalanche),
-    * band index folded in so identical slices in different bands cannot
-    * collide into one bucket. */
-  def bandHashScala(sig: Array[Long], band: Int, rows: Int): Long = {
-    var h = 0x9e3779b97f4a7c15L * (band + 1)
-    var i = band * rows
-    val end = i + rows
-    while (i < end) {
-      h ^= sig(i)
-      h *= 0xbf58476d1ce4e5b9L
-      h ^= (h >>> 31)
-      i += 1
-    }
-    h
-  }
-
   /** encoded (doc_id, group, tokens) -> (doc_id, group, minhash: array<long>).
     * Native expression, not the UDF: no per-element boxing (HashExpressions). */
   def withSignature(encoded: DataFrame, cfg: Config): DataFrame =

@@ -74,11 +74,12 @@ object Pipeline {
     *
     * Order matters for scale: sha256 / byte-count / tokenize run FIRST and
     * `content` is dropped, so the id-assignment join (the one shuffle the
-    * corpus pays here) moves token arrays instead of raw text, and the
-    * heavy per-row CPU happens exactly once, during the single
-    * materialization of the cached base. Key dedup is detected on the
-    * skinny key side and only resolved with a payload aggregate when
-    * duplicates actually exist ([[Ids.assignDenseByKey]]). */
+    * token arrays pay here) moves token arrays instead of raw text. Ids are
+    * counted and stamped on the skinny key projection, which reads no
+    * content; key dedup is resolved with a payload aggregate only when
+    * duplicates actually exist ([[Ids.assignDenseByKey]]). The tokenizer
+    * runs once per row: the empty-set drop is [[Tokenize.nonEmpty]], not a
+    * filter Catalyst would push below the tokenizing projection. */
   def prepareDocs(
       input: DataFrame,
       cfg: Config,
@@ -98,9 +99,9 @@ object Pipeline {
       .drop("content")
     val withId =
       Ids.assignDenseByKey(derived, Seq("repo", "path", "commit"), "doc_id", reg = reg)
-    withId
+    Tokenize
+      .nonEmpty(withId, "tokens")
       .withColumn("group", groupKey(cfg))
-      .filter(size(col("tokens")) > 0)
       .select("doc_id", "repo", "path", "commit", "group", "content_sha", "n_bytes", "tokens")
       // cluster rows by key within each partition before the checkpoint
       // write: same-repo files share token identifiers, and adjacency is
@@ -174,6 +175,23 @@ object Pipeline {
       .select(col("group"), col("a"), col("b"), lit(1.0).as("sim"))
 
     cross.unionByName(withinClass).dropDuplicates("group", "a", "b")
+  }
+
+  /** (doc_id, group, content) of every doc, from the input row the docs
+    * stage kept: a key tuple carried by several input rows keeps one
+    * arbitrary row there ([[Ids.assignDenseByKey]]), so rows match on the
+    * key AND the kept row's content hash. The key is one struct column:
+    * struct equality treats NULL fields as equal, so null-key docs match as
+    * they do in the id join, and the join reads the dedup's hash
+    * partitioning instead of shuffling content again. */
+  private def substringInput(input: DataFrame, docs: DataFrame): DataFrame = {
+    val key = struct(col("repo"), col("path"), col("commit")).as("__key")
+    input
+      .select(key, sha2(col("content"), 256).as("content_sha"), col("content"))
+      // exact repeats of one (key, content) would each match the doc
+      .dropDuplicates("__key", "content_sha")
+      .join(docs.select(key, col("content_sha"), col("doc_id"), col("group")), Seq("__key", "content_sha"))
+      .select(col("doc_id"), col("group"), col("content"))
   }
 
   def run(spark: SparkSession, input: DataFrame, cfg: Config, workDir: String): Tables = {
@@ -286,13 +304,7 @@ object Pipeline {
       else
         Some(Checkpoints.stage(spark, "substring", p("substring"), Nil, Seq(p("docs")),
           sig("docs") + s";substring=${SuffixDedup.SubConfig()}")(
-          SuffixDedup.run(
-            input
-              .dropDuplicates("repo", "path", "commit")
-              .join(docs.select("doc_id", "repo", "path", "commit", "group"), Seq("repo", "path", "commit"))
-              .select(col("doc_id"), col("group"), col("content")),
-            reg = reg
-          )
+          SuffixDedup.run(substringInput(input, docs), reg = reg)
         ))
 
     // Optional top-N report (reference main_citation_control.py:626-642 /

@@ -243,16 +243,17 @@ object SuffixDedup {
       reg: CacheRegistry = CacheRegistry.unmanaged,
       precomputedCandidates: Option[DataFrame] = None
   ): DataFrame = {
-    // spread BOTH join inputs: the suffix-automaton LCS is expensive PER ROW
-    // while both tables are tiny in BYTES, so byte-based partitioning (scan
-    // splits, AQE coalescing) would otherwise hand the whole verify stage to
-    // one task — whichever side the planner streams (it broadcasts the
-    // other) must already be spread, or the UDF stage inherits a single
-    // partition (the driver's round-6 bench measured this query bimodally
-    // at 0.9 s vs 12 s depending on which side was built). Par.spread
+    // The suffix-automaton LCS is expensive PER ROW while both join inputs
+    // are tiny in BYTES, so byte-based partitioning (scan splits, AQE
+    // coalescing) would hand the whole verify stage to one task — whichever
+    // side the planner streams (it broadcasts the other) must already be
+    // spread (the operator suite once measured this query bimodally at
+    // 0.9 s vs 12 s depending on which side was built). Par.spread
     // repartitions an input only when its plan's leaf size estimates sum to
-    // less than spark.sql.files.maxPartitionBytes x cores (a no-op at scale).
-    val ds = Par.spread(docs)
+    // less than spark.sql.files.maxPartitionBytes x cores (a no-op at
+    // scale). The spread docs are persisted and read by the fingerprint
+    // branch and both content sides, so content crosses that exchange once.
+    val ds = reg.persist(Par.spread(docs))
     val candidates = Par.spread(precomputedCandidates.getOrElse(candidatePairs(ds, cfg, reg)))
     val minMatch = cfg.minMatch
     val lcsUdf = udf((x: String, y: String) =>

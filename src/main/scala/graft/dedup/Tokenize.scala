@@ -1,10 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Token / shingle extraction with the reference's exact semantics, expressed
-  * entirely with codegen'd Catalyst built-ins (no UDFs in the hot path).
+/** Token / shingle extraction with the reference's exact semantics, as one
+  * codegen'd expression ([[TokenSet]]) over a plain-Scala kernel (no UDFs in
+  * the hot path).
   *
   * Reference semantics (the correctness contract, SURVEY.md §1.4):
   *  - tokenizer regex `\b[a-zA-Z0-9][-a-zA-Z0-9]*[a-zA-Z0-9]\b` over the
@@ -30,52 +31,25 @@ object Tokenize {
     * change, so pure-ASCII corpora (and the DuckDB RE2 oracles, which have
     * ASCII-only `\b`) are byte-identical with or without the flag. */
   val TokenPattern = "(?U)\\b[a-zA-Z0-9][-a-zA-Z0-9]*[a-zA-Z0-9]\\b"
-  val PureDigits = "^[0-9]+$"
-  val DigitChain = "^[0-9]+(-[0-9]+)+$"
-
-  private lazy val stopwordsArray: Column =
-    lit(Stopwords.english.toArray.sorted)
-
-  /** Ordered, lower-cased, filtered token stream (duplicates preserved —
-    * shingling needs the sequence). Codegen'd: regexp_extract_all + filter. */
-  def tokenStream(text: Column): Column =
-    filter(
-      regexp_extract_all(lower(text), lit(TokenPattern), lit(0)),
-      t =>
-        length(t) > 1 &&
-          !t.rlike(PureDigits) &&
-          !t.rlike(DigitChain) &&
-          !array_contains(stopwordsArray, t)
-    )
-
-  /** k-token shingles over an ordered token array (k >= 1). k = 1 is the
-    * identity. Built from sequence + transform + slice — still codegen'd. */
-  def shingles(tokens: Column, k: Int): Column =
-    if (k <= 1) tokens
-    else
-      when(
-        size(tokens) >= k,
-        transform(
-          sequence(lit(1), size(tokens) - lit(k - 1)),
-          i => concat_ws(" ", slice(tokens, i, lit(k)))
-        )
-      ).otherwise(array().cast("array<string>"))
 
   /** The document set: distinct sorted token/shingle strings — as a custom
-    * codegen'd expression (see [[TokenSet]]; the pure-built-ins version below
-    * is kept for the equivalence test). */
+    * codegen'd expression (see [[TokenSet]]). */
   def tokenSet(text: Column, k: Int = 1): Column = TokenSet(text, k)
 
-  /** Same semantics composed from Catalyst built-ins only. Higher-order
-    * functions evaluate interpreted, so the compiled kernel above wins by a
-    * wide margin — this stays as the double-entry bookkeeping twin. */
-  def tokenSetBuiltins(text: Column, k: Int = 1): Column =
-    array_sort(array_distinct(shingles(tokenStream(text), k)))
+  /** The rows of `df` whose array column `c` is non-empty: the same rows as
+    * `filter(size(col(c)) > 0)`, written as a generator because Catalyst
+    * pushes such a filter below the projection that defines `c` and rewrites
+    * it to `size(<c's expression>) > 0` — the tokenizer or the encode UDF
+    * then runs twice per row, once in the Filter and once in the Project.
+    * Catalyst never folds a projection into the generator above it, so `c`'s
+    * expression runs once. */
+  def nonEmpty(df: DataFrame, c: String): DataFrame =
+    df.withColumn(c, explode(when(size(col(c)) > 0, array(col(c)))))
 
   /** Plain-Scala kernel (used by [[TokenSet]] and the corpus ground truth).
-    * Must stay in lockstep with the Column version and the reference regexes;
-    * the ScalaTest suite asserts all three agree. The digit filters are
-    * hand-rolled char loops equivalent to `^[0-9]+$` and
+    * Must stay in lockstep with the reference regexes; the test suite holds
+    * it equal to a twin built from Catalyst built-ins and to the oracle. The
+    * digit filters are hand-rolled char loops equivalent to `^[0-9]+$` and
     * `^[0-9]+(-[0-9]+)+$` (String.matches would recompile per call). */
   private val compiled = java.util.regex.Pattern.compile(TokenPattern)
 

@@ -126,10 +126,11 @@ object Vocabulary {
     broadcastEncodeFn(vocab) match {
       case None => encodeJoin(docs, vocab)
       case Some(enc) =>
-        docs
-          .select(col("doc_id"), col("group"), enc(col("tokens")).as("tokens"))
+        // Tokenize.nonEmpty: a size filter would be pushed below the encode
+        // projection and run the encode UDF twice per row
+        Tokenize
+          .nonEmpty(docs.select(col("doc_id"), col("group"), enc(col("tokens")).as("tokens")), "tokens")
           .withColumn("n_tokens", size(col("tokens")))
-          .filter(col("n_tokens") > 0)
     }
 
   /** The broadcast-dict encode as a reusable column function: array<string>

@@ -231,24 +231,6 @@ object Similarity {
   def hyperplaneSketch(embeddings: DataFrame, dim: Int, planes: Int, seed: Long): DataFrame =
     embeddings.withColumn("sketch", HyperplaneSketch(col("embedding"), dim, planes, seed))
 
-  /** The interpreted built-ins twin of [[hyperplaneSketch]] (test oracle for
-    * the kernel's bit-exactness, including the length-mismatch null case). */
-  def hyperplaneSketchBuiltins(embeddings: DataFrame, dim: Int, planes: Int, seed: Long): DataFrame = {
-    val hp = hyperplanes(dim, planes, seed)
-    val sketch = (0 until planes)
-      .map { p =>
-        val plane = lit(hp(p))
-        val d = aggregate(
-          zip_with(col("embedding"), plane, (x, h) => x.cast("double") * h),
-          lit(0.0),
-          (acc, v) => acc + v
-        )
-        when(d >= 0, lit(1L << p)).otherwise(lit(0L))
-      }
-      .reduce(_.bitwiseOR(_))
-    embeddings.withColumn("sketch", sketch)
-  }
-
   /** LSH-pruned top-k: bucket on `blocks` disjoint bit blocks of the sketch,
     * candidates = co-bucketed pairs, exact cosine re-rank. */
   def lshCosineTopK(

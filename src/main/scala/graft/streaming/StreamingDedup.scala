@@ -51,12 +51,15 @@ object StreamingDedup {
     * concern; stream rows are identified by (repo, path, commit) +
     * content_sha. */
   def prepareStream(input: DataFrame, cfg: Config): DataFrame =
-    input
-      .withColumn("content_sha", sha2(col("content"), 256))
-      .withColumn("n_bytes", octet_length(col("content")))
-      .withColumn("tokens", Tokenize.tokenSet(col("content"), cfg.shingleK))
-      .withColumn("group", Pipeline.groupKey(cfg))
-      .filter(size(col("tokens")) > 0)
+    Tokenize
+      .nonEmpty(
+        input
+          .withColumn("content_sha", sha2(col("content"), 256))
+          .withColumn("n_bytes", octet_length(col("content")))
+          .withColumn("tokens", Tokenize.tokenSet(col("content"), cfg.shingleK))
+          .withColumn("group", Pipeline.groupKey(cfg)),
+        "tokens"
+      )
       .drop("content")
 
   /** Exact-dup gate: keep only rows whose (group, content hash) is NEW —
@@ -255,9 +258,10 @@ object StreamingDedup {
     val encFn = encodeFn.getOrElse(encodeFnFor(vocab))
     val sigTokens =
       if (hotTokenIds.isEmpty) col("tokens") else ArrayExceptSorted(col("tokens"), hotTokenIds)
-    val banded = stream
-      .withColumn("tokens", encFn(col("tokens")))
-      .filter(size(col("tokens")) > 0)
+    // Tokenize.nonEmpty, not filter(size > 0): a pushed-down filter would
+    // run the encode UDF (and the tokenizer below it) twice per row
+    val banded = Tokenize
+      .nonEmpty(stream.withColumn("tokens", encFn(col("tokens"))), "tokens")
       .withColumn("sig_tokens", sigTokens)
       .filter(size(col("sig_tokens")) > 0)
       .withColumn("bhs", BandHashes(MinHashSig(col("sig_tokens"), cfg), cfg))

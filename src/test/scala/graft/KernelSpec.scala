@@ -37,7 +37,7 @@ class KernelSpec extends SparkSpec {
       "",
       "a b c 1 2 3",
       "x-1 1-x 1-2-3 a-b-c 12-34 1--2 -1-2 1-2- co-op 99bottles bottles99",
-      CorpusGen.corpusLocal(5).map(_.content).mkString(" ")
+      Twins.corpusLocal(5).map(_.content).mkString(" ")
     )
     // both the codegen'd TokenSet expression and the pure-built-ins chain
     val viaExpr = texts
@@ -47,7 +47,7 @@ class KernelSpec extends SparkSpec {
       .collect()
     val viaBuiltins = texts
       .toDF("text")
-      .select(Tokenize.tokenSetBuiltins(col("text")).as("t"))
+      .select(Twins.tokenSetBuiltins(col("text")).as("t"))
       .as[Seq[String]]
       .collect()
     texts.indices.foreach { i =>
@@ -83,7 +83,7 @@ class KernelSpec extends SparkSpec {
     val viaBuiltins = fixtures
       .map(_._1)
       .toDF("text")
-      .select(Tokenize.tokenSetBuiltins(col("text")).as("t"))
+      .select(Twins.tokenSetBuiltins(col("text")).as("t"))
       .as[Seq[String]]
       .collect()
     fixtures.zipWithIndex.foreach { case ((text, want), i) =>
@@ -119,7 +119,7 @@ class KernelSpec extends SparkSpec {
     ).toDF("text")
     for (k <- Seq(1, 2, 3)) {
       val ws = graft.ops.TextAnalysis.words(col("text"))
-      val builtins = array_distinct(Tokenize.shingles(ws, k))
+      val builtins = array_distinct(Twins.shingles(ws, k))
       val rows = texts
         .select(
           WordGramSet(col("text"), k).as("kernel"),
@@ -138,7 +138,7 @@ class KernelSpec extends SparkSpec {
         array_distinct(
           when(
             size(graft.ops.TextAnalysis.words(col("text"))) >= 3,
-            Tokenize.shingles(graft.ops.TextAnalysis.words(col("text")), 3)
+            Twins.shingles(graft.ops.TextAnalysis.words(col("text")), 3)
           ).otherwise(array(concat_ws(" ", graft.ops.TextAnalysis.words(col("text")))))
         ).as("builtins")
       )
@@ -238,8 +238,8 @@ class KernelSpec extends SparkSpec {
       val trueJ = Jaccard.intersectSorted(a, b).toDouble /
         (a.length + b.length - Jaccard.intersectSorted(a, b))
       val est = MinHash.estimate(
-        MinHash.signatureScala(a, as, bs),
-        MinHash.signatureScala(b, as, bs)
+        Twins.signatureScala(a, as, bs),
+        Twins.signatureScala(b, as, bs)
       )
       // std error ~ sqrt(j(1-j)/128) <= 0.045; 4 sigma
       assert(math.abs(est - trueJ) < 0.18, s"est=$est true=$trueJ")
@@ -250,13 +250,13 @@ class KernelSpec extends SparkSpec {
     val cfg = Config()
     val (as, bs) = MinHash.coefficients(cfg.numPerms, cfg.seed)
     val t = Array(3, 17, 99, 2048)
-    val s1 = MinHash.signatureScala(t, as, bs)
-    val s2 = MinHash.signatureScala(t.clone(), as, bs)
+    val s1 = Twins.signatureScala(t, as, bs)
+    val s2 = Twins.signatureScala(t.clone(), as, bs)
     assert(s1.sameElements(s2))
     (0 until cfg.bands).foreach { b =>
       assert(
-        MinHash.bandHashScala(s1, b, cfg.rowsPerBand) ==
-          MinHash.bandHashScala(s2, b, cfg.rowsPerBand)
+        Twins.bandHashScala(s1, b, cfg.rowsPerBand) ==
+          Twins.bandHashScala(s2, b, cfg.rowsPerBand)
       )
     }
   }
@@ -279,9 +279,9 @@ class KernelSpec extends SparkSpec {
       )
       .collect()
     sets.zip(got).foreach { case (t, row) =>
-      val wantSig = MinHash.signatureScala(t, as, bs)
+      val wantSig = Twins.signatureScala(t, as, bs)
       val wantSim = SimHash.simhash64(t, cfg.seed)
-      val wantBands = Array.tabulate(cfg.bands)(b => MinHash.bandHashScala(wantSig, b, cfg.rowsPerBand))
+      val wantBands = Array.tabulate(cfg.bands)(b => Twins.bandHashScala(wantSig, b, cfg.rowsPerBand))
       assert(row.getAs[collection.Seq[Int]]("mh").toSeq.map(_.toLong) == wantSig.toSeq)
       assert(row.getAs[Long]("sh") == wantSim)
       assert(row.getAs[collection.Seq[Long]]("bh").toSeq == wantBands.toSeq)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.dedup.Components
+import graft.dedup.{Components, Twins}
 import graft.ops.{CorpusPrep, Multimodal, ShardPack, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
 
@@ -51,7 +51,7 @@ class OpsSpec extends SparkSpec {
     for ((planes, seed) <- Seq((32, 42L), (16, 7L))) {
       val kernel = Similarity.hyperplaneSketch(embeddings, dim = 64, planes = planes, seed = seed)
         .select("vec_id", "sketch").as[(Long, Long)].collect().toMap
-      val builtins = Similarity.hyperplaneSketchBuiltins(embeddings, dim = 64, planes = planes, seed = seed)
+      val builtins = Twins.hyperplaneSketchBuiltins(embeddings, dim = 64, planes = planes, seed = seed)
         .select("vec_id", "sketch").as[(Long, Long)].collect().toMap
       assert(kernel == builtins, s"sketches diverge at planes=$planes seed=$seed")
     }
@@ -68,7 +68,7 @@ class OpsSpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val skNull = Similarity.hyperplaneSketch(withNull, dim = 64, planes = 8, seed = 1L)
       .select("vec_id", "sketch").as[(Long, Long)].collect().toMap
-    val skNullTwin = Similarity.hyperplaneSketchBuiltins(withNull, dim = 64, planes = 8, seed = 1L)
+    val skNullTwin = Twins.hyperplaneSketchBuiltins(withNull, dim = 64, planes = 8, seed = 1L)
       .select("vec_id", "sketch").as[(Long, Long)].collect().toMap
     assert(skNull(1L) == 0L && skNull == skNullTwin, "null element must clear every bit, like the twin")
   }

@@ -2,6 +2,7 @@ package graft
 
 import graft.dedup._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions._
 
 /** The correctness gate (BASELINE.md): exact parity with the reference
@@ -28,7 +29,7 @@ class PipelineParitySpec extends SparkSpec {
       .toSet
 
   test("exact path equals the reference oracle pair-for-pair (tiny corpus)") {
-    val files = CorpusGen.corpusLocal(200)
+    val files = Twins.corpusLocal(200)
     val input = spark.createDataFrame(files)
     val docs = Pipeline.prepareDocs(input, cfg)
     val vocab = Vocabulary.build(docs, cfg)
@@ -43,7 +44,7 @@ class PipelineParitySpec extends SparkSpec {
   }
 
   test("LSH path: recall >= 0.99 at threshold and exact precision (small corpus)") {
-    val files = CorpusGen.corpusLocal(1000)
+    val files = Twins.corpusLocal(1000)
     val input = spark.createDataFrame(files)
     val work = tmpDir("graft-lsh")
     val t = Pipeline.run(spark, input, cfg, work)
@@ -69,7 +70,7 @@ class PipelineParitySpec extends SparkSpec {
   }
 
   test("broadcast-map encode equals the shuffle-join encode plan") {
-    val files = CorpusGen.corpusLocal(300)
+    val files = Twins.corpusLocal(300)
     val docs = Pipeline.prepareDocs(spark.createDataFrame(files), cfg)
     val vocab = Vocabulary.build(docs, cfg)
     def rows(df: DataFrame): Map[Long, (String, Seq[Int])] =
@@ -78,12 +79,16 @@ class PipelineParitySpec extends SparkSpec {
         .map(r => r.getLong(0) -> (r.getString(1), r.getAs[collection.Seq[Int]](2).toSeq))
         .toMap
     val viaJoin = rows(Vocabulary.encodeJoin(docs, vocab))
-    val viaBroadcast = rows(Vocabulary.encodeBroadcast(docs, vocab))
+    val broadcastPlan = Vocabulary.encodeBroadcast(docs, vocab)
+    val viaBroadcast = rows(broadcastPlan)
     assert(viaJoin.nonEmpty && viaJoin == viaBroadcast)
+    // the encode UDF runs once per row, not again in a pushed-down size filter
+    val plan = broadcastPlan.queryExecution.executedPlan
+    assert(exprCount(plan) { case _: ScalaUDF => } == 1, s"UDF evaluations per row in:\n$plan")
   }
 
   test("topN config produces a ranked per-probe report stage equal to TopN.perProbe") {
-    val files = CorpusGen.corpusLocal(300)
+    val files = Twins.corpusLocal(300)
     val input = spark.createDataFrame(files)
     val work = tmpDir("graft-topn")
     val t = Pipeline.run(spark, input, cfg.copy(topN = Some(3)), work)
@@ -128,7 +133,7 @@ class PipelineParitySpec extends SparkSpec {
   }
 
   test("composite group keys: pairs stay within (lang, repo) groups") {
-    val files = CorpusGen.corpusLocal(600)
+    val files = Twins.corpusLocal(600)
     val input = spark.createDataFrame(files)
     val cfg2 = Config(groupCols = Seq("lang", "repo"))
     val work = tmpDir("graft-twokey")
@@ -163,7 +168,7 @@ class PipelineParitySpec extends SparkSpec {
   }
 
   test("per-row invariant: content sha256 carried unchanged into the docs checkpoint") {
-    val files = CorpusGen.corpusLocal(100)
+    val files = Twins.corpusLocal(100)
     val input = spark.createDataFrame(files)
     val docs = Pipeline.prepareDocs(input, cfg)
     val mismatches = docs
@@ -173,8 +178,57 @@ class PipelineParitySpec extends SparkSpec {
     assert(mismatches == 0)
   }
 
+  test("prepareDocs moves the token arrays through one shuffle and tokenizes each row once") {
+    val dir = tmpDir("graft-docs-in")
+    spark.createDataFrame(Twins.corpusLocal(300)).write.parquet(s"$dir/input")
+    val reg = new CacheRegistry
+    try {
+      val docs = Pipeline.prepareDocs(spark.read.parquet(s"$dir/input"), cfg, reg)
+      assert(docs.collect().length == 300)
+      val plan = docs.queryExecution.executedPlan
+      val shuffles = shufflesCarrying(docs, "tokens")
+      assert(shuffles.size == 1, s"${shuffles.size} token shuffles:\n$plan")
+      assert(exprCount(plan) { case _: TokenSet => } == 1, s"token_set( per row in:\n$plan")
+    } finally reg.release()
+  }
+
+  test("substring dedup reads the row the docs stage kept, null keys included") {
+    val rnd = new scala.util.Random(5)
+    def words(n: Int): String =
+      Seq.fill(n)(Seq.fill(3 + rnd.nextInt(6))(('a' + rnd.nextInt(26)).toChar).mkString).mkString(" ")
+    def sha(s: String): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val (s1, s2, s3) = (words(40), words(40), words(40))
+    val c1 = s"${words(15)} $s1 ${words(15)}"
+    val c2 = s"${words(15)} $s2 ${words(15)}"
+    // one key with two contents (and an exact repeat of one of them): the
+    // docs stage keeps one row, and only that row's content may pair
+    val input = Seq(
+      CodeFile("r", "k.x", "c1", "x", c1),
+      CodeFile("r", "k.x", "c1", "x", c2),
+      CodeFile("r", "k.x", "c1", "x", c1),
+      CodeFile("r", "x.x", "c1", "x", s"${words(15)} $s1"),
+      CodeFile("r", "y.x", "c1", "x", s"$s2 ${words(15)}"),
+      CodeFile(null, "n.x", "c1", "x", s"${words(15)} $s3 ${words(15)}"),
+      CodeFile("r", "z.x", "c1", "x", s"$s3 ${words(15)}")
+    ).toDF()
+      // generated files in other groups, so the pair and component stages are not empty
+      .unionByName(Twins.corpusLocal(60).toDF())
+    val t = Pipeline.run(spark, input, Config(substringDedup = true), tmpDir("graft-substring-kept"))
+    val docs = t.docs.filter(col("group") === "x").select("path", "doc_id", "content_sha").collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
+    assert(docs.size == 5)
+    val id = docs.map { case (path, (i, _)) => path -> i }
+    val pairs = t.substring.get.select("a", "b").collect().map(r => Set(r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs.distinct.size == pairs.size, s"repeated substring pairs: $pairs")
+    val (kept, other) = if (docs("k.x")._2 == sha(c1)) ("x.x", "y.x") else ("y.x", "x.x")
+    assert(pairs.contains(Set(id("k.x"), id(kept))), s"the kept content's clone $kept is missing")
+    assert(!pairs.contains(Set(id("k.x"), id(other))), s"a dropped content paired with $other")
+    assert(pairs.contains(Set(id("n.x"), id("z.x"))), "the null-key doc is missing")
+  }
+
   test("resume: a partially-checkpointed run completes to identical output") {
-    val files = CorpusGen.corpusLocal(300)
+    val files = Twins.corpusLocal(300)
     val input = spark.createDataFrame(files)
 
     val full = tmpDir("graft-full")
@@ -195,7 +249,7 @@ class PipelineParitySpec extends SparkSpec {
   }
 
   test("config-aware resume: a threshold change reuses docs..candidates, rebuilds pairs+components") {
-    val files = CorpusGen.corpusLocal(300)
+    val files = Twins.corpusLocal(300)
     val input = spark.createDataFrame(files)
     val work = tmpDir("graft-rethreshold")
     val strict = Pipeline.run(spark, input, Config(threshold = 0.9), work)
@@ -227,7 +281,7 @@ class PipelineParitySpec extends SparkSpec {
     val C = 300
     val dupContent =
       "def megaDup(x: Int): Int = {\n  val widget = x * frobnicate(x)\n  widget + renderTemplate(x)\n}\n"
-    val noise = CorpusGen.corpusLocal(60)
+    val noise = Twins.corpusLocal(60)
     val clones = (0 until C).map(i => CodeFile(s"dup-repo-$i", s"src/clone$i.scala", f"c$i%04d", "scala", dupContent))
     val input = spark.createDataFrame(new scala.util.Random(7L).shuffle(noise ++ clones))
 
@@ -257,7 +311,7 @@ class PipelineParitySpec extends SparkSpec {
   }
 
   test("collapseVersions: only the newest version per (repo, path) is clustered") {
-    val base = CorpusGen.corpusLocal(100)
+    val base = Twins.corpusLocal(100)
     // 3-commit history per file: two stale versions with perturbed content
     val versioned = base.flatMap { f =>
       Seq(
@@ -291,7 +345,7 @@ class PipelineParitySpec extends SparkSpec {
     val nearContent = license.split(' ').drop(12).mkString(" ") // Jaccard 228/240 = 0.95
     val vendored = (0 until 12).map(r => CodeFile(f"repo$r%02d", "LICENSE.txt", "c0", "scala", license))
     val near = CodeFile("repo99", "LICENSE-mod.txt", "c0", "scala", nearContent)
-    val fill = CorpusGen.corpusLocal(80)
+    val fill = Twins.corpusLocal(80)
     val input = spark.createDataFrame((vendored :+ near) ++ fill)
 
     def idsOf(t: Pipeline.Tables, path: String): Set[Long] =
@@ -323,7 +377,7 @@ class PipelineParitySpec extends SparkSpec {
   }
 
   test("stage metrics sidecars exist with per-partition rows") {
-    val files = CorpusGen.corpusLocal(100)
+    val files = Twins.corpusLocal(100)
     val input = spark.createDataFrame(files)
     val work = tmpDir("graft-metrics")
     Pipeline.run(spark, input, cfg, work)

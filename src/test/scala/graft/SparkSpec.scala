@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,4 +33,31 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Every node of a physical plan: AQE query stages, and the plan of each
+    * cached relation it scans, each cached plan once however often it is
+    * scanned. */
+  def planNodes(plan: SparkPlan): Seq[SparkPlan] = {
+    val helper = new AdaptiveSparkPlanHelper {}
+    val seen = java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    def walk(p: SparkPlan): Seq[SparkPlan] =
+      helper.collect(p) { case n => n }.flatMap {
+        case s: InMemoryTableScanExec if seen.add(s.relation.cacheBuilder.cachedPlan) =>
+          s +: walk(s.relation.cacheBuilder.cachedPlan)
+        case n => Seq(n)
+      }
+    walk(plan)
+  }
+
+  /** The shuffle exchanges of `df`'s executed plan (run it first) whose rows
+    * carry a column named `column` or starting with `column_`. */
+  def shufflesCarrying(df: DataFrame, column: String): Seq[SparkPlan] =
+    planNodes(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeLike if e.output.exists(a => a.name == column || a.name.startsWith(column + "_")) => e
+    }
+
+  /** How many expression nodes matching `f` the operators of `plan` hold:
+    * how often the plan evaluates such an expression per row. */
+  def exprCount(plan: SparkPlan)(f: PartialFunction[Expression, Unit]): Int =
+    planNodes(plan).map(_.expressions.map(_.collect(f).size).sum).sum
 }

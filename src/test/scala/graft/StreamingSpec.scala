@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -42,7 +43,7 @@ class StreamingSpec extends SparkSpec {
   /** Static corpus state, built once: docs/vocab + exact-class REP encoded
     * sets (the index contract: collapse before LSH) + hot ids + index. */
   private lazy val corpusState = {
-    val corpus = CorpusGen.corpusLocal(200).toDF()
+    val corpus = Twins.corpusLocal(200).toDF()
     val docs = Pipeline.prepareDocs(corpus, cfg).persist()
     val vocab = Vocabulary.build(docs, cfg).persist()
     val encodedAll = Vocabulary.encode(docs, vocab)
@@ -201,6 +202,24 @@ class StreamingSpec extends SparkSpec {
     val nodes = new AdaptiveSparkPlanHelper {}
     assert(nodes.collect(p) { case j: BaseJoinExec => j }.isEmpty, s"join in the micro-batch plan:\n$p")
     assert(nodes.collect(p) { case b: BroadcastExchangeExec => b }.isEmpty, s"broadcast exchange in the micro-batch plan:\n$p")
+  }
+
+  test("near-dup micro-batches tokenize and encode each row once") {
+    // a size filter pushed below the projection that defines `tokens` would
+    // evaluate the tokenizer and the encode UDF in the Filter and again in
+    // the Project
+    val (_, vocab, encoded, hot, index) = corpusState
+    val encFn = Some(StreamingDedup.encodeFnFor(vocab))
+    var plan: Option[org.apache.spark.sql.execution.SparkPlan] = None
+    val out = runStreamed("nd_once", Seq(streamRows.take(3), streamRows.drop(3)),
+      inspect = q => plan = Some(q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan)) { in =>
+      StreamingDedup.nearDupAgainstCorpus(StreamingDedup.prepareStream(in, cfg), vocab, encoded, index, cfg, hot, encFn)
+    }
+    assert(pairSet(out).nonEmpty)
+    val p = plan.get
+    assert(exprCount(p) { case _: TokenSet => } == 1, s"token_set( per row in:\n$p")
+    // the encode UDF and the probe UDF
+    assert(exprCount(p) { case _: ScalaUDF => } == 2, s"UDF evaluations per row in:\n$p")
   }
 
   test("a second near-dup plan over the same index frame starts no Spark job") {

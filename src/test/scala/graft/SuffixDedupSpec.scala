@@ -1,7 +1,8 @@
 package graft
 
-import graft.dedup.{CorpusGen, SuffixDedup}
-import org.apache.spark.sql.functions._
+import graft.dedup.{CacheRegistry, SuffixDedup, Twins}
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 
 class SuffixDedupSpec extends SparkSpec {
   import SuffixDedup._
@@ -26,6 +27,54 @@ class SuffixDedupSpec extends SparkSpec {
     assert(lcsLen("abc", "xabcy") == 3)
   }
 
+  test("lcsLen equals a DP longest common substring (property, 2000 cases)") {
+    def dp(a: String, b: String): Int = {
+      val prev, cur = new Array[Int](b.length + 1)
+      var best = 0
+      for (i <- 1 to a.length) {
+        for (j <- 1 to b.length) {
+          cur(j) = if (a(i - 1) == b(j - 1)) prev(j - 1) + 1 else 0
+          if (cur(j) > best) best = cur(j)
+        }
+        System.arraycopy(cur, 0, prev, 0, cur.length)
+      }
+      best
+    }
+    // a small alphabet makes long common runs likely; NUL and a non-ASCII
+    // char exercise the transition map's keys
+    val str = Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, Gen.oneOf('a', 'b', 'c', '\u0000', '\u03c9')).map(_.mkString))
+    val pairs = Gen.frequency(
+      4 -> Gen.zip(str, str),
+      1 -> str.map(a => ("", a)),
+      2 -> (for (a <- str; pre <- str; suf <- str) yield (a, pre + a + suf)) // b contains a
+    )
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(2000),
+      Prop.forAllNoShrink(pairs) { case (a, b) =>
+        val want = dp(a, b)
+        (lcsLen(a, b) == want && lcsLen(b, a) == want) :| s"a=${a.toSeq} b=${b.toSeq} want=$want"
+      }
+    )
+    assert(res.passed, res.status.toString)
+  }
+
+  test("run on a materialized input moves content through one shuffle") {
+    // the spread docs are persisted and read by the fingerprint branch and
+    // both content sides: one round-robin exchange, not one per reader
+    val dir = tmpDir("graft-substring-in")
+    spark
+      .createDataFrame(Twins.corpusLocal(300).zipWithIndex.map { case (f, i) => (i.toLong, f.lang, f.content) })
+      .toDF("doc_id", "group", "content")
+      .write.parquet(s"$dir/docs")
+    val reg = new CacheRegistry
+    try {
+      val out = SuffixDedup.run(spark.read.parquet(s"$dir/docs"), reg = reg)
+      assert(out.collect().nonEmpty)
+      val shuffles = shufflesCarrying(out, "content")
+      assert(shuffles.size == 1, s"${shuffles.size} content shuffles:\n${out.queryExecution.executedPlan}")
+    } finally reg.release()
+  }
+
   test("winnowing guarantee: shared substring >= k+window-1 shares a fingerprint") {
     val rnd = new scala.util.Random(7)
     val shared = Array.fill(200)(('a' + rnd.nextInt(26)).toChar).mkString
@@ -39,7 +88,7 @@ class SuffixDedupSpec extends SparkSpec {
   }
 
   test("fingerprints are deterministic and sparse") {
-    val s = "x" * 50 + CorpusGen.corpusLocal(3).map(_.content).mkString(" ")
+    val s = "x" * 50 + Twins.corpusLocal(3).map(_.content).mkString(" ")
     val f1 = fingerprints(s, 64, 33)
     val f2 = fingerprints(s, 64, 33)
     assert(f1.sameElements(f2))
@@ -48,7 +97,7 @@ class SuffixDedupSpec extends SparkSpec {
   }
 
   test("finds planted substring clones that Jaccard misses") {
-    val files = CorpusGen.corpusLocal(500)
+    val files = Twins.corpusLocal(500)
     val docs = spark
       .createDataFrame(files.zipWithIndex.map { case (f, i) => (i.toLong, f.lang, f.content) })
       .toDF("doc_id", "group", "content")
