@@ -133,7 +133,7 @@ private[graft] object OracleSql {
       .replace("\n", " ")
 
   /** DuckDB cosine between two DOUBLE[] columns, same evaluation shape as
-    * [[Similarity.cosine]] (index-ordered products, left-to-right sums). */
+    * [[graft.dedup.CosineKernel]] (index-ordered products, left-to-right sums). */
   private def cosineSql(x: String, y: String): String =
     s"""list_sum(list_transform(generate_series(1, len($x)), i -> $x[i] * $y[i]))
        | / (sqrt(list_sum(list_transform($x, v -> v * v)))

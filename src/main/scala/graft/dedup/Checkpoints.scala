@@ -2,9 +2,13 @@ package graft.dedup
 
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Per-stage checkpointing with metrics + lineage — the engine's resumability
   * subsystem (BASELINE.json north_rule: "resumable from checkpoint with
@@ -57,6 +61,12 @@ object Checkpoints {
     while (it.hasMoreElements) awaitSidecar(it.nextElement())
   }
 
+  /** Block until the pending sidecars of the stages under `workDir` finish,
+    * dropping their failures: a failed run drains what it started, so no
+    * failed future is left to fail a later run in this JVM. */
+  def drainSidecars(workDir: String): Unit =
+    pendingSidecars.keySet.asScala.filter(_.startsWith(workDir + "/")).foreach(p => Try(awaitSidecar(p)))
+
   /** Run `build` unless `path` already holds a completed stage BUILT UNDER
     * THE SAME CONFIG; always return the checkpointed table. Writes row-count
     * metrics per partition column value (per-partition lineage) into
@@ -96,7 +106,7 @@ object Checkpoints {
           "Downstream stages carry cumulative sigs, so they rebuild too."
       )
     }
-    if (!complete || staleCfg.nonEmpty) {
+    val written: Option[StructType] = if (!complete || staleCfg.nonEmpty) {
       val t0 = System.nanoTime()
       val df = build
       // zstd (not snappy), DEFAULT dictionary budget: token-array columns
@@ -109,13 +119,18 @@ object Checkpoints {
       (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
         .parquet(path)
       val wallMs = (System.nanoTime() - t0) / 1000000
+      // the read-back column order: partition columns last
+      val schema = StructType(
+        df.schema.filterNot(f => partitionCols.contains(f.name)) ++ partitionCols.map(df.schema(_))
+      )
       pendingSidecars.put(
         path,
         sidecarPool.submit(new Runnable {
-          def run(): Unit = writeSidecars(spark, name, path, partitionCols, inputs, wallMs, configSig)
+          def run(): Unit = writeSidecars(spark, name, path, partitionCols, inputs, wallMs, configSig, Some(schema))
         })
       )
-    } else if (!exists(spark, path + "_metrics")) {
+      Some(schema)
+    } else {
       // heal a run killed between data commit and sidecar write: the stage
       // itself is complete (atomic _SUCCESS), only the sidecar is missing.
       // (Known double-fault gap: the healed manifest stamps the CURRENT
@@ -124,10 +139,39 @@ object Checkpoints {
       // commit-to-sidecar gap, and the interleaving needs a config change
       // across the crash; a paranoid operator deletes the last stage dir
       // after any crashed run that also changed config.)
-      writeSidecars(spark, name, path, partitionCols, inputs, wallMs = 0L, configSig)
+      if (!exists(spark, path + "_metrics"))
+        writeSidecars(spark, name, path, partitionCols, inputs, wallMs = 0L, configSig, storedSchema(spark, path))
+      None
     }
-    spark.read.parquet(path)
+    read(spark, path, written.orElse(storedSchema(spark, path)))
   }
+
+  /** The committed table at `path`. A partitioned stage with no rows holds
+    * no data file, so Parquet has no footer to infer a schema from: such a
+    * stage reads back with the schema it was written with. */
+  private def read(spark: SparkSession, path: String, schema: => Option[StructType]): DataFrame =
+    try spark.read.parquet(path)
+    catch {
+      case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+        spark.read.schema(schema.getOrElse(throw e)).parquet(path)
+    }
+
+  private def lineageText(spark: SparkSession, path: String): Option[String] = {
+    val lp = new Path(path + "_lineage.json")
+    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(lp)) None
+    else {
+      val in = fs.open(lp)
+      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8))
+      finally in.close()
+    }
+  }
+
+  /** The read-back schema recorded in a stage's lineage manifest, if any. */
+  private def storedSchema(spark: SparkSession, path: String): Option[StructType] =
+    lineageText(spark, path)
+      .flatMap(t => Option(new com.fasterxml.jackson.databind.ObjectMapper().readTree(t).get("schema")))
+      .map(node => DataType.fromJson(node.toString).asInstanceOf[StructType])
 
   private def sha256Hex(s: String): String =
     java.security.MessageDigest
@@ -147,13 +191,7 @@ object Checkpoints {
       configSig: String
   ): Option[String] = {
     if (configSig.isEmpty) return None
-    val lp = new Path(path + "_lineage.json")
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(lp)) return None
-    val in = fs.open(lp)
-    val txt =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-      finally in.close()
+    val txt = lineageText(spark, path).getOrElse(return None)
     "\"config_sha\":\"([0-9a-f]{64})\"".r.findFirstMatchIn(txt).flatMap { m =>
       if (m.group(1) == sha256Hex(configSig)) None
       else
@@ -182,9 +220,10 @@ object Checkpoints {
       partitionCols: Seq[String],
       inputs: Seq[String],
       wallMs: Long,
-      configSig: String = ""
+      configSig: String,
+      schema: Option[StructType]
   ): Unit = {
-    val written = spark.read.parquet(path)
+    val written = read(spark, path, schema)
     val counts =
       if (partitionCols.nonEmpty)
         written
@@ -213,8 +252,9 @@ object Checkpoints {
     val cfgFields =
       if (configSig.isEmpty) ""
       else s""","config":${JsonText.quote(configSig)},"config_sha":"${sha256Hex(configSig)}""""
+    val schemaField = schema.fold("")(s => s""","schema":${s.json}""")
     val lineage =
-      s"""{"stage":${JsonText.quote(name)},"path":${JsonText.quote(path)},"inputs":[${inputs.map(JsonText.quote).mkString(",")}],"wall_ms":${wallMs}$cfgFields}"""
+      s"""{"stage":${JsonText.quote(name)},"path":${JsonText.quote(path)},"inputs":[${inputs.map(JsonText.quote).mkString(",")}],"wall_ms":${wallMs}$cfgFields$schemaField}"""
     val lp = new Path(path + "_lineage.json")
     val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(lp, true)

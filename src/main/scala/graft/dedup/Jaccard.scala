@@ -17,31 +17,14 @@ import org.apache.spark.sql.functions._
   * HALF_EVEN reproduces CPython's `round(float, 6)` bit-for-bit; Spark's
   * built-in `round()` is HALF_UP and must not be used on this path.
   *
-  * The intersection is a two-pointer merge over the sorted int arrays —
-  * O(|A|+|B|), allocation-free — replacing the reference's O(|A|*|B|)
+  * The intersection ([[JaccardKernel.count]]) is a two-pointer merge over
+  * the sorted int arrays — O(|A|+|B|), allocation-free — replacing the reference's O(|A|*|B|)
   * membership loop (code/Stage05ComputeSimilarity.py:119-122).
   */
 object Jaccard {
 
-  def intersectSorted(a: Array[Int], b: Array[Int]): Int = {
-    var i = 0; var j = 0; var n = 0
-    while (i < a.length && j < b.length) {
-      val x = a(i); val y = b(j)
-      if (x == y) { n += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    n
-  }
-
   def round6(d: Double): Double =
     new JBigDecimal(d).setScale(6, RoundingMode.HALF_EVEN).doubleValue()
-
-  def jaccard6(a: Array[Int], b: Array[Int]): Double = {
-    val inter = intersectSorted(a, b)
-    if (inter == 0) 0.0
-    else round6(inter.toDouble / (a.length + b.length - inter).toDouble)
-  }
 
   /** Verify candidate pairs against exact Jaccard.
     *
@@ -58,7 +41,7 @@ object Jaccard {
     // join, so one conjunct = one fewer kernel evaluation per candidate row
     val floor = math.max(minSim, java.lang.Double.MIN_VALUE)
     withTokens(candidates, encoded)
-      // codegen'd Catalyst expression (no UDF boxing) — see JaccardExpression
+      // compiled kernel call (no UDF boxing) — see JaccardKernel
       .withColumn("sim", JaccardSorted(col("tokens_a"), col("tokens_b")))
       .filter(col("sim") >= floor)
       .select(col("group"), col("a"), col("b"), col("sim"))
@@ -87,7 +70,7 @@ object Jaccard {
     */
   def verifyCounts(candidates: DataFrame, encoded: DataFrame, minSim: Double): DataFrame =
     withTokens(candidates, encoded)
-      // codegen'd Catalyst expression, no per-element boxing (JaccardExpression)
+      // compiled kernel call, no per-element boxing (JaccardKernel)
       .withColumn("inter_cnt", IntersectCountSorted(col("tokens_a"), col("tokens_b")).cast("long"))
       .withColumn(
         "union_cnt",

@@ -31,26 +31,31 @@ object MinHash {
     (as, bs)
   }
 
-  /** encoded (doc_id, group, tokens) -> (doc_id, group, minhash: array<long>).
-    * Native expression, not the UDF: no per-element boxing (HashExpressions). */
+  /** encoded (doc_id, group, tokens) -> (doc_id, group, minhash: array<int>).
+    * Compiled kernel call, not a UDF: no per-element boxing (HashKernels). */
   def withSignature(encoded: DataFrame, cfg: Config): DataFrame =
     encoded.withColumn("minhash", MinHashSig(col("tokens"), cfg))
 
-  /** signatures -> exploded band rows (group, band, band_hash, doc_id). */
+  /** signatures -> exploded band rows (group, band, band_hash, doc_id).
+    * The generator explodes the kernel call itself: over a column it would
+    * get an inferred `size(bh) > 0 AND isnotnull(bh)` filter, which
+    * Catalyst pushes below the projection defining `bh` and so runs the
+    * band-hash kernel twice per row. */
   def bandRows(signatures: DataFrame, cfg: Config): DataFrame =
-    signatures
-      .withColumn("bh", BandHashes(col("minhash"), cfg))
-      .select(
-        col("group"),
-        posexplode(col("bh")).as(Seq("band", "band_hash")),
-        col("doc_id")
-      )
+    signatures.select(
+      col("group"),
+      posexplode(BandHashes(col("minhash"), cfg)).as(Seq("band", "band_hash")),
+      col("doc_id")
+    )
 
   /** [[bandRows]] with the doc's FULL band-hash array carried per row (the
-    * input shape of the first-collision pair generator). */
+    * input shape of the first-collision pair generator). The array is a
+    * column here, so [[Tokenize.nonEmpty]] (a generator, which Catalyst
+    * never inlines the array's projection into) takes the place of the
+    * inferred filter. */
   def bandRowsWithHashes(signatures: DataFrame, cfg: Config): DataFrame =
-    signatures
-      .withColumn("bhs", BandHashes(col("minhash"), cfg))
+    Tokenize
+      .nonEmpty(signatures.withColumn("bhs", BandHashes(col("minhash"), cfg)), "bhs")
       .select(
         col("group"),
         posexplode(col("bhs")).as(Seq("band", "band_hash")),
@@ -85,12 +90,4 @@ object MinHash {
         bucketCols = Seq("group", "band", "band_hash"),
         maxBucket = cfg.maxBucket
       )
-
-  /** MinHash estimate of Jaccard from two signatures (fraction of equal
-    * components) — used in tests to validate the statistical promise. */
-  def estimate(a: Array[Long], b: Array[Long]): Double = {
-    var eq = 0; var i = 0
-    while (i < a.length) { if (a(i) == b(i)) eq += 1; i += 1 }
-    eq.toDouble / a.length
-  }
 }

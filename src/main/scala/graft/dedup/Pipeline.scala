@@ -194,7 +194,17 @@ object Pipeline {
       .select(col("doc_id"), col("group"), col("content"))
   }
 
-  def run(spark: SparkSession, input: DataFrame, cfg: Config, workDir: String): Tables = {
+  def run(spark: SparkSession, input: DataFrame, cfg: Config, workDir: String): Tables =
+    try runStages(spark, input, cfg, workDir)
+    catch {
+      case e: Throwable =>
+        // a stage failed: its predecessors' sidecar writes may still be in
+        // flight, and a failed one must not surface in a later run
+        Checkpoints.drainSidecars(workDir)
+        throw e
+    }
+
+  private def runStages(spark: SparkSession, input: DataFrame, cfg: Config, workDir: String): Tables = {
     def p(s: String) = s"$workDir/$s"
     // run-scoped cache ownership: this run releases exactly the caches it
     // created (never another concurrent run's in-flight id-assignment
@@ -266,15 +276,17 @@ object Pipeline {
             .select("doc_id")
           reps0.join(vendoredDocIds, Seq("doc_id"), "left_anti")
         }
-      val sigInput = encoded
-        // build on the skinny id side — SMJ would sort the wide token table
-        .join(reps.hint("shuffle_hash"), "doc_id")
-        // two-pointer sorted difference, not array_except(.., lit(hot)):
-        // the built-in rebuilds a hash set from the literal on every row
-        .withColumn("sig_tokens", ArrayExceptSorted(col("tokens"), hot))
-        .filter(size(col("sig_tokens")) > 0)
-        .withColumn("tokens", col("sig_tokens"))
-        .drop("sig_tokens")
+      val sigInput = Tokenize.nonEmpty(
+        encoded
+          // build on the skinny id side — SMJ would sort the wide token table
+          .join(reps.hint("shuffle_hash"), "doc_id")
+          // two-pointer sorted difference, not array_except(.., lit(hot)):
+          // the built-in rebuilds a hash set from the literal on every row.
+          // Tokenize.nonEmpty, not filter(size > 0): a pushed-down filter
+          // would run it below the join and again above it
+          .withColumn("tokens", ArrayExceptSorted(col("tokens"), hot)),
+        "tokens"
+      )
       SimHash.withSimhash(MinHash.withSignature(sigInput, cfg), cfg)
         .drop("tokens") // signature table carries signatures, not sets
     })

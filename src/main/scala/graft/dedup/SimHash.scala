@@ -46,7 +46,7 @@ object SimHash {
   }
 
   def withSimhash(encoded: DataFrame, cfg: Config): DataFrame =
-    // native expression, not the UDF: no per-element boxing (see HashExpressions)
+    // compiled kernel call, not a UDF: no per-element boxing (see HashKernels)
     encoded.withColumn("simhash", SimHash64(col("tokens"), cfg))
 
   /** (doc_id, group, simhash) -> block rows (group, block, block_val, doc_id). */

@@ -1,11 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Substring near-clone detection — the third detector of the north_star
@@ -281,31 +279,13 @@ object WinnowKernel {
     UnsafeArrayData.fromPrimitiveArray(SuffixDedup.fingerprints(s.toString, k, window))
 }
 
-/** Codegen'd winnowing-fingerprint expression — replaces the ScalaUDF this
-  * path carried through round 4 (the last UDF on a detector candidate path):
-  * the generated code calls the kernel directly on the Tungsten UTF8String,
-  * skipping the UDF's per-row String/Seq conversion and boxed array return. */
-case class WinnowFingerprints(child: Expression, k: Int, window: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"winnow_fps expects string, got ${child.dataType}")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(s: Any): Any =
-    WinnowKernel.eval(s.asInstanceOf[UTF8String], k, window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = graft.dedup.WinnowKernel.eval($s, $k, $window);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "winnow_fps"
-}
-
+/** Compiled winnowing fingerprints — replaces the ScalaUDF this path
+  * carried through round 4 (the last UDF on a detector candidate path):
+  * the generated code calls [[WinnowKernel]] directly on the Tungsten
+  * UTF8String, skipping the UDF's per-row String/Seq conversion and boxed
+  * array return. */
 object WinnowFingerprints {
   def apply(c: Column, k: Int, window: Int): Column =
-    GraftBridge.column(WinnowFingerprints(GraftBridge.expression(c), k, window))
+    KernelCall.static(WinnowKernel, "eval", ArrayType(LongType, containsNull = false), Seq(c -> StringType),
+      Seq(k, window))
 }

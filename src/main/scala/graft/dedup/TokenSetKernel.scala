@@ -1,11 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static kernel: reference tokenize/filter/shingle/dedup/sort in one
@@ -21,36 +18,17 @@ object TokenSetKernel {
   }
 }
 
-/** Codegen'd tokenizer expression. The equivalent chain of built-ins
-  * (regexp_extract_all -> higher-order filter with 3 regex predicates and a
-  * 527-element array scan -> shingle transform -> distinct -> sort) is NOT
-  * whole-stage-codegen'd (higher-order functions evaluate interpreted, each
-  * lambda predicate allocating per element); this single compiled kernel with
-  * a precompiled regex and a hash-set stopword probe does the same work in
-  * one pass and stays inside codegen.
+/** Compiled tokenizer ([[KernelCall.static]] over [[TokenSetKernel]]). The
+  * equivalent chain of built-ins (regexp_extract_all -> higher-order filter
+  * with 3 regex predicates and a 527-element array scan -> shingle transform
+  * -> distinct -> sort) is NOT whole-stage-codegen'd (higher-order functions
+  * evaluate interpreted, each lambda predicate allocating per element); this
+  * single compiled kernel with a precompiled regex and a hash-set stopword
+  * probe does the same work in one pass and stays inside codegen.
   */
-case class TokenSet(child: Expression, k: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"token_set expects string, got ${child.dataType}")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(s: Any): Any =
-    TokenSetKernel.eval(s.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = graft.dedup.TokenSetKernel.eval($s, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "token_set"
-}
-
 object TokenSet {
-  def apply(c: Column, k: Int): Column = GraftBridge.column(TokenSet(GraftBridge.expression(c), k))
+  def apply(c: Column, k: Int): Column =
+    KernelCall.static(TokenSetKernel, "eval", ArrayType(StringType, containsNull = false), Seq(c -> StringType), Seq(k))
 }
 
 /** Static kernel for the SIMPLE-WORD k-gram set (the text-analysis family's
@@ -91,30 +69,11 @@ object WordGramKernel {
   }
 }
 
-/** Codegen'd simple-word k-gram set — see [[WordGramKernel]]. */
-case class WordGramSet(child: Expression, k: Int, padShort: Boolean) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"word_gram_set expects string, got ${child.dataType}")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullSafeEval(s: Any): Any =
-    WordGramKernel.eval(s.asInstanceOf[UTF8String], k, padShort)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = graft.dedup.WordGramKernel.eval($s, $k, $padShort);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "word_gram_set"
-}
-
+/** Compiled simple-word k-gram set — see [[WordGramKernel]]. */
 object WordGramSet {
   def apply(c: Column, k: Int, padShort: Boolean = false): Column =
-    GraftBridge.column(WordGramSet(GraftBridge.expression(c), k, padShort))
+    KernelCall.static(WordGramKernel, "eval", ArrayType(StringType, containsNull = false), Seq(c -> StringType),
+      Seq(k, padShort))
 }
 
 /** THE simple-word scanner, shared by [[WordGramKernel]] and
@@ -242,38 +201,10 @@ object MinGramMd5Kernel {
   }
 }
 
-/** Codegen'd single-pass document fingerprint — see [[MinGramMd5Kernel]]. */
-case class MinGramMd5(child: Expression, k: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"min_gram_md5 expects string, got ${child.dataType}")
-
-  override def dataType: DataType = StringType
-
-  // null also for a NON-null wordless doc at k <= 1 (empty gram set —
-  // mirrors explode(WordGramSet) dropping the row), not just null input
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(s: Any): Any =
-    MinGramMd5Kernel.eval(s.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(
-      ctx,
-      ev,
-      s =>
-        s"""${ev.value} = graft.dedup.MinGramMd5Kernel.eval($s, $k);
-           |${ev.isNull} = ${ev.value} == null;""".stripMargin
-    )
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "min_gram_md5"
-}
-
+/** Compiled single-pass document fingerprint — see [[MinGramMd5Kernel]].
+  * NULL also for a NON-null wordless doc at k <= 1 (empty gram set —
+  * mirrors explode(WordGramSet) dropping the row), not just null input. */
 object MinGramMd5 {
   def apply(c: Column, k: Int): Column =
-    GraftBridge.column(MinGramMd5(GraftBridge.expression(c), k))
+    KernelCall.static(MinGramMd5Kernel, "eval", StringType, Seq(c -> StringType), Seq(k), nullableResult = true)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Token / shingle extraction with the reference's exact semantics, as one
-  * codegen'd expression ([[TokenSet]]) over a plain-Scala kernel (no UDFs in
+  * compiled kernel call ([[TokenSet]]) over a plain-Scala kernel (no UDFs in
   * the hot path).
   *
   * Reference semantics (the correctness contract, SURVEY.md §1.4):
@@ -32,8 +32,8 @@ object Tokenize {
     * ASCII-only `\b`) are byte-identical with or without the flag. */
   val TokenPattern = "(?U)\\b[a-zA-Z0-9][-a-zA-Z0-9]*[a-zA-Z0-9]\\b"
 
-  /** The document set: distinct sorted token/shingle strings — as a custom
-    * codegen'd expression (see [[TokenSet]]). */
+  /** The document set: distinct sorted token/shingle strings — as a
+    * compiled kernel call (see [[TokenSet]]). */
   def tokenSet(text: Column, k: Int = 1): Column = TokenSet(text, k)
 
   /** The rows of `df` whose array column `c` is non-empty: the same rows as

@@ -1,9 +1,11 @@
 package graft.ops
 
-import graft.dedup.PairGen
+import graft.dedup.{CosineFloat, KernelCall, PairGen}
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
 
 /** One tile of the corpus for block-nested-loop similarity: `n` vectors,
   * ids sorted ascending, `data` = row-major n x dim doubles, `norms` =
@@ -13,7 +15,8 @@ final case class VecBlock(bid: Long, n: Int, dim: Int, ids: Array[Long], data: A
 /** Similarity search over an embedding column (array<float>) — the
   * similarity-search leg of a training-data pipeline.
   *
-  * Three paths, one contract:
+  * Two paths, one contract (the test suite holds both to a naive per-pair
+  * Column-expression brute force):
   *  - [[cosineTopKBlocked]] / [[nearDupPairsBlocked]]: EXACT all-pairs
   *    cosine as a distributed block-nested-loop "matrix multiply" — the
   *    corpus is tiled into [[VecBlock]]s, every block PAIR is one task doing
@@ -22,8 +25,6 @@ final case class VecBlock(bid: Long, n: Int, dim: Int, ids: Array[Long], data: A
   *    no driver collect, no full-corpus broadcast, task memory bounded by
   *    2 tiles. O(n^2 d) total work — the unavoidable cost of an EXACT
   *    threshold/top-k answer — spread over B^2/2 perfectly parallel tasks.
-  *  - [[cosineTopK]] / [[nearDupPairs]]: naive per-pair Column-expression
-  *    brute force, kept as the independent test oracle for the above.
   *  - [[lshCosineTopK]]: random-hyperplane LSH (sign-bit sketch, bucketed by
   *    bit blocks) prunes candidates before the exact re-rank — the path for
   *    corpora where even tiled O(n^2) is off the table; approximate
@@ -178,42 +179,6 @@ object Similarity {
     partial.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Cosine over two float arrays via codegen-friendly higher-order fns.
-    * Summation order = array order on both sides of any comparison, so
-    * results are bit-deterministic. Zero-norm inputs yield NULL (no defined
-    * cosine; also ANSI mode would throw on the 0-divide) — consumers filter
-    * nulls, matching the blocked paths' skip. */
-  def cosine(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(
-        zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
-        lit(0.0),
-        (acc, v) => acc + v
-      )
-    val denom = sqrt(dot(a, a)) * sqrt(dot(b, b))
-    when(denom === 0.0, lit(null).cast("double")).otherwise(dot(a, b) / denom)
-  }
-
-  /** Brute-force top-k neighbors per vector: symmetric pair expansion +
-    * window rank. embeddings: (vec_id, embedding). */
-  def cosineTopK(embeddings: DataFrame, k: Int): DataFrame = {
-    val x = embeddings.select(col("vec_id").as("a"), col("embedding").as("va"))
-    val y = embeddings.select(col("vec_id").as("b"), col("embedding").as("vb"))
-    val pairs = x
-      .join(y, col("a") < col("b"))
-      .withColumn("cosine", cosine(col("va"), col("vb")))
-      // zero-norm embeddings yield NaN: drop, matching the blocked path
-      .filter(col("cosine").isNotNull)
-      .select(col("a"), col("b"), col("cosine"))
-    val sym = pairs
-      .select(col("a").as("vec_id"), col("b").as("neighbor"), col("cosine"))
-      .unionByName(pairs.select(col("b").as("vec_id"), col("a").as("neighbor"), col("cosine")))
-    val w = Window.partitionBy(col("vec_id")).orderBy(desc("cosine"), asc("neighbor"))
-    sym
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
   /** Deterministic gaussian hyperplane matrix (planes x dim) for `seed` —
     * public so oracles can reproduce the sketch value-for-value. */
   def hyperplanes(dim: Int, planes: Int, seed: Long): Array[Array[Double]] = {
@@ -265,7 +230,7 @@ object Similarity {
       // codegen'd kernel, bit-equal to the Column cosine (same index-ordered
       // double sums); zero-norm sides come back NaN instead of NULL — both
       // mean "no defined cosine" and both are dropped here
-      .withColumn("cosine", graft.dedup.CosineFloat(col("va"), col("vb")))
+      .withColumn("cosine", CosineFloat(col("va"), col("vb")))
       .filter(!isnan(col("cosine")))
       .select(col("a"), col("b"), col("cosine"))
     val sym = pairs
@@ -349,7 +314,7 @@ object Similarity {
       .select(
         col("vec_id"),
         col("neighbor"),
-        graft.dedup.CosineFloat(col("q_embedding"), col("n_embedding")).as("cosine")
+        CosineFloat(col("q_embedding"), col("n_embedding")).as("cosine")
       )
       .filter(!isnan(col("cosine")))
       .withColumn(
@@ -404,7 +369,7 @@ object Similarity {
     val removed = leftM
       .join(rightM, "cid")
       .filter(col("a") < col("b"))
-      .select(col("b").as("vec_id"), graft.dedup.CosineFloat(col("va"), col("vb")).as("cosine"))
+      .select(col("b").as("vec_id"), CosineFloat(col("va"), col("vb")).as("cosine"))
       .filter(!isnan(col("cosine")) && col("cosine") >= minCosine)
       .select("vec_id")
       .distinct()
@@ -530,28 +495,24 @@ object Similarity {
     val best = bestCentroids(emb, cs, 1)
     if (best.isEmpty) -1L else cs(best(0))._1
   }
-
-  /** Embedding near-duplicate pairs at a cosine threshold (brute force). */
-  def nearDupPairs(embeddings: DataFrame, minCosine: Double): DataFrame = {
-    val x = embeddings.select(col("vec_id").as("a"), col("embedding").as("va"))
-    val y = embeddings.select(col("vec_id").as("b"), col("embedding").as("vb"))
-    x.join(y, col("a") < col("b"))
-      .withColumn("cosine", cosine(col("va"), col("vb")))
-      .filter(col("cosine") >= minCosine)
-      .select(col("a"), col("b"), col("cosine"))
-  }
 }
 
-/** Static kernel for the sign-bit hyperplane sketch. Semantics are EXACTLY
-  * the interpreted aggregate(zip_with(cast-to-double multiply)) chain it
-  * replaced: index-ordered left-to-right double sums (so the SQL oracle's
-  * list_sum reproduces every dot product bit-for-bit), bit p set iff
-  * d >= 0 (NaN and the zip_with length-mismatch null both leave it clear).
-  * A null ELEMENT nulls every plane's zip_with sum in the twin, clearing
-  * every bit — reproduced here as an early 0L (getFloat would NPE on
-  * GenericArrayData or read the zeroed slot on UnsafeArrayData). */
-object SketchKernel {
-  def eval(emb: org.apache.spark.sql.catalyst.util.ArrayData, hp: Array[Array[Double]]): Long = {
+/** Kernel for the sign-bit hyperplane sketch over the (dim, planes, seed)
+  * gaussian matrix, regenerated deterministically per executor (the
+  * parameters, not the matrix, make up plan equality and plan strings).
+  * Semantics are EXACTLY the interpreted aggregate(zip_with(cast-to-double
+  * multiply)) chain it replaced: index-ordered left-to-right double sums
+  * (so the SQL oracle's list_sum reproduces every dot product
+  * bit-for-bit), bit p set iff d >= 0 (NaN and the zip_with
+  * length-mismatch null both leave it clear). A null ELEMENT nulls every
+  * plane's zip_with sum in the twin, clearing every bit — reproduced here
+  * as an early 0L (getFloat would NPE on GenericArrayData or read the
+  * zeroed slot on UnsafeArrayData). */
+final case class SketchKernel(dim: Int, planes: Int, seed: Long) {
+  @transient private lazy val table: Array[Array[Double]] = Similarity.hyperplanes(dim, planes, seed)
+
+  def eval(emb: ArrayData): Long = {
+    val hp = table
     var i0 = 0
     val n0 = emb.numElements()
     while (i0 < n0) { if (emb.isNullAt(i0)) return 0L; i0 += 1 }
@@ -571,47 +532,8 @@ object SketchKernel {
   }
 }
 
-/** Codegen'd hyperplane sketch over array<float> — see [[SketchKernel]].
-  * The (dim, planes, seed) parameters regenerate the gaussian matrix
-  * deterministically per executor (primitive params keep Catalyst's
-  * expression equality semantics intact). */
-case class HyperplaneSketch(
-    child: org.apache.spark.sql.catalyst.expressions.Expression,
-    dim: Int,
-    planes: Int,
-    seed: Long
-) extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-  import org.apache.spark.sql.types._
-
-  @transient private lazy val hp: Array[Array[Double]] =
-    Similarity.hyperplanes(dim, planes, seed)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"hyperplane_sketch expects array<float>, got $t")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(e: Any): Any =
-    SketchKernel.eval(e.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], hp)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val hpRef = ctx.addReferenceObj("hp", hp, "double[][]")
-    nullSafeCodeGen(ctx, ev, e => s"${ev.value} = graft.ops.SketchKernel.eval($e, $hpRef);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: org.apache.spark.sql.catalyst.expressions.Expression): HyperplaneSketch =
-    copy(child = newChild)
-
-  override def prettyName: String = "hyperplane_sketch"
-}
-
+/** Compiled hyperplane sketch over array<float> — see [[SketchKernel]]. */
 object HyperplaneSketch {
   def apply(c: Column, dim: Int, planes: Int, seed: Long): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      HyperplaneSketch(org.apache.spark.sql.GraftBridge.expression(c), dim, planes, seed))
+    KernelCall.invoke(SketchKernel(dim, planes, seed), "eval", LongType, Seq(c -> ArrayType(FloatType)))
 }

@@ -137,19 +137,16 @@ object StreamingDedup {
     * `hotTokenIds` (the max-df signature cap, [[Vocabulary.hotTokenIds]])
     * must be the SAME array used for the stream side so band hashes match. */
   def corpusIndex(encoded: DataFrame, cfg: Config, hotTokenIds: Array[Int] = Array.empty): DataFrame = {
+    // Tokenize.nonEmpty and a generator over the kernel call itself: a
+    // size filter on either column would be pushed below the projection
+    // defining it and run its kernels twice per row
     val sigIn =
       if (hotTokenIds.isEmpty) encoded
-      else
-        encoded
-          .withColumn("tokens", ArrayExceptSorted(col("tokens"), hotTokenIds))
-          .filter(size(col("tokens")) > 0)
-    val withB = sigIn
-      .withColumn("bhs", BandHashes(MinHashSig(col("tokens"), cfg), cfg))
-      .select(col("group"), col("doc_id").as("c_doc_id"), col("bhs"))
-    val rows = withB.select(
+      else Tokenize.nonEmpty(encoded.withColumn("tokens", ArrayExceptSorted(col("tokens"), hotTokenIds)), "tokens")
+    val rows = sigIn.select(
       col("group"),
-      col("c_doc_id"),
-      posexplode(col("bhs")).as(Seq("band", "band_hash"))
+      col("doc_id").as("c_doc_id"),
+      posexplode(BandHashes(MinHashSig(col("tokens"), cfg), cfg)).as(Seq("band", "band_hash"))
     )
     val w = Window.partitionBy("group", "band", "band_hash").orderBy("c_doc_id")
     val kept = rows

@@ -1,7 +1,13 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import graft.dedup._
+import graft.ops.Similarity
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Kernel-level unit + property tests: tokenizer parity (Column vs Scala vs
@@ -202,7 +208,7 @@ class KernelSpec extends SparkSpec {
       val expected =
         if (naive == 0 || a.isEmpty || b.isEmpty) 0.0
         else RefOracle.pythonRound6(naive.toDouble / (a.toSet ++ b.toSet).size)
-      Jaccard.intersectSorted(a, b) == naive && Jaccard.jaccard6(a, b) == expected
+      Twins.intersectSorted(a, b) == naive && Twins.jaccard6(a, b) == expected
     })
   }
 
@@ -219,7 +225,7 @@ class KernelSpec extends SparkSpec {
       .as[Double]
       .collect()
     rows.zip(got).foreach { case ((a, b), sim) =>
-      assert(sim == dedup.Jaccard.jaccard6(a, b), s"a=${a.mkString(",")} b=${b.mkString(",")}")
+      assert(sim == Twins.jaccard6(a, b), s"a=${a.mkString(",")} b=${b.mkString(",")}")
     }
   }
 
@@ -235,9 +241,9 @@ class KernelSpec extends SparkSpec {
       val other = (keep ++ Array.tabulate(30)(_ => rnd.nextInt(100000))).distinct
       val a = base.sorted
       val b = other.sorted
-      val trueJ = Jaccard.intersectSorted(a, b).toDouble /
-        (a.length + b.length - Jaccard.intersectSorted(a, b))
-      val est = MinHash.estimate(
+      val trueJ = Twins.intersectSorted(a, b).toDouble /
+        (a.length + b.length - Twins.intersectSorted(a, b))
+      val est = Twins.estimate(
         Twins.signatureScala(a, as, bs),
         Twins.signatureScala(b, as, bs)
       )
@@ -302,6 +308,105 @@ class KernelSpec extends SparkSpec {
       val want = tokens.filterNot(drop.toSet)
       got == want
     }, n = 30)
+  }
+
+  // --- compiled vs interpreted kernel calls ---
+
+  /** Rows of `kernel(frame)` over one generated frame, first compiled
+    * (whole-stage codegen), then interpreted (no whole-stage codegen, the
+    * NO_CODEGEN projection factory: Invoke / StaticInvoke call the kernel by
+    * reflection). The frame is an RDD scan, so no optimizer rule evaluates
+    * the kernels on a local relation at planning time. */
+  private def compiledAndInterpreted(rows: Seq[Row], schema: StructType)(
+      kernel: DataFrame => DataFrame
+  ): (Seq[Row], Seq[Row]) = {
+    def run(): (Seq[Row], SparkPlan) = {
+      val df = kernel(spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema))
+      (df.collect().toSeq, df.queryExecution.executedPlan)
+    }
+    val (compiled, plan) = run()
+    assert(planNodes(plan).exists(_.isInstanceOf[WholeStageCodegenExec]), s"not compiled:\n$plan")
+    val conf = spark.conf
+    conf.set("spark.sql.codegen.wholeStage", "false")
+    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try {
+      val (interpreted, iplan) = run()
+      assert(!planNodes(iplan).exists(_.isInstanceOf[WholeStageCodegenExec]), s"compiled:\n$iplan")
+      (compiled, interpreted)
+    } finally {
+      conf.unset("spark.sql.codegen.wholeStage")
+      conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+
+  private def orNull[T](g: Gen[T]): Gen[Any] = Gen.frequency(1 -> Gen.const(null), 9 -> g)
+  private val idSets: Gen[Any] =
+    orNull(Gen.frequency(1 -> Gen.const(Seq.empty[Int]), 8 -> Gen.listOf(Gen.choose(0, 300)).map(_.distinct.sorted)))
+  private val floatArrays: Gen[Any] = orNull(for {
+    n <- Gen.frequency(1 -> Gen.const(0), 1 -> Gen.const(7), 8 -> Gen.const(8))
+    xs <- Gen.listOfN(n, Gen.frequency(1 -> Gen.const(null), 30 -> Gen.choose(-1.0f, 1.0f).map(Float.box)))
+  } yield xs)
+  private val texts: Gen[Any] = orNull(Gen.frequency(
+    1 -> Gen.const(""),
+    8 -> Gen.listOf(Gen.oneOf(
+      "The", "parser", "naïve", "x-1", "12-34", "1-2-3", "foo_bar", "\u212a", "ÄÖ", "a", "print(x);", "return",
+      "co-operate", "99bottles", "\n", "\t", "def", "init", "self", "value", "Ünïcode"
+    )).map(_.mkString(" "))
+  ))
+  private def schemaOf(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t) })
+
+  private val cfgK = Config()
+  Seq[(String, Gen[Row], StructType, DataFrame => DataFrame)](
+    ("JaccardKernel.sim", Gen.zip(idSets, idSets).map { case (a, b) => Row(a, b) },
+      schemaOf("a" -> ArrayType(IntegerType), "b" -> ArrayType(IntegerType)),
+      _.select(JaccardSorted(col("a"), col("b")))),
+    ("JaccardKernel.count", Gen.zip(idSets, idSets).map { case (a, b) => Row(a, b) },
+      schemaOf("a" -> ArrayType(IntegerType), "b" -> ArrayType(IntegerType)),
+      _.select(IntersectCountSorted(col("a"), col("b")))),
+    ("CosineKernel", Gen.zip(floatArrays, floatArrays).map { case (a, b) => Row(a, b) },
+      schemaOf("a" -> ArrayType(FloatType), "b" -> ArrayType(FloatType)),
+      _.select(CosineFloat(col("a"), col("b")))),
+    ("TokenSetKernel", texts.map(Row(_)), schemaOf("t" -> StringType),
+      _.select(TokenSet(col("t"), 1), TokenSet(col("t"), 3))),
+    ("WordGramKernel", texts.map(Row(_)), schemaOf("t" -> StringType),
+      _.select(WordGramSet(col("t"), 1), WordGramSet(col("t"), 3), WordGramSet(col("t"), 3, padShort = true))),
+    ("MinGramMd5Kernel", texts.map(Row(_)), schemaOf("t" -> StringType),
+      _.select(MinGramMd5(col("t"), 1), MinGramMd5(col("t"), 3))),
+    ("WinnowKernel", texts.map(Row(_)), schemaOf("t" -> StringType),
+      _.select(WinnowFingerprints(col("t"), 5, 4))),
+    ("MinHashKernel", idSets.map(Row(_)), schemaOf("t" -> ArrayType(IntegerType)),
+      _.select(MinHashSig(col("t"), cfgK))),
+    ("SimHashKernel", idSets.map(Row(_)), schemaOf("t" -> ArrayType(IntegerType)),
+      _.select(SimHash64(col("t"), cfgK))),
+    ("BandHashKernel", idSets.map(Row(_)), schemaOf("t" -> ArrayType(IntegerType)),
+      // empty sets sign to the -1 sentinel: hashed like any signature
+      _.select(BandHashes(MinHashSig(col("t"), cfgK), cfgK), BandHashes(MinHashSig(col("t"), cfgK), cfgK.copy(bands = 64)))),
+    ("SortedDiffKernel", idSets.map(Row(_)), schemaOf("t" -> ArrayType(IntegerType)),
+      _.select(ArrayExceptSorted(col("t"), Array.range(0, 300, 7)), ArrayExceptSorted(col("t"), Array.empty[Int]))),
+    ("SketchKernel", floatArrays.map(Row(_)), schemaOf("e" -> ArrayType(FloatType)),
+      df => Similarity.hyperplaneSketch(df.withColumnRenamed("e", "embedding"), dim = 8, planes = 16, seed = 3L))
+  ).foreach { case (kernel, row, schema, call) =>
+    test(s"compiled and interpreted $kernel calls agree on 1000 generated rows, NULLs and empties included (property)") {
+      check(Prop.forAll(Gen.listOfN(1000, row)) { rows =>
+        val (compiled, interpreted) = compiledAndInterpreted(rows, schema)(call)
+        compiled == interpreted
+      }, n = 3)
+    }
+  }
+
+  test("kernel inputs are typed: a string fails analysis, a bigint array is cast exactly or rejected") {
+    val df = Seq(("x", Seq(1L, 2L, 3L), Seq(1L << 33), Seq(2, 3))).toDF("s", "l", "big", "i")
+    intercept[AnalysisException](df.select(JaccardSorted(col("s"), col("i"))).collect())
+    intercept[AnalysisException](df.select(IntersectCountSorted(col("i"), col("s"))).collect())
+    // never read as ints: either the analyzer rejects the bigint array, or
+    // it casts it exactly (and then an out-of-range id must fail the row)
+    Try(df.select(JaccardSorted(col("l"), col("i"))).as[Double].collect()) match {
+      case Failure(_: AnalysisException) =>
+      case Success(got) => assert(got.toSeq == Seq(Twins.jaccard6(Array(1, 2, 3), Array(2, 3))))
+      case Failure(e) => fail(e)
+    }
+    assert(Try(df.select(JaccardSorted(col("big"), col("i"))).collect()).isFailure)
   }
 
   test("simhash of near-identical sets is within small hamming distance") {

@@ -18,13 +18,13 @@ class OpsSpec extends SparkSpec {
     )
     val got = rows
       .toDF("a", "b", "want")
-      .select(Similarity.cosine(col("a"), col("b")).as("got"), col("want"))
+      .select(Twins.cosine(col("a"), col("b")).as("got"), col("want"))
       .collect()
     got.foreach(r => assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12))
   }
 
   test("LSH cosine top-k finds most of the brute-force top-1 neighbors") {
-    val exact = Similarity
+    val exact = Twins
       .cosineTopK(embeddings, 1)
       .select("vec_id", "neighbor")
       .as[(Long, Long)]
@@ -84,7 +84,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("IVF-flat top-k: deterministic, and probing more lists converges on the exact top-1") {
-    val exact = Similarity
+    val exact = Twins
       .cosineTopK(embeddings, 1)
       .select("vec_id", "neighbor")
       .as[(Long, Long)]
@@ -107,7 +107,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("IVF k-means refinement: recall-vs-exact measured, refined quantizer stays usable") {
-    val exact = Similarity
+    val exact = Twins
       .cosineTopK(embeddings, 1)
       .select("vec_id", "neighbor")
       .as[(Long, Long)]
@@ -217,7 +217,7 @@ class OpsSpec extends SparkSpec {
 
   test("blocked exact cosine paths equal the naive brute-force oracle") {
     // tiny blockSize forces many tile pairs (incl. diagonal + off-diagonal)
-    val exactTopK = Similarity
+    val exactTopK = Twins
       .cosineTopK(embeddings, 3)
       .select("vec_id", "neighbor", "rank")
       .as[(Long, Long, Int)]
@@ -231,7 +231,7 @@ class OpsSpec extends SparkSpec {
       .toSet
     assert(blockedTopK == exactTopK)
 
-    val exactPairs = Similarity
+    val exactPairs = Twins
       .nearDupPairs(embeddings, 0.30)
       .select("a", "b")
       .as[(Long, Long)]
@@ -257,11 +257,11 @@ class OpsSpec extends SparkSpec {
       )
     def ranked(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int)] =
       df.select("vec_id", "neighbor", "rank").as[(Long, Long, Int)].collect().toSet
-    val naive = ranked(Similarity.cosineTopK(withZero, 3))
+    val naive = ranked(Twins.cosineTopK(withZero, 3))
     val blocked = ranked(Similarity.cosineTopKBlocked(withZero, 3, blockSize = 7))
     assert(blocked == naive)
     assert(!naive.exists(t => t._1 == 9999L || t._2 == 9999L), "zero vector leaked into top-k")
-    val naivePairs = Similarity.nearDupPairs(withZero, 0.0).select("a", "b").as[(Long, Long)].collect().toSet
+    val naivePairs = Twins.nearDupPairs(withZero, 0.0).select("a", "b").as[(Long, Long)].collect().toSet
     val blockedPairs2 =
       Similarity.nearDupPairsBlocked(withZero, 0.0, blockSize = 7).select("a", "b").as[(Long, Long)].collect().toSet
     assert(blockedPairs2 == naivePairs)

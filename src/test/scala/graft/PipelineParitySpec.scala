@@ -1,9 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.dedup._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.{InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 /** The correctness gate (BASELINE.md): exact parity with the reference
   * semantics on the exact path, recall >= 0.99 + cluster-assignment equality
@@ -188,7 +194,7 @@ class PipelineParitySpec extends SparkSpec {
       val plan = docs.queryExecution.executedPlan
       val shuffles = shufflesCarrying(docs, "tokens")
       assert(shuffles.size == 1, s"${shuffles.size} token shuffles:\n$plan")
-      assert(exprCount(plan) { case _: TokenSet => } == 1, s"token_set( per row in:\n$plan")
+      assert(kernelCalls(plan, TokenSetKernel.getClass) == 1, s"tokenizer calls per row in:\n$plan")
     } finally reg.release()
   }
 
@@ -385,5 +391,79 @@ class PipelineParitySpec extends SparkSpec {
     assert(m.columns.toSet == Set("partition", "rows", "stage", "wall_ms"))
     assert(m.count() >= 4) // one row per lang partition
     assert(Checkpoints.exists(spark, s"$work/components"))
+  }
+
+  test("an empty stage reads back: no pair at the threshold completes, resumes, and the next run passes") {
+    // 7 rows -> 5 docs in one group (two rows have no token); the docs
+    // share words, but no two reach 0.7, so the partitioned pairs stage
+    // commits no data file
+    val pool = Seq("alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf", "hotel", "india", "juliet",
+      "kilo", "lima", "mike", "november", "oscar", "papa", "quebec", "romeo", "sierra", "tango")
+    val files = (0 until 5).map(i =>
+      CodeFile("r", s"f$i.py", "c1", "python", (0 until 10).map(j => pool((4 * i + j) % 20)).mkString(" "))
+    ) ++ Seq(CodeFile("r", "g1.py", "c1", "python", "1 2 3"), CodeFile("r", "g2.py", "c1", "python", "a ; b"))
+    val work = tmpDir("graft-empty")
+    val topCfg = cfg.copy(topN = Some(3))
+    def runOnce(): Pipeline.Tables = Pipeline.run(spark, spark.createDataFrame(files), topCfg, work)
+    val t = runOnce()
+    assert(t.docs.count() == 5)
+    assert(t.pairs.isEmpty && t.topn.get.isEmpty)
+    assert(t.pairs.columns.toSet == Set("group", "a", "b", "sim"))
+    assert(Checkpoints.stageRowCount(spark, s"$work/pairs") == 0L)
+    val resumed = runOnce()
+    assert(resumed.docs.count() == 5 && resumed.pairs.isEmpty && resumed.topn.get.isEmpty)
+    assert(resumed.pairs.schema == t.pairs.schema)
+    // nothing left pending fails the next run in this JVM
+    val next = Pipeline.run(spark, spark.createDataFrame(Twins.corpusLocal(100)), cfg, tmpDir("graft-after-empty"))
+    assert(!next.pairs.isEmpty)
+  }
+
+  test("candidates stage: each signature row calls the band-hash kernel once (both pair generators)") {
+    val work = tmpDir("graft-bands")
+    val sigs = Pipeline.run(spark, spark.createDataFrame(Twins.corpusLocal(200)), cfg, work).signatures
+    for (c <- Seq(cfg, cfg.copy(bands = 64))) {
+      val cands = Pipeline.candidatesFor(sigs, c)
+      assert(!cands.isEmpty)
+      val plan = cands.queryExecution.executedPlan
+      assert(kernelCalls(plan, classOf[HashKernels.BandHashKernel]) == 1, s"band-hash calls per row at ${c.bands} bands in:\n$plan")
+    }
+  }
+
+  test("the docs, signatures and verify stages call their kernels inside whole-stage codegen") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val kernels = Seq[Class[_]](
+      TokenSetKernel.getClass, // docs
+      classOf[HashKernels.SortedDiffKernel], classOf[HashKernels.MinHashKernel], classOf[HashKernels.SimHashKernel],
+      JaccardKernel.getClass // pairs (verify)
+    )
+    // a parquet input: over a local relation the optimizer would run the
+    // tokenizer at planning time
+    val dir = tmpDir("graft-wscg")
+    spark.createDataFrame(Twins.corpusLocal(200)).write.parquet(s"$dir/input")
+    spark.listenerManager.register(listener)
+    try {
+      Pipeline.run(spark, spark.read.parquet(s"$dir/input"), cfg, s"$dir/work")
+      // listener events arrive asynchronously
+      eventually(timeout(Span(60, Seconds))) {
+        kernels.foreach(k => assert(plans.asScala.exists(kernelCalls(_, k) > 0), s"no plan calls $k"))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    for (plan <- plans.asScala; k <- kernels) {
+      // the operators compiled into one generated class: a codegen stage's
+      // subtree down to its input adapters
+      val compiled = java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+      def stage(p: SparkPlan): Unit = p match {
+        case _: InputAdapter =>
+        case n => compiled.add(n); n.children.foreach(stage)
+      }
+      planNodes(plan).foreach { case w: WholeStageCodegenExec => stage(w.child); case _ => }
+      planNodes(plan).filter(n => n.expressions.exists(_.exists(kernelCall(k).isDefinedAt))).foreach { n =>
+        assert(compiled.contains(n), s"$k called outside whole-stage codegen by ${n.nodeName} in:\n$plan")
+      }
+    }
   }
 }

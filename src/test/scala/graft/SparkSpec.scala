@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.types.ObjectType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -60,4 +62,15 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * how often the plan evaluates such an expression per row. */
   def exprCount(plan: SparkPlan)(f: PartialFunction[Expression, Unit]): Int =
     planNodes(plan).map(_.expressions.map(_.collect(f).size).sum).sum
+
+  /** How many calls of `kernel` the operators of `plan` hold: a static
+    * kernel by its object's class (`TokenSetKernel.getClass`), an instance
+    * kernel by its case class (`classOf[HashKernels.BandHashKernel]`). */
+  def kernelCalls(plan: SparkPlan, kernel: Class[_]): Int =
+    exprCount(plan)(kernelCall(kernel))
+
+  def kernelCall(kernel: Class[_]): PartialFunction[Expression, Unit] = {
+    case s: StaticInvoke if s.staticObject == kernel =>
+    case Invoke(Literal(_, ObjectType(c)), _, _, _, _, _, _, _) if c == kernel =>
+  }
 }

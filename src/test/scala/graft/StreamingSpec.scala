@@ -217,7 +217,7 @@ class StreamingSpec extends SparkSpec {
     }
     assert(pairSet(out).nonEmpty)
     val p = plan.get
-    assert(exprCount(p) { case _: TokenSet => } == 1, s"token_set( per row in:\n$p")
+    assert(kernelCalls(p, TokenSetKernel.getClass) == 1, s"tokenizer calls per row in:\n$p")
     // the encode UDF and the probe UDF
     assert(exprCount(p) { case _: ScalaUDF => } == 2, s"UDF evaluations per row in:\n$p")
   }

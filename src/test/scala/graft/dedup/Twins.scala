@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.ops.Similarity
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Second implementations of engine kernels, kept for the kernel-vs-twin
@@ -10,6 +11,33 @@ import org.apache.spark.sql.functions._
 object Twins {
 
   private val P: Long = (1L << 31) - 1 // Mersenne prime 2^31-1
+
+  /** |A n B| of two sorted int arrays (the twin of `JaccardKernel.count`). */
+  def intersectSorted(a: Array[Int], b: Array[Int]): Int = {
+    var i = 0; var j = 0; var n = 0
+    while (i < a.length && j < b.length) {
+      val x = a(i); val y = b(j)
+      if (x == y) { n += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    n
+  }
+
+  /** Reference-rounded exact Jaccard (the twin of `JaccardKernel.sim`). */
+  def jaccard6(a: Array[Int], b: Array[Int]): Double = {
+    val inter = intersectSorted(a, b)
+    if (inter == 0) 0.0
+    else Jaccard.round6(inter.toDouble / (a.length + b.length - inter).toDouble)
+  }
+
+  /** MinHash estimate of Jaccard from two signatures (fraction of equal
+    * components) — the statistical promise the signatures are tested on. */
+  def estimate(a: Array[Long], b: Array[Long]): Double = {
+    var eq = 0; var i = 0
+    while (i < a.length) { if (a(i) == b(i)) eq += 1; i += 1 }
+    eq.toDouble / a.length
+  }
 
   /** MinHash signature: h_i(x) = (a_i * x + b_i) mod P, min-folded over the
     * token array (the twin of `MinHashSig`). */
@@ -94,6 +122,54 @@ object Twins {
       }
       .reduce(_.bitwiseOR(_))
     embeddings.withColumn("sketch", sketch)
+  }
+
+  /** Cosine over two float arrays via higher-order built-ins (the twin of
+    * `CosineKernel`). Summation order = array order on both sides of any
+    * comparison, so results are bit-deterministic. Zero-norm inputs yield
+    * NULL (no defined cosine; also ANSI mode would throw on the 0-divide) —
+    * consumers filter nulls, matching the blocked paths' skip. */
+  def cosine(a: Column, b: Column): Column = {
+    def dot(x: Column, y: Column): Column =
+      aggregate(
+        zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
+        lit(0.0),
+        (acc, v) => acc + v
+      )
+    val denom = sqrt(dot(a, a)) * sqrt(dot(b, b))
+    when(denom === 0.0, lit(null).cast("double")).otherwise(dot(a, b) / denom)
+  }
+
+  /** Brute-force top-k neighbors per vector (the twin of
+    * `Similarity.cosineTopKBlocked`): symmetric pair expansion + window
+    * rank. embeddings: (vec_id, embedding). */
+  def cosineTopK(embeddings: DataFrame, k: Int): DataFrame = {
+    val x = embeddings.select(col("vec_id").as("a"), col("embedding").as("va"))
+    val y = embeddings.select(col("vec_id").as("b"), col("embedding").as("vb"))
+    val pairs = x
+      .join(y, col("a") < col("b"))
+      .withColumn("cosine", cosine(col("va"), col("vb")))
+      // zero-norm embeddings yield NULL: drop, matching the blocked path
+      .filter(col("cosine").isNotNull)
+      .select(col("a"), col("b"), col("cosine"))
+    val sym = pairs
+      .select(col("a").as("vec_id"), col("b").as("neighbor"), col("cosine"))
+      .unionByName(pairs.select(col("b").as("vec_id"), col("a").as("neighbor"), col("cosine")))
+    val w = Window.partitionBy(col("vec_id")).orderBy(desc("cosine"), asc("neighbor"))
+    sym
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+  }
+
+  /** Embedding near-duplicate pairs at a cosine threshold, brute force (the
+    * twin of `Similarity.nearDupPairsBlocked`). */
+  def nearDupPairs(embeddings: DataFrame, minCosine: Double): DataFrame = {
+    val x = embeddings.select(col("vec_id").as("a"), col("embedding").as("va"))
+    val y = embeddings.select(col("vec_id").as("b"), col("embedding").as("vb"))
+    x.join(y, col("a") < col("b"))
+      .withColumn("cosine", cosine(col("va"), col("vb")))
+      .filter(col("cosine") >= minCosine)
+      .select(col("a"), col("b"), col("cosine"))
   }
 
   /** The first `n` files of [[CorpusGen]], driver-side, for tiny corpora. */

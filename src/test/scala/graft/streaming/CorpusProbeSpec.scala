@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.dedup.Jaccard
+import graft.dedup.Twins
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,7 +33,7 @@ class CorpusProbeSpec extends AnyFunSuite {
         .sorted
         .take(cap)
     }.distinct.sorted
-    hit.map(id => id -> Jaccard.jaccard6(toks.toArray, reps.find(_._2 == id).get._4.toArray)).filter(_._2 >= t)
+    hit.map(id => id -> Twins.jaccard6(toks.toArray, reps.find(_._2 == id).get._4.toArray)).filter(_._2 >= t)
   }
 
   test("probe: each indexed rep once, verified, equal to the naive oracle (caps, NULL group, misses)") {
