@@ -199,11 +199,14 @@ private[graft] object SharedChains {
   val encodedChain = memo.declare("encoded") { (s, dir) =>
     val cfg = oracleLshCfg
     val base = transientReg.persist(
-      spread(t(s, dir, "documents")).select(
-        col("doc_id"),
-        col("lang").as("group"),
-        Tokenize.tokenSet(col("text"), cfg.shingleK).as("tokens")
-      ).filter(size(col("tokens")) > 0)
+      Tokenize.nonEmpty(
+        spread(t(s, dir, "documents")).select(
+          col("doc_id"),
+          col("lang").as("group"),
+          Tokenize.tokenSet(col("text"), cfg.shingleK).as("tokens")
+        ),
+        "tokens"
+      )
     )
     // vocabRows comes free from the dense-id stamp's per-partition count
     // pass — no separate count job for the encode-plan choice

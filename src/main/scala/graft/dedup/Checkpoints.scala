@@ -3,12 +3,13 @@ package graft.dedup
 import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
-import scala.util.Try
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** Per-stage checkpointing with metrics + lineage — the engine's resumability
   * subsystem (BASELINE.json north_rule: "resumable from checkpoint with
@@ -35,42 +36,24 @@ object Checkpoints {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  // Sidecar (metrics + lineage) writes run OFF the critical path: the next
-  // stage's jobs start while the sidecar count job runs concurrently (Spark
-  // schedules jobs from multiple threads). Pipeline.run awaits all pending
-  // sidecars before returning, so readers of a returned Tables always see
-  // complete sidecars. Without this, 7 stages x (count job + tiny write)
-  // serialize into the run's fixed cost — the kind of constant that caps
-  // scaling efficiency.
-  private val pendingSidecars =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.Future[_]]()
-  private lazy val sidecarPool = java.util.concurrent.Executors.newFixedThreadPool(
-    2,
-    (r: Runnable) => { val t = new Thread(r, "graft-sidecar"); t.setDaemon(true); t }
-  )
-
-  /** Block until `path`'s sidecar is written (no-op if none pending). */
-  def awaitSidecar(path: String): Unit = {
-    val f = pendingSidecars.remove(path)
-    if (f != null) f.get()
-  }
-
-  /** Block until every pending sidecar is written. */
-  def awaitAllSidecars(): Unit = {
-    val it = pendingSidecars.keys()
-    while (it.hasMoreElements) awaitSidecar(it.nextElement())
-  }
-
-  /** Block until the pending sidecars of the stages under `workDir` finish,
-    * dropping their failures: a failed run drains what it started, so no
-    * failed future is left to fail a later run in this JVM. */
-  def drainSidecars(workDir: String): Unit =
-    pendingSidecars.keySet.asScala.filter(_.startsWith(workDir + "/")).foreach(p => Try(awaitSidecar(p)))
+  /** A no-op: [[stage]] writes a stage's sidecars before it returns, so
+    * there is never a sidecar to wait for. Kept because the benchmark's
+    * checkpoint layer (perfbench) calls it. */
+  def awaitAllSidecars(): Unit = ()
 
   /** Run `build` unless `path` already holds a completed stage BUILT UNDER
     * THE SAME CONFIG; always return the checkpointed table. Writes row-count
     * metrics per partition column value (per-partition lineage) into
     * `<path>_metrics`.
+    *
+    * The counts come from the write that commits the table ([[countedWrite]]),
+    * so the stage is read once, by its own write: no count job and no
+    * schema-inference job. `_lineage.json` records the read-back schema
+    * (partition columns last); the returned table and a resumed one are read
+    * with it, so a partition value reads back as the type it was written
+    * with ("2015" stays a string) and a partitioned stage with no rows (no
+    * data file, so no footer to infer from) reads back too. Only manifests
+    * written before the schema key existed fall back to inference.
     *
     * `configSig`: the canonical config string the stage's content depends on
     * (one entry of [[Config.stageFingerprints]]). Non-empty sigs are stamped
@@ -92,11 +75,6 @@ object Checkpoints {
       inputs: Seq[String] = Nil,
       configSig: String = ""
   )(build: => DataFrame): DataFrame = {
-    // drain any still-in-flight async sidecar for this path FIRST: a second
-    // stage() call over the same dir in one JVM would otherwise race the
-    // pending write (mis-reading a half-written manifest as pre-guard, or
-    // heal-over a half-written _metrics dir)
-    awaitSidecar(path)
     val complete = exists(spark, path)
     val staleCfg = if (complete) storedSigMismatch(spark, path, configSig) else None
     staleCfg.foreach { stored =>
@@ -106,7 +84,7 @@ object Checkpoints {
           "Downstream stages carry cumulative sigs, so they rebuild too."
       )
     }
-    val written: Option[StructType] = if (!complete || staleCfg.nonEmpty) {
+    val schema: Option[StructType] = if (!complete || staleCfg.nonEmpty) {
       val t0 = System.nanoTime()
       val df = build
       // zstd (not snappy), DEFAULT dictionary budget: token-array columns
@@ -115,22 +93,18 @@ object Checkpoints {
       // cap instead was measured SLOWER end-to-end (64MB write-side
       // dictionaries cost more than PLAIN+zstd saves — official-methodology
       // legs regressed ~8-12%), so the fallback is the intended plan.
-      val writer = df.write.mode("overwrite").option("compression", "zstd")
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-        .parquet(path)
+      val counts = countedWrite(df, partitionCols) { observed =>
+        val writer = observed.write.mode("overwrite").option("compression", "zstd")
+        (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer).parquet(path)
+      }
       val wallMs = (System.nanoTime() - t0) / 1000000
-      // the read-back column order: partition columns last
       val schema = StructType(
         df.schema.filterNot(f => partitionCols.contains(f.name)) ++ partitionCols.map(df.schema(_))
       )
-      pendingSidecars.put(
-        path,
-        sidecarPool.submit(new Runnable {
-          def run(): Unit = writeSidecars(spark, name, path, partitionCols, inputs, wallMs, configSig, Some(schema))
-        })
-      )
+      writeSidecars(spark, name, path, inputs, wallMs, configSig, Some(schema), counts)
       Some(schema)
     } else {
+      val stored = storedSchema(spark, path)
       // heal a run killed between data commit and sidecar write: the stage
       // itself is complete (atomic _SUCCESS), only the sidecar is missing.
       // (Known double-fault gap: the healed manifest stamps the CURRENT
@@ -139,22 +113,56 @@ object Checkpoints {
       // commit-to-sidecar gap, and the interleaving needs a config change
       // across the crash; a paranoid operator deletes the last stage dir
       // after any crashed run that also changed config.)
-      if (!exists(spark, path + "_metrics"))
-        writeSidecars(spark, name, path, partitionCols, inputs, wallMs = 0L, configSig, storedSchema(spark, path))
-      None
+      if (!exists(spark, path + "_metrics")) {
+        val counts = countedWrite(read(spark, path, stored), partitionCols)(
+          _.write.format("noop").mode("overwrite").save()
+        )
+        writeSidecars(spark, name, path, inputs, wallMs = 0L, configSig, stored, counts)
+      }
+      stored
     }
-    read(spark, path, written.orElse(storedSchema(spark, path)))
+    read(spark, path, schema)
   }
 
-  /** The committed table at `path`. A partitioned stage with no rows holds
-    * no data file, so Parquet has no footer to infer a schema from: such a
-    * stage reads back with the schema it was written with. */
-  private def read(spark: SparkSession, path: String, schema: => Option[StructType]): DataFrame =
-    try spark.read.parquet(path)
-    catch {
-      case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-        spark.read.schema(schema.getOrElse(throw e)).parquet(path)
-    }
+  /** The committed table at `path`, read with its recorded schema when
+    * there is one (no inference job). */
+  private def read(spark: SparkSession, path: String, schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
+
+  /** Runs `write` over `df` and returns the rows it wrote, as `_metrics`
+    * (partition label, rows) entries: one per partition value tuple, or one
+    * `__table__` entry for an unpartitioned stage.
+    *
+    * The counts are observed on the write itself: the observation sits
+    * directly under the writer (no exchange between them), so it runs in
+    * the write job's result stage, whose accumulator updates Spark merges
+    * once per partition — a retried task cannot count twice. The label is
+    * the one the directory name reads back as: the writer stores `""` and
+    * NULL alike as the default partition, which reads back as NULL, and
+    * `concat_ws` leaves a NULL column out of the label. */
+  private def countedWrite(df: DataFrame, partitionCols: Seq[String])(write: DataFrame => Unit): Seq[(String, Long)] = {
+    val rows =
+      if (partitionCols.isEmpty) map(lit("__table__"), count(lit(1)))
+      else
+        PartitionRows.column(
+          concat_ws("/", partitionCols.map(c => concat(lit(c + "="), nullif(col(c).cast("string"), lit("")))): _*)
+        )
+    val obs = new Observation()
+    write(df.observe(obs, rows.as("rows")))
+    obs.get("rows").asInstanceOf[scala.collection.Map[String, Long]].toSeq
+  }
+
+  /** Rows per partition label. */
+  private object PartitionRows extends Aggregator[String, Map[String, Long], Map[String, Long]] {
+    def zero: Map[String, Long] = Map.empty
+    def reduce(b: Map[String, Long], label: String): Map[String, Long] = b.updated(label, b.getOrElse(label, 0L) + 1L)
+    def merge(x: Map[String, Long], y: Map[String, Long]): Map[String, Long] =
+      y.foldLeft(x) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
+    def finish(b: Map[String, Long]): Map[String, Long] = b
+    def bufferEncoder: Encoder[Map[String, Long]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Map[String, Long]] = ExpressionEncoder()
+    val column = udaf(this, Encoders.STRING)
+  }
 
   private def lineageText(spark: SparkSession, path: String): Option[String] = {
     val lp = new Path(path + "_lineage.json")
@@ -204,51 +212,28 @@ object Checkpoints {
     }
   }
 
-  /** Metrics (per-partition rows) + lineage manifest for a committed stage.
-    *
-    * Row counts come from a DISTRIBUTED count(*) over the written table: the
-    * scan reads zero data columns (partition values come from directory
-    * names, counts from parquet footers), so it is metadata-cheap AND
-    * parallel across files — unlike a driver-side footer walk, whose
-    * O(#files) serial time is a fixed cost that breaks scaling efficiency
-    * and would take hours at 10^9 files.
-    */
+  /** The `_metrics` table of a stage. */
+  private val MetricsSchema = StructType(Seq(
+    StructField("partition", StringType, nullable = false),
+    StructField("rows", LongType, nullable = false),
+    StructField("stage", StringType, nullable = false),
+    StructField("wall_ms", LongType, nullable = false)
+  ))
+
+  /** Lineage manifest + metrics for a committed stage, from the counts its
+    * write observed. The manifest goes first: `_metrics`' `_SUCCESS` is what
+    * marks the sidecars complete, so a run killed between the two heals
+    * both on resume. */
   private def writeSidecars(
       spark: SparkSession,
       name: String,
       path: String,
-      partitionCols: Seq[String],
       inputs: Seq[String],
       wallMs: Long,
       configSig: String,
-      schema: Option[StructType]
+      schema: Option[StructType],
+      counts: Seq[(String, Long)]
   ): Unit = {
-    val written = read(spark, path, schema)
-    val counts =
-      if (partitionCols.nonEmpty)
-        written
-          .groupBy(partitionCols.map(col): _*)
-          .agg(count(lit(1)).as("rows"))
-          .withColumn(
-            "partition",
-            concat_ws(
-              "/",
-              partitionCols.map(c => concat(lit(c + "="), col(c).cast("string"))): _*
-            )
-          )
-      else written.agg(count(lit(1)).as("rows")).withColumn("partition", lit("__table__"))
-    counts
-      .select(
-        col("partition"),
-        col("rows"),
-        lit(name).as("stage"),
-        lit(wallMs).as("wall_ms")
-      )
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(path + "_metrics")
-
     val cfgFields =
       if (configSig.isEmpty) ""
       else s""","config":${JsonText.quote(configSig)},"config_sha":"${sha256Hex(configSig)}""""
@@ -260,19 +245,20 @@ object Checkpoints {
     val out = fs.create(lp, true)
     try out.write(lineage.getBytes(StandardCharsets.UTF_8))
     finally out.close()
+
+    spark
+      .createDataFrame(counts.map { case (p, n) => Row(p, n, name, wallMs) }.asJava, MetricsSchema)
+      .coalesce(1)
+      .write
+      .mode("overwrite")
+      .parquet(path + "_metrics")
   }
 
   /** Total row count of a completed stage from its `_metrics` sidecar —
-    * O(1) driver work (the sidecar is one tiny file written at stage-commit
-    * time), replacing per-use footer walks. */
-  def stageRowCount(spark: SparkSession, path: String): Long = {
-    awaitSidecar(path)
-    spark.read
-      .parquet(path + "_metrics")
-      .agg(coalesce(sum(col("rows")), lit(0L)))
-      .head()
-      .getLong(0)
-  }
+    * one small scan job (the sidecar is one tiny file, one row per
+    * partition, read with its fixed schema), summed on the driver. */
+  def stageRowCount(spark: SparkSession, path: String): Long =
+    read(spark, path + "_metrics", Some(MetricsSchema)).select("rows").collect().map(_.getLong(0)).sum
 }
 
 /** Minimal JSON string quoting for the hand-authored manifests (lineage,

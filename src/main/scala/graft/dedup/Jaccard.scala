@@ -36,15 +36,16 @@ object Jaccard {
     */
   def verify(candidates: DataFrame, encoded: DataFrame, minSim: Double): DataFrame = {
     // single predicate: `sim >= max(minSim, minPositive)` subsumes the
-    // reference's `sim > 0` (code/Stage05ComputeSimilarity.py:132) — Catalyst
-    // substitutes the kernel into every predicate conjunct it pushes into the
-    // join, so one conjunct = one fewer kernel evaluation per candidate row
+    // reference's `sim > 0` (code/Stage05ComputeSimilarity.py:132)
     val floor = math.max(minSim, java.lang.Double.MIN_VALUE)
     withTokens(candidates, encoded)
-      // compiled kernel call (no UDF boxing) — see JaccardKernel
-      .withColumn("sim", JaccardSorted(col("tokens_a"), col("tokens_b")))
+      // compiled kernel call (no UDF boxing) — see JaccardKernel. A
+      // generator, not a projection: Catalyst would push the filter into the
+      // join condition as `sim(tokens_a, tokens_b) >= floor` and run the
+      // kernel there and again in the projection above; it never folds a
+      // generator's input into a pushed predicate
+      .select(col("group"), col("a"), col("b"), explode(array(JaccardSorted(col("tokens_a"), col("tokens_b")))).as("sim"))
       .filter(col("sim") >= floor)
-      .select(col("group"), col("a"), col("b"), col("sim"))
   }
 
   /** candidates (a, b) joined to (group, tokens_a) and tokens_b. The first

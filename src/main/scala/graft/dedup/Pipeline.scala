@@ -103,12 +103,6 @@ object Pipeline {
       .nonEmpty(withId, "tokens")
       .withColumn("group", groupKey(cfg))
       .select("doc_id", "repo", "path", "commit", "group", "content_sha", "n_bytes", "tokens")
-      // cluster rows by key within each partition before the checkpoint
-      // write: same-repo files share token identifiers, and adjacency is
-      // what lets parquet dictionary/RLE encoding bite — the unsorted join
-      // output wrote a 60% LARGER docs table, taxing every downstream scan
-      // (a narrow in-partition sort, no shuffle)
-      .sortWithinPartitions("repo", "path", "commit")
   }
 
   /** (doc_id, group, rep_id): byte-identical files collapse to the min-doc_id
@@ -194,17 +188,7 @@ object Pipeline {
       .select(col("doc_id"), col("group"), col("content"))
   }
 
-  def run(spark: SparkSession, input: DataFrame, cfg: Config, workDir: String): Tables =
-    try runStages(spark, input, cfg, workDir)
-    catch {
-      case e: Throwable =>
-        // a stage failed: its predecessors' sidecar writes may still be in
-        // flight, and a failed one must not surface in a later run
-        Checkpoints.drainSidecars(workDir)
-        throw e
-    }
-
-  private def runStages(spark: SparkSession, input: DataFrame, cfg: Config, workDir: String): Tables = {
+  def run(spark: SparkSession, input: DataFrame, cfg: Config, workDir: String): Tables = {
     def p(s: String) = s"$workDir/$s"
     // run-scoped cache ownership: this run releases exactly the caches it
     // created (never another concurrent run's in-flight id-assignment
@@ -246,11 +230,10 @@ object Pipeline {
       // every boilerplate-sharing doc pair has Jaccard ~0.2-0.3 and LSH
       // banding floods verification with O(n^2) junk candidates. Verification
       // still runs on the FULL sets, so emitted sims keep reference semantics.
-      // Corpus size for the max-df threshold from the DOCS stage sidecar:
-      // its count job overlapped the vocab+encoded builds, so this await is
-      // free (encoded's sidecar would still be in flight). Using the
-      // pre-prune doc count makes the boilerplate cap marginally looser —
-      // recall is unaffected (cap applies to signatures only; parity suite).
+      // Corpus size for the max-df threshold from the DOCS stage's
+      // `_metrics`, counted by its own write. Using the pre-prune doc count
+      // makes the boilerplate cap marginally looser — recall is unaffected
+      // (cap applies to signatures only; parity suite).
       val nDocs = Checkpoints.stageRowCount(spark, p("docs"))
       val hot = Vocabulary.hotTokenIds(vocab, nDocs, cfg)
       val reps0 = classMap.filter(col("doc_id") === col("rep_id")).select("doc_id")
@@ -302,9 +285,9 @@ object Pipeline {
     reg.release()
 
     val components = Checkpoints.stage(spark, "components", p("components"), Nil, Seq(p("pairs")), sig("components"))(
-      // the pairs stage's sidecar row count is a proven edge bound: when it
-      // fits the driver-local clamp, Components.run skips its path-decision
-      // count job and collects the edge set directly
+      // the pairs stage's `_metrics` row count is a proven edge bound: when
+      // it fits the driver-local clamp, Components.run skips its
+      // path-decision count job and collects the edge set directly
       Components.assignAll(encoded, pairs, knownEdgeBound = Checkpoints.stageRowCount(spark, p("pairs")))
     )
 
@@ -328,9 +311,6 @@ object Pipeline {
       )
     }
 
-    // join the off-critical-path sidecar writes: callers of run() may read
-    // any stage's _metrics / _lineage.json immediately
-    Checkpoints.awaitAllSidecars()
     reg.release()
 
     Tables(docs, vocab, encoded, signatures, candidates, pairs, components, substring, topn)

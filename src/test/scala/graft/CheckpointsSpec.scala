@@ -1,13 +1,48 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import graft.dedup.{Checkpoints, Config}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 /** The checkpoint subsystem: CSV sink + header scan (S1/S5), sidecar heal,
-  * the config guard, lineage JSON and the composite partitioned sink (S7).
+  * the config guard, lineage JSON, the composite partitioned sink (S7), and
+  * the counts each stage's write observes for its `_metrics`.
   */
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
+
+  private def metrics(path: String): Map[String, Long] =
+    spark.read.parquet(s"${path}_metrics").select("partition", "rows").as[(String, Long)].collect().toMap
+
+  /** The Spark jobs `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup("checkpoints-barrier", "barrier")
+      spark.range(1).count()
+      // listener events arrive in order: once the barrier's job is seen,
+      // every job submitted before it has been seen too
+      eventually(timeout(Span(30, Seconds))) { assert(groups.contains("checkpoints-barrier")) }
+      groups.asScala.count(_ != "checkpoints-barrier")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
+  }
 
   test("S1/S5: CSV sink + header scan round-trips the reference input shape") {
     val dir = tmpDir("graft-csv")
@@ -28,7 +63,6 @@ class CheckpointsSpec extends SparkSpec {
     val work = tmpDir("graft-heal")
     val rows = (1L to 20L).map(i => (i, s"v$i")).toDF("k", "v")
     Checkpoints.stage(spark, "heal", s"$work/heal")(rows)
-    Checkpoints.awaitAllSidecars()
     // simulate a run killed between data commit and sidecar write
     def rmr(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rmr)); f.delete()
@@ -69,7 +103,6 @@ class CheckpointsSpec extends SparkSpec {
     assert(Config(collapseVersions = true).stageFingerprints("docs") ==
       "groupCols=lang;shingleK=1;collapseVersions=commit")
     Checkpoints.stage(spark, "g", s"$work/g", Nil, Nil, sigA)(rows)
-    Checkpoints.awaitAllSidecars()
     // same sig: resumes without rebuilding
     val resumed = Checkpoints.stage(spark, "g", s"$work/g", Nil, Nil, sigA)(
       sys.error("build must not re-run"): org.apache.spark.sql.DataFrame
@@ -77,7 +110,6 @@ class CheckpointsSpec extends SparkSpec {
     assert(resumed.count() == 10)
     // different sig: rebuilds (returns the NEW build, not the stale table)
     val rebuilt = Checkpoints.stage(spark, "g", s"$work/g", Nil, Nil, sigB)(rows2)
-    Checkpoints.awaitAllSidecars()
     assert(rebuilt.count() == 25)
     // ... and stamps the new sig: resuming at sigB now skips the build
     val kept = Checkpoints.stage(spark, "g", s"$work/g", Nil, Nil, sigB)(
@@ -98,7 +130,6 @@ class CheckpointsSpec extends SparkSpec {
     val work = tmpDir("graft-lineage-\"q\"")
     val rows = (1L to 5L).map(i => (i, s"v$i")).toDF("k", "v")
     Checkpoints.stage(spark, "lin", s"$work/lin", inputs = Seq(s"$work/in\"put"))(rows)
-    Checkpoints.awaitAllSidecars()
     val parsed = spark.read.json(s"$work/lin_lineage.json").collect()
     assert(parsed.length == 1)
     val r = parsed.head
@@ -114,7 +145,6 @@ class CheckpointsSpec extends SparkSpec {
       (3L, "2015", "B", "z"), (4L, "2016", "A", "w"), (5L, "2016", "B", "v")
     ).toDF("id", "year", "typ", "payload")
     val back = Checkpoints.stage(spark, "s7", s"$work/s7", Seq("year", "typ"))(rows)
-    Checkpoints.awaitAllSidecars()
     assert(back.count() == 5)
     // hive-style two-level partition dirs exist
     val dirs = new java.io.File(s"$work/s7").listFiles().filter(_.isDirectory).map(_.getName).toSet
@@ -130,5 +160,46 @@ class CheckpointsSpec extends SparkSpec {
       "year=2015/typ=A" -> 2L, "year=2015/typ=B" -> 1L,
       "year=2016/typ=A" -> 1L, "year=2016/typ=B" -> 1L
     ))
+  }
+
+  test("a fresh partitioned stage and its row count run at most 3 jobs") {
+    val work = tmpDir("graft-jobs")
+    val rows = (1L to 200L).map(i => (i, s"g${i % 3}")).toDF("k", "group")
+    val jobs = jobsOf {
+      val back = Checkpoints.stage(spark, "jobs", s"$work/jobs", Seq("group"))(rows)
+      assert(back.columns.toSeq == Seq("k", "group"))
+      assert(Checkpoints.stageRowCount(spark, s"$work/jobs") == 200L)
+    }
+    // the observed write, the `_metrics` write, the `_metrics` sum
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(metrics(s"$work/jobs") == Map("group=g0" -> 66L, "group=g1" -> 67L, "group=g2" -> 67L))
+  }
+
+  test("_metrics labels NULL and empty partition values as the directory they share") {
+    val work = tmpDir("graft-labels")
+    val rows = Seq((1L, null: String), (2L, ""), (3L, "a")).toDF("k", "group")
+    Checkpoints.stage(spark, "labels", s"$work/labels", Seq("group"))(rows)
+    assert(metrics(s"$work/labels") == Map("" -> 2L, "group=a" -> 1L))
+    // healed from the stored table: the same labels
+    new java.io.File(s"$work/labels_metrics/_SUCCESS").delete()
+    Checkpoints.stage(spark, "labels", s"$work/labels", Seq("group"))(sys.error("no rebuild"))
+    assert(metrics(s"$work/labels") == Map("" -> 2L, "group=a" -> 1L))
+    // an empty partitioned stage has no partition rows; an unpartitioned one counts 0
+    Checkpoints.stage(spark, "none", s"$work/none", Seq("group"))(rows.filter(lit(false)))
+    assert(metrics(s"$work/none").isEmpty)
+    Checkpoints.stage(spark, "zero", s"$work/zero")(rows.filter(lit(false)))
+    assert(metrics(s"$work/zero") == Map("__table__" -> 0L))
+  }
+
+  test("a numeric-looking partition value reads back as the string it was written as") {
+    val work = tmpDir("graft-typed")
+    val rows = Seq((1L, "2015"), (2L, "0042")).toDF("k", "year")
+    val back = Checkpoints.stage(spark, "typed", s"$work/typed", Seq("year"))(rows)
+    val resumed = Checkpoints.stage(spark, "typed", s"$work/typed", Seq("year"))(sys.error("no rebuild"))
+    for (t <- Seq(back, resumed)) {
+      assert(t.schema("year").dataType == StringType)
+      assert(t.select("year").as[String].collect().sorted.toSeq == Seq("0042", "2015"))
+    }
+    assert(metrics(s"$work/typed") == Map("year=2015" -> 1L, "year=0042" -> 1L))
   }
 }

@@ -429,6 +429,15 @@ class PipelineParitySpec extends SparkSpec {
     }
   }
 
+  test("verify calls the exact-Jaccard kernel once per candidate pair") {
+    val t = Pipeline.run(spark, spark.createDataFrame(Twins.corpusLocal(200)), cfg, tmpDir("graft-verify-once"))
+    val verified = Jaccard.verify(t.candidates, t.encoded, cfg.threshold)
+    val sims = verified.collect().map(_.getAs[Double]("sim"))
+    assert(sims.nonEmpty && sims.forall(_ >= cfg.threshold))
+    val plan = verified.queryExecution.executedPlan
+    assert(kernelCalls(plan, JaccardKernel.getClass) == 1, s"Jaccard kernel calls per pair in:\n$plan")
+  }
+
   test("the docs, signatures and verify stages call their kernels inside whole-stage codegen") {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {

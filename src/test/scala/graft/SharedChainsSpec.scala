@@ -54,6 +54,18 @@ class SharedChainsSpec extends SparkSpec {
     }
   }
 
+  test("the encoded-corpus chain tokenizes each document once") {
+    try {
+      val (enc, _, _, encRows) = SharedChains.encodedChain(spark, "/root/testdata/sf0.001")
+      assert(encRows > 0)
+      val plan = enc.queryExecution.executedPlan
+      assert(kernelCalls(plan, graft.dedup.TokenSetKernel.getClass) == 1, s"tokenizer calls per row in:\n$plan")
+    } finally {
+      SparkEntry.releaseTransientCaches()
+      SparkEntry.releaseSharedCaches()
+    }
+  }
+
   // Stops the shared session, so it runs last; SparkSpec.spark hands later
   // suites a fresh one.
   test("an entry whose session has stopped is dropped and not returned") {
