@@ -79,7 +79,18 @@ object Dev {
     try f finally println(f"[dev] $label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
   }
 
-  private def explain(df: DataFrame): String = df.queryExecution.explainString(FormattedMode)
+  private def explain(df: DataFrame): String = normalizePlan(df.queryExecution.explainString(FormattedMode))
+
+  /** A plan dump without expression ids (`id#123L` becomes `id#xL`), plan
+    * and RDD ids, source line numbers, AQE runtime statistics and lambda
+    * names, so that two dumps differ only where the plan's shape does. Pure. */
+  def normalizePlan(plan: String): String =
+    plan
+      .replaceAll("#\\d+", "#x")
+      .replaceAll("(plan_id=|RDD\\[)\\d+", "$1x")
+      .replaceAll("(\\.scala):\\d+", "$1")
+      .replaceAll(", Statistics\\([^)]*\\)", "")
+      .replaceAll("\\$\\$Lambda[$/\\w]*@\\w+", "\\$\\$Lambda")
 
   /** One Bench pipeline leg, printed with its per-stage walls. */
   private def leg(label: String, cpus: Int, n: Long, cfg: Config = Config()): Double = {

@@ -86,27 +86,32 @@ object Components {
 
   val MaxIterations = 50
 
-  /** large-star: connect every strictly-larger neighbor of u to min(N(u) u {u}). */
-  private def largeStar(edges: DataFrame): DataFrame = {
+  /** large-star: connect every strictly-larger neighbor of u to min(N(u) u {u}).
+    * Each shuffle is a `repartition(parts, src)` the aggregate, join and
+    * distinct all read, so the session's default width never applies. */
+  private def largeStar(edges: DataFrame, parts: Int): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(parts, col("src"))
     val mins = sym.groupBy("src").agg(least(min(col("dst")), first(col("src"))).as("m"))
     sym
       .join(mins, "src")
       .filter(col("dst") > col("src"))
       .select(col("dst").as("src"), col("m").as("dst"))
       .filter(col("src") =!= col("dst"))
+      .repartition(parts, col("src"))
       .distinct()
   }
 
   /** small-star: connect every smaller-or-equal neighbor of u to the min. */
-  private def smallStar(edges: DataFrame): DataFrame = {
+  private def smallStar(edges: DataFrame, parts: Int): DataFrame = {
     val sym = edges
       .select(
         greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst")
       )
       .filter(col("src") =!= col("dst"))
+      .repartition(parts, col("src"))
       .distinct()
     val mins = sym.groupBy("src").agg(min(col("dst")).as("m"))
     val relinked = sym
@@ -115,7 +120,7 @@ object Components {
       .filter(col("node") =!= col("m"))
       .select(col("node").as("src"), col("m").as("dst"))
     val starCenters = mins.select(col("src"), col("m").as("dst"))
-    relinked.unionByName(starCenters).filter(col("src") =!= col("dst")).distinct()
+    relinked.unionByName(starCenters).filter(col("src") =!= col("dst")).repartition(parts, col("src")).distinct()
   }
 
   private def checksum(edges: DataFrame): (Long, Long) = {
@@ -216,32 +221,28 @@ object Components {
     // Size the loop's shuffle parallelism to the EDGE data, not the session
     // default: the edge set is orders of magnitude smaller than the corpus,
     // and star-contraction rounds are join/agg chains of tiny tasks whose
-    // scheduling overhead otherwise dominates (and grows with cores).
-    val spark = edges.sparkSession
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
+    // scheduling overhead otherwise dominates (and grows with cores). Not
+    // through the session conf: a query planned meanwhile would read it.
     val parts = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism * 2,
+      edges.sparkSession.sparkContext.defaultParallelism * 2,
       (nEdges / 500000L).toInt + 1
     ))
 
     var prev = checksum(edges) // one pass over the already-cached edge set
     var converged = false
     var iter = 0
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
-      while (!converged && iter < MaxIterations) {
-        // LAZY localCheckpoint: the checksum action below materializes the
-        // checkpoint AND folds the convergence aggregate into the same job —
-        // one job per round instead of round-2's materialize + checksum pair
-        val next = smallStar(largeStar(edges)).localCheckpoint(eager = false)
-        val cur = checksum(next)
-        converged = cur == prev
-        prev = cur
-        edges.unpersist()
-        edges = next
-        iter += 1
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
+    while (!converged && iter < MaxIterations) {
+      // LAZY localCheckpoint: the checksum action below materializes the
+      // checkpoint AND folds the convergence aggregate into the same job —
+      // one job per round instead of round-2's materialize + checksum pair
+      val next = smallStar(largeStar(edges, parts), parts).localCheckpoint(eager = false)
+      val cur = checksum(next)
+      converged = cur == prev
+      prev = cur
+      edges.unpersist()
+      edges = next
+      iter += 1
+    }
     // After convergence edges form stars: (node -> componentMin).
     val assign = edges.select(col("src").as("doc_id"), col("dst").as("cluster_id"))
     val roots = edges.select(col("dst").as("doc_id")).distinct()

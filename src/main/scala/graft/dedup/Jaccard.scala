@@ -39,12 +39,8 @@ object Jaccard {
     // reference's `sim > 0` (code/Stage05ComputeSimilarity.py:132)
     val floor = math.max(minSim, java.lang.Double.MIN_VALUE)
     withTokens(candidates, encoded)
-      // compiled kernel call (no UDF boxing) — see JaccardKernel. A
-      // generator, not a projection: Catalyst would push the filter into the
-      // join condition as `sim(tokens_a, tokens_b) >= floor` and run the
-      // kernel there and again in the projection above; it never folds a
-      // generator's input into a pushed predicate
-      .select(col("group"), col("a"), col("b"), explode(array(JaccardSorted(col("tokens_a"), col("tokens_b")))).as("sim"))
+      // compiled kernel call (no UDF boxing) — see JaccardKernel
+      .select(col("group"), col("a"), col("b"), JaccardSorted(col("tokens_a"), col("tokens_b")).as("sim"))
       .filter(col("sim") >= floor)
   }
 

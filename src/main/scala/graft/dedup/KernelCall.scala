@@ -14,7 +14,21 @@ import org.apache.spark.sql.types.DataType
   * Each input is declared with its exact type: the analyzer inserts only
   * the implicit casts ANSI coercion allows and rejects everything else (a
   * string where an array<int> is expected, a bigint array it would have to
-  * narrow). */
+  * narrow).
+  *
+  * Every call is built with `isDeterministic = false`, though each kernel
+  * is pure: Catalyst copies a deterministic expression into any filter it
+  * pushes through the defining projection or into a join condition (a
+  * `sim >= t` filter over an intersection count would run the kernel three
+  * times per pair), and that flag is its only per-expression barrier. So a
+  * kernel runs once per row, where it is written. ScalaUDFs whose column a
+  * filter reads are `asNondeterministic()` for the same reason. Two side
+  * effects:
+  *  - every filter above a kernel's projection stays there, so write a
+  *    filter that can run first (a key filter) below that projection;
+  *  - the analyzer's `PullOutNondeterministic` does not move a kernel, so
+  *    one written in a join condition, a sort key or a grouping key fails
+  *    analysis: compute it in a projection and use the column. */
 object KernelCall {
 
   /** `kernel.fn(inputs..., params...)` on a Scala object's static
@@ -37,7 +51,8 @@ object KernelCall {
         inputs.map(i => GraftBridge.expression(i._1)) ++ lits,
         inputs.map(_._2) ++ lits.map(_.dataType),
         propagateNull = true,
-        returnNullable = nullableResult
+        returnNullable = nullableResult,
+        isDeterministic = false
       )
     )
   }
@@ -54,7 +69,8 @@ object KernelCall {
         inputs.map(i => GraftBridge.expression(i._1)),
         inputs.map(_._2),
         propagateNull = true,
-        returnNullable = false
+        returnNullable = false,
+        isDeterministic = false
       )
     )
 }

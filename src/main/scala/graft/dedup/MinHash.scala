@@ -36,11 +36,7 @@ object MinHash {
   def withSignature(encoded: DataFrame, cfg: Config): DataFrame =
     encoded.withColumn("minhash", MinHashSig(col("tokens"), cfg))
 
-  /** signatures -> exploded band rows (group, band, band_hash, doc_id).
-    * The generator explodes the kernel call itself: over a column it would
-    * get an inferred `size(bh) > 0 AND isnotnull(bh)` filter, which
-    * Catalyst pushes below the projection defining `bh` and so runs the
-    * band-hash kernel twice per row. */
+  /** signatures -> exploded band rows (group, band, band_hash, doc_id). */
   def bandRows(signatures: DataFrame, cfg: Config): DataFrame =
     signatures.select(
       col("group"),
@@ -49,13 +45,10 @@ object MinHash {
     )
 
   /** [[bandRows]] with the doc's FULL band-hash array carried per row (the
-    * input shape of the first-collision pair generator). The array is a
-    * column here, so [[Tokenize.nonEmpty]] (a generator, which Catalyst
-    * never inlines the array's projection into) takes the place of the
-    * inferred filter. */
+    * input shape of the first-collision pair generator). */
   def bandRowsWithHashes(signatures: DataFrame, cfg: Config): DataFrame =
-    Tokenize
-      .nonEmpty(signatures.withColumn("bhs", BandHashes(col("minhash"), cfg)), "bhs")
+    signatures
+      .withColumn("bhs", BandHashes(col("minhash"), cfg))
       .select(
         col("group"),
         posexplode(col("bhs")).as(Seq("band", "band_hash")),

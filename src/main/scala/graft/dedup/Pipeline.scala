@@ -77,9 +77,7 @@ object Pipeline {
     * token arrays pay here) moves token arrays instead of raw text. Ids are
     * counted and stamped on the skinny key projection, which reads no
     * content; key dedup is resolved with a payload aggregate only when
-    * duplicates actually exist ([[Ids.assignDenseByKey]]). The tokenizer
-    * runs once per row: the empty-set drop is [[Tokenize.nonEmpty]], not a
-    * filter Catalyst would push below the tokenizing projection. */
+    * duplicates actually exist ([[Ids.assignDenseByKey]]). */
   def prepareDocs(
       input: DataFrame,
       cfg: Config,
@@ -99,8 +97,8 @@ object Pipeline {
       .drop("content")
     val withId =
       Ids.assignDenseByKey(derived, Seq("repo", "path", "commit"), "doc_id", reg = reg)
-    Tokenize
-      .nonEmpty(withId, "tokens")
+    withId
+      .filter(size(col("tokens")) > 0)
       .withColumn("group", groupKey(cfg))
       .select("doc_id", "repo", "path", "commit", "group", "content_sha", "n_bytes", "tokens")
   }
@@ -259,17 +257,13 @@ object Pipeline {
             .select("doc_id")
           reps0.join(vendoredDocIds, Seq("doc_id"), "left_anti")
         }
-      val sigInput = Tokenize.nonEmpty(
-        encoded
-          // build on the skinny id side — SMJ would sort the wide token table
-          .join(reps.hint("shuffle_hash"), "doc_id")
-          // two-pointer sorted difference, not array_except(.., lit(hot)):
-          // the built-in rebuilds a hash set from the literal on every row.
-          // Tokenize.nonEmpty, not filter(size > 0): a pushed-down filter
-          // would run it below the join and again above it
-          .withColumn("tokens", ArrayExceptSorted(col("tokens"), hot)),
-        "tokens"
-      )
+      val sigInput = encoded
+        // build on the skinny id side — SMJ would sort the wide token table
+        .join(reps.hint("shuffle_hash"), "doc_id")
+        // two-pointer sorted difference, not array_except(.., lit(hot)):
+        // the built-in rebuilds a hash set from the literal on every row
+        .withColumn("tokens", ArrayExceptSorted(col("tokens"), hot))
+        .filter(size(col("tokens")) > 0)
       SimHash.withSimhash(MinHash.withSignature(sigInput, cfg), cfg)
         .drop("tokens") // signature table carries signatures, not sets
     })

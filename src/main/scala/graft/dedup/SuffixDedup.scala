@@ -256,7 +256,7 @@ object SuffixDedup {
     val minMatch = cfg.minMatch
     val lcsUdf = udf((x: String, y: String) =>
       if (x.length <= y.length) lcsLen(x, y) else lcsLen(y, x)
-    )
+    ).asNondeterministic() // runs once per candidate (KernelCall)
     val ca = ds.select(col("doc_id").as("a"), col("group"), col("content").as("content_a"))
     val cb = ds.select(col("doc_id").as("b"), col("content").as("content_b"))
     candidates

@@ -1,7 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Column
 
 /** Token / shingle extraction with the reference's exact semantics, as one
   * compiled kernel call ([[TokenSet]]) over a plain-Scala kernel (no UDFs in
@@ -35,16 +34,6 @@ object Tokenize {
   /** The document set: distinct sorted token/shingle strings — as a
     * compiled kernel call (see [[TokenSet]]). */
   def tokenSet(text: Column, k: Int = 1): Column = TokenSet(text, k)
-
-  /** The rows of `df` whose array column `c` is non-empty: the same rows as
-    * `filter(size(col(c)) > 0)`, written as a generator because Catalyst
-    * pushes such a filter below the projection that defines `c` and rewrites
-    * it to `size(<c's expression>) > 0` — the tokenizer or the encode UDF
-    * then runs twice per row, once in the Filter and once in the Project.
-    * Catalyst never folds a projection into the generator above it, so `c`'s
-    * expression runs once. */
-  def nonEmpty(df: DataFrame, c: String): DataFrame =
-    df.withColumn(c, explode(when(size(col(c)) > 0, array(col(c)))))
 
   /** Plain-Scala kernel (used by [[TokenSet]] and the corpus ground truth).
     * Must stay in lockstep with the reference regexes; the test suite holds

@@ -126,10 +126,9 @@ object Vocabulary {
     broadcastEncodeFn(vocab) match {
       case None => encodeJoin(docs, vocab)
       case Some(enc) =>
-        // Tokenize.nonEmpty: a size filter would be pushed below the encode
-        // projection and run the encode UDF twice per row
-        Tokenize
-          .nonEmpty(docs.select(col("doc_id"), col("group"), enc(col("tokens")).as("tokens")), "tokens")
+        docs
+          .select(col("doc_id"), col("group"), enc(col("tokens")).as("tokens"))
+          .filter(size(col("tokens")) > 0)
           .withColumn("n_tokens", size(col("tokens")))
     }
 
@@ -172,7 +171,7 @@ object Vocabulary {
       val arr = out.result()
       java.util.Arrays.sort(arr)
       arr
-    }
+    }.asNondeterministic() // runs once per row (KernelCall)
     Some(tokens => encodeUdf(tokens))
   }
 }

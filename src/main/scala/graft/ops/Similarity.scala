@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.dedup.{CosineFloat, KernelCall, PairGen}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
@@ -284,7 +285,7 @@ object Similarity {
     val probesUdf = udf { (emb: Seq[Float]) =>
       val cs = bCents.value
       bestCentroids(emb, cs, np).map(j => cs(j)._1.toInt)
-    }
+    }.asNondeterministic() // runs once per row (KernelCall)
     val ranked = reg.persist(
       // consumed twice (assignment + probes) inside the returned lazy plan;
       // cache lifetime is caller-owned via `reg` (the bench/verify drivers
@@ -358,7 +359,7 @@ object Similarity {
     val bCents = spark.sparkContext.broadcast(quantizer(embeddings, nCentroids, knownCentroids))
     // ties keep the lowest cid, the SQL oracle's (score DESC, cid) ordering;
     // zero-norm vectors stay unassigned (-1)
-    val nearestUdf = udf((emb: Seq[Float]) => nearestCentroid(emb, bCents.value))
+    val nearestUdf = nearestCentroidUdf(bCents)
     val assigned = reg.persist(
       embeddings
         .select(col("vec_id"), col("embedding"), nearestUdf(col("embedding")).as("cid"))
@@ -400,7 +401,7 @@ object Similarity {
     var it = 0
     while (it < iters) {
       val bCents = spark.sparkContext.broadcast(cents)
-      val nearestUdf = udf((emb: Seq[Float]) => nearestCentroid(emb, bCents.value))
+      val nearestUdf = nearestCentroidUdf(bCents)
       val means = embeddings
         .select(nearestUdf(col("embedding")).as("cid"), col("embedding"))
         .filter(col("cid") >= 0)
@@ -491,10 +492,12 @@ object Similarity {
   }
 
   /** Cid of the nearest centroid by cosine ([[bestCentroids]] order), or -1. */
-  private def nearestCentroid(emb: Seq[Float], cs: Array[(Long, Array[Double])]): Long = {
-    val best = bestCentroids(emb, cs, 1)
-    if (best.isEmpty) -1L else cs(best(0))._1
-  }
+  private def nearestCentroidUdf(bCents: Broadcast[Array[(Long, Array[Double])]]) =
+    udf { (emb: Seq[Float]) =>
+      val cs = bCents.value
+      val best = bestCentroids(emb, cs, 1)
+      if (best.isEmpty) -1L else cs(best(0))._1
+    }.asNondeterministic() // runs once per row (KernelCall)
 }
 
 /** Kernel for the sign-bit hyperplane sketch over the (dim, planes, seed)

@@ -51,15 +51,12 @@ object StreamingDedup {
     * concern; stream rows are identified by (repo, path, commit) +
     * content_sha. */
   def prepareStream(input: DataFrame, cfg: Config): DataFrame =
-    Tokenize
-      .nonEmpty(
-        input
-          .withColumn("content_sha", sha2(col("content"), 256))
-          .withColumn("n_bytes", octet_length(col("content")))
-          .withColumn("tokens", Tokenize.tokenSet(col("content"), cfg.shingleK))
-          .withColumn("group", Pipeline.groupKey(cfg)),
-        "tokens"
-      )
+    input
+      .withColumn("content_sha", sha2(col("content"), 256))
+      .withColumn("n_bytes", octet_length(col("content")))
+      .withColumn("tokens", Tokenize.tokenSet(col("content"), cfg.shingleK))
+      .withColumn("group", Pipeline.groupKey(cfg))
+      .filter(size(col("tokens")) > 0)
       .drop("content")
 
   /** Exact-dup gate: keep only rows whose (group, content hash) is NEW —
@@ -137,12 +134,9 @@ object StreamingDedup {
     * `hotTokenIds` (the max-df signature cap, [[Vocabulary.hotTokenIds]])
     * must be the SAME array used for the stream side so band hashes match. */
   def corpusIndex(encoded: DataFrame, cfg: Config, hotTokenIds: Array[Int] = Array.empty): DataFrame = {
-    // Tokenize.nonEmpty and a generator over the kernel call itself: a
-    // size filter on either column would be pushed below the projection
-    // defining it and run its kernels twice per row
     val sigIn =
       if (hotTokenIds.isEmpty) encoded
-      else Tokenize.nonEmpty(encoded.withColumn("tokens", ArrayExceptSorted(col("tokens"), hotTokenIds)), "tokens")
+      else encoded.withColumn("tokens", ArrayExceptSorted(col("tokens"), hotTokenIds)).filter(size(col("tokens")) > 0)
     val rows = sigIn.select(
       col("group"),
       col("doc_id").as("c_doc_id"),
@@ -255,10 +249,9 @@ object StreamingDedup {
     val encFn = encodeFn.getOrElse(encodeFnFor(vocab))
     val sigTokens =
       if (hotTokenIds.isEmpty) col("tokens") else ArrayExceptSorted(col("tokens"), hotTokenIds)
-    // Tokenize.nonEmpty, not filter(size > 0): a pushed-down filter would
-    // run the encode UDF (and the tokenizer below it) twice per row
-    val banded = Tokenize
-      .nonEmpty(stream.withColumn("tokens", encFn(col("tokens"))), "tokens")
+    val banded = stream
+      .withColumn("tokens", encFn(col("tokens")))
+      .filter(size(col("tokens")) > 0)
       .withColumn("sig_tokens", sigTokens)
       .filter(size(col("sig_tokens")) > 0)
       .withColumn("bhs", BandHashes(MinHashSig(col("sig_tokens"), cfg), cfg))

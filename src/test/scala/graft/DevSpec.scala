@@ -48,6 +48,29 @@ class DevSpec extends AnyFunSuite {
     assert(parse(Nil, sf).isLeft)
   }
 
+  test("normalizePlan strips expression, plan and RDD ids, line numbers, AQE statistics and lambda names, and nothing else") {
+    val raw =
+      """+- ShuffleQueryStage (19), Statistics(sizeInBytes=80.1 KiB, rowCount=1.00E+3)
+        |Output [2]: [id#0L, tokens#33]
+        |Arguments: graft.dedup.CorpusGen$$$Lambda$1633/0x00007fdcdcaaa0f0@44a7661d, obj#9: graft.dedup.CodeFile
+        |Arguments: hashpartitioning(repo#15, 8), ENSURE_REQUIREMENTS, [plan_id=22249]
+        |Condition : (size(tokens#33, true) > 0)
+        |Arguments: obj#5: scala.Tuple2, ParallelCollectionRDD[761] at parallelize at Components.scala:180
+        |Arguments: 0""".stripMargin
+    val want =
+      """+- ShuffleQueryStage (19)
+        |Output [2]: [id#xL, tokens#x]
+        |Arguments: graft.dedup.CorpusGen$$$Lambda, obj#x: graft.dedup.CodeFile
+        |Arguments: hashpartitioning(repo#x, 8), ENSURE_REQUIREMENTS, [plan_id=x]
+        |Condition : (size(tokens#x, true) > 0)
+        |Arguments: obj#x: scala.Tuple2, ParallelCollectionRDD[x] at parallelize at Components.scala
+        |Arguments: 0""".stripMargin
+    assert(normalizePlan(raw) == want)
+    assert(normalizePlan(want) == want)
+    // two dumps of one plan shape with different ids normalize equal
+    assert(normalizePlan(raw.replace("#33", "#4071").replace("22249", "5")) == normalizePlan(raw))
+  }
+
   test("the usage lists every subcommand") {
     Seq("setup", "q <name>", "plans", "legs <nFiles> <pairs>", "encode").foreach { sub =>
       assert(usage.linesIterator.exists(_.trim.startsWith(sub)), s"usage misses $sub")

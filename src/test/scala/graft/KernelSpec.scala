@@ -1,14 +1,18 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import graft.dedup._
 import graft.ops.Similarity
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 /** Kernel-level unit + property tests: tokenizer parity (Column vs Scala vs
   * reference fixtures), Jaccard rounding semantics, MinHash statistics,
@@ -499,6 +503,38 @@ class KernelSpec extends SparkSpec {
       }
       assert(got == wantCovered, s"trial $trial edges=$edges")
     }
+  }
+
+  test("distributed components leave the session's shuffle partitions as they are") {
+    // a job's properties carry the session's SQL conf as it stood when the
+    // job was submitted: the value any query planned at that moment saw
+    val key = "spark.sql.shuffle.partitions"
+    val session = spark.conf.get(key)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach(p =>
+          seen.add((Option(p.getProperty("spark.jobGroup.id")).getOrElse(""), Option(p.getProperty(key)).orNull)))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("cc-distributed", "distributed components")
+      val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 5L)).toDF("a", "b")
+      val got = Components.run(edges, driverLocalMaxEdges = 0L).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L, 7L -> 5L))
+      sc.setJobGroup("cc-done", "marker")
+      spark.range(1).collect()
+      // listener events arrive asynchronously, in order
+      eventually(timeout(Span(60, Seconds)))(assert(seen.asScala.exists(_._1 == "cc-done")))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val during = seen.asScala.collect { case ("cc-distributed", v) if v != null => v }.toSeq
+    assert(during.nonEmpty, "no SQL job of the distributed run was seen")
+    assert(during.forall(_ == session), s"jobs ran with $key = ${during.distinct} (session: $session)")
+    assert(spark.conf.get(key) == session)
   }
 
   test("incremental merge equals full recompute (randomized base + delta)") {

@@ -438,12 +438,26 @@ class PipelineParitySpec extends SparkSpec {
     assert(kernelCalls(plan, JaccardKernel.getClass) == 1, s"Jaccard kernel calls per pair in:\n$plan")
   }
 
-  test("the docs, signatures and verify stages call their kernels inside whole-stage codegen") {
+  /** `body`'s result and every plan it executes, captured by a listener. */
+  private def withExecutedPlans[A](body: => A): (A, Seq[SparkPlan]) = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      // listener events arrive asynchronously: wait for a marker query's
+      spark.range(1).toDF("__marker").collect()
+      eventually(timeout(Span(60, Seconds))) {
+        assert(plans.asScala.exists(_.output.exists(_.name == "__marker")))
+      }
+      (result, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("the docs, signatures and verify stages call their kernels inside whole-stage codegen") {
     val kernels = Seq[Class[_]](
       TokenSetKernel.getClass, // docs
       classOf[HashKernels.SortedDiffKernel], classOf[HashKernels.MinHashKernel], classOf[HashKernels.SimHashKernel],
@@ -453,15 +467,9 @@ class PipelineParitySpec extends SparkSpec {
     // tokenizer at planning time
     val dir = tmpDir("graft-wscg")
     spark.createDataFrame(Twins.corpusLocal(200)).write.parquet(s"$dir/input")
-    spark.listenerManager.register(listener)
-    try {
-      Pipeline.run(spark, spark.read.parquet(s"$dir/input"), cfg, s"$dir/work")
-      // listener events arrive asynchronously
-      eventually(timeout(Span(60, Seconds))) {
-        kernels.foreach(k => assert(plans.asScala.exists(kernelCalls(_, k) > 0), s"no plan calls $k"))
-      }
-    } finally spark.listenerManager.unregister(listener)
-    for (plan <- plans.asScala; k <- kernels) {
+    val (_, plans) = withExecutedPlans(Pipeline.run(spark, spark.read.parquet(s"$dir/input"), cfg, s"$dir/work"))
+    kernels.foreach(k => assert(plans.exists(kernelCalls(_, k) > 0), s"no plan calls $k"))
+    for (plan <- plans; k <- kernels) {
       // the operators compiled into one generated class: a codegen stage's
       // subtree down to its input adapters
       val compiled = java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
@@ -473,6 +481,68 @@ class PipelineParitySpec extends SparkSpec {
       planNodes(plan).filter(n => n.expressions.exists(_.exists(kernelCall(k).isDefinedAt))).foreach { n =>
         assert(compiled.contains(n), s"$k called outside whole-stage codegen by ${n.nodeName} in:\n$plan")
       }
+    }
+  }
+
+  test("a run with substring dedup and top-N copies no kernel call into a second operator") {
+    val dir = tmpDir("graft-once")
+    spark.createDataFrame(Twins.corpusLocal(200)).write.parquet(s"$dir/input")
+    val (t, plans) = withExecutedPlans(
+      Pipeline.run(spark, spark.read.parquet(s"$dir/input"), cfg.copy(substringDedup = true, topN = Some(3)), s"$dir/work"))
+    // the substring stage verifies candidates: its LCS UDF runs
+    assert(!t.substring.get.isEmpty && !t.pairs.isEmpty && !t.topn.get.isEmpty)
+    // the captured plans do run the kernels the guard is about
+    Seq[Class[_]](TokenSetKernel.getClass, classOf[HashKernels.SortedDiffKernel], JaccardKernel.getClass).foreach { k =>
+      assert(plans.exists(kernelCalls(_, k) > 0), s"no plan calls $k")
+    }
+    assert(plans.exists(p => exprCount(p) { case _: ScalaUDF => } > 0), "no plan calls the LCS UDF")
+    val copied = plans.flatMap(repeatedKernelCalls).distinct
+    assert(copied.isEmpty, s"kernel calls held by more than one operator:\n${copied.mkString("\n")}")
+  }
+
+  /** Each stage's rows, schema and `_metrics` rows against `want` rows per
+    * stage and the schema the stage has on a non-empty corpus. */
+  private def assertStages(t: Pipeline.Tables, ref: Pipeline.Tables, work: String, want: Map[String, Long]): Unit = {
+    def tables(x: Pipeline.Tables) = Seq("docs" -> x.docs, "vocab" -> x.vocab, "encoded" -> x.encoded,
+      "signatures" -> x.signatures, "candidates" -> x.candidates, "pairs" -> x.pairs, "components" -> x.components,
+      "substring" -> x.substring.get, "topn" -> x.topn.get)
+    val partitioned = Set("docs", "encoded", "signatures", "pairs")
+    tables(t).zip(tables(ref)).foreach { case ((name, df), (_, refDf)) =>
+      assert(df.count() == want(name), s"$name rows")
+      assert(df.schema == refDf.schema, s"$name schema")
+      val metrics = spark.read.parquet(s"$work/${name}_metrics").select("partition", "rows").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toSet
+      val wantMetrics =
+        if (!partitioned(name)) Set("__table__" -> want(name))
+        else df.groupBy("group").count().collect().map(r => s"group=${r.getString(0)}" -> r.getLong(1)).toSet
+      assert(metrics == wantMetrics, s"$name _metrics")
+    }
+  }
+
+  test("edge inputs: an empty corpus and a corpus whose every token is under min-df run every stage and resume") {
+    val edgeCfg = cfg.copy(substringDedup = true, topN = Some(3))
+    val dir = tmpDir("graft-edge")
+    def runOn(files: Seq[CodeFile], name: String): Pipeline.Tables = {
+      val in = s"$dir/$name-input"
+      if (!new java.io.File(in).exists()) spark.createDataFrame(files).write.parquet(in)
+      Pipeline.run(spark, spark.read.parquet(in), edgeCfg, s"$dir/$name")
+    }
+    val ref = runOn(Twins.corpusLocal(60), "ref")
+    // each doc's tokens occur in that doc only: df 1 < minDf 2
+    val pruned = (0 until 6).map(i =>
+      CodeFile("r", s"p$i.py", "c1", "python", (0 until 20).map(j => s"w${i}x$j").mkString(" ")))
+    val zero = Map("vocab" -> 0L, "encoded" -> 0L, "signatures" -> 0L, "candidates" -> 0L, "pairs" -> 0L,
+      "components" -> 0L, "substring" -> 0L, "topn" -> 0L)
+    for ((name, files, docs) <- Seq(("empty", Seq.empty[CodeFile], 0L), ("pruned", pruned, 6L))) {
+      val want = zero + ("docs" -> docs)
+      assertStages(runOn(files, name), ref, s"$dir/$name", want)
+      val manifests = new java.io.File(s"$dir/$name").listFiles().filter(_.getName.endsWith("_lineage.json"))
+        .map(f => f.getName -> f.lastModified()).toMap
+      assert(manifests.size == 9, s"$name lineage manifests: ${manifests.keys}")
+      // a resume rebuilds nothing and reads back the same tables
+      assertStages(runOn(files, name), ref, s"$dir/$name", want)
+      val resumed = manifests.keys.map(n => n -> new java.io.File(s"$dir/$name/$n").lastModified()).toMap
+      assert(resumed == manifests, s"$name: a resume rewrote a stage")
     }
   }
 }

@@ -66,6 +66,28 @@ class SharedChainsSpec extends SparkSpec {
     }
   }
 
+  test("no kernel call is copied into a second operator in the exact-pair, LSH, n-gram, SimHash, cosine and substring plans") {
+    val dir = "/root/testdata/sf0.001"
+    try {
+      val frames = Seq(
+        "exactPairs (remap)" -> (() => SharedChains.exactPairs(spark, dir, SharedChains.oracleLshCfg.broadcastMaxVocab)),
+        "exactPairs (generic)" -> (() => SharedChains.exactPairs(spark, dir, 0L)),
+        "lshVerifiedWithCount" -> (() => SharedChains.lshVerifiedWithCount(spark, dir)._1)
+      ) ++ Seq("q16_ngram_jaccard", "q24_simhash_pairs", "q28_lsh_cosine_top3", "q36_ivf_cosine_top3", "q37_semdedup",
+        "q31b_substring_exists").map(q => q -> (() => SparkEntry.queries(q)(spark, dir)))
+      val copied = frames.flatMap { case (name, df) =>
+        val d = df()
+        assert(d.collect().nonEmpty, s"$name is empty")
+        val plan = d.queryExecution.executedPlan
+        repeatedKernelCalls(plan).map(call => s"$name: $call")
+      }
+      assert(copied.isEmpty, s"kernel calls held by more than one operator:\n${copied.mkString("\n")}")
+    } finally {
+      SparkEntry.releaseTransientCaches()
+      SparkEntry.releaseSharedCaches()
+    }
+  }
+
   // Stops the shared session, so it runs last; SparkSpec.spark hands later
   // suites a fresh one.
   test("an entry whose session has stopped is dropped and not returned") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, ScalaUDF}
 import org.apache.spark.sql.catalyst.expressions.objects.{Invoke, StaticInvoke}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -72,5 +72,23 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def kernelCall(kernel: Class[_]): PartialFunction[Expression, Unit] = {
     case s: StaticInvoke if s.staticObject == kernel =>
     case Invoke(Literal(_, ObjectType(c)), _, _, _, _, _, _, _) if c == kernel =>
+  }
+
+  /** The per-row kernel calls that the operators of `plan` hold more than
+    * once, canonicalized: a compiled kernel ([[graft.dedup.KernelCall]],
+    * a graft class) or any ScalaUDF. A call copied into a pushed filter or
+    * a join condition keeps its input attributes, so its copy is equal to
+    * it; two calls of one kernel on different inputs are not. */
+  def repeatedKernelCalls(plan: SparkPlan): Seq[Expression] = {
+    def graftKernel(c: Class[_]) = c.getName.startsWith("graft.")
+    planNodes(plan)
+      .flatMap(_.expressions.flatMap(_.collect {
+        case s: StaticInvoke if graftKernel(s.staticObject) => s.canonicalized
+        case i @ Invoke(Literal(_, ObjectType(c)), _, _, _, _, _, _, _) if graftKernel(c) => i.canonicalized
+        case u: ScalaUDF => u.canonicalized
+      }))
+      .groupBy(identity)
+      .collect { case (call, copies) if copies.size > 1 => call }
+      .toSeq
   }
 }

@@ -222,6 +222,24 @@ class StreamingSpec extends SparkSpec {
     assert(exprCount(p) { case _: ScalaUDF => } == 2, s"UDF evaluations per row in:\n$p")
   }
 
+  test("the near-dup plan over a batch frame copies no kernel call into a second operator (probe and join plans)") {
+    val (_, vocab, encoded, hot, index) = corpusState
+    assert(hot.nonEmpty, "the signature input would not call the sorted difference")
+    // a parquet frame: over a local relation the optimizer evaluates the
+    // projections at planning time
+    val dir = s"${tmpDir("nd-batch")}/in"
+    streamRows.toDF().write.parquet(dir)
+    val in = StreamingDedup.prepareStream(spark.read.parquet(dir), cfg)
+    for (probeMaxBytes <- Seq(StreamingDedup.ProbeMaxBytes, -1L)) {
+      val out = StreamingDedup.nearDupPlan(in, vocab, encoded, index, cfg, hot, None, probeMaxBytes)
+      assert(out.collect().nonEmpty)
+      val p = out.queryExecution.executedPlan
+      assert(kernelCalls(p, classOf[HashKernels.SortedDiffKernel]) > 0, s"no sorted difference in:\n$p")
+      val repeated = repeatedKernelCalls(p)
+      assert(repeated.isEmpty, s"kernel calls held by more than one operator: ${repeated.mkString("; ")} in:\n$p")
+    }
+  }
+
   test("a second near-dup plan over the same index frame starts no Spark job") {
     val (_, vocab, encoded, hot, index) = corpusState
     val encFn = Some(StreamingDedup.encodeFnFor(vocab))
