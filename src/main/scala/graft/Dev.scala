@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.Try
 
-import graft.dedup.{CacheRegistry, Config, CorpusGen, Jaccard, MinHash, Pipeline, SimHash, SuffixDedup, Vocabulary}
+import graft.dedup.{Config, CorpusGen, Jaccard, MinHash, Pipeline, SimHash, SuffixDedup, Vocabulary}
 import graft.streaming.StreamingDedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -188,7 +188,7 @@ object Dev {
       "q28_lsh_cosine_top3 (compiled HyperplaneSketch + CosineFloat re-rank)" -> q("q28_lsh_cosine_top3"),
       "winnow candidate pairs (native WinnowFingerprints, the q31a/q31b front-end)" -> SuffixDedup.candidatePairs(
         spark.read.parquet(s"$sf/documents.parquet").selectExpr("doc_id", "lang as group", "text as content"),
-        SuffixDedup.SubConfig(k = 16, window = 5, minMatch = 20), CacheRegistry.unmanaged),
+        SuffixDedup.SubConfig(k = 16, window = 5, minMatch = 20)),
       "substring dedup (spread docs persisted once: content crosses one shuffle; suffix-automaton LCS verify)" ->
         SuffixDedup.run(
           spark.read.parquet(s"$sf/documents.parquet").selectExpr("doc_id", "lang as group", "text as content"),

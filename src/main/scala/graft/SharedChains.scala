@@ -322,8 +322,7 @@ private[graft] object SharedChains {
       // parallelism, not scan-split count (one task on a sub-MB file)
       spread(t(s, dir, "documents"))
         .select(col("doc_id"), col("lang").as("group"), col("text").as("content")),
-      q31Cfg,
-      transientReg
+      q31Cfg
     ))
   }
 

@@ -26,7 +26,11 @@ import org.apache.spark.sql.functions._
   * most maxBucket+1 members per bucket, however hot. It emits one
   * (id, neighbor-array) row per doc per bucket, not one JVM object per pair;
   * the quadratic fan-out is a codegen'd `explode` over primitive long arrays
-  * (boxing each pair was measurably slower).
+  * (boxing each pair was measurably slower). The winnow pass keys its
+  * buckets by (fingerprint, group) but exchanges on the fingerprint alone,
+  * so the same walk also counts the fingerprint's document frequency across
+  * groups and drops it above the cap ([[pairsFromCappedBuckets]]): the
+  * fingerprint rows cross one exchange, with no df aggregate or anti join.
   *
   * Exact duplicates should be collapsed to one representative per content
   * hash BEFORE this runs (see [[Pipeline]]) — otherwise a 100k-copy file
@@ -127,18 +131,67 @@ object PairGen {
     }
   }
 
-  /** Exchange + sort `rows` (keyCols ++ doc_id: long ++ whatever the keep
-    * rule reads) on the bucket key, walk the buckets, and fan the walk rows
-    * out to distinct (a, b), a < b. `keep` is built once per partition. */
-  private def walk(rows: DataFrame, keyCols: Seq[String], cap: Int, keep: () => Option[FirstCollision]): DataFrame = {
-    val keys = keyCols.map(col)
-    val nKeys = keys.length
+  /** Drops each run of rows sharing key columns 0 until nKeys that holds
+    * more than `maxRows` rows and passes every other run through in order.
+    * A run is buffered until it closes or crosses `maxRows`; past that the
+    * buffer is dropped and the rest of the run streams by unkept, so memory
+    * stays at maxRows + 1 rows however long the run. */
+  private[dedup] final class RunCap(rows: Iterator[Row], nKeys: Int, maxRows: Int) extends Iterator[Row] {
+    private var ahead: Row = null // first row of the next run, read ahead
+    private var pending: Iterator[Row] = Iterator.empty
+
+    private def sameKey(a: Row, b: Row): Boolean = {
+      var i = 0
+      while (i < nKeys && a.get(i) == b.get(i)) i += 1
+      i == nKeys
+    }
+
+    private def advance(): Unit =
+      while (!pending.hasNext && (ahead != null || rows.hasNext)) {
+        val first = if (ahead != null) ahead else rows.next()
+        ahead = null
+        val run = ArrayBuffer(first)
+        var over = run.length > maxRows
+        while (ahead == null && rows.hasNext) {
+          val r = rows.next()
+          if (!sameKey(first, r)) ahead = r
+          else if (!over) {
+            run += r
+            over = run.length > maxRows
+          }
+        }
+        if (!over) pending = run.iterator
+      }
+
+    def hasNext: Boolean = {
+      if (!pending.hasNext) advance()
+      pending.hasNext
+    }
+    def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException
+      pending.next()
+    }
+  }
+
+  /** The fingerprint walk: rows sorted by (df key at 0, bucket key columns
+    * 1 until nKeys, doc_id at nKeys). Drops every df key held by more than
+    * `maxDf` rows ([[RunCap]]), then walks each (df key, bucket key) bucket
+    * of the rest with [[BucketWalk]]'s cap and chain rules. */
+  private[dedup] def cappedWalk(rows: Iterator[Row], nKeys: Int, maxDf: Int, cap: Int): Iterator[(Long, Array[Long])] =
+    new BucketWalk(new RunCap(rows, 1, maxDf), nKeys, cap, None)
+
+  /** Exchange `rows` (keyCols ++ doc_id: long ++ whatever the walk reads)
+    * on `exchangeCols` (a prefix of keyCols), sort each partition by
+    * (keyCols, doc_id), walk it, and fan the walk rows out to distinct
+    * (a, b), a < b. `walker` runs once per partition. */
+  private def walk(rows: DataFrame, exchangeCols: Seq[String], keyCols: Seq[String])(
+      walker: Iterator[Row] => Iterator[(Long, Array[Long])]): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
     rows
-      .repartition(keys: _*)
-      .sortWithinPartitions(keys :+ col("doc_id"): _*)
-      .mapPartitions(it => new BucketWalk(it, nKeys, cap, keep()))
+      .repartition(exchangeCols.map(col): _*)
+      .sortWithinPartitions((keyCols :+ "doc_id").map(col): _*)
+      .mapPartitions(walker)
       .toDF("x", "ys")
       // quadratic fan-out in codegen over primitive arrays, not in the JVM
       // iterator; chain rows arrive (later, earlier) so orient explicitly
@@ -150,8 +203,27 @@ object PairGen {
   private def docId = col("doc_id").cast("long").as("doc_id")
 
   /** rows: bucket key columns + `doc_id`. Returns distinct (a, b), a < b. */
-  def pairsFromBuckets(rows: DataFrame, bucketCols: Seq[String], maxBucket: Int): DataFrame =
-    walk(rows.select(bucketCols.map(col) :+ docId: _*), bucketCols, maxBucket, () => None)
+  def pairsFromBuckets(rows: DataFrame, bucketCols: Seq[String], maxBucket: Int): DataFrame = {
+    val nKeys = bucketCols.length
+    walk(rows.select(bucketCols.map(col) :+ docId: _*), bucketCols, bucketCols)(
+      it => new BucketWalk(it, nKeys, maxBucket, None))
+  }
+
+  /** [[pairsFromBuckets]] over (dfCol ++ bucketCols) buckets, keeping only
+    * `dfCol` values held by at most `maxDf` rows, in ONE exchange: the rows
+    * exchange on `dfCol` alone, sort by (dfCol, bucketCols, doc_id), and
+    * [[cappedWalk]] counts each value's rows as it streams — no aggregate,
+    * no anti join, no second pass over the rows. A hot value (far above
+    * `maxDf`) streams through one task in O(maxDf) memory: the same skew
+    * posture as [[BucketWalk]]'s oversized buckets. rows: dfCol, bucketCols,
+    * `doc_id`. Returns distinct (a, b), a < b. */
+  def pairsFromCappedBuckets(rows: DataFrame, dfCol: String, bucketCols: Seq[String], maxDf: Int,
+      maxBucket: Int): DataFrame = {
+    val keyCols = dfCol +: bucketCols
+    val nKeys = keyCols.length
+    walk(rows.select(keyCols.map(col) :+ docId: _*), Seq(dfCol), keyCols)(
+      it => cappedWalk(it, nKeys, maxDf, maxBucket))
+  }
 
   /** Broadcastable oversized-bucket sets above this size fall back to
     * [[pairsFromBuckets]] (correctness never depends on the fast path). */
@@ -230,8 +302,9 @@ object PairGen {
     if (oversized.length > OversizedBroadcastMax)
       return pairsFromBuckets(rows.drop("bhs"), keyCols, maxBucket)
     val nGroup = groupCols.length
+    val nKeys = keyCols.length
     val bOversized = rows.sparkSession.sparkContext.broadcast(oversized.map(_.toSeq).toSet)
-    walk(rows.select(keys ++ Seq(docId, col("bhs")): _*), keyCols, maxBucket,
-      () => Some(new FirstCollision(nGroup, bOversized.value)))
+    walk(rows.select(keys ++ Seq(docId, col("bhs")): _*), keyCols, keyCols)(
+      it => new BucketWalk(it, nKeys, maxBucket, Some(new FirstCollision(nGroup, bOversized.value))))
   }
 }

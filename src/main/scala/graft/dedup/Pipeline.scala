@@ -175,11 +175,16 @@ object Pipeline {
     * key AND the kept row's content hash. The key is one struct column:
     * struct equality treats NULL fields as equal, so null-key docs match as
     * they do in the id join, and the join reads the dedup's hash
-    * partitioning instead of shuffling content again. */
+    * partitioning instead of shuffling content again.
+    *
+    * On a byte-small input that exchange is also the verify's spread
+    * ([[Par.spreadBy]]): `defaultParallelism` partitions AQE cannot
+    * coalesce, so [[SuffixDedup.run]]'s own [[Par.spread]] finds the rows
+    * spread and content crosses one exchange in all. */
   private def substringInput(input: DataFrame, docs: DataFrame): DataFrame = {
     val key = struct(col("repo"), col("path"), col("commit")).as("__key")
-    input
-      .select(key, sha2(col("content"), 256).as("content_sha"), col("content"))
+    val payload = input.select(key, sha2(col("content"), 256).as("content_sha"), col("content"))
+    Par.spreadBy(payload, col("__key"), col("content_sha"))
       // exact repeats of one (key, content) would each match the doc
       .dropDuplicates("__key", "content_sha")
       .join(docs.select(key, col("content_sha"), col("doc_id"), col("group")), Seq("__key", "content_sha"))

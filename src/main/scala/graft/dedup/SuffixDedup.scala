@@ -19,7 +19,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     (~2/window per char), and bucketing them is one shuffle.
   *  2. boilerplate control: fingerprints present in more than `maxFpDf` docs
   *     are dropped (license headers would otherwise bucket half the corpus —
-  *     same idea as the vocabulary max-df cap).
+  *     same idea as the vocabulary max-df cap). The cap is counted inside
+  *     the bucket walk of step 1's one shuffle, which exchanges on the
+  *     fingerprint alone ([[PairGen.pairsFromCappedBuckets]]): a hot
+  *     fingerprint streams through one task in O(`maxFpDf`) memory, the same
+  *     skew posture as the LSH walk's oversized buckets.
   *  3. exact verification per candidate pair with a SUFFIX AUTOMATON of the
   *     shorter content run over the longer — O(|a|+|b|) longest-common-
   *     substring, no quadratic DP. Pairs with LCS >= minMatch are emitted
@@ -205,29 +209,21 @@ object SuffixDedup {
     * pairs (a, b). Deterministic function of (content, k, window, maxFpDf) —
     * oracle-able in ANSI SQL whenever no (group, fp) bucket exceeds
     * `maxBucket` (guaranteed when maxFpDf <= maxBucket, since a bucket's size
-    * is bounded by the fingerprint's document frequency). */
+    * is bounded by the fingerprint's document frequency). The df counts
+    * docs across groups; buckets are per (group, fp). The fingerprint rows
+    * are consumed once, by the walk, so nothing is persisted (`reg` is kept
+    * for callers that pass one). */
   def candidatePairs(
       docs: DataFrame,
       cfg: SubConfig = SubConfig(),
       reg: CacheRegistry = CacheRegistry.unmanaged
   ): DataFrame = {
-    // persisted: the rolling-hash + winnow kernel dominates candidate cost
-    // and the fingerprint table is consumed twice (df cap aggregate + anti
-    // join); Spark's cache manager also shares this plan across the q31
-    // family in one session. Lifetime is caller-owned via `reg`.
-    val fps = reg.persist(
-      docs.select(
-        col("doc_id"),
-        col("group"),
-        explode(WinnowFingerprints(col("content"), cfg.k, cfg.window)).as("fp")
-      )
+    val fps = docs.select(
+      col("doc_id"),
+      col("group"),
+      explode(WinnowFingerprints(col("content"), cfg.k, cfg.window)).as("fp")
     )
-
-    // boilerplate cap: drop fingerprints shared by too many docs
-    val common = fps.groupBy("fp").agg(count(lit(1)).as("df")).filter(col("df") > cfg.maxFpDf)
-    val kept = fps.join(common.select("fp"), Seq("fp"), "left_anti")
-
-    PairGen.pairsFromBuckets(kept, Seq("group", "fp"), cfg.maxBucket)
+    PairGen.pairsFromCappedBuckets(fps, "fp", Seq("group"), cfg.maxFpDf, cfg.maxBucket)
   }
 
   /** docs: (doc_id, group, content). Returns (group, a, b, lcs_len,
@@ -249,26 +245,28 @@ object SuffixDedup {
     // 0.9 s vs 12 s depending on which side was built). Par.spread
     // repartitions an input only when its plan's leaf size estimates sum to
     // less than spark.sql.files.maxPartitionBytes x cores (a no-op at
-    // scale). The spread docs are persisted and read by the fingerprint
-    // branch and both content sides, so content crosses that exchange once.
+    // scale), and leaves an input that is already spread as it is (the
+    // pipeline's substring input arrives spread by its dedup exchange). The
+    // docs are persisted and read by the fingerprint branch and both
+    // content sides, so content crosses at most one exchange.
     val ds = reg.persist(Par.spread(docs))
-    val candidates = Par.spread(precomputedCandidates.getOrElse(candidatePairs(ds, cfg, reg)))
+    val candidates = Par.spread(precomputedCandidates.getOrElse(candidatePairs(ds, cfg)))
     val minMatch = cfg.minMatch
-    val lcsUdf = udf((x: String, y: String) =>
-      if (x.length <= y.length) lcsLen(x, y) else lcsLen(y, x)
-    ).asNondeterministic() // runs once per candidate (KernelCall)
+    // (lcs_len, the shorter doc's length), both in the UTF-16 units lcsLen
+    // counts (a non-BMP char is 2), so containment stays <= 1
+    val lcsUdf = udf { (x: String, y: String) =>
+      val (s, t) = if (x.length <= y.length) (x, y) else (y, x)
+      (lcsLen(s, t), s.length)
+    }.asNonNullable().asNondeterministic() // runs once per candidate (KernelCall)
     val ca = ds.select(col("doc_id").as("a"), col("group"), col("content").as("content_a"))
     val cb = ds.select(col("doc_id").as("b"), col("content").as("content_b"))
     candidates
       .join(ca, "a")
       .join(cb, "b")
-      .withColumn("lcs_len", lcsUdf(col("content_a"), col("content_b")))
-      .filter(col("lcs_len") >= minMatch)
-      .withColumn(
-        "containment",
-        col("lcs_len").cast("double") / least(length(col("content_a")), length(col("content_b")))
-      )
-      .select(col("group"), col("a"), col("b"), col("lcs_len"), col("containment"))
+      .withColumn("lcs", lcsUdf(col("content_a"), col("content_b")))
+      .filter(col("lcs._1") >= minMatch)
+      .select(col("group"), col("a"), col("b"), col("lcs._1").as("lcs_len"),
+        (col("lcs._1").cast("double") / col("lcs._2")).as("containment"))
   }
 }
 

@@ -500,6 +500,25 @@ class PipelineParitySpec extends SparkSpec {
     assert(copied.isEmpty, s"kernel calls held by more than one operator:\n${copied.mkString("\n")}")
   }
 
+  test("substring dedup moves content through one shuffle and fingerprint rows through one") {
+    val dir = tmpDir("graft-substring-shuffles")
+    // a third of the files open with one license header: its fingerprints
+    // are in more than maxFpDf = 200 docs, so the df cap drops some
+    spark.createDataFrame(Twins.corpusLocal(700)).write.parquet(s"$dir/input")
+    val (t, plans) = withExecutedPlans(
+      Pipeline.run(spark, spark.read.parquet(s"$dir/input"), cfg.copy(substringDedup = true), s"$dir/work"))
+    assert(!t.substring.get.isEmpty)
+    // the substring stage's write is the plan that runs the winnow kernel;
+    // planNodes includes the cached docs' plan, where content is exchanged
+    val stage = plans.filter(kernelCalls(_, WinnowKernel.getClass) > 0)
+    assert(stage.size == 1, s"${stage.size} plans run the winnow kernel")
+    val plan = stage.head
+    val content = shufflesCarrying(plan, "content")
+    assert(content.size == 1, s"${content.size} content shuffles:\n${content.mkString("\n")}\nin:\n$plan")
+    val fps = shufflesCarrying(plan, "fp")
+    assert(fps.size == 1, s"${fps.size} fingerprint shuffles:\n${fps.mkString("\n")}\nin:\n$plan")
+  }
+
   /** Each stage's rows, schema and `_metrics` rows against `want` rows per
     * stage and the schema the stage has on a non-empty corpus. */
   private def assertStages(t: Pipeline.Tables, ref: Pipeline.Tables, work: String, want: Map[String, Long]): Unit = {

@@ -54,7 +54,10 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** The shuffle exchanges of `df`'s executed plan (run it first) whose rows
     * carry a column named `column` or starting with `column_`. */
   def shufflesCarrying(df: DataFrame, column: String): Seq[SparkPlan] =
-    planNodes(df.queryExecution.executedPlan).collect {
+    shufflesCarrying(df.queryExecution.executedPlan, column)
+
+  def shufflesCarrying(plan: SparkPlan, column: String): Seq[SparkPlan] =
+    planNodes(plan).collect {
       case e: ShuffleExchangeLike if e.output.exists(a => a.name == column || a.name.startsWith(column + "_")) => e
     }
 

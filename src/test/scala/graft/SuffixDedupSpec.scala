@@ -75,6 +75,23 @@ class SuffixDedupSpec extends SparkSpec {
     } finally reg.release()
   }
 
+  test("containment counts the LCS and the shorter doc in one unit: <= 1.0 on non-BMP content") {
+    // U+1F600 is one code point, two UTF-16 units
+    val emoji = "\uD83D\uDE00" * 60
+    val ascii = "the quick brown fox jumps over the lazy dog " * 4
+    val rows = Seq(
+      (0L, "g", emoji), (1L, "g", emoji + " tail"),
+      (2L, "g", ascii), (3L, "g", ascii + ascii.take(40) + " tail")
+    )
+    val got = SuffixDedup.run(spark.createDataFrame(rows).toDF("doc_id", "group", "content"))
+      .collect().map(r => (r.getLong(1), r.getLong(2)) -> (r.getInt(3), r.getDouble(4))).toMap
+    assert(got.keySet == Set((0L, 1L), (2L, 3L)), s"pairs: $got")
+    assert(got((0L, 1L)) == ((120, 1.0)), s"emoji pair: ${got((0L, 1L))}")
+    // ASCII: the shorter doc's chars, as before
+    assert(got((2L, 3L)) == ((ascii.length, 1.0)), s"ASCII pair: ${got((2L, 3L))}")
+    assert(got.values.forall(_._2 <= 1.0))
+  }
+
   test("winnowing guarantee: shared substring >= k+window-1 shares a fingerprint") {
     val rnd = new scala.util.Random(7)
     val shared = Array.fill(200)(('a' + rnd.nextInt(26)).toChar).mkString

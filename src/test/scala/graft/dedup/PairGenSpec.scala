@@ -1,13 +1,16 @@
 package graft.dedup
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.Row
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Properties of PairGen's bucket walk, driven with Rows directly (no Spark
-  * session): the cap/chain semantics against a naive per-bucket oracle, and
-  * the first-collision keep rule against the keep-all walk. */
+  * session): the cap/chain semantics against a naive per-bucket oracle, the
+  * first-collision keep rule against the keep-all walk, and the fingerprint
+  * walk's df cap against a naive global-df oracle. */
 class PairGenSpec extends AnyFunSuite {
 
   private def check(prop: Prop, n: Int): Unit = {
@@ -77,5 +80,41 @@ class PairGenSpec extends AnyFunSuite {
       (got.toSet == plain && exact.toSet == plain && onceEach) :|
         s"cap=$cap extra=${got.toSet -- plain} missing=${plain -- got.toSet} dupes=${exact.length - exact.distinct.length}"
     }, 1000)
+  }
+
+  test("fingerprint walk: a df cap across groups, then (group, fp) buckets, equals a naive oracle") {
+    val (atCap, overCap, nullPairs, chained) =
+      (new AtomicInteger, new AtomicInteger, new AtomicInteger, new AtomicInteger)
+    val fpValues = Seq(Long.MinValue, -7L, 0L, 3L, 1L << 40, Long.MaxValue)
+    val gen = for {
+      maxDf <- Gen.choose(0, 6)
+      // a cap under maxDf lets a kept fingerprint's bucket take the chain path
+      cap <- Gen.oneOf(Gen.choose(0, 8), Gen.choose(0, math.max(0, maxDf - 1)))
+      groupOf <- Gen.listOfN(41, Gen.oneOf[String]("g0", "g1", null))
+      nFps <- Gen.choose(1, fpValues.size)
+      fps <- Gen.pick(nFps, fpValues)
+      docs <- Gen.listOfN(nFps, for {
+        df <- Gen.oneOf(Gen.const(maxDf), Gen.const(maxDf + 1), Gen.choose(1, 2 * maxDf + 3))
+        ids <- Gen.pick(df, 0L to 40L)
+      } yield ids.toSeq)
+    } yield (maxDf, cap, fps.toSeq.zip(docs).flatMap { case (fp, ids) => ids.map(id => (fp, groupOf(id.toInt), id)) })
+    check(Prop.forAllNoShrink(gen) { case (maxDf, cap, rows) =>
+      // the walk's input order: (fp, group with NULL first, doc_id)
+      val sorted = rows.sortBy { case (fp, g, id) => (fp, Option(g), id) }
+      val got = emitted(PairGen.cappedWalk(sorted.iterator.map { case (fp, g, id) => Row(fp, g, id) }, 2, maxDf, cap)).toSet
+      // oracle: the df of a fingerprint counts its docs in every group
+      val df = rows.groupBy(_._1).view.mapValues(_.size).toMap
+      val buckets = rows.filter(r => df(r._1) <= maxDf).groupBy(r => (r._2, r._1)).values.map(_.map(_._3).sorted)
+      val want = buckets.flatMap(oracle(_, cap)).toSet
+      if (df.values.exists(n => n == maxDf && n > 0)) atCap.incrementAndGet()
+      if (df.values.exists(_ == maxDf + 1)) overCap.incrementAndGet()
+      if (rows.exists(r => r._2 == null && df(r._1) <= maxDf) && want.nonEmpty) nullPairs.incrementAndGet()
+      if (buckets.exists(b => b.size > cap && b.size > 1)) chained.incrementAndGet()
+      (got == want) :| s"maxDf=$maxDf cap=$cap extra=${got -- want} missing=${want -- got}"
+    }, 1000)
+    Seq("df = maxFpDf kept" -> atCap, "df = maxFpDf + 1 dropped" -> overCap,
+      "NULL-group rows kept" -> nullPairs, "a kept bucket over the cap" -> chained).foreach { case (what, n) =>
+      assert(n.get >= 100, s"only ${n.get} of 1000 cases had $what")
+    }
   }
 }
