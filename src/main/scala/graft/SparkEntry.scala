@@ -318,9 +318,9 @@ object SparkEntry {
         t(s, dir, "documents").select(col("doc_id"), col("n_chars")),
         "n_chars"
       )),
-    // Training-shard sequence packing: global token-offset prefix sum in the
-    // scalable two-pass form (range partition + per-partition sums + driver
-    // fold; NO single-partition window), budget 4096 tokens per shard.
+    // Training-shard sequence packing: the global token-offset prefix sum is
+    // Ids.prefixSum weighted by token count (the dense ids' two-pass stamp;
+    // NO single-partition window), budget 4096 tokens per shard.
     "q43_shard_pack" -> ((s, dir) =>
       ShardPack.pack(
         t(s, dir, "documents")

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -76,7 +77,8 @@ object Checkpoints {
       configSig: String = ""
   )(build: => DataFrame): DataFrame = {
     val complete = exists(spark, path)
-    val staleCfg = if (complete) storedSigMismatch(spark, path, configSig) else None
+    val manifest = if (complete) readManifest(spark, path) else None
+    val staleCfg = manifest.flatMap(storedSigMismatch(_, configSig))
     staleCfg.foreach { stored =>
       System.err.println(
         s"[graft] stage '$name' at $path was checkpointed under a different config " +
@@ -104,7 +106,7 @@ object Checkpoints {
       writeSidecars(spark, name, path, inputs, wallMs, configSig, Some(schema), counts)
       Some(schema)
     } else {
-      val stored = storedSchema(spark, path)
+      val stored = manifest.flatMap(storedSchema)
       // heal a run killed between data commit and sidecar write: the stage
       // itself is complete (atomic _SUCCESS), only the sidecar is missing.
       // (Known double-fault gap: the healed manifest stamps the CURRENT
@@ -164,22 +166,21 @@ object Checkpoints {
     val column = udaf(this, Encoders.STRING)
   }
 
-  private def lineageText(spark: SparkSession, path: String): Option[String] = {
+  /** A stage's lineage manifest, parsed, if it has one. */
+  private def readManifest(spark: SparkSession, path: String): Option[JsonNode] = {
     val lp = new Path(path + "_lineage.json")
     val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(lp)) None
     else {
       val in = fs.open(lp)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8))
+      try Some(new ObjectMapper().readTree(in))
       finally in.close()
     }
   }
 
   /** The read-back schema recorded in a stage's lineage manifest, if any. */
-  private def storedSchema(spark: SparkSession, path: String): Option[StructType] =
-    lineageText(spark, path)
-      .flatMap(t => Option(new com.fasterxml.jackson.databind.ObjectMapper().readTree(t).get("schema")))
-      .map(node => DataType.fromJson(node.toString).asInstanceOf[StructType])
+  private def storedSchema(manifest: JsonNode): Option[StructType] =
+    Option(manifest.get("schema")).map(node => DataType.fromJson(node.toString).asInstanceOf[StructType])
 
   private def sha256Hex(s: String): String =
     java.security.MessageDigest
@@ -190,27 +191,14 @@ object Checkpoints {
 
   /** Some(storedConfigString) when the stage's lineage manifest records a
     * DIFFERENT config sig than the current run's; None when it matches or
-    * cannot be checked. Comparison uses the sig's sha-256 (fixed charset —
-    * immune to whatever characters the sig itself contains); manifests
-    * without a sig (pre-guard runs, ad-hoc stages) are accepted as-is. */
-  private def storedSigMismatch(
-      spark: SparkSession,
-      path: String,
-      configSig: String
-  ): Option[String] = {
-    if (configSig.isEmpty) return None
-    val txt = lineageText(spark, path).getOrElse(return None)
-    "\"config_sha\":\"([0-9a-f]{64})\"".r.findFirstMatchIn(txt).flatMap { m =>
-      if (m.group(1) == sha256Hex(configSig)) None
-      else
-        Some(
-          "\"config\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-            .findFirstMatchIn(txt)
-            .map(_.group(1))
-            .getOrElse("<unavailable>")
-        )
-    }
-  }
+    * cannot be checked. Comparison uses the sig's sha-256; manifests without
+    * a sig (pre-guard runs, ad-hoc stages) are accepted as-is. */
+  private def storedSigMismatch(manifest: JsonNode, configSig: String): Option[String] =
+    if (configSig.isEmpty) None
+    else
+      Option(manifest.get("config_sha")).map(_.asText).filter(_ != sha256Hex(configSig)).map { _ =>
+        Option(manifest.get("config")).map(_.asText).getOrElse("<unavailable>")
+      }
 
   /** The `_metrics` table of a stage. */
   private val MetricsSchema = StructType(Seq(

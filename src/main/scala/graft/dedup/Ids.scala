@@ -1,10 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Deterministic dense Long id assignment at cluster scale.
+/** Deterministic dense Long ids and global ordered prefix sums at cluster
+  * scale.
   *
   * The reference assigns ids by line position in a single file
   * (code/Stage02CodifyIdxPatents.py:61-85) — inherently single-node. The
@@ -12,17 +13,18 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (nondeterministic under retries / partition changes) and a global
   * single-partition `row_number()` window (all rows through one task).
   *
-  * Two paths, one contract (ids = dense rank over the distinct sort-key
-  * tuples, in key order — a pure function of the input's key set):
+  * [[prefixSum]] is the one two-pass stamp; a dense id is its sum of 1 per
+  * row (ids = dense rank over the distinct sort-key tuples, in key order —
+  * a pure function of the input's key set). The id entry points differ
+  * only in what they persist and what reaches the stamp:
   *
-  *  - [[assignDense]]: direct two-pass stamp for SKINNY inputs whose keys
-  *    are already unique (vocabulary rows, element-df tables). One range
-  *    shuffle; the input is persisted so the sampling pass does not re-run
-  *    an expensive upstream lineage.
-  *  - [[assignDenseByKey]]: for WIDE payload rows (the corpus). The payload
-  *    never enters the id machinery — only the key projection flows through
-  *    the stamp; the payload is not persisted and pays exactly one hash
-  *    shuffle (the id join) unless keys repeat.
+  *  - [[assignDense]]: SKINNY inputs whose keys are already unique
+  *    (vocabulary rows, element-df tables). The input is persisted so the
+  *    range sampling pass does not re-run an expensive upstream lineage.
+  *  - [[assignDenseByKey]]: WIDE payload rows (the corpus). The payload
+  *    never enters the stamp — only the key projection does; the payload is
+  *    not persisted and pays exactly one hash shuffle (the id join) unless
+  *    keys repeat.
   */
 object Ids {
 
@@ -56,7 +58,7 @@ object Ids {
     // the sampling pass of repartitionByRange re-executes the input lineage;
     // persist so an upstream aggregate is computed once
     val input = reg.persist(df)
-    stampDense(input, sortCols, idCol, reg)
+    prefixSum(input, sortCols, lit(1L), idCol, reg)
   }
 
   /** Id assignment for wide rows: count and stamp the SKINNY key projection
@@ -77,7 +79,7 @@ object Ids {
       reg: CacheRegistry = CacheRegistry.unmanaged
   ): DataFrame = {
     val keyCnt = df.groupBy(sortCols.map(col): _*).agg(count(lit(1)).as("__cnt"))
-    val keyIds = stampDense(keyCnt, sortCols, idCol, reg)._1
+    val keyIds = prefixSum(keyCnt, sortCols, lit(1L), idCol, reg)._1
     val hasDups = keyIds.filter(col("__cnt") > 1).limit(1).count() > 0
     val deduped = if (hasDups) df.dropDuplicates(sortCols) else df
     val right = keyIds
@@ -93,11 +95,21 @@ object Ids {
       .select(df.columns.map(col) :+ col(idCol): _*)
   }
 
-  /** Two-pass dense stamp over rows unique by `sortCols`: range-partition +
-    * sort (one shuffle), count rows per partition (narrow job over the
-    * cached sorted copy), fold counts into start offsets on the driver
-    * (O(#partitions) state), stamp offset + local index (second narrow
-    * job). The persist pins the partitioning both jobs must share.
+  /** The one global ordered prefix sum. `df`'s rows must be UNIQUE by
+    * `sortCols`; `weight` is a non-null, non-negative long per row. Each
+    * row gains `outCol` = the sum of `weight` over every row earlier in
+    * `sortCols` order; the returned Long is the total weight. A dense id is
+    * `prefixSum` with weight `lit(1L)`; q43's shard layout
+    * ([[graft.ops.ShardPack]]) is the same sum over token counts.
+    *
+    * Two passes, never a single-partition window: range-partition + sort
+    * (one shuffle), sum the weights per partition (narrow job over the
+    * cached sorted copy), fold the sums into start offsets on the driver
+    * (O(#partitions) state), stamp offset + the weights before each row in
+    * its partition (second narrow job). The persist pins the sampled
+    * partitioning both jobs must share. A literal weight is read on the
+    * driver and never enters the cached rows (a dense id's plan is the
+    * plain stamp's); any other weight is stored beside the partition id.
     *
     * The partition id is MATERIALIZED INTO THE CACHED ROWS
     * (spark_partition_id() at cache-build time), not read from TaskContext
@@ -105,40 +117,43 @@ object Ids {
     * partition id, and a downstream no-shuffle coalesce() fuses many parent
     * partitions into one task — every parent would then read the same
     * (coalesced) id and restart from the same offset, silently DUPLICATING
-    * ids. A fused coalesce still invokes the stamp function once per parent
-    * split with that split's rows, so reading the stored pid from the rows
-    * is correct under any downstream plan (the bug was latent here only
-    * because every current caller shuffles a stamped output before any
-    * sink; ShardPack hit it for real under the driver's coalesce(1)). */
-  private def stampDense(
-      input: DataFrame,
+    * ids and offsets. A fused coalesce still invokes the stamp function once
+    * per parent split with that split's rows, so reading the stored pid
+    * from the rows is correct under any downstream plan (`graft.Verify`
+    * writes every query through exactly such a coalesce(1)). */
+  def prefixSum(
+      df: DataFrame,
       sortCols: Seq[String],
-      idCol: String,
-      reg: CacheRegistry
+      weight: Column,
+      outCol: String,
+      reg: CacheRegistry = CacheRegistry.unmanaged
   ): (DataFrame, Long) = {
     val cols = sortCols.map(col)
-    val sorted = reg.persist(
-      input
-        .repartitionByRange(cols: _*)
-        .sortWithinPartitions(cols: _*)
-        .withColumn("__pid", spark_partition_id())
-    )
+    val constant = GraftBridge.literal(weight).map(_.asInstanceOf[Number].longValue)
+    val ranged = df.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
+    val weighted = if (constant.isEmpty) ranged.withColumn("__w", weight.cast(LongType)) else ranged
+    val sorted = reg.persist(weighted.withColumn("__pid", spark_partition_id()))
+    val width = df.columns.length
     val pidIdx = sorted.schema.fieldIndex("__pid")
+    val weightOf: Row => Long = constant match {
+      case Some(w) => _ => w
+      case None => val wIdx = sorted.schema.fieldIndex("__w"); _.getLong(wIdx)
+    }
 
-    // per-partition counts over the CACHED sorted copy. Dataset.mapPartitions,
+    // per-partition sums over the CACHED sorted copy. Dataset.mapPartitions,
     // not queryExecution.toRdd: a Dataset action plans through the cache
     // manager and scans the InMemoryRelation, while toRdd on a fresh
     // QueryExecution re-executed the whole upstream lineage — profiled as a
     // +70% vocab-stage wall in the round-4 bench before this fix.
     import org.apache.spark.sql.Encoders.{scalaInt, scalaLong, tuple}
-    val counts: Array[(Int, Long)] = sorted
+    val sums: Array[(Int, Long)] = sorted
       .mapPartitions { it =>
         if (!it.hasNext) Iterator.empty
         else {
-          var n = 0L
+          var s = 0L
           var pid = -1
-          while (it.hasNext) { pid = it.next().getInt(pidIdx); n += 1 }
-          Iterator.single((pid, n))
+          while (it.hasNext) { val r = it.next(); pid = r.getInt(pidIdx); s += weightOf(r) }
+          Iterator.single((pid, s))
         }
       }(tuple(scalaInt, scalaLong))
       .collect()
@@ -146,23 +161,20 @@ object Ids {
 
     val offsets: Map[Int, Long] = {
       var acc = 0L
-      counts.map { case (pid, n) => val o = (pid, acc); acc += n; o }.toMap
+      sums.map { case (pid, s) => val o = (pid, acc); acc += s; o }.toMap
     }
-    val bOffsets = input.sparkSession.sparkContext.broadcast(offsets)
+    val bOffsets = df.sparkSession.sparkContext.broadcast(offsets)
 
-    val outSchema = StructType(
-      sorted.schema.fields.filterNot(_.name == "__pid") :+
-        StructField(idCol, LongType, nullable = false)
-    )
+    val outSchema = StructType(df.schema.fields :+ StructField(outCol, LongType, nullable = false))
     val stamped = sorted.mapPartitions { it =>
       var next = -1L
       it.map { r =>
         if (next < 0) next = bOffsets.value.getOrElse(r.getInt(pidIdx), 0L)
-        val out = Row.fromSeq(r.toSeq.patch(pidIdx, Nil, 1) :+ next)
-        next += 1
+        val out = Row.fromSeq(r.toSeq.take(width) :+ next)
+        next += weightOf(r)
         out
       }
     }(Encoders.row(outSchema))
-    (stamped, counts.foldLeft(0L)(_ + _._2))
+    (stamped, sums.foldLeft(0L)(_ + _._2))
   }
 }

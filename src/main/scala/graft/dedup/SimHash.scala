@@ -27,24 +27,6 @@ object SimHash {
     z ^ (z >>> 31)
   }
 
-  def simhash64(tokens: Array[Int], seed: Long): Long = {
-    val votes = new Array[Int](64)
-    var t = 0
-    while (t < tokens.length) {
-      val h = mix64(tokens(t).toLong ^ seed)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      t += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
-
   def withSimhash(encoded: DataFrame, cfg: Config): DataFrame =
     // compiled kernel call, not a UDF: no per-element boxing (see HashKernels)
     encoded.withColumn("simhash", SimHash64(col("tokens"), cfg))

@@ -1,9 +1,8 @@
 package graft.ops
 
-import graft.dedup.CacheRegistry
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.dedup.{CacheRegistry, Ids}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Training-shard sequence packing: documents are laid out in one global
   * deterministic order, their token streams conceptually concatenated, and
@@ -11,26 +10,21 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * where its FIRST token lands (the GPT-style pretraining shard layout:
   * shards are fixed token budgets, documents straddle boundaries rather
   * than leaving tail padding). Emits each row's global `token_offset` and
-  * `shard_id = token_offset / budget`.
+  * `shard_id = token_offset div budget`.
   *
-  * The operation is a GLOBAL ORDERED PREFIX SUM — the canonical trap is
+  * The offset is a GLOBAL ORDERED PREFIX SUM — the canonical trap is
   * `Window.orderBy(id)` with no partition key, which Spark executes as a
-  * single-partition sort (one task owns 100 TB). This implementation uses
-  * the two-pass distributed form instead (same shape as the dense-id stamp
-  * in [[graft.dedup.Ids]]): range-partition + in-partition sort (ONE
-  * shuffle), a narrow per-partition weight-sum job over the cached sorted
-  * copy, an O(#partitions) driver fold into start offsets, then a narrow
-  * stamping pass seeded with the broadcast offsets. Driver state is one
-  * long per partition, so the plan survives arbitrary scale-up.
+  * single-partition sort (one task owns 100 TB). It is [[Ids.prefixSum]],
+  * the distributed two-pass form the dense ids use, weighted by the token
+  * count.
   */
 object ShardPack {
 
   /** Pack rows (unique by `orderCol`) into shards of `budget` weight units.
     * Output columns: the input's, plus `token_offset` (sum of `weightCol`
     * over all rows strictly before this one in `orderCol` order) and
-    * `shard_id` (= token_offset / budget). `reg` owns the scaffolding
-    * persist that pins the sampled range partitioning across the two jobs
-    * (exactly the [[graft.dedup.Ids]] invariant). */
+    * `shard_id` (= token_offset div budget, a bigint). `reg` owns the
+    * prefix sum's scaffolding persist. */
   def pack(
       df: DataFrame,
       orderCol: String,
@@ -39,57 +33,8 @@ object ShardPack {
       reg: CacheRegistry = CacheRegistry.unmanaged
   ): DataFrame = {
     require(budget > 0, s"shard budget must be positive, got $budget")
-    // The partition id is MATERIALIZED INTO THE CACHED ROWS, not read from
-    // TaskContext at stamp time: TaskContext.getPartitionId() returns the
-    // TASK's partition id, and a downstream no-shuffle coalesce() fuses many
-    // parent partitions into one task — every parent would then read the
-    // same (coalesced) id and restart from the same offset, silently
-    // corrupting the prefix sum (caught by the driver's coalesce(1) sink).
-    // A fused coalesce still invokes this function once per PARENT split
-    // with that split's rows, so reading the stored pid from the rows is
-    // correct under any downstream plan.
-    val sorted = reg.persist(
-      df.repartitionByRange(col(orderCol))
-        .sortWithinPartitions(col(orderCol))
-        .withColumn("__pid", spark_partition_id())
-    )
-    val wIdx = sorted.schema.fieldIndex(weightCol)
-    val pidIdx = sorted.schema.fieldIndex("__pid")
-
-    import org.apache.spark.sql.Encoders.{scalaInt, scalaLong, tuple}
-    val partSums: Array[(Int, Long)] = sorted
-      .mapPartitions { it =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          var s = 0L
-          var pid = -1
-          while (it.hasNext) { val r = it.next(); pid = r.getInt(pidIdx); s += r.getLong(wIdx) }
-          Iterator.single((pid, s))
-        }
-      }(tuple(scalaInt, scalaLong))
-      .collect()
-      .sortBy(_._1)
-
-    val offsets: Map[Int, Long] = {
-      var acc = 0L
-      partSums.map { case (pid, s) => val o = (pid, acc); acc += s; o }.toMap
-    }
-    val bOffsets = df.sparkSession.sparkContext.broadcast(offsets)
-
-    val outSchema = StructType(
-      sorted.schema.fields.filterNot(_.name == "__pid") ++ Seq(
-        StructField("token_offset", LongType, nullable = false),
-        StructField("shard_id", LongType, nullable = false)
-      )
-    )
-    sorted.mapPartitions { it =>
-      var run = -1L
-      it.map { r =>
-        if (run < 0) run = bOffsets.value.getOrElse(r.getInt(pidIdx), 0L)
-        val off = run
-        run += r.getLong(wIdx)
-        Row.fromSeq(r.toSeq.patch(pidIdx, Nil, 1) :+ off :+ off / budget)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
+    val (offsets, _) = Ids.prefixSum(df, Seq(orderCol), col(weightCol), "token_offset", reg)
+    // integral `div`: `/` is a double division, and the layout is bigint
+    offsets.withColumn("shard_id", expr(s"token_offset div $budget"))
   }
 }

@@ -118,6 +118,19 @@ class CheckpointsSpec extends SparkSpec {
     assert(kept.count() == 25)
     // empty sig (ad-hoc caller) and pre-guard manifests stay accepted
     assert(Checkpoints.stage(spark, "g", s"$work/g")(rows).count() == 25)
+    // a sig holding a quote and a backslash is compared exactly, and the
+    // rebuild warning prints the stored sig as it was stamped, unescaped
+    val sigQ = sigA + ";path=\"C:\\work\""
+    assert(Checkpoints.stage(spark, "g", s"$work/g", Nil, Nil, sigQ)(rows).count() == 10)
+    assert(Checkpoints.stage(spark, "g", s"$work/g", Nil, Nil, sigQ)(
+      sys.error("build must not re-run under the same quoted sig"): org.apache.spark.sql.DataFrame
+    ).count() == 10)
+    val err = new java.io.ByteArrayOutputStream
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try assert(Checkpoints.stage(spark, "g", s"$work/g", Nil, Nil, sigB)(rows2).count() == 25)
+    finally System.setErr(stderr)
+    assert(err.toString("UTF-8").contains(s"(stored: $sigQ; current: $sigB)"), err.toString("UTF-8"))
   }
 
   test("lineage manifest is valid JSON even for paths with quotes/backslashes") {

@@ -11,6 +11,8 @@ import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.rng.Seed
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
@@ -290,7 +292,7 @@ class KernelSpec extends SparkSpec {
       .collect()
     sets.zip(got).foreach { case (t, row) =>
       val wantSig = Twins.signatureScala(t, as, bs)
-      val wantSim = SimHash.simhash64(t, cfg.seed)
+      val wantSim = Twins.simhash64(t, cfg.seed)
       val wantBands = Array.tabulate(cfg.bands)(b => Twins.bandHashScala(wantSig, b, cfg.rowsPerBand))
       assert(row.getAs[collection.Seq[Int]]("mh").toSeq.map(_.toLong) == wantSig.toSeq)
       assert(row.getAs[Long]("sh") == wantSim)
@@ -416,10 +418,10 @@ class KernelSpec extends SparkSpec {
   test("simhash of near-identical sets is within small hamming distance") {
     val tokens = Array.tabulate(200)(i => i * 7)
     val mutated = tokens.updated(5, 99991).updated(50, 99993)
-    val h1 = SimHash.simhash64(tokens, 42L)
-    val h2 = SimHash.simhash64(mutated, 42L)
+    val h1 = Twins.simhash64(tokens, 42L)
+    val h2 = Twins.simhash64(mutated, 42L)
     assert(java.lang.Long.bitCount(h1 ^ h2) <= SimHash.MaxHamming)
-    val unrelated = SimHash.simhash64(Array.tabulate(200)(i => i * 13 + 1), 42L)
+    val unrelated = Twins.simhash64(Array.tabulate(200)(i => i * 13 + 1), 42L)
     assert(java.lang.Long.bitCount(h1 ^ unrelated) > SimHash.MaxHamming)
   }
 
@@ -471,6 +473,50 @@ class KernelSpec extends SparkSpec {
     assert(got.length == 100)
     assert(got.map(_._2).sameElements(0L until 100L))
     assert(got.map(_._1).distinct.length == 100)
+  }
+
+  test("prefixSum equals a sorted driver scan at any input partitioning (property, 120 cases)") {
+    // rows unique by (g, k), g nullable (nulls sort first, as Option's
+    // ordering has it); weight 1 (the dense-id constant), random
+    // non-negative weights or all zeros; 1-16 input partitions over
+    // shuffled rows; sometimes a downstream no-shuffle coalesce(1);
+    // sometimes no rows at all
+    val gen = for {
+      n <- Gen.frequency(1 -> Gen.const(0), 9 -> Gen.choose(1, 300))
+      keys <- Gen.listOfN(n, Gen.zip(Gen.oneOf(Option.empty[String], Some("a"), Some("b")), Gen.choose(-50L, 500L)))
+      weights <- Gen.listOfN(n, Gen.choose(0L, 1000000000L))
+      mode <- Gen.oneOf("one", "random", "zeros")
+      parts <- Gen.choose(1, 16)
+      shuffleSeed <- Gen.long
+      coalesced <- Gen.oneOf(false, true)
+    } yield {
+      val rows = keys.zip(weights).distinctBy(_._1).map { case ((g, k), w) => (g, k, if (mode == "zeros") 0L else w) }
+      (new scala.util.Random(shuffleSeed).shuffle(rows), mode, parts, coalesced)
+    }
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(120).withInitialSeed(Seed(20261020L)),
+      Prop.forAllNoShrink(gen) { case (rows, mode, parts, coalesced) =>
+        Seq(mode, if (coalesced) "coalesced" else "direct", if (rows.isEmpty) "empty" else "rows").foreach(seen(_) += 1)
+        val ordered = rows.sortBy(r => (r._1, r._2))
+        val want = ordered.scanLeft(0L)((acc, r) => acc + (if (mode == "one") 1L else r._3))
+        val reg = new CacheRegistry
+        try {
+          val df = spark.sparkContext.parallelize(rows, parts).toDF("g", "k", "w")
+          val (out, total) = Ids.prefixSum(df, Seq("g", "k"), if (mode == "one") lit(1L) else col("w"), "off", reg)
+          val got = (if (coalesced) out.coalesce(1) else out)
+            .as[(Option[String], Long, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
+          val expected = ordered.zip(want).map { case ((g, k, w), off) => (g, k, w, off) }
+          // a literal weight never enters the cached rows
+          val stored = out.queryExecution.optimizedPlan.toString.contains("__w")
+          (out.columns.toSeq == Seq("g", "k", "w", "off") && got == expected && total == want.last &&
+            stored == (mode != "one")) :|
+            s"mode=$mode parts=$parts coalesced=$coalesced stored=$stored total=$total want=${want.last} rows=$rows got=$got"
+        } finally reg.release()
+      }
+    )
+    assert(res.passed, res.status.toString)
+    Seq("one", "random", "zeros", "coalesced", "direct", "empty").foreach(c => assert(seen(c) >= 5, s"$c: ${seen(c)} cases"))
   }
 
   // --- connected components ---

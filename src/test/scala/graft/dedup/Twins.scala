@@ -62,6 +62,26 @@ object Twins {
     sig
   }
 
+  /** 64-bit SimHash: sign bits of the per-bit vote sum over SplitMix64
+    * token hashes (the twin of `SimHash64`). */
+  def simhash64(tokens: Array[Int], seed: Long): Long = {
+    val votes = new Array[Int](64)
+    var t = 0
+    while (t < tokens.length) {
+      val h = SimHash.mix64(tokens(t).toLong ^ seed)
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+        b += 1
+      }
+      t += 1
+    }
+    var out = 0L
+    var b = 0
+    while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
+    out
+  }
+
   /** 64-bit mix of one band's signature slice (SplitMix64-style avalanche),
     * band index folded in (the twin of `BandHashes`). */
   def bandHashScala(sig: Array[Long], band: Int, rows: Int): Long = {
