@@ -185,6 +185,7 @@ object Dev {
       "q20_fingerprint (single-pass MinGramMd5 kernel, no explode/groupBy)" -> q("q20_fingerprint"),
       "first-collision-band candidates (64x2 oracle config, the q23 generator)" ->
         MinHash.candidatePairs(MinHash.withSignature(encoded, cfg64), cfg64),
+      "SimHash block candidates (Hamming test in the walk)" -> SimHash.candidatePairs(sigs, cfg),
       "q28_lsh_cosine_top3 (compiled HyperplaneSketch + CosineFloat re-rank)" -> q("q28_lsh_cosine_top3"),
       "winnow candidate pairs (native WinnowFingerprints, the q31a/q31b front-end)" -> SuffixDedup.candidatePairs(
         spark.read.parquet(s"$sf/documents.parquet").selectExpr("doc_id", "lang as group", "text as content"),

@@ -2,7 +2,7 @@ package graft.dedup
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Exact set-Jaccard verification kernel.
@@ -56,8 +56,6 @@ object Jaccard {
       .hint("shuffle_hash")
       .join(encoded.select(col("doc_id").as("a"), col("group"), col("tokens").as("tokens_a")), "a")
       .join(encoded.select(col("doc_id").as("b"), col("tokens").as("tokens_b")), "b")
-
-  def hamming(x: Column, y: Column): Column = bit_count(x.bitwiseXOR(y))
 
   /** Oracle-facing verification: like [[verify]] but emits the raw integer
     * counts and the UNROUNDED quotient, so an ANSI-SQL oracle can reproduce

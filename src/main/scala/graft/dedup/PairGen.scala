@@ -12,14 +12,15 @@ import org.apache.spark.sql.functions._
   * one bucket; a naive self-join on the bucket key makes one O(B^2) straggler
   * task and a per-bucket `collect_list` OOMs. Two semantics, one pass:
   *
-  *  - B <= maxBucket: full B^2/2 pair expansion, or the pairs a keep rule
-  *    accepts (all of them, or [[FirstCollision]]'s);
+  *  - B <= maxBucket: full B^2/2 pair expansion;
   *  - B > maxBucket: chain-linking — each doc pairs with its `ChainWidth`
-  *    sorted neighbors only, unfiltered. This bounds output at B*w while
-  *    preserving CONNECTIVITY of the bucket (a chain spans it), which is what
+  *    sorted neighbors only. This bounds output at B*w while preserving
+  *    CONNECTIVITY of the bucket (a chain spans it), which is what
   *    clustering needs; pairwise completeness for near-dup pairs is carried
   *    by the other bands (each pair gets `bands` independent chances to land
   *    in a small bucket). Bench reports the oversized-bucket count.
+  * A [[KeepRule]] filters the pairs of both inside the walk from a sig each
+  * member carries ([[FirstCollision]], [[WithinHamming]]): no join back.
   *
   * Physical shape: ONE hash exchange on the bucket key + ONE in-partition
   * sort by (key, doc_id) + the streaming [[BucketWalk]], which buffers at
@@ -40,18 +41,30 @@ object PairGen {
 
   val ChainWidth = 4
 
+  /** A pair filter the walk applies inside each bucket: it buffers each
+    * member's [[sig]], read from the column after `doc_id` (the row's last),
+    * and asks [[test]] once per bucket, given its first row, for the test
+    * of each pair it emits. The walk passes a pair's sigs in either order. */
+  private[dedup] trait KeepRule {
+    def sig(r: Row): Array[Long]
+    def test(key: Row): (Array[Long], Array[Long]) => Boolean
+  }
+
   /** The bucket/cap/chain state machine. Input rows are sorted by
     * (key columns 0 until nKeys, doc_id at nKeys). A closed bucket of size
-    * <= cap yields, per member, (id, later ids the keep rule accepts — all
-    * of them without one). A bucket that crosses the cap yields chain rows
-    * instead, unfiltered: the buffered prefix as (id, its <= ChainWidth later
-    * ids), then each further member as (id, its <= ChainWidth earlier ids).
-    * Consumers orient pairs themselves (least/greatest). */
-  private[dedup] final class BucketWalk(rows: Iterator[Row], nKeys: Int, cap: Int, keep: Option[FirstCollision])
+    * <= cap yields, per member, (id, later ids). A bucket that crosses the
+    * cap yields chain rows instead: the buffered prefix as (id, its <=
+    * ChainWidth later ids), then each further member as (id, its <=
+    * ChainWidth earlier ids). A keep rule filters every pair of both;
+    * without one every pair is kept. Consumers orient pairs themselves
+    * (least/greatest). */
+  private[dedup] final class BucketWalk(rows: Iterator[Row], nKeys: Int, cap: Int, keep: Option[KeepRule])
       extends Iterator[(Long, Array[Long])] {
+    private type Test = (Array[Long], Array[Long]) => Boolean
     private val ids = new ArrayBuffer[Long]()
-    private val sigs = new ArrayBuffer[Array[Long]]()
+    private val sigs = new ArrayBuffer[Array[Long]]() // the rule's sig of each of `ids`
     private var key: Row = null // first row of the current bucket
+    private var test: Test = null // the rule's test of a chained bucket; null keeps all
     private var chain = false
     private var pending: Iterator[(Long, Array[Long])] = Iterator.empty
 
@@ -66,23 +79,27 @@ object PairGen {
       keep.foreach(k => sigs += k.sig(r))
     }
 
-    /** Close a small bucket. Everything the lazy rows read is snapshotted:
-      * they are consumed after the walk has moved on to the next bucket. */
+    /** (members(i), the members(j), from <= j < to, that `t` keeps with it). */
+    private def row(members: Array[Long], ss: Array[Array[Long]], t: Test, i: Int, from: Int, to: Int) =
+      (members(i), if (t == null) java.util.Arrays.copyOfRange(members, from, to)
+        else (from until to).filter(j => t(ss(j), ss(i))).map(members).toArray)
+
+    /** Rows of the pairs `t` keeps among `ids`: (i, its <= `width` later
+      * ids). The lazy rows snapshot what they read: they are consumed after
+      * the walk has moved on. */
+    private def rowsOf(width: Int, t: Test): Iterator[(Long, Array[Long])] = {
+      val (members, ss) = (ids.toArray, sigs.toArray)
+      (0 until members.length - 1).iterator
+        .map(i => row(members, ss, t, i, i + 1, math.min(i + 1 + width, members.length)))
+        .filter(_._2.nonEmpty)
+    }
+
+    /** Close a small bucket: all its pairs the rule keeps. */
     private def flush(): Iterator[(Long, Array[Long])] =
-      if (chain || ids.length < 2) Iterator.empty
-      else {
-        val members = ids.toArray
-        val n = members.length
-        keep match {
-          case None =>
-            (0 until n - 1).iterator.map(i => (members(i), java.util.Arrays.copyOfRange(members, i + 1, n)))
-          case Some(k) =>
-            val accept = k.bucket(key, sigs.toArray)
-            (0 until n - 1).iterator
-              .map(i => (members(i), (i + 1 until n).filter(j => accept(i, j)).map(members).toArray))
-              .filter(_._2.nonEmpty)
-        }
-      }
+      if (chain || ids.length < 2) Iterator.empty else rowsOf(ids.length, keep.map(_.test(key)).orNull)
+
+    /** Keep only the trailing chain window. */
+    private def trim(): Unit = { ids.dropInPlace(ids.length - ChainWidth); sigs.dropInPlace(sigs.length - ChainWidth) }
 
     private def advance(): Unit = {
       while (!pending.hasNext && rows.hasNext) {
@@ -94,24 +111,20 @@ object PairGen {
           chain = false
           ids.clear(); sigs.clear()
           push(r, id)
-        } else if (chain) {
-          // the window holds exactly the <= ChainWidth ids before this one
-          pending = Iterator.single((id, ids.toArray))
-          ids += id
-          if (ids.length > ChainWidth) ids.remove(0)
         } else {
           push(r, id)
-          if (ids.length > cap) {
+          if (chain) {
+            // this member and the <= ChainWidth members before it
+            val n = ids.length - 1
+            pending = Iterator.single(row(ids.toArray, sigs.toArray, test, n, 0, n))
+            trim()
+          } else if (ids.length > cap) {
             // the bucket just crossed the cap: chain-link all of it — the
-            // buffered prefix now, the rest as it streams — keeping only
-            // the trailing window
+            // buffered prefix now, the rest as it streams
             chain = true
-            val prefix = ids.toArray
-            pending = (0 until prefix.length - 1).iterator.map { i =>
-              (prefix(i), java.util.Arrays.copyOfRange(prefix, i + 1, math.min(i + 1 + ChainWidth, prefix.length)))
-            }
-            ids.clear(); sigs.clear()
-            ids ++= prefix.takeRight(ChainWidth)
+            test = keep.map(_.test(key)).orNull
+            pending = rowsOf(ChainWidth, test)
+            trim()
           }
         }
       }
@@ -202,11 +215,15 @@ object PairGen {
 
   private def docId = col("doc_id").cast("long").as("doc_id")
 
-  /** rows: bucket key columns + `doc_id`. Returns distinct (a, b), a < b. */
-  def pairsFromBuckets(rows: DataFrame, bucketCols: Seq[String], maxBucket: Int): DataFrame = {
+  /** rows: bucket key columns + `doc_id` (+ `keep`'s column). Returns
+    * distinct (a, b), a < b. With `keep` = (column, rule), the walk carries
+    * `column` after `doc_id` and emits only the pairs the rule accepts; the
+    * rule is built once per partition, so it may read a broadcast. */
+  def pairsFromBuckets(rows: DataFrame, bucketCols: Seq[String], maxBucket: Int,
+      keep: Option[(String, () => KeepRule)] = None): DataFrame = {
     val nKeys = bucketCols.length
-    walk(rows.select(bucketCols.map(col) :+ docId: _*), bucketCols, bucketCols)(
-      it => new BucketWalk(it, nKeys, maxBucket, None))
+    walk(rows.select(bucketCols.map(col) ++ (docId +: keep.map(k => col(k._1)).toSeq): _*), bucketCols, bucketCols)(
+      it => new BucketWalk(it, nKeys, maxBucket, keep.map(_._2())))
   }
 
   /** [[pairsFromBuckets]] over (dfCol ++ bucketCols) buckets, keeping only
@@ -230,20 +247,23 @@ object PairGen {
   val OversizedBroadcastMax: Long = 2000000L
 
   /** Keep rule of [[pairsFromBandBucketsFirstCollision]]: a pair of band
-    * `b`'s small bucket survives iff no band k < b holds both docs in a small
+    * `b`'s bucket survives iff no band k < b holds both docs in a small
     * bucket, i.e. every earlier equal band hash keys a bucket in `oversized`
-    * (group values ++ (band, band_hash)). A superset of the truly oversized
-    * keys only adds duplicates. The walk buffers [[sig]] (the doc's hash per
-    * band) per member and asks [[bucket]] for each small bucket's pair test
-    * over member indexes i < j, given the bucket's first row. */
-  private[dedup] final class FirstCollision(nGroup: Int, oversized: Set[Seq[Any]]) {
-    def sig(r: Row): Array[Long] = r.getSeq[Long](nGroup + 3).toArray // after the key and doc_id
+    * (group values ++ (band, band_hash)). The sig is the doc's hash per
+    * band.
+    *
+    * The walk emits the keep-all walk's pair set, chain links included: if
+    * the rule drops a pair at band b, the two docs share a band k < b bucket
+    * whose key is outside `oversized` (a superset of the oversized keys), so
+    * it is small and walked in full, and the smallest such k emits the pair.
+    * A superset only adds duplicates. */
+  private[dedup] final class FirstCollision(nGroup: Int, oversized: Set[Seq[Any]]) extends KeepRule {
+    def sig(r: Row): Array[Long] = r.getSeq[Long](r.length - 1).toArray
 
-    def bucket(key: Row, sigs: Array[Array[Long]]): (Int, Int) => Boolean = {
+    def test(key: Row): (Array[Long], Array[Long]) => Boolean = {
       val band = key.getInt(nGroup)
       val group = key.toSeq.take(nGroup)
-      (i, j) => {
-        val a = sigs(i); val b = sigs(j)
+      (a, b) => {
         var k = 0
         while (k < band && (a(k) != b(k) || isOversized(group, k, a(k)))) k += 1
         k == band
@@ -252,6 +272,14 @@ object PairGen {
 
     private def isOversized(group: Seq[Any], band: Int, hash: Long): Boolean =
       oversized.nonEmpty && oversized.contains(group ++ Seq[Any](band, hash))
+  }
+
+  /** Keep rule of SimHash's block walk: a pair survives iff its simhashes
+    * (a long after `doc_id`) differ in at most `maxDist` bits. */
+  private[dedup] final class WithinHamming(maxDist: Int) extends KeepRule {
+    def sig(r: Row): Array[Long] = Array(r.getLong(r.length - 1))
+    def test(key: Row): (Array[Long], Array[Long]) => Boolean =
+      (x, y) => java.lang.Long.bitCount(x(0) ^ y(0)) <= maxDist
   }
 
   /** FIRST-COLLISION-BAND pair generation for HIGH-COLLISION banding configs
@@ -264,13 +292,13 @@ object PairGen {
     * minimal band where the two docs collide in a non-oversized bucket — so
     * the final distinct shuffles ~1x the pair set.
     *
-    * The emitted pair SET is identical to [[pairsFromBuckets]]: oversized
-    * buckets chain-link unfiltered, and the rule treats collisions inside
-    * them as non-emitting via a broadcast of the oversized bucket keys —
-    * rare by design (the bench measures 0); above [[OversizedBroadcastMax]]
-    * keys this falls back to [[pairsFromBuckets]] wholesale. A doc has one
-    * row per band bucket, so a doc-count `bucketSizeBound` <= maxBucket
-    * proves the set empty and skips the probe job.
+    * The emitted pair SET is identical to [[pairsFromBuckets]] (see
+    * [[FirstCollision]]): the rule treats collisions inside oversized
+    * buckets as non-emitting via a broadcast of their keys — rare by design
+    * (the bench measures 0); above [[OversizedBroadcastMax]] keys this falls
+    * back to [[pairsFromBuckets]] wholesale. A doc has one row per band
+    * bucket, so a doc-count `bucketSizeBound` <= maxBucket proves the set
+    * empty and skips the probe job.
     *
     * NOT the default: carrying `bands` hashes per band row multiplies the
     * exchange width, which only pays when the duplication factor is large
@@ -299,12 +327,9 @@ object PairGen {
           .select(keys: _*)
           .limit((OversizedBroadcastMax + 1).toInt)
           .collect()
-    if (oversized.length > OversizedBroadcastMax)
-      return pairsFromBuckets(rows.drop("bhs"), keyCols, maxBucket)
+    if (oversized.length > OversizedBroadcastMax) return pairsFromBuckets(rows, keyCols, maxBucket)
     val nGroup = groupCols.length
-    val nKeys = keyCols.length
     val bOversized = rows.sparkSession.sparkContext.broadcast(oversized.map(_.toSeq).toSet)
-    walk(rows.select(keys ++ Seq(docId, col("bhs")): _*), keyCols, keyCols)(
-      it => new BucketWalk(it, nKeys, maxBucket, Some(new FirstCollision(nGroup, bOversized.value))))
+    pairsFromBuckets(rows, keyCols, maxBucket, Some("bhs" -> (() => new FirstCollision(nGroup, bOversized.value))))
   }
 }

@@ -1,9 +1,6 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeLike}
 
 /** Parallelism repair for CPU-heavy operators over byte-small inputs. */
 object Par {
@@ -22,11 +19,9 @@ object Par {
     * when the optimized plan's leaves hold < maxPartitionBytes × cores bytes
     * (leaves: a join's estimate is the product of its sides). A no-op for
     * every at-scale input; the target is the core count, never a constant.
-    * Also a no-op on an input that [[spreadBy]] (or any other numbered
-    * repartition of at least that width) already spread: its rows are
-    * spread, and a second exchange would only move them again. */
+    * A caller whose input [[spreadBy]] already spread skips this call. */
   def spread(df: DataFrame): DataFrame =
-    if (!small(df) || spreadAlready(df)) df else df.repartition(parallelism(df))
+    if (!small(df)) df else df.repartition(parallelism(df))
 
   /** [[spread]] as a hash repartition on `cols`: an operator that needs
     * its rows clustered by `cols` (an aggregate, a join) reads this exchange
@@ -41,26 +36,5 @@ object Par {
   private def small(df: DataFrame): Boolean = {
     val leafBytes = df.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
     leafBytes < BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes) * parallelism(df)
-  }
-
-  /** Whether `df`'s rows arrive in >= cores partitions that AQE cannot
-    * coalesce: its physical plan (before execution) has that many output
-    * partitions, and they come from a numbered repartition. AQE coalesces a
-    * co-partitioned group of shuffles only when it may coalesce each one, so
-    * one numbered exchange under a join fixes the join's width too; the
-    * streamed side fixes a broadcast join's. */
-  private def spreadAlready(df: DataFrame): Boolean = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    def fixed(p: SparkPlan): Boolean = p match {
-      case s: ShuffleExchangeLike => s.shuffleOrigin == REPARTITION_BY_NUM
-      case _: BroadcastExchangeLike => false
-      case s: QueryStageExec => fixed(s.plan)
-      case r: ReusedExchangeExec => fixed(r.child)
-      case n => n.children.exists(fixed)
-    }
-    plan.outputPartitioning.numPartitions >= parallelism(df) && fixed(plan)
   }
 }

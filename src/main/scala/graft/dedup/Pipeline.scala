@@ -179,8 +179,9 @@ object Pipeline {
     *
     * On a byte-small input that exchange is also the verify's spread
     * ([[Par.spreadBy]]): `defaultParallelism` partitions AQE cannot
-    * coalesce, so [[SuffixDedup.run]]'s own [[Par.spread]] finds the rows
-    * spread and content crosses one exchange in all. */
+    * coalesce. So the pipeline calls [[SuffixDedup.runSpread]], which skips
+    * [[SuffixDedup.run]]'s own [[Par.spread]], and content crosses one
+    * exchange in all. */
   private def substringInput(input: DataFrame, docs: DataFrame): DataFrame = {
     val key = struct(col("repo"), col("path"), col("commit")).as("__key")
     val payload = input.select(key, sha2(col("content"), 256).as("content_sha"), col("content"))
@@ -298,7 +299,7 @@ object Pipeline {
       else
         Some(Checkpoints.stage(spark, "substring", p("substring"), Nil, Seq(p("docs")),
           sig("docs") + s";substring=${SuffixDedup.SubConfig()}")(
-          SuffixDedup.run(substringInput(input, docs), reg = reg)
+          SuffixDedup.runSpread(substringInput(input, docs), SuffixDedup.SubConfig(), reg)
         ))
 
     // Optional top-N report (reference main_citation_control.py:626-642 /

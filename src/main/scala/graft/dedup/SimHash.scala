@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * simhash(doc) = sign-bit vector of the per-bit vote sum over SplitMix64
   * token hashes. Candidates: two docs within Hamming distance k must agree
   * exactly on at least one of k+1 disjoint 16-bit blocks (pigeonhole), so
-  * blocking on (block_idx, block_value) finds all of them; pairs are then
-  * filtered to hamming <= k and finally verified with exact Jaccard like
-  * every other candidate source.
+  * blocking on (block_idx, block_value) finds all of them. The block walk
+  * keeps a pair only when its full simhashes, carried in the block rows,
+  * are within hamming k ([[PairGen.WithinHamming]]); the survivors are
+  * verified with exact Jaccard like every other candidate source.
   */
 object SimHash {
 
@@ -31,7 +32,7 @@ object SimHash {
     // compiled kernel call, not a UDF: no per-element boxing (see HashKernels)
     encoded.withColumn("simhash", SimHash64(col("tokens"), cfg))
 
-  /** (doc_id, group, simhash) -> block rows (group, block, block_val, doc_id). */
+  /** (doc_id, group, simhash) -> block rows (group, block, block_val, doc_id, simhash). */
   def blockRows(signatures: DataFrame): DataFrame = {
     val blocks = array((0 until Blocks).map { b =>
       shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xffffL))
@@ -39,23 +40,18 @@ object SimHash {
     signatures.select(
       col("group"),
       posexplode(blocks).as(Seq("block", "block_val")),
-      col("doc_id")
+      col("doc_id"),
+      col("simhash")
     )
   }
 
-  /** Hamming-filtered candidate pairs (a < b). */
-  def candidatePairs(signatures: DataFrame, cfg: Config): DataFrame = {
-    val pairs = PairGen.pairsFromBuckets(
+  /** Hamming-filtered candidate pairs (a < b): one block walk, the
+    * Hamming test inside it. */
+  def candidatePairs(signatures: DataFrame, cfg: Config): DataFrame =
+    PairGen.pairsFromBuckets(
       blockRows(signatures),
       bucketCols = Seq("group", "block", "block_val"),
-      maxBucket = cfg.maxBucket
+      maxBucket = cfg.maxBucket,
+      keep = Some("simhash" -> (() => new PairGen.WithinHamming(MaxHamming)))
     )
-    val ha = signatures.select(col("doc_id").as("a"), col("simhash").as("sh_a"))
-    val hb = signatures.select(col("doc_id").as("b"), col("simhash").as("sh_b"))
-    pairs
-      .join(ha, "a")
-      .join(hb, "b")
-      .filter(Jaccard.hamming(col("sh_a"), col("sh_b")) <= MaxHamming)
-      .select(col("a"), col("b"))
-  }
 }

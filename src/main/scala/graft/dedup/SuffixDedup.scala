@@ -230,26 +230,29 @@ object SuffixDedup {
     * containment) for pairs sharing a verified substring >= minMatch chars.
     * `precomputedCandidates` lets a caller that already materialized
     * [[candidatePairs]] (e.g. a cached cross-query table) skip rebuilding
-    * the winnow chain. */
+    * the winnow chain.
+    *
+    * The suffix-automaton LCS is expensive PER ROW while both join inputs
+    * are tiny in BYTES, so byte-based partitioning (scan splits, AQE
+    * coalescing) would hand the whole verify stage to one task — whichever
+    * side the planner streams (it broadcasts the other) must already be
+    * spread (the operator suite once measured this query bimodally at
+    * 0.9 s vs 12 s depending on which side was built). So the docs are
+    * spread first ([[Par.spread]]: a no-op at scale). */
   def run(
       docs: DataFrame,
       cfg: SubConfig = SubConfig(),
       reg: CacheRegistry = CacheRegistry.unmanaged,
       precomputedCandidates: Option[DataFrame] = None
-  ): DataFrame = {
-    // The suffix-automaton LCS is expensive PER ROW while both join inputs
-    // are tiny in BYTES, so byte-based partitioning (scan splits, AQE
-    // coalescing) would hand the whole verify stage to one task — whichever
-    // side the planner streams (it broadcasts the other) must already be
-    // spread (the operator suite once measured this query bimodally at
-    // 0.9 s vs 12 s depending on which side was built). Par.spread
-    // repartitions an input only when its plan's leaf size estimates sum to
-    // less than spark.sql.files.maxPartitionBytes x cores (a no-op at
-    // scale), and leaves an input that is already spread as it is (the
-    // pipeline's substring input arrives spread by its dedup exchange). The
-    // docs are persisted and read by the fingerprint branch and both
-    // content sides, so content crosses at most one exchange.
-    val ds = reg.persist(Par.spread(docs))
+  ): DataFrame = runSpread(Par.spread(docs), cfg, reg, precomputedCandidates)
+
+  /** [[run]] over docs taken as given: the pipeline's substring input
+    * arrives spread by its dedup exchange ([[Par.spreadBy]]). The docs are
+    * persisted and read by the fingerprint branch and both content sides,
+    * so content crosses at most one exchange. */
+  private[dedup] def runSpread(docs: DataFrame, cfg: SubConfig, reg: CacheRegistry,
+      precomputedCandidates: Option[DataFrame] = None): DataFrame = {
+    val ds = reg.persist(docs)
     val candidates = Par.spread(precomputedCandidates.getOrElse(candidatePairs(ds, cfg)))
     val minMatch = cfg.minMatch
     // (lcs_len, the shorter doc's length), both in the UTF-16 units lcsLen

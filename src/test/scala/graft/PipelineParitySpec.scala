@@ -427,6 +427,12 @@ class PipelineParitySpec extends SparkSpec {
       val plan = cands.queryExecution.executedPlan
       assert(kernelCalls(plan, classOf[HashKernels.BandHashKernel]) == 1, s"band-hash calls per row at ${c.bands} bands in:\n$plan")
     }
+    // the SimHash walk tests Hamming distance inside its buckets: no join
+    // reads the simhashes back
+    val simhash = SimHash.candidatePairs(sigs, cfg)
+    assert(simhash.collect().nonEmpty)
+    val plan = simhash.queryExecution.executedPlan
+    assert(joins(plan).isEmpty, s"joins in the SimHash candidate plan:\n$plan")
   }
 
   test("verify calls the exact-Jaccard kernel once per candidate pair") {

@@ -88,6 +88,18 @@ class SharedChainsSpec extends SparkSpec {
     }
   }
 
+  test("q24 runs only verifyCounts' two joins: the Hamming test runs inside the SimHash walk") {
+    try {
+      val q24 = SparkEntry.queries("q24_simhash_pairs")(spark, "/root/testdata/sf0.001")
+      assert(q24.collect().nonEmpty)
+      val plan = q24.queryExecution.executedPlan
+      assert(joins(plan).size == 2, s"q24 joins: ${joins(plan).map(_.simpleString(3)).mkString("; ")}")
+    } finally {
+      SparkEntry.releaseTransientCaches()
+      SparkEntry.releaseSharedCaches()
+    }
+  }
+
   // Stops the shared session, so it runs last; SparkSpec.spark hands later
   // suites a fresh one.
   test("an entry whose session has stopped is dropped and not returned") {

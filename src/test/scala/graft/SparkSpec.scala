@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.types.ObjectType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,6 +51,9 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     walk(plan)
   }
+
+  /** The join operators of a physical plan ([[planNodes]]). */
+  def joins(plan: SparkPlan): Seq[SparkPlan] = planNodes(plan).collect { case j: BaseJoinExec => j }
 
   /** The shuffle exchanges of `df`'s executed plan (run it first) whose rows
     * carry a column named `column` or starting with `column_`. */

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Properties of PairGen's bucket walk, driven with Rows directly (no Spark
   * session): the cap/chain semantics against a naive per-bucket oracle, the
-  * first-collision keep rule against the keep-all walk, and the fingerprint
-  * walk's df cap against a naive global-df oracle. */
+  * first-collision keep rule against the keep-all walk, the Hamming keep rule
+  * against a naive per-bucket oracle, and the fingerprint walk's df cap
+  * against a naive global-df oracle. */
 class PairGenSpec extends AnyFunSuite {
 
   private def check(prop: Prop, n: Int): Unit = {
@@ -80,6 +81,56 @@ class PairGenSpec extends AnyFunSuite {
       (got.toSet == plain && exact.toSet == plain && onceEach) :|
         s"cap=$cap extra=${got.toSet -- plain} missing=${plain -- got.toSet} dupes=${exact.length - exact.distinct.length}"
     }, 1000)
+  }
+
+  test("bucket walk: the Hamming keep rule filters every pair and every chain link, against a naive oracle") {
+    val (atCap, overByOne, farOver, nullGroup, droppedLinks) =
+      (new AtomicInteger, new AtomicInteger, new AtomicInteger, new AtomicInteger, new AtomicInteger)
+    val (near, all) = (new AtomicInteger, new AtomicInteger)
+    // each simhash is one base with a uniform subset of 7 bits flipped: two
+    // of them differ in Binomial(7, 1/2) bits, <= 3 for half the pairs
+    val flips = Seq(0, 9, 18, 27, 36, 45, 63)
+    val keys = for { g <- Seq("g0", "g1", null); h <- 0L to 3L } yield (g, h)
+    val gen = for {
+      cap <- Gen.choose(0, 8)
+      base <- Gen.choose(Long.MinValue, Long.MaxValue)
+      masks <- Gen.listOfN(61, Gen.choose(0, 127))
+      nBuckets <- Gen.choose(1, 5)
+      bucketKeys <- Gen.pick(nBuckets, keys)
+      buckets <- Gen.listOfN(nBuckets, for {
+        size <- Gen.oneOf(Gen.const(cap), Gen.const(cap + 1), Gen.choose(cap + 2 * PairGen.ChainWidth, 2 * cap + 12))
+        ids <- Gen.pick(math.max(size, 1), 0L to 60L)
+      } yield ids.sorted.toSeq)
+    } yield {
+      val simhash = masks.toVector.map(m => flips.indices.foldLeft(base)((h, i) => if ((m >> i & 1) == 1) h ^ (1L << flips(i)) else h))
+      (cap, simhash, bucketKeys.toSeq.zip(buckets))
+    }
+    check(Prop.forAllNoShrink(gen) { case (cap, simhash, buckets) =>
+      def within(x: Long, y: Long) = java.lang.Long.bitCount(simhash(x.toInt) ^ simhash(y.toInt)) <= SimHash.MaxHamming
+      val rows = buckets.sortBy { case ((g, h), _) => (Option(g), h) }
+        .flatMap { case ((g, h), ids) => ids.map(id => Row(g, h, id, simhash(id.toInt))) }
+      val got = emitted(new PairGen.BucketWalk(rows.iterator, 2, cap, Some(new PairGen.WithinHamming(SimHash.MaxHamming))))
+      val want = buckets.flatMap { case (_, ids) => oracle(ids, cap).filter { case (x, y) => within(x, y) } }.toSet
+      val unfiltered = buckets.map { case ((g, _), ids) => (g, ids, oracle(ids, cap)) }
+      unfiltered.foreach { case (_, _, pairs) =>
+        all.addAndGet(pairs.size); near.addAndGet(pairs.count { case (x, y) => within(x, y) })
+      }
+      def seen(n: AtomicInteger)(p: ((String, Seq[Long], Set[(Long, Long)])) => Boolean): Unit =
+        if (unfiltered.exists(p)) n.incrementAndGet()
+      seen(atCap) { case (_, ids, _) => ids.length == cap && cap >= 2 }
+      seen(overByOne) { case (_, ids, _) => ids.length == cap + 1 }
+      seen(farOver) { case (_, ids, _) => ids.length >= cap + 2 * PairGen.ChainWidth }
+      seen(nullGroup) { case (g, _, pairs) => g == null && pairs.exists { case (x, y) => within(x, y) } }
+      seen(droppedLinks) { case (_, ids, pairs) => ids.length > cap && pairs.exists { case (x, y) => !within(x, y) } }
+      (got.toSet == want) :| s"cap=$cap extra=${got.toSet -- want} missing=${want -- got.toSet}"
+    }, 1000)
+    Seq("a bucket at the cap" -> atCap, "a bucket at cap + 1" -> overByOne, "a bucket far over the cap" -> farOver,
+      "a NULL-group bucket with a pair within the distance" -> nullGroup,
+      "a chain link beyond the distance" -> droppedLinks).foreach { case (what, n) =>
+      assert(n.get >= 50, s"only ${n.get} of 1000 cases had $what")
+    }
+    val share = near.get.toDouble / all.get
+    assert(share > 0.35 && share < 0.65, s"$share of the oracle's unfiltered pairs are within the distance")
   }
 
   test("fingerprint walk: a df cap across groups, then (group, fp) buckets, equals a naive oracle") {
