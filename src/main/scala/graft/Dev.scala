@@ -171,7 +171,7 @@ object Dev {
     // dumped instead; q25b's union-find and q43's per-partition sums run
     // eagerly at construction, so their plans are the distributed remainder.
     val sections = Seq(
-      "docs stage (ids stamped on the key projection; the token arrays cross one shuffle, the id join)" -> docs,
+      "docs stage (ids stamped on the key projection; the id join builds on the id map: broadcast while it fits)" -> docs,
       "q13_doc_pairs (flagship: within-group exact Jaccard over pruned tokens)" -> q("q13_doc_pairs"),
       "q04_join_revenue_by_nation (broadcast dim join)" -> q("q04_join_revenue_by_nation"),
       "q07_filter_project (pushdown check: PushedFilters + pruned ReadSchema)" -> q("q07_filter_project"),

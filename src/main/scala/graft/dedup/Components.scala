@@ -352,7 +352,7 @@ object Components {
     // (touched doc -> old representative) for docs already assigned; docs
     // new to the corpus have no row and enter the delta graph bare
     val anchor = ex
-      .join(touched.hint("shuffle_hash"), "doc_id")
+      .join(Par.buildSide(touched), "doc_id")
       .filter(col("doc_id") =!= col("cluster_id")) // self-anchors add nothing
       .select(col("doc_id").as("a"), col("cluster_id").as("b"))
     // delta graph size <= |newPairs| + |anchor| <= |newPairs| + |touched|
@@ -368,7 +368,7 @@ object Components {
     // exactly the delta-graph nodes that are some existing row's cluster_id
     val relabel = delta
       .join(
-        ex.select(col("cluster_id").as("doc_id")).distinct().hint("shuffle_hash"),
+        Par.buildSide(ex.select(col("cluster_id").as("doc_id")).distinct()),
         "doc_id"
       )
       .filter(col("doc_id") =!= col("cluster_id"))
@@ -383,7 +383,7 @@ object Components {
       .select(col("doc_id"))
       .unionByName(touched)
       .distinct()
-      .join(ex.select("doc_id").hint("shuffle_hash"), Seq("doc_id"), "left_anti")
+      .join(Par.buildSide(ex.select("doc_id")), Seq("doc_id"), "left_anti")
       .join(delta, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
 

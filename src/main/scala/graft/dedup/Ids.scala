@@ -23,8 +23,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    range sampling pass does not re-run an expensive upstream lineage.
   *  - [[assignDenseByKey]]: WIDE payload rows (the corpus). The payload
   *    never enters the stamp — only the key projection does; the payload is
-  *    not persisted and pays exactly one hash shuffle (the id join) unless
-  *    keys repeat.
+  *    not persisted, and the id join moves it through at most one hash
+  *    shuffle (none while the id map is broadcast) unless keys repeat.
   */
 object Ids {
 
@@ -63,15 +63,17 @@ object Ids {
 
   /** Id assignment for wide rows: count and stamp the SKINNY key projection
     * of `df` (column pruning keeps the payload out of it), then join ids back
-    * null-safe, shuffle-hash on the skinny build side. The payload is never
-    * persisted and crosses ONE exchange, the id join's: the planner hashes it
-    * on the full null-safe key (`<=>` plans as `coalesce(k, ''), isnull(k)`
-    * per column, which no partitioning of the raw columns satisfies, so an
-    * earlier repartition of the payload would only be shuffled again). Rows
-    * sharing a key tuple collapse to one arbitrary row — detected on the
-    * skinny side and resolved with a payload dedup (one more payload
-    * shuffle) only when duplicates actually exist. Ids depend on the key
-    * set alone. */
+    * null-safe with the id map as the build side ([[Par.buildSide]]). The
+    * payload is never persisted. While the id map fits the broadcast
+    * threshold the payload crosses NO exchange here; above it the join is a
+    * shuffle hash and the payload crosses ONE exchange, the id join's: the
+    * planner hashes it on the full null-safe key (`<=>` plans as
+    * `coalesce(k, ''), isnull(k)` per column, which no partitioning of the
+    * raw columns satisfies, so an earlier repartition of the payload would
+    * only be shuffled again). Rows sharing a key tuple collapse to one
+    * arbitrary row — detected on the skinny side and resolved with a
+    * payload dedup (one more payload shuffle) only when duplicates actually
+    * exist. Ids depend on the key set alone. */
   def assignDenseByKey(
       df: DataFrame,
       sortCols: Seq[String],
@@ -82,11 +84,9 @@ object Ids {
     val keyIds = prefixSum(keyCnt, sortCols, lit(1L), idCol, reg)._1
     val hasDups = keyIds.filter(col("__cnt") > 1).limit(1).count() > 0
     val deduped = if (hasDups) df.dropDuplicates(sortCols) else df
-    val right = keyIds
-      .select(sortCols.map(c => col(c).as(s"__k_$c")) :+ col(idCol): _*)
-      // build-side hint: the ids table is the small side; without it a
-      // sort-merge join would re-sort the wide payload
-      .hint("shuffle_hash")
+    // the ids table is the small side: broadcast, or a shuffle hash build
+    // (a sort-merge join would re-sort the wide payload)
+    val right = Par.buildSide(keyIds.select(sortCols.map(c => col(c).as(s"__k_$c")) :+ col(idCol): _*))
     // null-safe join keys: a null key tuple is still a (single) valid key,
     // and plain `=` would silently drop those rows
     val cond = sortCols.map(c => col(c) <=> col(s"__k_$c")).reduce(_ && _)

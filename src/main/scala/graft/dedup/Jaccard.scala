@@ -45,15 +45,19 @@ object Jaccard {
   }
 
   /** candidates (a, b) joined to (group, tokens_a) and tokens_b. The first
-    * join builds a shuffle hash on the skinny (a, b) pair side: an SMJ here
-    * would sort the wide token-array table. The SECOND join stays SMJ on
-    * purpose: its only possible build sides both carry token arrays, and an
-    * UnsafeHashedRelation build does not spill — at N tasks each gets 1/N of
-    * the executor pool and a fat build OOMs exactly when the machine is
-    * busiest (observed at the 2.5M-file local[8] leg). */
+    * join builds on the skinny (a, b) pair side ([[Par.buildSide]]): a
+    * broadcast while the candidates fit the broadcast threshold, so the
+    * token-array table streams through it without an exchange; above it a
+    * shuffle hash build, as an SMJ would sort the wide token-array table.
+    * The SECOND join carries no hint: both its sides carry token arrays,
+    * and an UnsafeHashedRelation build does not spill — at N tasks each gets
+    * 1/N of the executor pool and a fat build OOMs exactly when the machine
+    * is busiest (observed at the 2.5M-file local[8] leg). So Spark plans it
+    * by size alone: a broadcast of the (b, tokens_b) side while the encoded
+    * table fits the threshold, else an SMJ. */
   private def withTokens(candidates: DataFrame, encoded: DataFrame): DataFrame =
-    candidates
-      .hint("shuffle_hash")
+    Par
+      .buildSide(candidates)
       .join(encoded.select(col("doc_id").as("a"), col("group"), col("tokens").as("tokens_a")), "a")
       .join(encoded.select(col("doc_id").as("b"), col("tokens").as("tokens_b")), "b")
 

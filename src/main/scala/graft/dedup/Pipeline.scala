@@ -73,10 +73,12 @@ object Pipeline {
     * columns before the heavy per-row CPU).
     *
     * Order matters for scale: sha256 / byte-count / tokenize run FIRST and
-    * `content` is dropped, so the id-assignment join (the one shuffle the
-    * token arrays pay here) moves token arrays instead of raw text. Ids are
-    * counted and stamped on the skinny key projection, which reads no
-    * content; key dedup is resolved with a payload aggregate only when
+    * `content` is dropped, so the id-assignment join carries token arrays
+    * instead of raw text. That join broadcasts the id map while it fits the
+    * broadcast threshold, and the token arrays cross no exchange; above it
+    * the join is a shuffle hash, the one shuffle the token arrays pay here.
+    * Ids are counted and stamped on the skinny key projection, which reads
+    * no content; key dedup is resolved with a payload aggregate only when
     * duplicates actually exist ([[Ids.assignDenseByKey]]). */
   def prepareDocs(
       input: DataFrame,
@@ -105,15 +107,17 @@ object Pipeline {
 
   /** (doc_id, group, rep_id): byte-identical files collapse to the min-doc_id
     * representative of their (group, content_sha) class before candidate
-    * generation. A plain window-min — never materializes a class member list
-    * in one row, so a 100k-copy boilerplate file cannot OOM an executor. */
+    * generation. A per-class `min` aggregate joined back to every member on
+    * the class key, the aggregate as the build side ([[Par.buildSide]]) —
+    * never materializes a class member list in one row, so a 100k-copy
+    * boilerplate file cannot OOM an executor. */
   def exactClassMap(docs: DataFrame): DataFrame = {
     val mins = docs
       .groupBy("group", "content_sha")
       .agg(min(col("doc_id")).as("rep_id"))
     docs
       .select(col("doc_id"), col("group"), col("content_sha"))
-      .join(mins.hint("shuffle_hash"), Seq("group", "content_sha"))
+      .join(Par.buildSide(mins), Seq("group", "content_sha"))
       .select(col("doc_id"), col("group"), col("rep_id"))
   }
 
@@ -125,10 +129,10 @@ object Pipeline {
     * encode-surviving docs, mirroring the signatures stage (pruned docs
     * carry no signatures). */
   def repEncoded(docs: DataFrame, encoded: DataFrame): DataFrame = {
-    val reps = exactClassMap(docs.join(encoded.select("doc_id").hint("shuffle_hash"), "doc_id"))
+    val reps = exactClassMap(docs.join(Par.buildSide(encoded.select("doc_id")), "doc_id"))
       .filter(col("doc_id") === col("rep_id"))
       .select("doc_id")
-    encoded.join(reps.hint("shuffle_hash"), "doc_id")
+    encoded.join(Par.buildSide(reps), "doc_id")
   }
 
   def candidatesFor(signatures: DataFrame, cfg: Config): DataFrame =
@@ -146,10 +150,9 @@ object Pipeline {
   def expandExactClasses(repPairs: DataFrame, classMap: DataFrame): DataFrame = {
     val memA = classMap.select(col("rep_id").as("a"), col("doc_id").as("ma"))
     val memB = classMap.select(col("rep_id").as("b"), col("doc_id").as("mb"))
-    val cross = repPairs
-      .hint("shuffle_hash")
-      .join(memA, "a")
-      .hint("shuffle_hash")
+    val withA = Par.buildSide(repPairs).join(memA, "a")
+    val cross = Par
+      .buildSide(withA)
       .join(memB, "b")
       .select(
         col("group"),
@@ -225,7 +228,7 @@ object Pipeline {
     // Persisted: consumed by the signatures stage AND pair expansion — without
     // the cache its groupBy+join lineage re-executes in every consumer.
     val classMap = reg.persist(
-      exactClassMap(docs.join(encoded.select("doc_id").hint("shuffle_hash"), "doc_id"))
+      exactClassMap(docs.join(Par.buildSide(encoded.select("doc_id")), "doc_id"))
     )
 
     val signatures = Checkpoints.stage(spark, "signatures", p("signatures"), Seq("group"), Seq(p("encoded")), sig("signatures"))({
@@ -264,8 +267,10 @@ object Pipeline {
           reps0.join(vendoredDocIds, Seq("doc_id"), "left_anti")
         }
       val sigInput = encoded
-        // build on the skinny id side — SMJ would sort the wide token table
-        .join(reps.hint("shuffle_hash"), "doc_id")
+        // build on the skinny id side — SMJ would sort the wide token table.
+        // reps comes from a join, whose estimate is the product of its
+        // sides; it holds at most one row per doc
+        .join(Par.buildSide(reps, rowBound = nDocs), "doc_id")
         // two-pointer sorted difference, not array_except(.., lit(hot)):
         // the built-in rebuilds a hash set from the literal on every row
         .withColumn("tokens", ArrayExceptSorted(col("tokens"), hot))

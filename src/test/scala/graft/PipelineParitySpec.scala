@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import graft.dedup._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.execution.{InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
@@ -184,18 +184,28 @@ class PipelineParitySpec extends SparkSpec {
     assert(mismatches == 0)
   }
 
-  test("prepareDocs moves the token arrays through one shuffle and tokenizes each row once") {
+  test("prepareDocs: token arrays cross no shuffle with the id map broadcast, one without; each row tokenized once") {
     val dir = tmpDir("graft-docs-in")
     spark.createDataFrame(Twins.corpusLocal(300)).write.parquet(s"$dir/input")
-    val reg = new CacheRegistry
-    try {
-      val docs = Pipeline.prepareDocs(spark.read.parquet(s"$dir/input"), cfg, reg)
-      assert(docs.collect().length == 300)
-      val plan = docs.queryExecution.executedPlan
-      val shuffles = shufflesCarrying(docs, "tokens")
-      assert(shuffles.size == 1, s"${shuffles.size} token shuffles:\n$plan")
-      assert(kernelCalls(plan, TokenSetKernel.getClass) == 1, s"tokenizer calls per row in:\n$plan")
-    } finally reg.release()
+    // (doc rows by doc_id, token shuffles) of one prepareDocs
+    def docsRun(): (Seq[Row], Int) = {
+      val reg = new CacheRegistry
+      try {
+        val docs = Pipeline.prepareDocs(spark.read.parquet(s"$dir/input"), cfg, reg)
+        val rows = docs.collect().toSeq.sortBy(_.getAs[Long]("doc_id"))
+        val plan = docs.queryExecution.executedPlan
+        assert(kernelCalls(plan, TokenSetKernel.getClass) == 1, s"tokenizer calls per row in:\n$plan")
+        val shuffles = shufflesCarrying(docs, "tokens")
+        assert(shuffles.size <= 1, s"${shuffles.size} token shuffles:\n$plan")
+        (rows, shuffles.size)
+      } finally reg.release()
+    }
+    val (broadcast, broadcastShuffles) = docsRun()
+    val (hashed, hashShuffles) = withConf(BroadcastThreshold -> "-1")(docsRun())
+    assert(broadcast.length == 300)
+    assert(broadcastShuffles == 0, "the id join shuffled the token arrays at the default broadcast threshold")
+    assert(hashShuffles == 1, "the shuffle hash id join must move the token arrays through exactly one shuffle")
+    assert(broadcast == hashed, "the two id-join plans give different docs")
   }
 
   test("substring dedup reads the row the docs stage kept, null keys included") {
@@ -442,6 +452,24 @@ class PipelineParitySpec extends SparkSpec {
     assert(sims.nonEmpty && sims.forall(_ >= cfg.threshold))
     val plan = verified.queryExecution.executedPlan
     assert(kernelCalls(plan, JaccardKernel.getClass) == 1, s"Jaccard kernel calls per pair in:\n$plan")
+  }
+
+  test("verify: token arrays cross no shuffle with the candidates broadcast, and the same pairs come out without") {
+    val t = Pipeline.run(spark, spark.createDataFrame(Twins.corpusLocal(200)), cfg, tmpDir("graft-verify-build"))
+    // (verified pairs, shuffles carrying tokens_a) of one verify
+    def verifyRun(): (Set[(String, Long, Long, Double)], Int) = {
+      val verified = Jaccard.verify(t.candidates, t.encoded, cfg.threshold)
+      val pairs = verified.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+      (pairs, shufflesCarrying(verified, "tokens_a").size)
+    }
+    val (broadcast, broadcastShuffles) = verifyRun()
+    val (hashed, hashShuffles) = withConf(BroadcastThreshold -> "-1")(verifyRun())
+    assert(broadcast.nonEmpty)
+    assert(broadcastShuffles == 0, "verify shuffled tokens_a at the default broadcast threshold")
+    // without broadcasts: the shuffle hash join's exchange of the (a,
+    // tokens_a) side, and the sort-merge join's exchange of its output by b
+    assert(hashShuffles == 2, s"$hashShuffles tokens_a shuffles without broadcasts")
+    assert(broadcast == hashed, "the two verify plans give different pairs")
   }
 
   /** `body`'s result and every plan it executes, captured by a listener. */

@@ -37,6 +37,19 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** `body` run with the session confs `kvs` set; each is restored after. */
+  def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val conf = spark.conf
+    val old = kvs.map { case (k, _) => k -> conf.getOption(k) }
+    kvs.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally old.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
+  /** The session's broadcast threshold: `-1` turns every broadcast join
+    * [[graft.dedup.Par.buildSide]] would choose into a shuffle hash join. */
+  val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
+
   /** Every node of a physical plan: AQE query stages, and the plan of each
     * cached relation it scans, each cached plan once however often it is
     * scanned. */
