@@ -183,8 +183,9 @@ object Dev {
         Jaccard.verify(MinHash.candidatePairs(sigs, cfg), encoded, cfg.threshold),
       "q16_ngram_jaccard (compiled WordGramSet kernel + PPJoin over 3-gram sets)" -> q("q16_ngram_jaccard"),
       "q20_fingerprint (single-pass MinGramMd5 kernel, no explode/groupBy)" -> q("q20_fingerprint"),
+      // the corpus size bounds every band bucket, as q23's doc count does
       "first-collision-band candidates (64x2 oracle config, the q23 generator)" ->
-        MinHash.candidatePairs(MinHash.withSignature(encoded, cfg64), cfg64),
+        MinHash.candidatePairs(MinHash.withSignature(encoded, cfg64), cfg64, docCountBound = 1000L),
       "SimHash block candidates (Hamming test in the walk)" -> SimHash.candidatePairs(sigs, cfg),
       "q28_lsh_cosine_top3 (compiled HyperplaneSketch + CosineFloat re-rank)" -> q("q28_lsh_cosine_top3"),
       "winnow candidate pairs (native WinnowFingerprints, the q31a/q31b front-end)" -> SuffixDedup.candidatePairs(

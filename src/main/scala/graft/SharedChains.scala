@@ -230,11 +230,10 @@ private[graft] object SharedChains {
   val lshVerifiedWithCount = memo.declare("lsh_verified") { (s, dir) =>
     val cfg = oracleLshCfg
     val (enc, _, _, encRows) = encodedChain(s, dir)
-    // persisted: at this config candidatePairs takes the first-collision
-    // path; the known doc count bounds every band bucket's size, so when
-    // it is <= maxBucket the oversized-bucket probe job is skipped
-    // entirely (PairGen proves the set empty by arithmetic). Transient —
-    // dead once the count below has materialized.
+    // persisted: the known doc count bounds every band bucket's size, and
+    // at this config (64x2, maxBucket 1<<20) a bound <= maxBucket selects
+    // candidatePairs' first-collision walk. Transient — dead once the
+    // count below has materialized.
     val sigs = transientReg.persist(MinHash.withSignature(enc, cfg))
     val pairs = sharedReg.persist(Jaccard.verifyCounts(
       MinHash.candidatePairs(sigs, cfg, docCountBound = encRows),
@@ -335,14 +334,12 @@ private[graft] object SharedChains {
     shared(Components.assignAll(encCached(s, dir), pairs, knownEdgeBound = nPairs))
   }
 
-  /** The sqrt(n) coarse quantizer over the embeddings table — the exact
-    * centroids q36 (IVF) and q37 (SemDeDup) would each recompute (an
-    * identical sizing count job + centroid collect): n from one count,
-    * nc = max(16, ceil(sqrt(n))) (the operators' shared adaptive default,
-    * [[graft.ops.Similarity.adaptiveCentroids]]),
+  /** The sqrt(n) coarse quantizer over the embeddings table, the centroids
+    * q36 (IVF) and q37 (SemDeDup) both take: n from one count,
+    * nc = max(16, ceil(sqrt(n))) ([[graft.ops.Similarity.adaptiveCentroids]]),
     * centroids = the nc lowest-vec_id embeddings. A pure function of the
-    * input table, so the consumers' outputs are bitwise unchanged; pure
-    * driver-side state (a few hundred centroid vectors). */
+    * input table, which the SQL oracle recomputes; pure driver-side state (a
+    * few hundred centroid vectors). */
   val embCentroidsCached = memo.declare("emb_centroids") { (s, dir) =>
     graft.ops.Similarity.adaptiveCentroids(t(s, dir, "embeddings"))
   }

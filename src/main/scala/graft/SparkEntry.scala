@@ -373,8 +373,7 @@ object SparkEntry {
     // from the table itself, including the sqrt sizing rule.
     "q36_ivf_cosine_top3" -> ((s, dir) =>
       Similarity
-        .ivfCosineTopK(t(s, dir, "embeddings"), k = 3, nProbe = 4, reg = transientReg,
-          knownCentroids = embCentroidsCached(s, dir))
+        .ivfCosineTopK(t(s, dir, "embeddings"), k = 3, embCentroidsCached(s, dir), nProbe = 4, reg = transientReg)
         .select(col("vec_id"), col("neighbor"), col("rank").cast("long").as("rnk"))),
 
     // ---- composite group keys + group stats with distinct participants ----
@@ -591,8 +590,7 @@ object SparkEntry {
     // lowest vec_id — sub-quadratic (~n^1.5) semantic dedup, the embedding
     // sibling of the MinHash/SimHash detectors.
     "q37_semdedup" -> ((s, dir) =>
-      Similarity.semDedup(t(s, dir, "embeddings"), minCosine = 0.35, reg = transientReg,
-        knownCentroids = embCentroidsCached(s, dir)))
+      Similarity.semDedup(t(s, dir, "embeddings"), minCosine = 0.35, embCentroidsCached(s, dir), reg = transientReg))
   )
 
   def oracleSql: Map[String, String] = OracleSql.all

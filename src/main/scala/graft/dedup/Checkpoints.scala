@@ -25,10 +25,10 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
   * runtime image ships no Iceberg jars (offline resolver), so plain
   * partitioned Parquet stands in.
   *
-  * A stage is complete iff Parquet's `_SUCCESS` marker exists (the write is
-  * atomic: task commit + job commit), so a killed run re-executes exactly the
-  * incomplete stages and the final output is byte-identical — verified by the
-  * resume test in the suite.
+  * A stage is complete iff Parquet's `_SUCCESS` marker (the write is atomic:
+  * task commit + job commit) and its lineage manifest exist, so a killed run
+  * re-executes exactly the incomplete stages and the final output is
+  * byte-identical — verified by the resume test in the suite.
   */
 object Checkpoints {
 
@@ -54,7 +54,10 @@ object Checkpoints {
     * with it, so a partition value reads back as the type it was written
     * with ("2015" stays a string) and a partitioned stage with no rows (no
     * data file, so no footer to infer from) reads back too. Only manifests
-    * written before the schema key existed fall back to inference.
+    * written before the schema key existed fall back to inference. A
+    * committed table without a manifest is a run killed between the data
+    * commit and the manifest write: it is rebuilt, not read back by
+    * inference.
     *
     * `configSig`: the canonical config string the stage's content depends on
     * (one entry of [[Config.stageFingerprints]]). Non-empty sigs are stamped
@@ -76,8 +79,8 @@ object Checkpoints {
       inputs: Seq[String] = Nil,
       configSig: String = ""
   )(build: => DataFrame): DataFrame = {
-    val complete = exists(spark, path)
-    val manifest = if (complete) readManifest(spark, path) else None
+    val manifest = if (exists(spark, path)) readManifest(spark, path) else None
+    val complete = manifest.nonEmpty
     val staleCfg = manifest.flatMap(storedSigMismatch(_, configSig))
     staleCfg.foreach { stored =>
       System.err.println(
@@ -107,14 +110,9 @@ object Checkpoints {
       Some(schema)
     } else {
       val stored = manifest.flatMap(storedSchema)
-      // heal a run killed between data commit and sidecar write: the stage
-      // itself is complete (atomic _SUCCESS), only the sidecar is missing.
-      // (Known double-fault gap: the healed manifest stamps the CURRENT
-      // configSig — if the killed run used a different config, that one
-      // stage's data predates the stamp. The window is a single stage's
-      // commit-to-sidecar gap, and the interleaving needs a config change
-      // across the crash; a paranoid operator deletes the last stage dir
-      // after any crashed run that also changed config.)
+      // heal a run killed between the manifest and the `_metrics` write:
+      // the stage and its manifest (which passed the config check above)
+      // are complete, only `_metrics` is missing
       if (!exists(spark, path + "_metrics")) {
         val counts = countedWrite(read(spark, path, stored), partitionCols)(
           _.write.format("noop").mode("overwrite").save()
@@ -209,9 +207,9 @@ object Checkpoints {
   ))
 
   /** Lineage manifest + metrics for a committed stage, from the counts its
-    * write observed. The manifest goes first: `_metrics`' `_SUCCESS` is what
-    * marks the sidecars complete, so a run killed between the two heals
-    * both on resume. */
+    * write observed. The manifest goes first: it completes the stage, and
+    * `_metrics`' `_SUCCESS` marks the sidecars complete, so a run killed
+    * between the two heals `_metrics` on resume. */
   private def writeSidecars(
       spark: SparkSession,
       name: String,

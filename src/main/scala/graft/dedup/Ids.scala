@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftBridge, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -13,10 +13,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (nondeterministic under retries / partition changes) and a global
   * single-partition `row_number()` window (all rows through one task).
   *
-  * [[prefixSum]] is the one two-pass stamp; a dense id is its sum of 1 per
-  * row (ids = dense rank over the distinct sort-key tuples, in key order —
-  * a pure function of the input's key set). The id entry points differ
-  * only in what they persist and what reaches the stamp:
+  * [[prefixSum]] is the one two-pass stamp; a dense id is its count of the
+  * earlier rows (no weight column; ids = dense rank over the distinct
+  * sort-key tuples, in key order — a pure function of the input's key set).
+  * The id entry points differ only in what they persist and what reaches
+  * the stamp:
   *
   *  - [[assignDense]]: SKINNY inputs whose keys are already unique
   *    (vocabulary rows, element-df tables). The input is persisted so the
@@ -58,7 +59,7 @@ object Ids {
     // the sampling pass of repartitionByRange re-executes the input lineage;
     // persist so an upstream aggregate is computed once
     val input = reg.persist(df)
-    prefixSum(input, sortCols, lit(1L), idCol, reg)
+    prefixSum(input, sortCols, None, idCol, reg)
   }
 
   /** Id assignment for wide rows: count and stamp the SKINNY key projection
@@ -81,7 +82,7 @@ object Ids {
       reg: CacheRegistry = CacheRegistry.unmanaged
   ): DataFrame = {
     val keyCnt = df.groupBy(sortCols.map(col): _*).agg(count(lit(1)).as("__cnt"))
-    val keyIds = prefixSum(keyCnt, sortCols, lit(1L), idCol, reg)._1
+    val keyIds = prefixSum(keyCnt, sortCols, None, idCol, reg)._1
     val hasDups = keyIds.filter(col("__cnt") > 1).limit(1).count() > 0
     val deduped = if (hasDups) df.dropDuplicates(sortCols) else df
     // the ids table is the small side: broadcast, or a shuffle hash build
@@ -96,10 +97,11 @@ object Ids {
   }
 
   /** The one global ordered prefix sum. `df`'s rows must be UNIQUE by
-    * `sortCols`; `weight` is a non-null, non-negative long per row. Each
-    * row gains `outCol` = the sum of `weight` over every row earlier in
-    * `sortCols` order; the returned Long is the total weight. A dense id is
-    * `prefixSum` with weight `lit(1L)`; q43's shard layout
+    * `sortCols`; each row weighs 1 (`weightCol` = None) or the value of its
+    * `weightCol`, a non-null, non-negative long column. Each row gains
+    * `outCol` = the sum of the weights of every row earlier in `sortCols`
+    * order; the returned Long is the total weight. A dense id is
+    * `prefixSum` with no weight column; q43's shard layout
     * ([[graft.ops.ShardPack]]) is the same sum over token counts.
     *
     * Two passes, never a single-partition window: range-partition + sort
@@ -107,9 +109,8 @@ object Ids {
     * cached sorted copy), fold the sums into start offsets on the driver
     * (O(#partitions) state), stamp offset + the weights before each row in
     * its partition (second narrow job). The persist pins the sampled
-    * partitioning both jobs must share. A literal weight is read on the
-    * driver and never enters the cached rows (a dense id's plan is the
-    * plain stamp's); any other weight is stored beside the partition id.
+    * partitioning both jobs must share. The cached rows are the input's
+    * plus the partition id: the weight is read from its own column.
     *
     * The partition id is MATERIALIZED INTO THE CACHED ROWS
     * (spark_partition_id() at cache-build time), not read from TaskContext
@@ -124,20 +125,18 @@ object Ids {
   def prefixSum(
       df: DataFrame,
       sortCols: Seq[String],
-      weight: Column,
+      weightCol: Option[String],
       outCol: String,
       reg: CacheRegistry = CacheRegistry.unmanaged
   ): (DataFrame, Long) = {
     val cols = sortCols.map(col)
-    val constant = GraftBridge.literal(weight).map(_.asInstanceOf[Number].longValue)
-    val ranged = df.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
-    val weighted = if (constant.isEmpty) ranged.withColumn("__w", weight.cast(LongType)) else ranged
-    val sorted = reg.persist(weighted.withColumn("__pid", spark_partition_id()))
+    val sorted = reg.persist(
+      df.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*).withColumn("__pid", spark_partition_id()))
     val width = df.columns.length
     val pidIdx = sorted.schema.fieldIndex("__pid")
-    val weightOf: Row => Long = constant match {
-      case Some(w) => _ => w
-      case None => val wIdx = sorted.schema.fieldIndex("__w"); _.getLong(wIdx)
+    val weightOf: Row => Long = weightCol match {
+      case None => _ => 1L
+      case Some(c) => val wIdx = df.schema.fieldIndex(c); _.getLong(wIdx)
     }
 
     // per-partition sums over the CACHED sorted copy. Dataset.mapPartitions,

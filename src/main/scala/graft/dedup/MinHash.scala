@@ -58,29 +58,34 @@ object MinHash {
 
   /** LSH candidate pairs (a < b), deduped across bands.
     *
-    * Both plans run PairGen's one bucket walk and emit the SAME pair set
-    * (asserted by TopNSpec and PairGenSpec); they differ in the walk's keep
-    * rule for small buckets. Few rows per band (<= 2 — the oracle-equality
-    * detector configs) means a near-dup pair collides in MOST bands, so
-    * keeping every pair shuffles a large duplication factor into the final
-    * distinct() (measured 27x / 86M raw rows on the sf0.1 queries); the
-    * first-collision rule keeps each pair only in its minimal non-oversized
-    * band, paying a wider band-row exchange (the carried hash array). At
-    * production banding (32x4) the measured duplication is only 1.92x and
-    * the narrow keep-all exchange wins. */
-  def candidatePairs(signatures: DataFrame, cfg: Config, docCountBound: Long = Long.MaxValue): DataFrame =
-    if (cfg.rowsPerBand <= 2)
-      PairGen.pairsFromBandBucketsFirstCollision(
-        bandRowsWithHashes(signatures, cfg),
-        groupCols = Seq("group"),
-        maxBucket = cfg.maxBucket,
-        // one row per doc per band bucket: the doc count bounds bucket size
-        bucketSizeBound = docCountBound
-      )
+    * Both plans run PairGen's one bucket walk over (group, band, band_hash)
+    * buckets; they differ in the rows it carries and its keep rule. Few
+    * rows per band (<= 2 — the oracle-equality detector configs) means a
+    * near-dup pair collides in MOST bands, so keeping every pair shuffles a
+    * large duplication factor into the final distinct() (measured 27x / 86M
+    * raw rows on the sf0.1 queries). There, when the caller's
+    * `docCountBound` is at most `maxBucket`, the first-collision walk runs
+    * instead: each band row carries the doc's full band-hash array (`bhs`)
+    * and a pair is kept only in the first band the two docs collide in
+    * ([[PairGen.FirstCollision]]), so the distinct shuffles ~1x the pair
+    * set. A doc has one row per band bucket, so the bound proves that no
+    * bucket crosses the cap, and the keep-all walk would walk every bucket
+    * in full too: both emit the same pair set (asserted by TopNSpec and
+    * PairGenSpec). The first-collision walk runs UNCAPPED, so a wrong bound
+    * costs time and never loses a pair.
+    *
+    * NOT the default: carrying `bands` hashes per band row multiplies the
+    * exchange width, which only pays when the duplication factor is large
+    * (measured: production 32x4 dup factor 1.92, oracle 64x2 dup factor
+    * 27), and a caller without a bound takes the keep-all walk. A bucket
+    * buffers each member's hash array: bound x bands x 8 bytes per task at
+    * most. */
+  def candidatePairs(signatures: DataFrame, cfg: Config, docCountBound: Long = Long.MaxValue): DataFrame = {
+    val buckets = Seq("group", "band", "band_hash")
+    if (cfg.rowsPerBand <= 2 && docCountBound <= cfg.maxBucket)
+      PairGen.pairsFromBuckets(bandRowsWithHashes(signatures, cfg), buckets, maxBucket = Int.MaxValue,
+        keep = Some("bhs" -> (() => PairGen.FirstCollision)))
     else
-      PairGen.pairsFromBuckets(
-        bandRows(signatures, cfg),
-        bucketCols = Seq("group", "band", "band_hash"),
-        maxBucket = cfg.maxBucket
-      )
+      PairGen.pairsFromBuckets(bandRows(signatures, cfg), buckets, cfg.maxBucket)
+  }
 }

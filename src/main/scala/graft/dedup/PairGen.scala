@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   *
   * Physical shape: ONE hash exchange on the bucket key + ONE in-partition
   * sort by (key, doc_id) + the streaming [[BucketWalk]], which buffers at
-  * most maxBucket+1 members per bucket, however hot. It emits one
+  * most maxBucket+1 members per bucket, however hot (the first-collision
+  * walk runs uncapped, under a caller's bound on bucket size). It emits one
   * (id, neighbor-array) row per doc per bucket, not one JVM object per pair;
   * the quadratic fan-out is a codegen'd `explode` over primitive long arrays
   * (boxing each pair was measurably slower). The winnow pass keys its
@@ -242,36 +243,25 @@ object PairGen {
       it => cappedWalk(it, nKeys, maxDf, maxBucket))
   }
 
-  /** Broadcastable oversized-bucket sets above this size fall back to
-    * [[pairsFromBuckets]] (correctness never depends on the fast path). */
-  val OversizedBroadcastMax: Long = 2000000L
-
-  /** Keep rule of [[pairsFromBandBucketsFirstCollision]]: a pair of band
-    * `b`'s bucket survives iff no band k < b holds both docs in a small
-    * bucket, i.e. every earlier equal band hash keys a bucket in `oversized`
-    * (group values ++ (band, band_hash)). The sig is the doc's hash per
-    * band.
+  /** Keep rule of the first-collision walk ([[MinHash.candidatePairs]]) over
+    * (group, band, band_hash) buckets: a pair of band `b`'s bucket survives
+    * iff no earlier band k < b shares the two docs' hash, i.e. `b` is the
+    * first band they collide in. The sig is the doc's hash per band.
     *
-    * The walk emits the keep-all walk's pair set, chain links included: if
-    * the rule drops a pair at band b, the two docs share a band k < b bucket
-    * whose key is outside `oversized` (a superset of the oversized keys), so
-    * it is small and walked in full, and the smallest such k emits the pair.
-    * A superset only adds duplicates. */
-  private[dedup] final class FirstCollision(nGroup: Int, oversized: Set[Seq[Any]]) extends KeepRule {
+    * Over an UNCAPPED walk every bucket is walked in full, so the first
+    * band two docs collide in emits their pair and no later band does: the
+    * keep-all walk's pair set, each pair exactly once. */
+  private[dedup] object FirstCollision extends KeepRule {
     def sig(r: Row): Array[Long] = r.getSeq[Long](r.length - 1).toArray
 
     def test(key: Row): (Array[Long], Array[Long]) => Boolean = {
-      val band = key.getInt(nGroup)
-      val group = key.toSeq.take(nGroup)
+      val band = key.getInt(1)
       (a, b) => {
         var k = 0
-        while (k < band && (a(k) != b(k) || isOversized(group, k, a(k)))) k += 1
+        while (k < band && a(k) != b(k)) k += 1
         k == band
       }
     }
-
-    private def isOversized(group: Seq[Any], band: Int, hash: Long): Boolean =
-      oversized.nonEmpty && oversized.contains(group ++ Seq[Any](band, hash))
   }
 
   /** Keep rule of SimHash's block walk: a pair survives iff its simhashes
@@ -280,56 +270,5 @@ object PairGen {
     def sig(r: Row): Array[Long] = Array(r.getLong(r.length - 1))
     def test(key: Row): (Array[Long], Array[Long]) => Boolean =
       (x, y) => java.lang.Long.bitCount(x(0) ^ y(0)) <= maxDist
-  }
-
-  /** FIRST-COLLISION-BAND pair generation for HIGH-COLLISION banding configs
-    * (e.g. 64 bands x 2 rows at threshold 0.5: a sim-0.9 pair collides in
-    * ~52 of 64 bands, so [[pairsFromBuckets]] shuffles ~27 duplicate rows
-    * per distinct pair into its distinct() — measured 86M raw vs 3.2M
-    * distinct on the sf0.1 detector queries). The same walk with the
-    * [[FirstCollision]] keep rule: each band row carries the doc's FULL
-    * band-hash array (`bhs`), and a small bucket emits a pair only in the
-    * minimal band where the two docs collide in a non-oversized bucket — so
-    * the final distinct shuffles ~1x the pair set.
-    *
-    * The emitted pair SET is identical to [[pairsFromBuckets]] (see
-    * [[FirstCollision]]): the rule treats collisions inside oversized
-    * buckets as non-emitting via a broadcast of their keys — rare by design
-    * (the bench measures 0); above [[OversizedBroadcastMax]] keys this falls
-    * back to [[pairsFromBuckets]] wholesale. A doc has one row per band
-    * bucket, so a doc-count `bucketSizeBound` <= maxBucket proves the set
-    * empty and skips the probe job.
-    *
-    * NOT the default: carrying `bands` hashes per band row multiplies the
-    * exchange width, which only pays when the duplication factor is large
-    * (measured: production 32x4 dup factor 1.92, oracle 64x2 dup factor 27).
-    * A small bucket buffers each member's hash array, up to (maxBucket+1) x
-    * bands x 8 bytes per task: ~1 MB at capped configs, up to ~0.5 GB on a
-    * hot bucket under the UNCAPPED oracle-parity config (maxBucket = 1<<20).
-    *
-    * rows: groupCols ++ (band: int, band_hash: long, doc_id, bhs:
-    * array<long> — the doc's hash per band, indexed by `band`). */
-  def pairsFromBandBucketsFirstCollision(
-      rows: DataFrame,
-      groupCols: Seq[String],
-      maxBucket: Int,
-      bucketSizeBound: Long = Long.MaxValue
-  ): DataFrame = {
-    val keyCols = groupCols ++ Seq("band", "band_hash")
-    val keys = keyCols.map(col)
-    val oversized: Array[Row] =
-      if (bucketSizeBound <= maxBucket) Array.empty
-      else
-        rows
-          .groupBy(keys: _*)
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") > maxBucket)
-          .select(keys: _*)
-          .limit((OversizedBroadcastMax + 1).toInt)
-          .collect()
-    if (oversized.length > OversizedBroadcastMax) return pairsFromBuckets(rows, keyCols, maxBucket)
-    val nGroup = groupCols.length
-    val bOversized = rows.sparkSession.sparkContext.broadcast(oversized.map(_.toSeq).toSet)
-    pairsFromBuckets(rows, keyCols, maxBucket, Some("bhs" -> (() => new FirstCollision(nGroup, bOversized.value))))
   }
 }

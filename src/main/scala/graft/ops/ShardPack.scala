@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   */
 object ShardPack {
 
-  /** Pack rows (unique by `orderCol`) into shards of `budget` weight units.
+  /** Pack rows (unique by `orderCol`) into shards of `budget` weight units
+    * (`weightCol`: a non-null, non-negative long column).
     * Output columns: the input's, plus `token_offset` (sum of `weightCol`
     * over all rows strictly before this one in `orderCol` order) and
     * `shard_id` (= token_offset div budget, a bigint). `reg` owns the
@@ -33,7 +34,7 @@ object ShardPack {
       reg: CacheRegistry = CacheRegistry.unmanaged
   ): DataFrame = {
     require(budget > 0, s"shard budget must be positive, got $budget")
-    val (offsets, _) = Ids.prefixSum(df, Seq(orderCol), col(weightCol), "token_offset", reg)
+    val (offsets, _) = Ids.prefixSum(df, Seq(orderCol), Some(weightCol), "token_offset", reg)
     // integral `div`: `/` is a double division, and the layout is bigint
     offsets.withColumn("shard_id", expr(s"token_offset div $budget"))
   }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.dedup.{CosineFloat, KernelCall, PairGen}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
@@ -31,6 +30,9 @@ final case class VecBlock(bid: Long, n: Int, dim: Int, ids: Array[Long], data: A
   *    corpora where even tiled O(n^2) is off the table; approximate
   *    (recall tunable via planes/blocks), measured against the exact path
   *    in the test suite.
+  * The quantized operators [[ivfCosineTopK]] and [[semDedup]] take their
+  * coarse centroids from the caller; [[adaptiveCentroids]] computes the
+  * deterministic set once per table.
   */
 object Similarity {
 
@@ -241,19 +243,18 @@ object Similarity {
     sym.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** IVF-flat approximate top-k: a coarse quantizer partitions the corpus
-    * into `nCentroids` inverted lists (assignment = nearest centroid by
-    * cosine), each query probes its `nProbe` nearest lists and re-ranks the
-    * candidates exactly. The quadratic work drops to ~n^2 * nProbe /
-    * nCentroids; recall is tunable via nProbe (measured against the exact
-    * path in the test suite).
+  /** IVF-flat approximate top-k: the coarse quantizer `centroids` (cid,
+    * vector) partitions the corpus into one inverted list per centroid
+    * (assignment = nearest centroid by cosine), each query probes its
+    * `nProbe` nearest lists and re-ranks the candidates exactly. The
+    * quadratic work drops to ~n^2 * nProbe / #centroids; recall is tunable
+    * via nProbe (measured against the exact path in the test suite).
     *
-    * The quantizer is DETERMINISTIC: centroids are the embeddings of the
-    * `nCentroids` lowest vec_ids (one narrow filter + driver collect of a
-    * few KB). A production deployment would k-means-refine them on a sample —
-    * refinement changes only the centroid values, not the plan shape — but
-    * fixed seeds keep the operator a pure function of its input, which is
-    * what lets an ANSI-SQL oracle reproduce it value-for-value (q36).
+    * The caller passes the centroids, so one set serves every quantized
+    * operator over a table. Fixed ones ([[centroids]], [[adaptiveCentroids]]:
+    * the embeddings of the lowest vec_ids) keep the operator a pure function
+    * of its input, which is what lets an ANSI-SQL oracle reproduce it
+    * value-for-value (q36).
     *
     * All cosines are evaluated in the same index-ordered shape as [[cosine]],
     * so scores are bit-identical across engines; ties break on (score desc,
@@ -262,23 +263,12 @@ object Similarity {
   def ivfCosineTopK(
       embeddings: DataFrame,
       k: Int,
-      nCentroids: Int = 0, // 0 = adaptive, see [[adaptiveCentroids]]
+      centroids: Array[(Long, Array[Double])], // cid-ascending
       nProbe: Int = 4,
-      refineIters: Int = 0, // k-means refinement passes over the quantizer;
-      // 0 keeps the pure-function-of-input contract the q36 oracle needs
-      reg: graft.dedup.CacheRegistry = graft.dedup.CacheRegistry.unmanaged,
-      // Precomputed coarse centroids (as produced by [[centroids]] at the
-      // adaptive sqrt(n) size): callers that run several quantized operators
-      // over ONE embeddings table pass them once, skipping this operator's
-      // sizing count job and centroid collect. null = compute here
-      // (identical result: the quantizer is a pure function of the input).
-      knownCentroids: Array[(Long, Array[Double])] = null
+      reg: graft.dedup.CacheRegistry = graft.dedup.CacheRegistry.unmanaged
   ): DataFrame = {
-    require(knownCentroids == null || nCentroids == 0,
-      s"ivfCosineTopK: pass knownCentroids or nCentroids, not both (nCentroids = $nCentroids)")
-    val cents = refineCentroids(embeddings, quantizer(embeddings, nCentroids, knownCentroids), refineIters)
     val spark = embeddings.sparkSession
-    val bCents = spark.sparkContext.broadcast(cents)
+    val bCents = spark.sparkContext.broadcast(centroids)
     val np = nProbe
     // top-nProbe centroid ids per vector, ordered (score desc, cid asc). A
     // 100-plus-wide Column expression here blew past whole-stage codegen limits.
@@ -334,13 +324,13 @@ object Similarity {
     * cluster self-join is an equi-join on cid that shuffles each cluster to
     * one task — the same scale shape as the paper's per-cluster pass.
     *
-    * Determinism contract matches [[ivfCosineTopK]]: centroids are the
-    * `nCentroids` lowest vec_ids ([[refineCentroids]] would change values,
-    * not plan shape), assignment ties break toward the lowest centroid id,
-    * and the keep rule is "a vector is removed iff a LOWER-vec_id member of
-    * its cluster is within `minCosine`" — the paper keeps one example per
-    * epsilon-neighborhood; lowest-id is the deterministic representative an
-    * ANSI oracle can reproduce value-for-value (q37).
+    * Determinism contract matches [[ivfCosineTopK]]: the caller's
+    * `centroids` (cid-ascending; q37 passes the q36 set), assignment ties
+    * break toward the lowest centroid id, and the keep rule is "a vector is
+    * removed iff a LOWER-vec_id member of its cluster is within
+    * `minCosine`" — the paper keeps one example per epsilon-neighborhood;
+    * lowest-id is the deterministic representative an ANSI oracle can
+    * reproduce value-for-value (q37).
     *
     * Emits (vec_id, cid, kept) for every vector with a non-degenerate
     * embedding (zero-norm vectors have no nearest centroid, as in q36).
@@ -348,18 +338,18 @@ object Similarity {
   def semDedup(
       embeddings: DataFrame,
       minCosine: Double,
-      nCentroids: Int = 0,
-      reg: graft.dedup.CacheRegistry = graft.dedup.CacheRegistry.unmanaged,
-      // precomputed quantizer — same contract as [[ivfCosineTopK]]'s param
-      knownCentroids: Array[(Long, Array[Double])] = null
+      centroids: Array[(Long, Array[Double])],
+      reg: graft.dedup.CacheRegistry = graft.dedup.CacheRegistry.unmanaged
   ): DataFrame = {
-    require(knownCentroids == null || nCentroids == 0,
-      s"semDedup: pass knownCentroids or nCentroids, not both (nCentroids = $nCentroids)")
     val spark = embeddings.sparkSession
-    val bCents = spark.sparkContext.broadcast(quantizer(embeddings, nCentroids, knownCentroids))
+    val bCents = spark.sparkContext.broadcast(centroids)
     // ties keep the lowest cid, the SQL oracle's (score DESC, cid) ordering;
     // zero-norm vectors stay unassigned (-1)
-    val nearestUdf = nearestCentroidUdf(bCents)
+    val nearestUdf = udf { (emb: Seq[Float]) =>
+      val cs = bCents.value
+      val best = bestCentroids(emb, cs, 1)
+      if (best.isEmpty) -1L else cs(best(0))._1
+    }.asNondeterministic() // runs once per row (KernelCall)
     val assigned = reg.persist(
       embeddings
         .select(col("vec_id"), col("embedding"), nearestUdf(col("embedding")).as("cid"))
@@ -377,49 +367,6 @@ object Similarity {
     assigned
       .join(removed.withColumn("rm", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cid"), col("rm").isNull.as("kept"))
-  }
-
-  /** Lloyd k-means refinement of the coarse quantizer: assign every vector
-    * to its nearest current centroid by cosine (broadcast matrix, one
-    * narrow pass), recompute each centroid as its cluster's per-dimension
-    * mean (distributed posexplode + avg — no driver pass over the corpus),
-    * repeat. Centroid ids keep their slot; a cluster that loses all members
-    * keeps its previous centroid (classic empty-cluster rule). The
-    * per-dimension mean is a float aggregate whose summation order Spark
-    * does not fix, so REFINED quantizers trade bitwise run-to-run
-    * determinism for tighter lists — which is why the oracle-checked q36
-    * path runs refineIters=0 and the refinement sits behind the flag
-    * (recall-vs-exact measured in OpsSpec). */
-  def refineCentroids(
-      embeddings: DataFrame,
-      initial: Array[(Long, Array[Double])],
-      iters: Int
-  ): Array[(Long, Array[Double])] = {
-    if (iters <= 0 || initial.isEmpty) return initial
-    val spark = embeddings.sparkSession
-    var cents = initial
-    var it = 0
-    while (it < iters) {
-      val bCents = spark.sparkContext.broadcast(cents)
-      val nearestUdf = nearestCentroidUdf(bCents)
-      val means = embeddings
-        .select(nearestUdf(col("embedding")).as("cid"), col("embedding"))
-        .filter(col("cid") >= 0)
-        .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy("cid", "pos")
-        .agg(avg(col("v")).as("m"))
-        .collect()
-        .groupBy(_.getLong(0))
-        .map { case (cid, rows) =>
-          val dim = rows.length
-          val arr = new Array[Double](dim)
-          rows.foreach(r => arr(r.getInt(1)) = r.getDouble(2))
-          cid -> arr
-        }
-      cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
-      it += 1
-    }
-    cents
   }
 
   /** The deterministic coarse centroids: embeddings of the `n` LOWEST
@@ -440,17 +387,6 @@ object Similarity {
     * plus the centroid collect. */
   def adaptiveCentroids(embeddings: DataFrame): Array[(Long, Array[Double])] =
     centroids(embeddings, math.max(16, math.ceil(math.sqrt(embeddings.count().toDouble)).toInt))
-
-  /** The quantized operators' centroid choice: the caller's precomputed set,
-    * else `nCentroids` fixed centroids, else the adaptive size. */
-  private def quantizer(
-      embeddings: DataFrame,
-      nCentroids: Int,
-      known: Array[(Long, Array[Double])]
-  ): Array[(Long, Array[Double])] =
-    if (known != null) known
-    else if (nCentroids > 0) centroids(embeddings, nCentroids)
-    else adaptiveCentroids(embeddings)
 
   /** Indexes of the `np` best centroids for `emb`, by (cosine desc, index
     * asc) — `cs` is cid-ascending, so index order is cid order. Cosines are
@@ -490,14 +426,6 @@ object Similarity {
     }
     sel.result()
   }
-
-  /** Cid of the nearest centroid by cosine ([[bestCentroids]] order), or -1. */
-  private def nearestCentroidUdf(bCents: Broadcast[Array[(Long, Array[Double])]]) =
-    udf { (emb: Seq[Float]) =>
-      val cs = bCents.value
-      val best = bestCentroids(emb, cs, 1)
-      if (best.isEmpty) -1L else cs(best(0))._1
-    }.asNondeterministic() // runs once per row (KernelCall)
 }
 
 /** Kernel for the sign-bit hyperplane sketch over the (dim, planes, seed)

@@ -6,14 +6,16 @@ import scala.jdk.CollectionConverters._
 
 import graft.dedup.{Checkpoints, Config}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
 /** The checkpoint subsystem: CSV sink + header scan (S1/S5), sidecar heal,
-  * the config guard, lineage JSON, the composite partitioned sink (S7), and
-  * the counts each stage's write observes for its `_metrics`.
+  * the no-manifest rebuild, the config guard, lineage JSON, the composite
+  * partitioned sink (S7), and the counts each stage's write observes for
+  * its `_metrics`.
   */
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
@@ -214,5 +216,39 @@ class CheckpointsSpec extends SparkSpec {
       assert(t.select("year").as[String].collect().sorted.toSeq == Seq("0042", "2015"))
     }
     assert(metrics(s"$work/typed") == Map("year=2015" -> 1L, "year=0042" -> 1L))
+  }
+
+  /** Stage `rows` partitioned by `group`, then undo what a run killed after
+    * the data commit and before `_lineage.json` never wrote (the manifest
+    * goes before `_metrics`, so neither sidecar exists), and resume. */
+  private def resumeWithoutManifest(name: String, rows: DataFrame): (DataFrame, Int) = {
+    val path = s"${tmpDir("graft-nomanifest")}/$name"
+    Checkpoints.stage(spark, name, path, Seq("group"))(rows)
+    assert(new java.io.File(s"${path}_lineage.json").delete())
+    def rmr(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rmr)); f.delete() }
+    rmr(new java.io.File(s"${path}_metrics"))
+    assert(Checkpoints.exists(spark, path))
+    var builds = 0
+    val resumed = Checkpoints.stage(spark, name, path, Seq("group")) { builds += 1; rows }
+    // the rebuild stamped a manifest with the schema: a later resume reads it
+    val again = Checkpoints.stage(spark, name, path, Seq("group"))(sys.error("no rebuild"))
+    assert(again.schema == resumed.schema)
+    (resumed, builds)
+  }
+
+  test("a committed stage without a lineage manifest is rebuilt: partition values keep their written type") {
+    val rows = Seq((1L, "2015"), (2L, "2016"), (3L, "2016")).toDF("k", "group")
+    val (resumed, builds) = resumeWithoutManifest("years", rows)
+    assert(resumed.schema("group").dataType == StringType)
+    assert(resumed.select("k", "group").as[(Long, String)].collect().sorted.toSeq == Seq((1L, "2015"), (2L, "2016"), (3L, "2016")))
+    assert(builds == 1)
+  }
+
+  test("a committed empty partitioned stage without a lineage manifest is rebuilt, not inferred") {
+    val rows = Seq((1L, "2015")).toDF("k", "group").filter(lit(false))
+    val (resumed, builds) = resumeWithoutManifest("empty", rows)
+    assert(builds == 1)
+    assert(resumed.schema.map(f => (f.name, f.dataType)) == Seq("k" -> LongType, "group" -> StringType))
+    assert(resumed.count() == 0)
   }
 }

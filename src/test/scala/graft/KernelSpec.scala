@@ -8,6 +8,7 @@ import graft.ops.Similarity
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -477,10 +478,10 @@ class KernelSpec extends SparkSpec {
 
   test("prefixSum equals a sorted driver scan at any input partitioning (property, 120 cases)") {
     // rows unique by (g, k), g nullable (nulls sort first, as Option's
-    // ordering has it); weight 1 (the dense-id constant), random
-    // non-negative weights or all zeros; 1-16 input partitions over
-    // shuffled rows; sometimes a downstream no-shuffle coalesce(1);
-    // sometimes no rows at all
+    // ordering has it); no weight column (1 per row, the dense ids), or
+    // column `w` holding random non-negative weights or all zeros; 1-16
+    // input partitions over shuffled rows; sometimes a downstream
+    // no-shuffle coalesce(1); sometimes no rows at all
     val gen = for {
       n <- Gen.frequency(1 -> Gen.const(0), 9 -> Gen.choose(1, 300))
       keys <- Gen.listOfN(n, Gen.zip(Gen.oneOf(Option.empty[String], Some("a"), Some("b")), Gen.choose(-50L, 500L)))
@@ -503,15 +504,15 @@ class KernelSpec extends SparkSpec {
         val reg = new CacheRegistry
         try {
           val df = spark.sparkContext.parallelize(rows, parts).toDF("g", "k", "w")
-          val (out, total) = Ids.prefixSum(df, Seq("g", "k"), if (mode == "one") lit(1L) else col("w"), "off", reg)
+          val (out, total) = Ids.prefixSum(df, Seq("g", "k"), if (mode == "one") None else Some("w"), "off", reg)
           val got = (if (coalesced) out.coalesce(1) else out)
             .as[(Option[String], Long, Long, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
           val expected = ordered.zip(want).map { case ((g, k, w), off) => (g, k, w, off) }
-          // a literal weight never enters the cached rows
-          val stored = out.queryExecution.optimizedPlan.toString.contains("__w")
+          // the cached rows are the input's plus the partition id: no weight copy
+          val cached = out.queryExecution.optimizedPlan.collectFirst { case r: InMemoryRelation => r.output.map(_.name) }
           (out.columns.toSeq == Seq("g", "k", "w", "off") && got == expected && total == want.last &&
-            stored == (mode != "one")) :|
-            s"mode=$mode parts=$parts coalesced=$coalesced stored=$stored total=$total want=${want.last} rows=$rows got=$got"
+            cached.contains(Seq("g", "k", "w", "__pid"))) :|
+            s"mode=$mode parts=$parts coalesced=$coalesced cached=$cached total=$total want=${want.last} rows=$rows got=$got"
         } finally reg.release()
       }
     )

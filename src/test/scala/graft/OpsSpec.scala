@@ -92,7 +92,7 @@ class OpsSpec extends SparkSpec {
       .toMap
     def recallAt(nProbe: Int): Double = {
       val approx = Similarity
-        .ivfCosineTopK(embeddings, k = 1, nCentroids = 16, nProbe = nProbe)
+        .ivfCosineTopK(embeddings, k = 1, Similarity.centroids(embeddings, 16), nProbe = nProbe)
         .select("vec_id", "neighbor")
         .as[(Long, Long)]
         .collect()
@@ -104,64 +104,6 @@ class OpsSpec extends SparkSpec {
     assert(r4 > 0.3, s"nProbe=4 recall $r4 suspiciously low")
     assert(r16 > 0.999, s"probing all lists must equal exact top-1, got $r16")
     assert(r16 >= r4, "recall must be monotone in nProbe")
-  }
-
-  test("IVF k-means refinement: recall-vs-exact measured, refined quantizer stays usable") {
-    val exact = Twins
-      .cosineTopK(embeddings, 1)
-      .select("vec_id", "neighbor")
-      .as[(Long, Long)]
-      .collect()
-      .toMap
-    def recallOf(refineIters: Int): Double = {
-      val approx = Similarity
-        .ivfCosineTopK(embeddings, k = 1, nCentroids = 16, nProbe = 4, refineIters = refineIters)
-        .select("vec_id", "neighbor")
-        .as[(Long, Long)]
-        .collect()
-        .toMap
-      exact.count { case (v, n) => approx.get(v).contains(n) }.toDouble / exact.size
-    }
-    val base = recallOf(0)
-    val refined = recallOf(2)
-    info(f"IVF nProbe=4 top-1 recall: coarse $base%.3f, 2x k-means refined $refined%.3f")
-    // random test vectors give k-means little structure to exploit — the
-    // assertion is that refinement does not break the operator, plus a
-    // bounded regression guard; the measured numbers go to the test report
-    assert(refined > 0.3, s"refined recall $refined suspiciously low")
-    assert(refined >= base - 0.15, s"refinement degraded recall: $base -> $refined")
-  }
-
-  test("precomputed quantizer (knownCentroids) is output-identical for IVF and SemDeDup") {
-    // the shared-quantizer path (SparkEntry memoizes one count + centroid
-    // collect for q36/q37) must be a pure plumbing change: same centroids in,
-    // bitwise-same rows out
-    val nc = math.max(16, math.ceil(math.sqrt(embeddings.count().toDouble)).toInt)
-    val cents = Similarity.centroids(embeddings, nc)
-    val ivfDefault = Similarity
-      .ivfCosineTopK(embeddings, k = 2, nProbe = 4)
-      .select("vec_id", "neighbor", "rank").as[(Long, Long, Int)].collect().sorted
-    val ivfKnown = Similarity
-      .ivfCosineTopK(embeddings, k = 2, nProbe = 4, knownCentroids = cents)
-      .select("vec_id", "neighbor", "rank").as[(Long, Long, Int)].collect().sorted
-    assert(ivfKnown.sameElements(ivfDefault), "IVF with knownCentroids diverged from the default path")
-    val sdDefault = Similarity
-      .semDedup(embeddings, minCosine = 0.35)
-      .select("vec_id", "cid", "kept").as[(Long, Long, Boolean)].collect().sorted
-    val sdKnown = Similarity
-      .semDedup(embeddings, minCosine = 0.35, knownCentroids = cents)
-      .select("vec_id", "cid", "kept").as[(Long, Long, Boolean)].collect().sorted
-    assert(sdKnown.sameElements(sdDefault), "SemDeDup with knownCentroids diverged from the default path")
-  }
-
-  test("knownCentroids together with an explicit nCentroids is rejected, not silently resolved") {
-    val cents = Similarity.centroids(embeddings, 16)
-    intercept[IllegalArgumentException] {
-      Similarity.ivfCosineTopK(embeddings, k = 2, nCentroids = 8, knownCentroids = cents)
-    }
-    intercept[IllegalArgumentException] {
-      Similarity.semDedup(embeddings, minCosine = 0.35, nCentroids = 8, knownCentroids = cents)
-    }
   }
 
   test("SemDeDup equals the naive keep-lowest-id rule and removes planted near-dups") {
@@ -176,7 +118,7 @@ class OpsSpec extends SparkSpec {
     val all = (base.toSeq ++ planted).toDF("vec_id", "embedding")
     val tau = 0.9
     val got = Similarity
-      .semDedup(all, minCosine = tau, nCentroids = 16)
+      .semDedup(all, minCosine = tau, Similarity.centroids(all, 16))
       .select("vec_id", "cid", "kept")
       .as[(Long, Long, Boolean)]
       .collect()

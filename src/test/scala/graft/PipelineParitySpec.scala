@@ -431,11 +431,13 @@ class PipelineParitySpec extends SparkSpec {
   test("candidates stage: each signature row calls the band-hash kernel once (both pair generators)") {
     val work = tmpDir("graft-bands")
     val sigs = Pipeline.run(spark, spark.createDataFrame(Twins.corpusLocal(200)), cfg, work).signatures
-    for (c <- Seq(cfg, cfg.copy(bands = 64))) {
-      val cands = Pipeline.candidatesFor(sigs, c)
+    // 64x2 under the corpus size as the doc-count bound: the first-collision walk
+    for ((c, bound) <- Seq(cfg -> Long.MaxValue, cfg.copy(bands = 64) -> 200L)) {
+      val cands = MinHash.candidatePairs(sigs, c, docCountBound = bound)
       assert(!cands.isEmpty)
       val plan = cands.queryExecution.executedPlan
       assert(kernelCalls(plan, classOf[HashKernels.BandHashKernel]) == 1, s"band-hash calls per row at ${c.bands} bands in:\n$plan")
+      assert(plan.toString.contains("bhs") == (c.bands == 64), s"walk at ${c.bands} bands in:\n$plan")
     }
     // the SimHash walk tests Hamming distance inside its buckets: no join
     // reads the simhashes back

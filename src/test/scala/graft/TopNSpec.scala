@@ -1,6 +1,6 @@
 package graft
 
-import graft.dedup.{PairGen, TopN}
+import graft.dedup.{Config, MinHash, PairGen, TopN}
 import org.apache.spark.sql.functions._
 
 class TopNSpec extends SparkSpec {
@@ -124,34 +124,41 @@ class TopNSpec extends SparkSpec {
   }
 
   test("PairGen: first-collision generator emits the same pair set as the default, with and without oversized buckets") {
-    // randomized signatures: 40 docs x 8 bands, hash values drawn from a
-    // small space so bands collide often (high duplication — the regime the
-    // first-collision path exists for) and some buckets exceed tiny caps
+    // randomized 64x2 signatures over a 2-value alphabet: bands collide
+    // often (high duplication — the regime the first-collision walk exists
+    // for), clusters of 4 share most values, and the largest band bucket is
+    // far above the caps below
     val rnd = new scala.util.Random(7)
-    val bands = 8
-    val docs = (1L to 40L).map { id =>
-      // clusters of 4 share most band hashes -> heavy cross-band duplication
-      val base = Array.tabulate(bands)(b => ((id / 4) * 31 + b * 7).toLong % 5)
-      val noisy = base.clone()
-      noisy(rnd.nextInt(bands)) = rnd.nextInt(5).toLong
-      (id, noisy)
+    val nDocs = 40
+    val sigs = (1L to nDocs.toLong).map { id =>
+      val base = Array.tabulate(128)(i => (((id / 4) * 31 + i * 7) % 2).toInt)
+      (0 until 8).foreach(_ => base(rnd.nextInt(128)) = rnd.nextInt(2))
+      (id, if (id % 2 == 0) "g1" else "g2", base.toSeq)
+    }.toDF("doc_id", "group", "minhash")
+    val bandRows = MinHash.bandRows(sigs, Config(bands = 64))
+    val largest = bandRows.groupBy("group", "band", "band_hash").count().agg(max("count")).head().getLong(0)
+    // every pair that shares a band bucket: the keep-all walk under no cap
+    val all = PairGen.pairsFromBuckets(bandRows, Seq("group", "band", "band_hash"), Int.MaxValue)
+      .as[(Long, Long)].collect().toSet
+    def pairs(maxBucket: Int, bound: Long): (Set[(Long, Long)], Boolean) = {
+      val df = MinHash.candidatePairs(sigs, Config(bands = 64, maxBucket = maxBucket), docCountBound = bound)
+      // the first-collision walk carries each doc's band hashes (`bhs`)
+      (df.as[(Long, Long)].collect().toSet, df.queryExecution.optimizedPlan.toString.contains("bhs"))
     }
-    val groups = Seq("g1", "g2")
-    val rowsSeq = for {
-      (id, bhs) <- docs
-      g = groups((id % 2).toInt)
-      b <- 0 until bands
-    } yield (g, b, bhs(b), id, bhs.toSeq)
-    val rows = rowsSeq.toDF("group", "band", "band_hash", "doc_id", "bhs")
-    for (cap <- Seq(2, 5, 1000)) { // 2/5 force chain-linked oversized buckets
-      val want = PairGen
-        .pairsFromBuckets(rows.drop("bhs"), Seq("group", "band", "band_hash"), cap)
-        .as[(Long, Long)].collect().toSet
-      val got = PairGen
-        .pairsFromBandBucketsFirstCollision(rows, Seq("group"), cap)
-        .as[(Long, Long)].collect().toSet
-      assert(got == want, s"pair sets differ at cap=$cap: extra=${got -- want}, missing=${want -- got}")
-    }
+    // no bucket can cross a cap of nDocs: a bound at the cap takes the
+    // first-collision walk, one above it the keep-all walk; same pairs
+    assert(largest > 5 && largest <= nDocs, s"largest bucket $largest")
+    assert(pairs(nDocs, nDocs.toLong) == (all, true))
+    assert(pairs(nDocs, nDocs + 1L) == (all, false))
+    // a cap below the largest bucket: the true bound exceeds it, so both
+    // calls chain-link the oversized buckets alike
+    val capped = PairGen.pairsFromBuckets(bandRows, Seq("group", "band", "band_hash"), 5).as[(Long, Long)].collect().toSet
+    assert(capped != all)
+    assert(pairs(5, nDocs.toLong) == (capped, false))
+    assert(pairs(5, Long.MaxValue) == (capped, false))
+    // a wrong bound (5, below the largest bucket) takes the first-collision
+    // walk, which runs uncapped: it costs time and loses no pair
+    assert(pairs(5, 5L) == (all, true))
   }
 
   test("PairGen: cap boundary — exactly maxBucket is full expansion, cap+1 chains") {

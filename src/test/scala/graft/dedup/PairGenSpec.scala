@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Properties of PairGen's bucket walk, driven with Rows directly (no Spark
   * session): the cap/chain semantics against a naive per-bucket oracle, the
-  * first-collision keep rule against the keep-all walk, the Hamming keep rule
+  * first-collision keep rule against the uncapped keep-all walk, the Hamming
+  * keep rule
   * against a naive per-bucket oracle, and the fingerprint walk's df cap
   * against a naive global-df oracle. */
 class PairGenSpec extends AnyFunSuite {
@@ -49,38 +50,31 @@ class PairGenSpec extends AnyFunSuite {
   }
 
   test("bucket walk: the first-collision keep rule emits the plain walk's pair set") {
+    // pairs that collide in more than one band: the ones the rule must
+    // keep in exactly one of them
+    val multi = new AtomicInteger
     val gen = for {
-      cap <- Gen.choose(1, 6)
       bands <- Gen.choose(1, 6)
       nDocs <- Gen.choose(2, 12)
       docs <- Gen.listOfN(nDocs, for {
         g <- Gen.oneOf("g0", "g1")
         bhs <- Gen.listOfN(bands, Gen.choose(0L, 2L))
       } yield (g, bhs))
-      extra <- Gen.listOf(for {
-        g <- Gen.oneOf("g0", "g1")
-        b <- Gen.choose(0, bands - 1)
-        h <- Gen.choose(0L, 3L)
-      } yield Seq[Any](g, b, h))
-    } yield (cap, bands, docs, extra)
-    check(Prop.forAllNoShrink(gen) { case (cap, bands, docs, extra) =>
+    } yield (bands, docs)
+    check(Prop.forAllNoShrink(gen) { case (bands, docs) =>
       val rows = (for {
         ((g, bhs), id) <- docs.zipWithIndex
         b <- 0 until bands
       } yield (g, b, bhs(b), id.toLong, bhs)).sortBy(r => (r._1, r._2, r._3, r._4))
         .map { case (g, b, h, id, bhs) => Row(g, b, h, id, bhs) }
-      val sizes = rows.groupBy(r => Seq[Any](r.get(0), r.get(1), r.get(2))).view.mapValues(_.size).toMap
-      val oversized = sizes.collect { case (k, n) if n > cap => k }.toSet
-      val plain = emitted(new PairGen.BucketWalk(rows.iterator, 3, cap, None)).toSet
-      // random extra keys, real or not, may only add duplicates
-      val rule = new PairGen.FirstCollision(1, oversized ++ extra)
-      val got = emitted(new PairGen.BucketWalk(rows.iterator, 3, cap, Some(rule)))
-      // with no bucket over the cap and the exact set, each pair comes out once
-      val exact = emitted(new PairGen.BucketWalk(rows.iterator, 3, cap, Some(new PairGen.FirstCollision(1, oversized))))
-      val onceEach = oversized.nonEmpty || exact.length == exact.distinct.length
-      (got.toSet == plain && exact.toSet == plain && onceEach) :|
-        s"cap=$cap extra=${got.toSet -- plain} missing=${plain -- got.toSet} dupes=${exact.length - exact.distinct.length}"
+      // uncapped: every bucket is walked in full
+      val plain = emitted(new PairGen.BucketWalk(rows.iterator, 3, Int.MaxValue, None))
+      val got = emitted(new PairGen.BucketWalk(rows.iterator, 3, Int.MaxValue, Some(PairGen.FirstCollision)))
+      if (plain.length > plain.distinct.length) multi.incrementAndGet()
+      (got.toSet == plain.toSet && got.length == got.distinct.length) :|
+        s"extra=${got.toSet -- plain} missing=${plain.toSet -- got.toSet} dupes=${got.length - got.distinct.length}"
     }, 1000)
+    assert(multi.get >= 100, s"only ${multi.get} cases with a pair in several bands")
   }
 
   test("bucket walk: the Hamming keep rule filters every pair and every chain link, against a naive oracle") {
